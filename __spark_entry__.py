@@ -23,7 +23,10 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -6099,387 +6102,65 @@ def q_probe_env_versions(spark, sf_dir):
         PR.env_duckdb_version(spark))
 
 
-_WINDOW_PRIORITY = [
-    # ROTATION POLICY (post-coverage, VERDICT r10 item 3): with all
-    # 337 pre-r11 keys driver-proven at least once, windows now
-    # re-prove by STALENESS. Order: (1) the 4 standing environment
-    # sentinels (five rounds green -- decode any red via
-    # VERDICT_RESPONSES before touching queries); (2) keys newly
-    # registered this round, so first registered round == first
-    # driver-proven round (the r11 audio/decompression block); (3)
-    # every other key ordered by its latest driver CORRECTNESS row,
-    # OLDEST round first (ties keep that round-file order). A 50-key
-    # window therefore always re-proves the ~42 stalest rows; each
-    # round the freshly-proven keys sink to the tail and the next
-    # stalest block surfaces. Regenerate the tail of this list per
-    # round from the CORRECTNESS_r*.json record (latest round per
-    # key ascending); sections below are labeled by that round.
-    # --- (1) standing sentinels ---
+# Correctness-window order. The correctness gate re-proves the first 50
+# keys of queries() against DuckDB, so the order spends that window on
+# the keys with the least current verification signal, derived from the
+# gate's CORRECTNESS_r*.json records (never hand-kept):
+#   (1) the standing environment sentinels (decode any red via
+#       VERDICT_RESPONSES before touching queries);
+#   (2) keys whose latest recorded row is not a hash match, or that have
+#       no row at all (newly registered keys land here);
+#   (3) _CHANGED_THIS_ROUND: keys whose code or oracle changed since
+#       their last recorded row -- edit this list in the same change;
+#   (4) every other key by the round of its latest green row, oldest
+#       first; ties keep the key order inside that round's file.
+_SENTINELS = (
     "probe_env_tz",
     "probe_env_versions",
     "probe_render_canary",
     "probe_round_canary",
-    # --- (2) registered this round (r11): first driver exposure ---
-    "mm_audio_features",
-    "mm_audio_windows",
-    "mm_audio_vad",
-    "llm_decompress_corpus",
-    # --- (2b) changed this round (r11): baseline JPEG joined the
-    # mixed pixel corpus ((doc_id+f)%8 cycle) — kernels + oracles
-    # changed together, so the driver must re-witness ---
-    "mm_resize",
-    "mm_phash_neardup",
-    "mm_frame_sample",
-    # --- (3) latest driver row: round 2 ---
-    "q1_pricing_summary",
-    "a3_o1_grouped_revenue_nation",
-    "a3_grouped_revenue_segment",
-    "o2_top5_parts",
-    "o2_top3_parts_per_brand",
-    "o4_time_split",
-    "p2_time_filter",
-    "f_json_extract",
-    "f_scalar_strings",
-    "f_datetime_buckets",
-    "f_conditional_status",
-    "j6_semi_join",
-    "j6_anti_join",
-    "s10_cdc_apply_changes",
-    "s1_s8_csv_declared_schema",
-    "p3_o3_limit_probe",
-    "p5_p6_drop_columns",
-    "p7_numeric_projection",
-    "j4_zip_join",
-    "f_array_vector",
-    "f_struct_json",
-    "f_ground_truth_score",
-    "f_status_timestamps",
-    "a12_linucb_score_top5",
-    "f_feature_engineering",
-    "eval_ranking_metrics",
-    "eval_auc",
-    "f_tfidf_top_terms",
-    "p4_split_by_predicate",
-    "p9_align_schema",
-    "p10_null_defaults",
-    "j_asof_enrichment",
-    "j_interval_join",
-    "ext_rollup_revenue",
-    "ext_moving_average",
-    "ext_cube_revenue",
-    "ext_argmax_per_group",
-    "llm_weighted_sample",
-    # --- (3) latest driver row: round 4 ---
-    "ext_quantile_shift",
-    "ext_rmst",
-    "llm_oov_rate",
-    "ext_price_elasticity",
-    "llm_charclass_profile",
-    "ext_harmonic_2hop",
-    "ext_binseg_changepoints",
-    "ext_diff_in_diff",
-    "ext_power_analysis",
-    "llm_compression_ratio",
-    "ext_holt_forecast",
-    "llm_isotonic_calibration",
-    "ext_ratio_to_parent",
-    "ext_pairwise_contrasts",
-    "ext_assortativity",
-    "ext_fd_violations",
-    "ext_seasonal_anomalies",
-    "ext_price_volume_mix",
-    "ext_theil_index",
-    "ext_pythagorean_means",
-    "llm_readability",
-    "ext_kendall_tau",
-    "ext_grouped_moments",
-    "ext_roc_curve",
-    "ext_cohort_ltv",
-    "ext_theil_sen",
-    "ext_grouped_mad",
-    "ext_multi_touch",
-    "llm_quantile_normalize",
-    "ext_pareto_skyline",
-    "ext_k_core",
-    "ext_weighted_median",
-    "llm_feature_hash",
-    "ext_kruskal_wallis",
-    "ext_brown_forsythe",
-    "ext_target_encoding",
-    "ext_link_prediction",
-    "ext_k_anonymity",
-    "llm_dedup_containment",
-    # --- (3) latest driver row: round 5 ---
-    "ext_yuen_ttest",
-    "ext_fs_em",
-    "ext_auto_histogram",
-    "ext_robust_anomalies",
-    "ext_ohlc_bars",
-    "ext_period_end_balance",
-    "s10_debezium_unwrap",
-    "ext_hierarchical_rollup",
-    "ext_sax_symbols",
-    "llm_dedup_edit_distance",
-    "ext_association_rules",
-    "ext_rfm_segmentation",
-    "ext_welch_ttest",
-    "ext_anova",
-    "ext_mann_whitney",
-    "ext_ks_test",
-    "ext_chi_square",
-    "ext_spearman",
-    "ext_log_rank",
-    "ext_fdr_screen",
-    "ext_grouped_ols",
-    "ext_histogram_2d",
-    "ext_bootstrap_ci",
-    "llm_preference_pairs",
-    "ext_gapfill",
-    "llm_textrank_keywords",
-    "ext_pivot_revenue",
-    "ext_unpivot_profile",
-    "ext_correlation_matrix",
-    "llm_interleave_shards",
-    "llm_contamination_matrix",
-    "ext_label_propagation",
-    "ext_conformal_interval",
-    "ext_hll_set_overlap",
-    "llm_span_corruption",
-    "ext_seasonal_mase",
-    "ext_mann_kendall",
-    "ext_stratified_ate",
-    "ext_gains_table",
-    "llm_tokenizer_fertility",
-    "ext_pinball_eval",
-    "ext_srm_check",
-    # --- (3) latest driver row: round 6 ---
-    "ext_abc_classification",
-    "ext_funnel_conversion_ci",
-    "tpch_q8",
-    "ext_funnel_step_times",
-    "ext_seasonal_profile",
-    "ext_autocorrelation",
-    "ext_changepoint",
-    "ext_decayed_engagement",
-    "ext_ewma_smooth",
-    "ext_sequence_gaps",
-    "ext_user_journeys",
-    "ext_funnel",
-    "ext_retention",
-    "o4_per_key_time_split",
-    "s10_cdc_scd2_history",
-    "s10_cdc_snapshot_at",
-    "s10_snapshot_diff",
-    "ext_grouped_trend",
-    "ext_ab_test",
-    "ext_jackknife_ci",
-    "ext_cohens_kappa",
-    "ext_benford",
-    "ext_mutual_info",
-    "llm_zipf_fit",
-    "eval_ndcg",
-    "eval_calibration",
-    "llm_tfidf_cosine_topk",
-    "ext_mcnemar",
-    "ext_cramers_v",
-    "ext_fleiss_kappa",
-    "ext_iptw_ate",
-    "llm_kneser_ney_bigram",
-    "llm_heavy_changes",
-    "ext_cochran_q",
-    "ext_odds_ratio",
-    "ext_weibull_fit",
-    "llm_vocab_growth",
-    # --- (3) latest driver row: round 7 ---
-    "probe_libm_canary",
-    "probe_hash_canary",
-    "probe_pred_domains",
-    "probe_li_9596",
-    "probe_li_97h1",
-    "probe_li_97q3",
-    "probe_li_97q4",
-    "probe_li_98",
-    "probe_li_99p",
-    "probe_ord_9596",
-    "probe_ord_97q123",
-    "probe_ord_97q4",
-    "probe_ord_98p",
-    "probe_ev_values",
-    "probe_ev_epoch",
-    "ext_cumulative_users",
-    "ext_bloom_semijoin",
-    "ext_nelson_aalen",
-    "ext_kaplan_meier",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q4",
-    "tpch_q14",
-    "tpch_q15",
-    "ext_burst_windows",
-    "ext_lorenz_curve",
-    "ext_peak_concurrency",
-    "ext_hhi",
-    "ext_runs_test",
-    "llm_lang_confusion",
-    "mm_exact_dedup",
-    "ext_incremental_agg",
-    "ext_event_transitions",
-    "ext_duplicate_events",
-    "ext_gini",
-    "ext_concentration",
-    "ext_heavy_hitters",
-    "ext_hll_distinct",
-    "ext_cms_term_counts",
-    "ext_quantile_summary",
-    "ext_window_suite",
-    # --- (3) latest driver row: round 8 ---
-    "ext_fs_linkage",
-    "ext_control_chart",
-    "llm_normalize_text",
-    "ext_cusum_drift",
-    "ext_cuped",
-    "ext_data_quality",
-    "llm_quality_filter",
-    "ext_quantile_approx",
-    "llm_dedup_clusters",
-    "mm_media_features",
-    "tpch_q2",
-    "tpch_q9",
-    "tpch_q13",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q21",
-    "llm_dedup_exact",
-    "llm_dedup_minhash_pairs",
-    "llm_dedup_jaccard",
-    "llm_dedup_simhash_pairs",
-    "llm_dedup_report",
-    "llm_ann_cosine_topk",
-    "llm_ann_lsh_topk",
-    "llm_ann_ivf_topk",
-    "llm_ann_pq_topk",
-    "llm_embedding_pool",
-    "llm_embedding_quantize",
-    "llm_embedding_outliers",
-    "llm_kmeans_round",
-    "llm_semantic_dedup",
-    "llm_text_stats",
-    "llm_lang_id",
-    "llm_ngram_entropy",
-    "llm_bpe_encode",
-    "llm_dsir_weights",
-    "llm_temperature_mix",
-    "llm_pack_sequences",
-    "llm_decontaminate",
-    "llm_quality_classifier",
-    "ext_triangle_count",
-    "ext_pagerank_trade",
-    "ext_grouping_sets",
-    "ext_table_profile",
-    # --- (3) latest driver row: round 9 ---
-    "tpch_q11",
-    "tpch_q16",
-    "tpch_q20",
-    "tpch_q19",
-    "tpch_q22",
-    "llm_distinctive_terms",
-    "llm_uncertainty_sample",
-    "llm_whiten_embeddings",
-    "llm_fair_allocation",
-    "llm_ngram_novelty",
-    "llm_lsh_tuning",
-    "ext_impute_mode",
-    "llm_word_vectors",
-    "llm_minhash_lsh_eval",
-    "llm_hybrid_rerank",
-    "llm_dataset_card",
-    "llm_exact_stratified_split",
-    "ext_join_size_profile",
-    "llm_knn_label_noise",
-    "llm_ppmi_cooccurrence",
-    "llm_winsorize",
-    "llm_pmi_collocations",
-    "ext_trade_degree",
-    "llm_dup_spans",
+)
+_CHANGED_THIS_ROUND = (
     "llm_lr_sweep",
-    "llm_quality_drift",
-    "llm_curriculum_bins",
-    "llm_random_projection",
-    "llm_cluster_split",
-    "llm_dsir_resample",
-    "llm_per_group_sample",
-    "llm_contrastive_triplets",
-    "llm_cross_source_overlap",
-    "llm_mmr_diversify",
-    "llm_incremental_near_dup",
-    "llm_bigram_lm_score",
-    "llm_decontaminate_fuzzy",
-    "llm_dedup_keep_best",
-    "llm_mix_token_plan",
-    "ext_value_histogram",
-    "ext_set_partition",
-    "ext_key_skew_profile",
-    "llm_ann_lsh_multi_topk",
-    # --- (3) latest driver row: round 10 ---
-    "llm_ann_recall_multi",
-    "llm_kmeans_assign",
-    "llm_kmeans_centroids",
-    "llm_ann_filtered_topk",
-    "llm_dedup_incremental",
-    "ext_set_compare",
-    "llm_unigram_surprisal",
-    "llm_winnow_overlap",
-    "llm_ann_recall_ivf",
-    "llm_bm25_topk",
-    "ext_zorder_profile",
-    "llm_block_dedup",
-    "llm_shard_profile",
-    "llm_ann_recall_pq",
-    "llm_bpe_pair_stats",
-    "ext_entity_blocking",
-    "ext_zscore_anomalies",
-    "llm_dedup_simhash",
-    "llm_fingerprint",
-    "llm_vocab_stats",
-    "llm_winnow_fingerprints",
-    "llm_neardup_embedding",
-    "llm_ann_recall",
-    "llm_curation_pipeline",
-    "llm_stratified_sample",
-    "llm_mix_weights",
-    "llm_token_histogram",
-    "llm_repetition_stats",
-    "llm_chunking",
-    "llm_pii_redact",
     "llm_quality_eval",
-    "llm_dup_cluster_sizes",
-    "llm_matryoshka_eval",
-    "p1_p2_j1_j2_dashboard_feed",
-    "a1_a2_a9_dashboard_metrics",
-    "a4_metric_deltas",
-    "a5_a8_tumbling_stats",
-    "a10_j3_linucb_fit",
-    "a13_weighted_distribution",
-    "t6_late_tagging",
-    "t14_sliding_window",
-    "ext_session_window",
-    "f_svd_embed",
-]
+    "llm_quality_classifier",
+    "llm_uncertainty_sample",
+    "ext_grouped_mad",
+)
+
+
+def window_order(keys, rounds, sentinels=_SENTINELS,
+                 changed=_CHANGED_THIS_ROUND) -> list[str]:
+    """``keys`` in correctness-window order. ``rounds`` holds one
+    ``{key: record}`` dict per CORRECTNESS round file, oldest first;
+    keys in the records that are not in ``keys`` are ignored."""
+    latest = {}  # key -> (round index, position in that file, green)
+    for rnd, records in enumerate(rounds):
+        for pos, (key, rec) in enumerate(records.items()):
+            latest[key] = (rnd, pos, bool(rec.get("hash_match")))
+    unproven = [k for k in keys if not latest.get(k, (0, 0, False))[2]]
+    head = [k for k in dict.fromkeys([*sentinels, *unproven, *changed])
+            if k in keys]
+    rest = sorted(set(keys) - set(head), key=lambda k: latest[k][:2])
+    return head + rest
+
+
+@functools.lru_cache(maxsize=1)
+def _correctness_rounds() -> tuple[dict, ...]:
+    """The gate's CORRECTNESS_r<N>.json records next to this file,
+    oldest round first."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    found = {}
+    for name in os.listdir(here):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name)
+        if m:
+            with open(os.path.join(here, name)) as fh:
+                found[int(m.group(1))] = json.load(fh)
+    return tuple(found[r] for r in sorted(found))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Declaration order is deliberate: a correctness sweep that stops
-    # after the first N keys should spend its window on the queries with
-    # the LEAST prior verification signal. _WINDOW_PRIORITY (see its
-    # header comment for the full post-coverage rotation policy) puts
-    # the standing sentinels first, then keys newly registered this
-    # round (first registration == first driver proof), then every
-    # remaining key ordered by the age of its latest driver
-    # CORRECTNESS row, stalest first.
+    # Returned in correctness-window order (window_order above).
     d = {
         "ext_quantile_shift": q_quantile_shift,
         "ext_rmst": q_rmst,
@@ -6822,12 +6503,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "probe_ord_98p": q_probe_ord_98p,
         "probe_ev_values": q_probe_ev_values,
         "probe_ev_epoch": q_probe_ev_epoch,
-        # round-11 additions (audio + decompression; section at the
-        # bottom of this file) — registered with same-round driver rows
-        **_r11_queries(),
+        # round-11 audio + decompression keys (section at the bottom
+        # of this file)
+        "mm_audio_features": q_mm_audio_features,
+        "mm_audio_windows": q_mm_audio_windows,
+        "mm_audio_vad": q_mm_audio_vad,
+        "llm_decompress_corpus": q_llm_decompress_corpus,
     }
-    _pri = [k for k in _WINDOW_PRIORITY if k in d]
-    return {k: d[k] for k in _pri + [k for k in d if k not in set(_pri)]}
+    return {k: d[k] for k in window_order(list(d), _correctness_rounds())}
 
 
 # DSIR hashed-n-gram importance weights (unigrams + word bigrams into
@@ -14774,17 +14457,6 @@ def _staged_wav_base_cte():
                    doc_id % 2 + 1 AS ch
             FROM documents WHERE doc_id >= 0
         )"""
-
-
-def _r11_queries():
-    """Round-11 registered keys (see the section header above) —
-    splatted into queries()."""
-    return {
-        "mm_audio_features": q_mm_audio_features,
-        "mm_audio_windows": q_mm_audio_windows,
-        "mm_audio_vad": q_mm_audio_vad,
-        "llm_decompress_corpus": q_llm_decompress_corpus,
-    }
 
 
 def _r11_oracle_sqls():

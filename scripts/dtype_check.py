@@ -33,16 +33,15 @@ import os
 import re
 import sys
 
-import duckdb
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from streaming_demos_spark import oracle_compare as OC  # noqa: E402
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-os.environ["ORACLE_SF_DIR"] = SF
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+OC.use_sf_dir(SF)
 
 BAD_DUCK = {"HUGEINT", "UHUGEINT", "UBIGINT", "UINTEGER", "USMALLINT",
             "UTINYINT"}
@@ -135,11 +134,7 @@ def main() -> None:
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"create view {t} as select * from '{SF}/{t}.parquet'"
-        )
+    con = OC.duck_views(SF)
     qs = entry.queries()
     oracles = entry.oracle_sql()
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None

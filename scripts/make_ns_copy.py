@@ -19,8 +19,9 @@ import sys
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from streaming_demos_spark.schemas import TESTDATA_TABLES  # noqa: E402
 
 
 def ns_schema(schema: pa.Schema) -> pa.Schema:
@@ -37,7 +38,7 @@ def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.nsdata/sf0.01"
     os.makedirs(dst, exist_ok=True)
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
         target = ns_schema(tbl.schema)
         if target != tbl.schema:

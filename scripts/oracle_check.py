@@ -1,47 +1,24 @@
 """Driver-style correctness check: run queries() vs oracle_sql() on a
 plain SparkSession and print one line per key. Usage:
     python scripts/oracle_check.py [sf_dir] [key1,key2,...]
+
+The comparison itself lives in ``streaming_demos_spark.oracle_compare``;
+``TABLES`` and ``vhash`` are re-exported here for callers that load this
+script by path (the benchmark's oracle check).
 """
-import hashlib
-import math
 import os
 import sys
 
-import duckdb
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-# The eigendecomposition oracles are numpy-computed from the data dir
-# (__spark_entry__._eigen_oracle_sqls) — point them at the same SF.
-os.environ["ORACLE_SF_DIR"] = SF
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
+from streaming_demos_spark import oracle_compare as OC  # noqa: E402
+from streaming_demos_spark.oracle_compare import TABLES, vhash  # noqa: E402,F401
 
-# ORACLE_NORM_DP tightens the float normalizer (default 9dp — the
-# driver's); the 12dp sweep is the environment-sensitivity gate for
-# final-digit-of-a-double outputs.
-NORM_DP = int(os.environ.get("ORACLE_NORM_DP", "9"))
-
-
-def norm(v):
-    # always a STRING: a tuple mixing normalized floats with str(None)
-    # is unsortable (TypeError) the moment earlier elements tie —
-    # reachable for any float column that carries both values and NULLs
-    return (
-        ("NaN" if math.isnan(v) else str(round(v, NORM_DP)))
-        if isinstance(v, float)
-        else str(v)
-    )
-
-
-def vhash(cols, data):
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    return hashlib.md5(
-        str(sorted(tuple(norm(r[i]) for i in order) for r in data)).encode()
-    ).hexdigest()
+OC.use_sf_dir(SF)
 
 
 def main():
@@ -69,54 +46,30 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+    con = OC.duck_views(SF)
     Q, O = E.queries(), E.oracle_sql()
     keys = sys.argv[2].split(",") if len(sys.argv) > 2 else list(Q)
-    # ORACLE_PANDAS=1 routes BOTH result sets through pandas frames
-    # (spark toPandas / duckdb .df()) before hashing — the driver's
-    # comparator does this, and pandas re-types what python objects
-    # keep exact: a HUGEINT or NULL-bearing int64 column floatifies
-    # (the round-4..6 driver-red class), timestamps become
-    # pandas.Timestamp, NaN/None unify. The plan-only dtype gate
-    # (scripts/dtype_check.py) predicts these; this mode EXECUTES them.
+    # ORACLE_PANDAS=1 routes BOTH result sets through pandas frames, as
+    # the reference comparison does (see oracle_compare._spark_result).
     use_pandas = os.environ.get("ORACLE_PANDAS") == "1"
     n_ok = n_bad = 0
     for key in keys:
         try:
             qdf = Q[key](spark, SF)
-            if use_pandas:
-                spdf = qdf.toPandas()
-                scols = list(spdf.columns)
-                sdata = [tuple(r) for r in spdf.itertuples(index=False)]
-            else:
-                sdata = [tuple(r) for r in qdf.collect()]
-                scols = qdf.columns
             if key not in O:
-                print(f"{key}: rows-only {len(sdata)}", flush=True)
+                print(f"{key}: rows-only {len(qdf.collect())}", flush=True)
                 continue
-            rel = con.sql(O[key])
-            dcols = [d[0] for d in rel.description]
-            if use_pandas:
-                ddf = rel.df()
-                ddata = [tuple(r) for r in ddf.itertuples(index=False)]
-            else:
-                ddata = rel.fetchall()
-            ok = vhash(scols, sdata) == vhash(dcols, ddata)
+            rec = OC.compare(qdf, con, O[key], pandas=use_pandas)
+            ok = rec["hash_match"]
             n_ok += ok
             n_bad += not ok
-            print(f"{key}: rows {len(sdata)}/{len(ddata)} hash_match {ok}", flush=True)
+            print(f"{key}: rows {rec['spark_rows']}/{rec['oracle_rows']} "
+                  f"hash_match {ok}", flush=True)
             if not ok:
-                so = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-                do = sorted(range(len(dcols)), key=lambda i: dcols[i].lower())
-                ss = sorted(tuple(norm(r[i]) for i in so) for r in sdata)
-                ds = sorted(tuple(norm(r[i]) for i in do) for r in ddata)
-                print(f"  cols spark={sorted(scols)} duck={sorted(dcols)}", flush=True)
-                for a, b in zip(ss, ds):
-                    if a != b:
-                        print(f"  spark {a}\n  duck  {b}", flush=True)
-                        break
+                print(f"  schema_match {rec['schema_match']}", flush=True)
+                if rec["first_diff"]:
+                    a, b = rec["first_diff"]
+                    print(f"  spark {a}\n  duck  {b}", flush=True)
         except Exception as ex:
             n_bad += 1
             print(f"{key}: ERR {str(ex)[:250]}", flush=True)

@@ -32,8 +32,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import fan_out
-from streaming_demos_spark.operators.similarity import cosine
+from streaming_demos_spark.operators.similarity import _sql_dot, cosine
 from streaming_demos_spark.operators.similarity import dot as dot_product
+from streaming_demos_spark.operators.text import _q
 
 
 def _nearest(
@@ -73,21 +74,16 @@ def _nearest(
     # identical unresolved trees to the old Column-op chains.
     # try_divide: zero-norm vectors (or an empty cell's zero centroid)
     # get NULL cosine, not an ANSI job abort.
-    vq = "`" + vec_col.replace("`", "``") + "`"
-    v = f"cast({vq} as array<double>)"
-
-    def _dot(a: str, b: str) -> str:
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-                " 0.0D, (acc, x) -> acc + x)")
+    v = f"cast({_q(vec_col)} as array<double>)"
 
     best = F.expr(
         "array_max(transform(_cents, c -> struct("
-        f"round(try_divide({_dot(v, 'c.cv')}, _vnorm * c.cn), 6) AS cos,"
+        f"round(try_divide({_sql_dot(v, 'c.cv')}, _vnorm * c.cn), 6) AS cos,"
         " -c.cid AS ncid)))"
     )
     return (
         emb.crossJoin(F.broadcast(packed))
-        .withColumn("_vnorm", F.expr(f"sqrt({_dot(v, v)})"))
+        .withColumn("_vnorm", F.expr(f"sqrt({_sql_dot(v, v)})"))
         .withColumn("_best", best)
         .select(
             id_col,

@@ -29,15 +29,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import fan_out
+from streaming_demos_spark.operators.text import _q
 
 
 def _as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
-
-
-def _qn(name: str) -> str:
-    """Quote a column name for embedding in an F.expr string."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _sql_dot(a: str, b: str) -> str:
@@ -52,7 +48,7 @@ def _sql_dot(a: str, b: str) -> str:
 def dot(a: Column | str, b: Column | str) -> Column:
     """Σ a_i·b_i via zip_with + left-to-right fold (JVM, no UDF)."""
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sql_dot(_qn(a), _qn(b)))
+        return F.expr(_sql_dot(_q(a), _q(b)))
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -63,8 +59,8 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     either vector has zero norm; zero vectors are a plausible input
     (failed encodes, padding rows) and must not kill a corpus job."""
     if isinstance(a, str) and isinstance(b, str):
-        da = f"cast({_qn(a)} as array<double>)"
-        db = f"cast({_qn(b)} as array<double>)"
+        da = f"cast({_q(a)} as array<double>)"
+        db = f"cast({_q(b)} as array<double>)"
         return F.expr(
             f"try_divide({_sql_dot(da, db)},"
             f" sqrt({_sql_dot(da, da)}) * sqrt({_sql_dot(db, db)}))"
@@ -153,7 +149,7 @@ def lsh_bucket(
     identical unresolved expression as the Column form below."""
     planes = _plane_signs(num_planes, max_dim, offset=table * num_planes)
     if isinstance(vec, str):
-        v = f"cast({_qn(vec)} as array<double>)"
+        v = f"cast({_q(vec)} as array<double>)"
         bits = []
         for signs in planes:
             arr = "array(" + ",".join(
@@ -377,7 +373,7 @@ def embedding_near_dup_pairs(
     # rounded cosine is bit-identical to the naive form.
     # fan_out: the per-row plane projections + norms serialize on one
     # task when the scan is row-group-bound; no-op at real input sizes.
-    _dd = f"cast({_qn(vec_col)} as array<double>)"
+    _dd = f"cast({_q(vec_col)} as array<double>)"
     bucketed = with_lsh_bucket(fan_out(emb, id_col), num_planes, vec_col).withColumn(
         # single-parse SQL form of sqrt(dot(d, d)): the Column-arg dot
         # builds zip_with/aggregate lambdas operator-by-operator over
@@ -692,7 +688,7 @@ def embedding_outliers(
     norms = emb.select(
         F.col(id_col),
         F.expr(
-            f"round(sqrt({_sql_dot(_qn(vec_col), _qn(vec_col))}), 6)"
+            f"round(sqrt({_sql_dot(_q(vec_col), _q(vec_col))}), 6)"
         ).alias("norm"),
     )
     moments = norms.agg(
@@ -810,7 +806,7 @@ def pq_encode(
         *keep,
         *[
             F.expr(
-                f"slice(cast({_qn(vec_col)} as array<double>),"
+                f"slice(cast({_q(vec_col)} as array<double>),"
                 f" {j * dsub + 1}, {dsub}) AS _s{j}"
             )
             for j in range(m)
@@ -918,7 +914,7 @@ def pq_recall(
     # per-subspace Column-op chains cost ~50 ms of py4j round trips
     # each to build; the parsed trees are identical
     qd = "cast(_qv as array<double>)"
-    vd = f"cast({_qn(vec_col)} as array<double>)"
+    vd = f"cast({_q(vec_col)} as array<double>)"
     true_d = F.expr(
         f"round(aggregate(zip_with({vd}, {qd}, (x, y) -> (x - y) * (x - y)),"
         " 0.0D, (a, x) -> a + x), 6)"
@@ -1087,7 +1083,7 @@ def contrastive_triplets(
     """
     from pyspark import StorageLevel
 
-    _dd = f"cast({_qn(vec_col)} as array<double>)"
+    _dd = f"cast({_q(vec_col)} as array<double>)"
     bucketed = (
         with_lsh_bucket(fan_out(emb, id_col), num_planes, vec_col)
         .withColumn("_norm", F.expr(f"sqrt({_sql_dot(_dd, _dd)})"))
@@ -1328,7 +1324,7 @@ def knn_label_noise(
     before the join. Vectors alone in their bucket emit n_neighbors=0
     with NULL disagreement (try_divide), never a crash.
     """
-    _dd = f"cast({_qn(vec_col)} as array<double>)"
+    _dd = f"cast({_q(vec_col)} as array<double>)"
     b = with_lsh_bucket(
         fan_out(emb.select(id_col, vec_col, label_col), id_col),
         num_planes,

@@ -21,18 +21,10 @@ Keys per class (all cheap at sf0.001):
   bool        ext_data_quality            (non-null BOOLEAN flags)
 """
 
-import hashlib
-import math
-
-import duckdb
 import pytest
 
+from streaming_demos_spark import oracle_compare as OC
 from tests.conftest import SF_DIR
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 CLASS_KEYS = [
     "a1_a2_a9_dashboard_metrics",
@@ -44,51 +36,22 @@ CLASS_KEYS = [
 ]
 
 
-def _norm(v):
-    # the driver normalizer: floats rounded at 9dp, everything else str
-    return (
-        ("NaN" if math.isnan(v) else str(round(v, 9)))
-        if isinstance(v, float)
-        else str(v)
-    )
-
-
-def _vhash(cols, data):
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    return hashlib.md5(
-        str(sorted(tuple(_norm(r[i]) for i in order) for r in data)).encode()
-    ).hexdigest()
-
-
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = OC.duck_views(SF_DIR)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("key", CLASS_KEYS)
 def test_pandas_bridge_hash_match(spark, duck, key):
-    import os
-
-    os.environ["ORACLE_SF_DIR"] = SF_DIR
+    OC.use_sf_dir(SF_DIR)
     import __spark_entry__ as E
 
     qdf = E.queries()[key](spark, SF_DIR)
-    spdf = qdf.toPandas()  # the driver's Spark-side materialization
-    sdata = [tuple(r) for r in spdf.itertuples(index=False)]
-    rel = duck.sql(E.oracle_sql()[key])
-    dcols = [d[0] for d in rel.description]
-    ddf = rel.df()  # the driver's DuckDB-side materialization
-    ddata = [tuple(r) for r in ddf.itertuples(index=False)]
-    assert len(sdata) == len(ddata), f"{key}: row counts diverge"
-    sh, dh = _vhash(list(spdf.columns), sdata), _vhash(dcols, ddata)
-    assert sh == dh, (
+    rec = OC.compare(qdf, duck, E.oracle_sql()[key], pandas=True)
+    assert rec["rows_match"], f"{key}: row counts diverge"
+    assert rec["hash_match"], (
         f"{key}: pandas-bridge hash mismatch — a type-class regression "
         f"(HUGEINT/DATE/nullable-bool/complex) has reached the driver "
         f"comparator path"

@@ -2,50 +2,28 @@
 an oracle_sql() is run through Spark AND DuckDB on the same parquet
 tables and compared on row count, column names, and (order-insensitively)
 values. Runs at sf0.001 for speed; the driver does the same at sf0.01.
+The comparison is ``streaming_demos_spark.oracle_compare.compare``.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 
+from streaming_demos_spark import oracle_compare as OC
+
 SF_DIR = "/root/testdata/sf0.001"
-# The eigendecomposition oracles are numpy-computed from the data dir
-# (__spark_entry__._eigen_oracle_sqls); they must read the SAME scale
-# this test queries at. Set before the first oracle_sql() call.
-os.environ["ORACLE_SF_DIR"] = SF_DIR
+# The eigendecomposition oracles are numpy-computed from the data dir;
+# they must read the SAME scale this test queries at. Set before the
+# first oracle_sql() call.
+OC.use_sf_dir(SF_DIR)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from streaming_demos_spark.schemas import TESTDATA_TABLES  # noqa: E402
-
 
 @pytest.fixture(scope="module")
 def ducon():
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = OC.duck_views(SF_DIR)
     yield con
     con.close()
-
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    # Stringify everything else so rows with NULLs sort (None has no
-    # ordering against datetimes/ints).
-    return str(v)
-
-
-def _rows(cols, data):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in data)
 
 
 QUERY_KEYS = sorted(set(entrymod.queries()) & set(entrymod.oracle_sql()))
@@ -54,24 +32,12 @@ QUERY_KEYS = sorted(set(entrymod.queries()) & set(entrymod.oracle_sql()))
 @pytest.mark.parametrize("key", QUERY_KEYS)
 def test_matches_duckdb_oracle(spark, ducon, key):
     qdf = entrymod.queries()[key](spark, SF_DIR)
-    spark_cols = qdf.columns
-    spark_data = [tuple(r) for r in qdf.collect()]
+    rec = OC.compare(qdf, ducon, entrymod.oracle_sql()[key])
 
-    rel = ducon.sql(entrymod.oracle_sql()[key])
-    duck_cols = [d[0] for d in rel.description]
-    duck_data = rel.fetchall()
-
-    assert sorted(c.lower() for c in spark_cols) == sorted(
-        c.lower() for c in duck_cols
-    ), f"{key}: column sets differ"
-    assert len(spark_data) == len(duck_data), f"{key}: row counts differ"
-
-    srows = _rows([c.lower() for c in spark_cols], spark_data)
-    drows = _rows([c.lower() for c in duck_cols], duck_data)
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(srows, drows)) if a != b
-    ]
-    assert not mismatches, f"{key}: first mismatches {mismatches[:3]}"
+    assert rec["schema_match"], f"{key}: column sets differ"
+    assert rec["rows_match"], (
+        f"{key}: row counts differ {rec['spark_rows']}/{rec['oracle_rows']}")
+    assert rec["hash_match"], f"{key}: first mismatch {rec['first_diff']}"
 
 
 def test_entry_smoke(spark):

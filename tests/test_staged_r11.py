@@ -1,58 +1,43 @@
-"""Driver-style oracle proof for the round-11 keys (staged in r10
-while the surface was frozen at 337; REGISTERED in r11 via
-__spark_entry__._r11_queries / _r11_oracle_sqls). Same md5 value-hash
-comparison the round driver runs, at sf0.001 so the suite stays fast —
-these keys entered the registry already locally driver-green.
+"""Oracle proof for the crafted-corpus keys: the audio and decompression
+keys, whose oracles are closed-form replays of a crafted corpus. Besides
+the hash comparison ``test_oracle_parity`` runs for every key, their
+sf0.001 result must be non-empty, since an empty result would
+hash-match an empty replay. The comparison is
+``streaming_demos_spark.oracle_compare.compare``.
 """
 
 from __future__ import annotations
 
-import hashlib
-import math
-
-import duckdb
 import pytest
 
-import __spark_entry__ as E
+from streaming_demos_spark import oracle_compare as OC
 
-SF = "/root/testdata/sf0.001"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+SF_DIR = "/root/testdata/sf0.001"
+OC.use_sf_dir(SF_DIR)
 
+import __spark_entry__ as entrymod  # noqa: E402
 
-def _norm(v):
-    return (
-        ("NaN" if math.isnan(v) else str(round(v, 9)))
-        if isinstance(v, float)
-        else str(v)
-    )
-
-
-def _vhash(cols, data):
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    return hashlib.md5(
-        str(sorted(tuple(_norm(r[i]) for i in order) for r in data)).encode()
-    ).hexdigest()
+CORPUS_KEYS = [
+    "llm_decompress_corpus",
+    "mm_audio_features",
+    "mm_audio_vad",
+    "mm_audio_windows",
+]
 
 
 @pytest.fixture(scope="module")
-def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
+def ducon():
+    con = OC.duck_views(SF_DIR)
+    yield con
+    con.close()
 
 
-@pytest.mark.parametrize("key", sorted(E._r11_queries()))
-def test_r11_key_hash_matches_oracle(spark, ddb, key):
-    qdf = E.queries()[key](spark, SF)
-    sdata = [tuple(r) for r in qdf.collect()]
-    rel = ddb.sql(E.oracle_sql()[key])
-    dcols = [d[0] for d in rel.description]
-    ddata = rel.fetchall()
-    assert len(sdata) == len(ddata), (key, len(sdata), len(ddata))
-    assert len(sdata) > 0, key
-    assert _vhash(qdf.columns, sdata) == _vhash(dcols, ddata), key
+@pytest.mark.parametrize("key", CORPUS_KEYS)
+def test_r11_key_hash_matches_oracle(spark, ducon, key):
+    qdf = entrymod.queries()[key](spark, SF_DIR)
+    rec = OC.compare(qdf, ducon, entrymod.oracle_sql()[key])
+
+    assert rec["rows_match"], (
+        f"{key}: row counts differ {rec['spark_rows']}/{rec['oracle_rows']}")
+    assert rec["spark_rows"] > 0, f"{key}: empty result"
+    assert rec["hash_match"], f"{key}: first mismatch {rec['first_diff']}"
