@@ -1,24 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query at sf0.001; ``queries()``
-exposes one callable per implemented operator from SURVEY.md §2 (and the
-scale extensions); ``oracle_sql()`` gives the DuckDB-equivalent SQL the
-driver hash-compares against at sf0.01.
+exposes one callable per registered key (SURVEY.md §2 inventory and the
+scale extensions) in correctness-window order; ``oracle_sql()`` gives
+the DuckDB-equivalent SQL the driver hash-compares against at sf0.01.
 
-Naming convention: query keys carry the SURVEY.md §2 inventory ids they
-prove (e.g. ``a3_...`` = aggregate A3) so the judge can tick the
-inventory line by line. Column names are aliased identically in both the
-Spark plan and the oracle SQL — the driver sorts columns by name before
-hashing.
-
-Cross-engine determinism rules used throughout:
-- every timestamp that reaches an output is ms-precision or truncated
-  (DuckDB reads the events table as TIMESTAMP_NS; oracles CAST to µs
-  TIMESTAMP to match Spark's µs timestamps);
-- every aggregated double is round()-ed (2-6 dp) in BOTH engines so
-  summation-order ulps cannot flip the hash;
-- every top-k / ranked query orders by the *rounded* score with an
-  explicit unique tie-breaker.
+Each key is registered once, builder and oracle side by side, in
+``streaming_demos_spark/queries/`` (see its ``__init__``); this file
+derives both dicts from that registry.
 """
 
 from __future__ import annotations
@@ -30,6076 +19,19 @@ import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from streaming_demos_spark.catalog import load_table, zorder_key
-from streaming_demos_spark.functions.scalars import bucket_time_of_day, title_case
-from streaming_demos_spark.operators import clustering as CL
-from streaming_demos_spark.operators import curation as CU
-from streaming_demos_spark.operators import dedup as D
-from streaming_demos_spark.operators import multimodal as MM
-from streaming_demos_spark.operators import probes as PR
+from streaming_demos_spark import queries as Q
+from streaming_demos_spark.catalog import load_table
 from streaming_demos_spark.operators import relational as R
-from streaming_demos_spark.operators import selection as SEL
-from streaming_demos_spark.operators import similarity as SIM
-from streaming_demos_spark.operators import sketches as SK
-from streaming_demos_spark.operators import stats as ST
-from streaming_demos_spark.operators import text as TX
-from streaming_demos_spark.operators import tpch as TPCH
-from streaming_demos_spark.operators import training as TR
-from streaming_demos_spark.schemas import ORDERS
-from streaming_demos_spark.sources import cdc
 
 SF0001 = "/root/testdata/sf0.001"
 
-
-# --------------------------------------------------------------------------
-# entry — flagship smoke query
-# --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: pricing-summary scan (grouped multi-aggregate over the
     fact table) at sf0.001. One scan, partial+final hash aggregation."""
     lineitem = load_table(spark, SF0001, "lineitem")
     return R.pricing_summary(lineitem)
-
-
-# --------------------------------------------------------------------------
-# query implementations (spark, sf_dir) -> DataFrame
-# --------------------------------------------------------------------------
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def q_pricing_summary(spark, sf_dir):
-    return R.pricing_summary(_t(spark, sf_dir, "lineitem"))
-
-
-def q_dashboard_feed(spark, sf_dir):
-    # P1 projection/alias + P2 time predicate + J1/J2 joins (api.py:37-58).
-    return R.dashboard_feed(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "part"),
-        lookback_minutes=43200,  # 30 days against max(o_orderdate)
-    )
-
-
-def _feed(spark, sf_dir):
-    return R.dashboard_feed(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "part"),
-    )
-
-
-def q_dashboard_metrics(spark, sf_dir):
-    # A1 distinct counts + A2 sum/round + A9 mean (streamlit/utils.py:25-29).
-    return R.metrics_summary(_feed(spark, sf_dir))
-
-
-def _revenue_by_custkey(spark, sf_dir):
-    # Shared partial aggregate for the A3 queries: revenue collapses to
-    # one row per customer BELOW the dim joins, so the customer/nation
-    # joins see |customers| rows instead of |lineitem| wide rows. The
-    # part join of the full feed is dropped here: it is a no-op for
-    # revenue under the star schema's FK integrity (every l_partkey
-    # resolves; verified on the test data) and contributes no columns.
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev")
-        )
-    )
-
-
-def q_grouped_revenue_nation(spark, sf_dir):
-    # A3 grouped revenue + O1 sort desc, by nation name (utils.py:92-104).
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    per_cust = _revenue_by_custkey(spark, sf_dir)
-    return (
-        per_cust.join(customer, per_cust.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(F.round(F.sum("_rev"), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("nation"))
-    )
-
-
-def q_grouped_revenue_segment(spark, sf_dir):
-    # A3 second grouping axis (traffic_source analog), same partial-
-    # aggregate-below-the-join shape.
-    customer = _t(spark, sf_dir, "customer")
-    per_cust = _revenue_by_custkey(spark, sf_dir)
-    return (
-        per_cust.join(customer, per_cust.o_custkey == customer.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.round(F.sum("_rev"), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("segment"))
-    )
-
-
-def q_metric_deltas(spark, sf_dir):
-    # A4 metric delta vs previous tick, as lag() over daily ticks.
-    # to_date, not date_trunc: date_trunc returns a session-tz
-    # TIMESTAMP, which shifts under a non-UTC harness.
-    events = _t(spark, sf_dir, "events")
-    daily = events.groupBy(
-        # date STRING, not DATE: raw DATE renders asymmetrically
-        # through a pandas comparator bridge (datetime.date vs
-        # midnight datetime64); 'yyyy-MM-dd' strings order identically
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-        "event_type",
-    ).agg(F.round(F.sum("value"), 2).alias("value"))
-    return R.metric_deltas(daily, "day", "event_type", "value")
-
-
-def q_tumbling_stats(spark, sf_dir):
-    # A5-A8 tumbling window agg + window-bound formatting (batch analog
-    # of supplier stats; streaming form in streaming/supplier_stats.py).
-    return R.tumbling_stats(
-        _t(spark, sf_dir, "events"), "ts", "event_type", "value", "5 minutes"
-    )
-
-
-def q_top5_parts(spark, sf_dir):
-    # O2 top-k by score desc (rounded score + unique tie-break).
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    rev = (
-        lineitem.groupBy("l_partkey")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-        .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
-        .select(F.col("l_partkey").alias("part_id"), F.col("p_name").alias("part_name"), "revenue")
-    )
-    return R.top_k(rev, "revenue", 5, tie_col="part_id")
-
-
-def q_top3_parts_per_brand(spark, sf_dir):
-    # O2 per-group top-k via ranked window.
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    rev = (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "l_partkey")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-        .select("p_brand", F.col("l_partkey").alias("part_id"), "revenue")
-    )
-    return R.top_k_per_group(rev, "p_brand", "revenue", 3, tie_col="part_id")
-
-
-def q_time_split(spark, sf_dir):
-    # O4 time-ordered 80/20 split, summarized per split.
-    events = _t(spark, sf_dir, "events")
-    split = R.time_ordered_split(events, "event_id", 0.8)
-    return (
-        split.groupBy("split")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .orderBy("split")
-    )
-
-
-def q_time_filter(spark, sf_dir):
-    # P2 time-range predicate anchored at max(ts) - 7 days. The anchor is
-    # a broadcast 1-row aggregate cross-joined into the plan (one job; no
-    # driver-side collect, no second scan submission).
-    events = _t(spark, sf_dir, "events")
-    anchor = events.agg(F.max("ts").alias("_anchor"))
-    return (
-        events.crossJoin(F.broadcast(anchor))
-        .filter(F.col("ts") >= F.col("_anchor") - F.expr("INTERVAL 7 DAYS"))
-        .select("event_id", "user_id", "event_type", "value")
-    )
-
-
-def q_json_extract(spark, sf_dir):
-    # §2.8 JSON scalar surface + P10 null-safe defaults: parse props,
-    # group by extracted key; a missing path coalesces to a default.
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.select(
-            F.get_json_object("props", "$.k").cast("long").alias("k"),
-            F.coalesce(
-                F.get_json_object("props", "$.missing").cast("long"), F.lit(-1)
-            ).alias("missing_val"),
-            "value",
-        )
-        .groupBy("k", "missing_val")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
-
-
-def q_scalar_strings(spark, sf_dir):
-    # §2.8 string functions: initcap-title, lower+regexp URI templating.
-    part = _t(spark, sf_dir, "part")
-    return part.select(
-        F.col("p_partkey").alias("part_id"),
-        title_case("p_type").alias("type_title"),
-        F.concat(F.lit("/product/"), F.regexp_replace(F.lower("p_name"), r"\s+", "")).alias(
-            "uri"
-        ),
-        F.length("p_name").alias("name_len"),
-    )
-
-
-def q_datetime_buckets(spark, sf_dir):
-    # §2.8 date/time bucketing (bandit_simulator.py:36-47 semantics).
-    events = _t(spark, sf_dir, "events")
-    b = bucket_time_of_day("ts")
-    return events.select(
-        "event_id",
-        F.hour("ts").alias("hr"),
-        b["is_morning"].alias("is_morning"),
-        b["is_afternoon"].alias("is_afternoon"),
-        b["is_evening"].alias("is_evening"),
-        b["is_weekend"].alias("is_weekend"),
-        b["is_weekday"].alias("is_weekday"),
-    )
-
-
-def q_conditional_status(spark, sf_dir):
-    # §2.8 conditional when/otherwise chain (models.py:171-198 shape).
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.select(
-            F.when(F.col("o_orderstatus") == "O", "open")
-            .when(F.col("o_orderstatus") == "F", "fulfilled")
-            .when(F.col("o_orderstatus") == "P", "pending")
-            .otherwise("unknown")
-            .alias("status_bucket"),
-            "o_totalprice",
-        )
-        .groupBy("status_bucket")
-        .agg(F.count("*").alias("n"), F.round(F.avg("o_totalprice"), 4).alias("avg_price"))
-    )
-
-
-def q_weighted_distribution(spark, sf_dir):
-    # A13 population-weighted distribution (location_generator.py:95-145).
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    joined = customer.join(
-        F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-    ).select(F.col("n_name").alias("nation"), F.col("c_acctbal").alias("w"))
-    # weight = customer count (population analog)
-    counts = joined.groupBy("nation").agg(F.count("*").cast("double").alias("pop"))
-    return R.weighted_distribution(counts, "nation", "pop")
-
-
-def q_semi_join(spark, sf_dir):
-    # J6 extension: customers with >=1 order (left semi).
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
-def q_anti_join(spark, sf_dir):
-    # J6 extension: customers with no orders (left anti).
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name", "c_mktsegment")
-
-
-def q_debezium_unwrap(spark, sf_dir):
-    # S10 CDC: envelope JSON -> typed row image + metadata.
-    from streaming_demos_spark.catalog import fan_out
-
-    # the to_json/from_json round trip is per-row heavy and the orders
-    # scan is row-group-bound (3 tasks at bench scale) — fan_out
-    # parallelizes the parse; at real scale the scan has many splits
-    # and the guard inserts nothing (guide §2.5 input skew)
-    orders = fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
-    raw = cdc.make_envelopes(orders, op="c", db="demo", table="orders")
-    out = cdc.debezium_unwrap(raw, "value", ORDERS)
-    return out.select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        # the JSON round trip parses o_orderdate in the session tz;
-        # to_date renders it back in the same zone, and the final
-        # date_format emits a bridge-proof STRING (a raw DATE renders
-        # asymmetrically through a pandas comparator)
-        F.date_format(F.to_date("o_orderdate"), "yyyy-MM-dd").alias(
-            "o_orderdate"
-        ),
-        "o_orderpriority", "op", "table", "lsn",
-    )
-
-
-def q_cdc_apply_changes(spark, sf_dir):
-    # S10 CDC compaction: c (all rows) + u (even keys, new totalprice)
-    # + d (keys % 10 == 0); latest-lsn-wins upsert/delete. The update
-    # transform is *2 — exact in IEEE-754 binary doubles, so Spark and
-    # DuckDB agree bit-for-bit (a *1.1+round transform manufactures
-    # decimal-halfway values the two engines round differently).
-    from streaming_demos_spark.catalog import fan_out
-
-    # fan_out: the JSON envelope round trip is the dominant per-row
-    # cost and the scan is row-group-bound (see q_debezium_unwrap)
-    orders = fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
-    creates = cdc.make_envelopes(orders, "c", "demo", "orders", lsn_offset=0)
-    updates = cdc.make_envelopes(
-        orders.filter(F.col("o_orderkey") % 2 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        ),
-        "u", "demo", "orders", lsn_offset=1,
-    )
-    deletes = cdc.make_envelopes(
-        orders.filter(F.col("o_orderkey") % 10 == 0), "d", "demo", "orders", lsn_offset=2
-    )
-    changes = cdc.debezium_unwrap(
-        creates.unionByName(updates).unionByName(deletes), "value", ORDERS
-    )
-    current = cdc.apply_changes(changes, ["o_orderkey"], seq_col="lsn")
-    return current.select("o_orderkey", "o_orderstatus", "o_totalprice")
-
-
-def q_late_tagging(spark, sf_dir):
-    # T6 late-record detection (LateRecordProcessor.kt:46-64 arithmetic):
-    # per-shard stream time = running max event time over arrival order;
-    # late ⇔ stream_time > window_end + grace, window_end =
-    # (floor(ts/size)+1)*size. Batch-checkable form of the streaming
-    # stateful tagger (streaming/supplier_stats.py): shard=event_type,
-    # arrival order=event_id, window=300s, grace=600s.
-    from streaming_demos_spark.streaming import supplier_stats as SS
-
-    # events.parquet is time-ordered by event_id, which would make every
-    # row on-time; a deterministic LCG over the id simulates an
-    # out-of-order arrival sequence (the Kafka-offset analog) so the
-    # tagger produces real late rows.
-    events = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("ts").alias("event_time"),
-        (F.col("event_id") * 2
-         + (F.col("event_id") * 1103515245 + 12345) % 13 - 6).alias("seq"),
-    )
-    tagged = SS.tag_late_batch(
-        events, "event_type", "seq", window_sec=300, grace_sec=600
-    )
-    return tagged.select(
-        "event_id",
-        "event_type",
-        SS.window_end_expr(F.col("event_time"), 300).alias("window_end_epoch"),
-        "is_late",
-    )
-
-
-# --------------------------------------------------------------------------
-# sources, small projections, scalar-surface gaps
-# --------------------------------------------------------------------------
-
-def q_csv_declared_schema(spark, sf_dir):
-    # S1/S8: declared-schema CSV parsing with drop-bad-rows policy. The
-    # part table round-trips through CSV text lines; two malformed lines
-    # are injected and must be dropped by the corrupt-record filter.
-    from streaming_demos_spark.sources import files as FS
-
-    part = _t(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_size", "p_retailprice"
-    )
-    lines = part.select(FS.to_csv_line(part).alias("line"))
-    bad = spark.createDataFrame(
-        [("not,enough",), ("x,y,z,w",)], ["line"]
-    )
-    parsed = FS.parse_csv_lines(
-        lines.unionByName(bad),
-        "line",
-        part.schema,
-        bad_rows="drop",
-    )
-    return parsed
-
-
-def q_limit_probe(spark, sf_dir):
-    # P3/O3: LIMIT-1 probe with a deterministic order (api.py:57-58).
-    return (
-        _t(spark, sf_dir, "orders")
-        .orderBy("o_orderkey")
-        .limit(1)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    )
-
-
-def q_drop_columns(spark, sf_dir):
-    # P5/P6: drop extraneous/PII columns (text is the payload analog).
-    return _t(spark, sf_dir, "documents").drop("text")
-
-
-def q_numeric_projection(spark, sf_dir):
-    # P7: numeric-dtype projection of the fact table.
-    return R.numeric_projection(_t(spark, sf_dir, "lineitem"))
-
-
-def q_zip_join(spark, sf_dir):
-    # J4: positional zip of two ordered dim frames (pd.concat axis=1).
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    region = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    return R.zip_join(nation, region, "n_nationkey", "r_regionkey").select(
-        "n_nationkey", "n_name", "r_name"
-    )
-
-
-def q_array_vector(spark, sf_dir):
-    # §2.8 array surface: build a vector from columns, slice,
-    # element_at, aggregate-sum (eda_recommender.py:98-101 vector build).
-    li = _t(spark, sf_dir, "lineitem")
-    vec = F.array("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.size(vec).alias("vec_len"),
-        F.element_at(vec, 2).alias("elem2"),
-        F.round(
-            F.aggregate(F.slice(vec, 1, 2), F.lit(0.0), lambda acc, x: acc + x), 4
-        ).alias("head2_sum"),
-    )
-
-
-def q_struct_json(spark, sf_dir):
-    # §2.8 map/struct + JSON serialize + T8 late-tag shape: build a
-    # struct, add late=true, emit JSON keyed by order id
-    # (StreamsApp.kt:115-128).
-    orders = _t(spark, sf_dir, "orders")
-    return orders.select(
-        F.col("o_orderkey").alias("key"),
-        F.to_json(
-            F.struct(
-                F.col("o_orderkey").alias("order_id"),
-                F.col("o_orderstatus").alias("status"),
-                F.lit(True).alias("late"),
-            )
-        ).alias("value"),
-    )
-
-
-def q_ground_truth_score(spark, sf_dir):
-    # §2.8 ground-truth scoring formula (bandit_simulator.py:56-87):
-    # rule-based logit over time-of-day/type interactions -> sigmoid.
-    from streaming_demos_spark.functions.scalars import sigmoid
-
-    events = _t(spark, sf_dir, "events")
-    b = bucket_time_of_day("ts")
-    is_click = (F.col("event_type") == "click").cast("int")
-    is_purchase = (F.col("event_type") == "purchase").cast("int")
-    is_error = (F.col("event_type") == "error").cast("int")
-    logit = (
-        F.lit(-1.0)
-        + 2.5 * (b["is_morning"] * is_click)
-        + 1.8 * (b["is_weekend"] * is_purchase)
-        - 3.0 * (b["is_evening"] * is_error)
-        + 0.5 * (F.col("event_type") == "view").cast("int")
-    )
-    return events.select(
-        "event_id", F.round(sigmoid(logit), 6).alias("p_click")
-    )
-
-
-def q_status_timestamps(spark, sf_dir):
-    # §2.8 conditional lifecycle timestamps (models.py:171-198): status
-    # chains set shipped/delivered/returned or NULL, fixed offsets.
-    from streaming_demos_spark.functions.scalars import status_timestamps
-
-    orders = _t(spark, sf_dir, "orders")
-    status = (
-        F.when(F.col("o_orderstatus") == "F", "Complete")
-        .when(F.col("o_orderstatus") == "O", "Shipped")
-        .otherwise("Processing")
-    )
-    ts = status_timestamps(status, F.col("o_orderdate"))
-    return orders.select(
-        "o_orderkey",
-        ts["shipped_at"].alias("shipped_at"),
-        ts["delivered_at"].alias("delivered_at"),
-        ts["returned_at"].alias("returned_at"),
-    )
-
-
-# --------------------------------------------------------------------------
-# LinUCB + feature engineering (A10-A12, J3, §2.10)
-# --------------------------------------------------------------------------
-
-LINUCB_D = 2
-LINUCB_X0 = [1.0, 0.5]
-
-
-def _feedback(spark, sf_dir):
-    # Deterministic feedback log derived from events: 20 products,
-    # context [1, value/100 capped], reward = click/purchase.
-    events = _t(spark, sf_dir, "events")
-    return events.select(
-        (F.col("user_id") % 20).alias("product_id"),
-        F.array(
-            F.lit(1.0), F.least(F.col("value"), F.lit(100.0)) / 100.0
-        ).alias("context_vector"),
-        F.when(F.col("event_type").isin("click", "purchase"), 1.0)
-        .otherwise(0.0)
-        .alias("reward"),
-    )
-
-
-def _models(spark, sf_dir):
-    from streaming_demos_spark.operators import linucb as LU
-
-    return LU.fit_batch(_feedback(spark, sf_dir), d=LINUCB_D, lam=1.0)
-
-
-def q_linucb_fit(spark, sf_dir):
-    # A10/J3 batch fit as ONE grouped applyInPandas pass (numpy inside
-    # Arrow batches); at d=2 the inverse has a closed form, so the
-    # oracle recomputes A⁻¹ and θ = A⁻¹b exactly in SQL.
-    m = _models(spark, sf_dir)
-    inv11, inv12, inv22 = (
-        F.col("a_inv")[0][0], F.col("a_inv")[0][1], F.col("a_inv")[1][1]
-    )
-    b1, b2 = F.col("b")[0], F.col("b")[1]
-    return m.select(
-        "product_id",
-        F.round(inv11, 6).alias("inv11"),
-        F.round(inv12, 6).alias("inv12"),
-        F.round(inv22, 6).alias("inv22"),
-        F.round(b1, 6).alias("b1"),
-        F.round(b2, 6).alias("b2"),
-        F.round(inv11 * b1 + inv12 * b2, 6).alias("theta1"),
-        F.round(inv12 * b1 + inv22 * b2, 6).alias("theta2"),
-    )
-
-
-def q_linucb_score_top5(spark, sf_dir):
-    # A12/O2 serve-time scoring: θ = A⁻¹b, s = x·θ + α√(xᵀA⁻¹x), top-5
-    # (pandas_udf over the model table).
-    from streaming_demos_spark.operators import linucb as LU
-
-    return LU.recommend_top_k(_models(spark, sf_dir), x=LINUCB_X0, alpha=1.0, k=5)
-
-
-_FEAT_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-
-
-def q_feature_engineering(spark, sf_dir):
-    # §2.10 feature pipeline: one-hot (declared categories), global
-    # min-max scaling via broadcast aggregate, membership flag.
-    from streaming_demos_spark.functions import features as FE
-
-    cust = _t(spark, sf_dir, "customer")
-    cust = FE.one_hot(cust, "c_mktsegment", _FEAT_SEGMENTS, prefix="seg")
-    cust = FE.min_max_scale(cust, ["c_acctbal"])
-    cust = FE.flag_in(cust, "c_mktsegment", ["AUTOMOBILE", "MACHINERY"], "is_industrial")
-    return cust.select(
-        "c_custkey",
-        *[f"seg_{s.lower()}" for s in _FEAT_SEGMENTS],
-        F.round("c_acctbal_scaled", 6).alias("acctbal_scaled"),
-        "is_industrial",
-    )
-
-
-def _scored_log(spark, sf_dir):
-    # Deterministic interaction log for the offline-eval surface
-    # (evaluate.py:31-124 shape): user = custkey, item = orderkey
-    # (unique -> total rank order), score = 6-dp function of the price,
-    # label = order fulfilled. Both engines compute it identically.
-    orders = _t(spark, sf_dir, "orders")
-    return orders.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderkey").alias("product_id"),
-        F.round((F.col("o_totalprice") % 1000.0) / 1000.0, 6).alias("score"),
-        (F.col("o_orderstatus") == "F").cast("int").alias("reward"),
-    )
-
-
-def q_eval_ranking(spark, sf_dir):
-    # §2.10 offline eval: CTR@5 / Precision@5 / Recall@5 as DataFrame
-    # aggregates over the per-user ranking window (evaluate.py:57-108).
-    from streaming_demos_spark.operators import linucb as LU
-
-    return LU.eval_ranking(_scored_log(spark, sf_dir), k=5)
-
-
-def q_eval_auc(spark, sf_dir):
-    # §2.10 offline eval: exact ROC-AUC via the Mann-Whitney rank
-    # statistic, computed over per-distinct-score aggregates (the
-    # un-partitioned window runs on the score-cardinality frame, not
-    # the log).
-    from streaming_demos_spark.operators import linucb as LU
-
-    log = _scored_log(spark, sf_dir)
-    return LU.auc(log, "score", "reward")
-
-
-def q_eval_ndcg(spark, sf_dir):
-    # §2.10 offline eval: NDCG@5 with driver-precomputed discount
-    # literals (identical constants in plan and oracle — JVM vs C log2
-    # can differ in the last ulp).
-    from streaming_demos_spark.operators import linucb as LU
-
-    return LU.ndcg_at_k(_scored_log(spark, sf_dir), k=5)
-
-
-def q_tfidf_top_terms(spark, sf_dir):
-    # §2.10 TF-IDF (preprocessor.py:94-97's vectorizer half) as pure
-    # DataFrame algebra: explode -> tf -> df -> smooth-idf join; top-3
-    # terms per doc by rounded score with a term tie-break.
-    from pyspark.sql import Window
-
-    from streaming_demos_spark.functions import tfidf as TI
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = TI.tfidf(docs, "doc_id", "text")
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "term", "tf", "df", "tfidf")
-    )
-
-
-def q_svd_embed(spark, sf_dir):
-    # §2.10 truncated SVD (preprocessor.py:94-97's 10-component half):
-    # hashed tf-idf vectors -> distributed gram matrix -> driver-side
-    # eigh of the small D×D -> map-only projection. Hash-verified
-    # against an independent numpy implementation (functions/
-    # numpy_ref.py) via a VALUES-table oracle: the component-grid snap
-    # in tfidf.svd_components makes both engines project against the
-    # bit-identical V, and the 6-dp output round absorbs matmul-blocking
-    # ulps. The embedding is unnested to scalar (doc_id, component_idx,
-    # value) rows so the checker's canonical sort works.
-    from streaming_demos_spark.functions import tfidf as TI
-
-    docs = _t(spark, sf_dir, "documents")
-    vecs = TI.hashed_tfidf_vectors(docs, "doc_id", "text", dim=64)
-    emb = TI.svd_embed(vecs, k=8, id_col="doc_id")
-    return emb.select(
-        "doc_id", F.posexplode("embedding").alias("component_idx", "_v")
-    ).select(
-        "doc_id",
-        "component_idx",
-        F.round(F.col("_v"), 6).alias("value"),
-    )
-
-
-def q_split_by_predicate(spark, sf_dir):
-    # P4 stream/table branch split (StreamsApp.kt:100-113): both
-    # branches of one predicate, tagged and re-unioned; the per-branch
-    # aggregate proves the split partitions the input exactly.
-    events = _t(spark, sf_dir, "events")
-    hits, rest = R.split_by_predicate(events, F.col("event_type") == "error")
-    tagged = hits.withColumn("branch", F.lit("error")).unionByName(
-        rest.withColumn("branch", F.lit("ok"))
-    )
-    return tagged.groupBy("branch").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value")
-    )
-
-
-_ALIGN_COLS = ["o_orderkey", "o_totalprice", "feature_x", "o_shippriority"]
-
-
-def q_align_schema(spark, sf_dir):
-    # P9 schema alignment (models.py:101-104): force onto a declared
-    # column set — extras dropped, missing filled 0.0, order fixed.
-    orders = _t(spark, sf_dir, "orders")
-    return R.align_schema(orders, _ALIGN_COLS, fill_value=0.0)
-
-
-def q_null_defaults(spark, sf_dir):
-    # P10 null-safe defaults (StreamsApp.kt:132-135 `?: "UNKNOWN"` /
-    # `?: 0.0`): a missing JSON path and a nullified column both
-    # coalesce to defaults before aggregation.
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.select(
-            F.coalesce(F.nullif(F.col("event_type"), F.lit("error")), F.lit("UNKNOWN")).alias(
-                "etype"
-            ),
-            F.coalesce(
-                F.get_json_object("props", "$.absent").cast("double"), F.lit(0.0)
-            ).alias("absent_val"),
-            "value",
-        )
-        .groupBy("etype", "absent_val")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
-
-
-def q_asof_enrichment(spark, sf_dir):
-    # As-of join (custom operator — Spark has no ASOF JOIN): each click
-    # event is enriched with the user's most recent prior-or-equal
-    # signup value; NULL before any signup. One shuffle on the user key
-    # via the union+carry-forward restatement (relational.asof_join).
-    events = _t(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("value").alias("profile_v")
-    )
-    out = R.asof_join(clicks, signups, key="user_id", ts="ts",
-                      value_cols=["profile_v"])
-    return out.select(
-        "event_id", "user_id",
-        F.round("profile_v_asof", 2).alias("profile_v_asof"),
-    )
-
-
-def q_interval_join(spark, sf_dir):
-    # Range/interval join (custom operator): each click joined to the
-    # 1-hour "session window" opened by any signup of the same user.
-    # Bucket-expansion equality join, not a per-key cartesian.
-    events = _t(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    sessions = events.filter(F.col("event_type") == "signup").select(
-        "user_id",
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end_ts"),
-    )
-    out = R.interval_join(
-        clicks, sessions, key="user_id", ts="ts",
-        start="start_ts", end="end_ts", granularity_sec=3600,
-    )
-    return out.select(
-        "event_id", "user_id", "start_ts", F.round("value", 2).alias("value")
-    )
-
-
-def q_hierarchical_rollup(spark, sf_dir):
-    # Hypertable-style continuous aggregate: the daily rollup is
-    # computed FROM the hourly rollup, not from raw events — the
-    # two-level materialization pattern that lets a 100 TB store serve
-    # coarse queries from pre-aggregated levels. Oracle recomputes the
-    # daily level directly from raw rows: sums must agree.
-    events = _t(spark, sf_dir, "events")
-    hourly = events.groupBy(
-        F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(F.sum("value").alias("v"), F.count("*").alias("n"))
-    return (
-        hourly.groupBy(
-            F.date_format(F.to_date("hour"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-        )
-        .agg(F.round(F.sum("v"), 2).alias("total_value"), F.sum("n").alias("n"))
-    )
-
-
-def q_rollup_revenue(spark, sf_dir):
-    # Extension (§2.4 note: Spark-native, not in the reference): revenue
-    # rollup over (nation, segment) with grouping id to distinguish
-    # subtotal rows — one pass, partial+final aggregation per grouping
-    # set.
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    joined = cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-    return (
-        joined.rollup("n_name", "c_mktsegment")
-        .agg(
-            F.grouping_id("n_name", "c_mktsegment").alias("gid"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-            F.count("*").alias("n"),
-        )
-        .select("n_name", "c_mktsegment", "gid", "total_bal", "n")
-    )
-
-
-def q_cube_revenue(spark, sf_dir):
-    # Extension: full CUBE over (nation, segment) — all four grouping
-    # sets in one pass (rollup's superset; same partial+final agg per
-    # set, one shuffle).
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    joined = cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-    return (
-        joined.cube("n_name", "c_mktsegment")
-        .agg(
-            F.grouping_id("n_name", "c_mktsegment").alias("gid"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-            F.count("*").alias("n"),
-        )
-        .select("n_name", "c_mktsegment", "gid", "total_bal", "n")
-    )
-
-
-def q_grouping_sets(spark, sf_dir):
-    # Extension completing the multi-granularity family: explicit
-    # GROUPING SETS — exactly the requested granularities ((nation),
-    # (segment), ()) in one pass, no cube superset waste. Same
-    # partial+final agg shape as rollup/cube: one shuffle.
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    joined = cust.join(
-        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
-    )
-    return (
-        joined.groupingSets(
-            [["n_name"], ["c_mktsegment"], []], "n_name", "c_mktsegment"
-        )
-        .agg(
-            F.grouping_id("n_name", "c_mktsegment").alias("gid"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-            F.count("*").alias("n"),
-        )
-        .select("n_name", "c_mktsegment", "gid", "total_bal", "n")
-    )
-
-
-_SQL_GROUPING_SETS = """
-    SELECT n_name, c_mktsegment,
-           (CASE WHEN grouping(n_name) = 1 THEN 2 ELSE 0 END
-            + CASE WHEN grouping(c_mktsegment) = 1 THEN 1 ELSE 0 END) AS gid,
-           round(sum(c_acctbal), 2) AS total_bal,
-           count(*) AS n
-    FROM customer JOIN nation ON c_nationkey = n_nationkey
-    GROUP BY GROUPING SETS ((n_name), (c_mktsegment), ())
-"""
-
-
-def q_sliding_window(spark, sf_dir):
-    # T14 extension (tumbling-only in the reference; Spark-native):
-    # 10-minute windows sliding every 5 — each event lands in exactly 2
-    # windows; counts therefore sum to 2x the row count (asserted by the
-    # oracle's unnest-based window expansion).
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.window("ts", "10 minutes", "5 minutes"), "event_type"
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def q_session_window(spark, sf_dir):
-    # Extension (Spark-native session_window; the reference is
-    # tumbling-only): per-event-type activity sessions that merge while
-    # consecutive events arrive within 30 minutes — session =
-    # [min ts, max ts + gap). Bounds emitted as epoch microseconds so
-    # the oracle comparison is exact-integer.
-    return R.session_stats(
-        _t(spark, sf_dir, "events"), "ts", "event_type", "value", gap="30 minutes"
-    )
-
-
-def q_argmax_part_per_brand(spark, sf_dir):
-    # Extension: top-1-per-group via ONE aggregation of a lexicographic
-    # struct max (argmax) — no rank window, half the shuffle work of
-    # row_number for the k=1 case. Tie-break inside the struct
-    # (max revenue, then max name) keeps it deterministic.
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    rev = li.groupBy("l_partkey").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "revenue"
-        )
-    )
-    joined = rev.join(part, rev.l_partkey == part.p_partkey).select(
-        "p_brand", "p_name", "revenue"
-    )
-    m = joined.groupBy("p_brand").agg(F.max(F.struct("revenue", "p_name")).alias("m"))
-    return m.select(
-        "p_brand",
-        F.col("m.p_name").alias("top_part"),
-        F.col("m.revenue").alias("revenue"),
-    )
-
-
-def q_weighted_sample(spark, sf_dir):
-    # Deterministic PPS-flavored downsampling: 10 docs per source,
-    # priority u/w with u = md5-uniform(doc_id), w = n_chars.
-    return CU.weighted_priority_sample(
-        _t(spark, sf_dir, "documents"),
-        weight_col="n_chars",
-        n_per_stratum=10,
-        strata_col="source",
-    )
-
-
-def q_user_journeys(spark, sf_dir):
-    # Extension: per-user time-ordered event path (sequence feature) —
-    # ordering inside the aggregated array, no per-key window scan.
-    return R.user_journeys(
-        _t(spark, sf_dir, "events"), "user_id", "ts", "event_type", max_steps=50
-    )
-
-
-def q_funnel(spark, sf_dir):
-    # Extension: strict view->click->purchase conversion funnel, the
-    # stage machine folded over each user's time-sorted step array.
-    return R.funnel_stages(
-        _t(spark, sf_dir, "events"), "user_id", "ts", "event_type",
-        stages=["view", "click", "purchase"],
-    )
-
-
-def q_zscore_anomalies(spark, sf_dir):
-    # Extension: per-event-type z-score outliers (|z| > 2.5) — the
-    # numeric-feed drift monitor; stats side broadcast by AQE.
-    return R.zscore_anomalies(
-        _t(spark, sf_dir, "events"), "event_type", "value", "event_id", threshold=2.5
-    )
-
-
-def q_retention(spark, sf_dir):
-    # Extension: weekly cohort retention over integer epoch-week indexes
-    # (engine-identical arithmetic, no calendar-week ambiguity).
-    return R.retention_cohorts(_t(spark, sf_dir, "events"), "user_id", "ts")
-
-
-def q_moving_average(spark, sf_dir):
-    # Extension: per-user trailing 1-hour moving average over a
-    # time-RANGE frame (row-anchored smoothing; tie-safe because RANGE
-    # frames aggregate same-timestamp peers together in both engines).
-    return R.moving_average(
-        _t(spark, sf_dir, "events"), "ts", "user_id", "value", trailing_sec=3600
-    )
-
-
-# --------------------------------------------------------------------------
-# LLM-data-pipeline queries (dedup / similarity / text / multimodal)
-# --------------------------------------------------------------------------
-
-def q_dedup_exact(spark, sf_dir):
-    # Exact dedup groups: md5-hash groupBy, min-id representative.
-    return D.exact_dedup_groups(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_minhash_pairs(spark, sf_dir):
-    # MinHash(12 hashes)->LSH(4 bands x 3 rows)->exact-Jaccard verify.
-    # Threshold 0.1 surfaces the band-collision candidates in the
-    # synthetic corpus (no true near-dups at sf0.01, so the interesting
-    # output is the verified candidate set itself).
-    return D.minhash_near_dup_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.1
-    ).orderBy("doc_a", "doc_b")
-
-
-def q_dedup_clusters(spark, sf_dir):
-    # Near-dup CLUSTERING: minhash pairs (threshold 0.1, as above) ->
-    # connected components (iterative min-label propagation; transitive
-    # closure because near-dup similarity is not transitive) -> keep the
-    # min-id doc per cluster. One row per document.
-    return D.near_dup_clusters(
-        _t(spark, sf_dir, "documents"), threshold=0.1
-    ).orderBy("doc_id")
-
-
-def q_dedup_jaccard(spark, sf_dir):
-    # EXACT n-gram Jaccard similarity join: prefix-filtered candidates
-    # (AllPairs rule, lexicographic shingle order) + length filter,
-    # then exact Jaccard verify at threshold 0.5 — the no-false-negative
-    # complement to the MinHash approximation.
-    return D.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5
-    ).orderBy("doc_a", "doc_b")
-
-
-def q_dedup_simhash(spark, sf_dir):
-    # 32-bit SimHash fingerprint + 8-bit LSH prefix per document.
-    return D.simhash_fingerprints(_t(spark, sf_dir, "documents"))
-
-
-def q_text_stats(spark, sf_dir):
-    # Token counts, word lengths, stopword/alpha ratios, quality score.
-    return TX.text_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_lang_id(spark, sf_dir):
-    # Marker-word language ID with deterministic tie-breaking.
-    return TX.lang_id(_t(spark, sf_dir, "documents"))
-
-
-def q_vocab_stats(spark, sf_dir):
-    # Corpus vocabulary table (df / cf / df-fraction, min_df=2) — the
-    # statistics behind min_df/max_df pruning and stopword discovery.
-    return TX.vocab_stats(_t(spark, sf_dir, "documents"), min_df=2)
-
-
-def q_ngram_entropy(spark, sf_dir):
-    # Character-bigram Shannon entropy over normalized text — the
-    # repetition/garbage quality gate (low entropy = templated/looping
-    # text). Stable form H = log2(T) - Σ c·log2(c)/T in both engines.
-    return TX.char_ngram_entropy(_t(spark, sf_dir, "documents"), n=2)
-
-
-def q_fingerprint(spark, sf_dir):
-    # md5-of-normalized-text content fingerprint.
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", TX.fingerprint("text").alias("fp"))
-
-
-def q_winnow_fingerprints(spark, sf_dir):
-    # Winnowing (MOSS) rolling-hash fingerprints: windowed min over the
-    # 3-gram hash sequence, distinct per doc. Map-only, no shuffle.
-    return TX.winnow_fingerprints(_t(spark, sf_dir, "documents"))
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    # Brute-force exact cosine top-10 vs vec_id=0 (the ANN baseline).
-    return SIM.brute_force_topk(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
-
-
-def q_ann_lsh_topk(spark, sf_dir):
-    # Sign-LSH bucketed ANN: same query, search only the query's bucket.
-    return SIM.lsh_topk(
-        _t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10, num_planes=4
-    )
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    # IVF-bucketed ANN: deterministic coarse centroids (lowest 8 ids),
-    # probe the 2 nearest cells, exact cosine inside them.
-    return SIM.ivf_topk(
-        _t(spark, sf_dir, "embeddings"),
-        query_vec_id=0, k=10, n_centroids=8, nprobe=2,
-    )
-
-
-def q_ann_recall(spark, sf_dir):
-    # ANN evaluation harness: recall@10 of the sign-LSH path vs the
-    # exact baseline over a 5-query panel — the measurement that
-    # justifies (or rejects) the bucket-pruned search at scale.
-    return SIM.ann_recall(
-        _t(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=10, num_planes=4
-    )
-
-
-def q_ann_lsh_multi_topk(spark, sf_dir):
-    # Multi-table OR construction: candidates from 2 independent
-    # plane-sets, unioned + deduped BEFORE the exact-cosine ranking.
-    return SIM.lsh_topk_multi(
-        _t(spark, sf_dir, "embeddings"),
-        query_vec_id=0, k=10, num_planes=4, num_tables=2,
-    )
-
-
-def q_ann_recall_multi(spark, sf_dir):
-    # Recall lift of the OR construction: per query, recall@10 with 1
-    # table vs 2 tables from one scored frame; lift >= 0 pointwise (the
-    # multi candidate set contains the single one) and the mean lift is
-    # the number that justifies the 2x candidate volume.
-    return SIM.ann_recall_lift(
-        _t(spark, sf_dir, "embeddings"),
-        query_ids=[0, 1, 2, 3, 4], k=10, num_planes=4, num_tables=2,
-    )
-
-
-def q_neardup_embedding(spark, sf_dir):
-    # Embedding-cosine near-dup pairs within LSH buckets.
-    return SIM.embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3, num_planes=4
-    ).orderBy("id_a", "id_b")
-
-
-def q_curation_pipeline(spark, sf_dir):
-    # Composite corpus curation — the end-to-end shape a training-data
-    # pipeline actually runs: exact-dedup to canonical docs, language
-    # gate, quality-score threshold, one output row per surviving doc.
-    # All stages are per-row column expressions except the dedup
-    # semi-join; the plan stays one scan + one hash-shuffle.
-    docs = _t(spark, sf_dir, "documents")
-    canonical = D.exact_dedup(docs)
-    stats = TX.text_stats(canonical)
-    langs = TX.lang_id(canonical).select("doc_id", "pred_lang")
-    return (
-        stats.join(langs, "doc_id")
-        .filter((F.col("quality_score") >= 0.5) & (F.col("pred_lang") == "en"))
-        .select("doc_id", "n_tokens", "quality_score", "pred_lang")
-    )
-
-
-def q_quantile_summary(spark, sf_dir):
-    # Extension: exact grouped percentiles (linear interpolation, the
-    # percentile_cont definition both engines share) — computed by
-    # DISTRIBUTED histogram selection (grouped_quantiles_selection): no
-    # task ever buffers a group's values, unlike F.percentile, while
-    # the result is bit-identical. ext_quantile_approx exercises the
-    # sketch-based variant of the same operator.
-    # Rounding at 6dp: interpolated money values have <= 4 decimal
-    # digits ((n-1)*p fractions are multiples of 0.05 on 2-dp cents),
-    # so 6dp rounding never sits on a halfway value in either engine.
-    li = _t(spark, sf_dir, "lineitem")
-    return R.grouped_quantiles_selection(
-        li, "l_returnflag", "l_extendedprice", [0.25, 0.5, 0.75, 0.95]
-    )
-
-
-def q_quantile_approx(spark, sf_dir):
-    # The exact=False (approx_percentile sketch) path, made
-    # oracle-checkable as a PROPERTY: the sketch guarantees the returned
-    # element's rank is within n/accuracy of the target rank, so count
-    # values <= the approx median and assert the bound. The oracle's
-    # expected frame is simply "every group within bound".
-    li = _t(spark, sf_dir, "lineitem")
-    acc = 1000
-    approx = R.grouped_quantiles(
-        li, "l_returnflag", "l_extendedprice", [0.5], exact=False, accuracy=acc
-    )
-    # approx is |groups| rows — broadcast it back over the fact scan.
-    joined = li.select("l_returnflag", "l_extendedprice").join(
-        F.broadcast(approx), "l_returnflag"
-    )
-    return (
-        joined.groupBy("l_returnflag")
-        .agg(
-            F.sum((F.col("l_extendedprice") <= F.col("p50")).cast("long")).alias(
-                "_rank_at"
-            ),
-            F.first("n_rows").alias("n_rows"),
-        )
-        .select(
-            "l_returnflag",
-            "n_rows",
-            # coalesce: non-nullable BOOLEAN for the driver's pandas
-            # bridge (None vs NaN); the oracle side is a literal true.
-            F.coalesce(
-                F.abs(F.col("_rank_at") - 0.5 * F.col("n_rows"))
-                <= F.col("n_rows") / acc + 1,
-                F.lit(False),
-            ).alias("within_bound"),
-        )
-    )
-
-
-def q_decontaminate(spark, sf_dir):
-    # Benchmark decontamination: docs from src0 play the eval set; every
-    # other doc is flagged if it shares any distinct word 3-gram with
-    # them. Benchmark shingles broadcast; corpus side never shuffles by
-    # shingle (stopword n-grams are the skew trap).
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("source") == "src0")
-    corpus = docs.filter(F.col("source") != "src0")
-    return CU.decontaminate(corpus, bench, k=3, min_hits=1)
-
-
-def q_histogram_2d(spark, sf_dir):
-    # Density heatmap: quantity x discount cell counts, broadcast
-    # bounds + map-side binning (relational.py:histogram_2d).
-    return R.histogram_2d(
-        _t(spark, sf_dir, "lineitem"),
-        "l_quantity",
-        "l_discount",
-        bins_x=10,
-        bins_y=8,
-    )
-
-
-def q_grouped_ols(spark, sf_dir):
-    # Closed-form grouped OLS: price ~ quantity + discount per
-    # returnflag, centered sufficient statistics + Cramer solve, all
-    # column algebra (relational.py:grouped_ols).
-    return R.grouped_ols(
-        _t(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_extendedprice",
-        "l_quantity",
-        "l_discount",
-    )
-
-
-def q_bootstrap_ci(spark, sf_dir):
-    # Deterministic Poissonized bootstrap: 95% CI for the per-type mean
-    # event value, 100 md5-seeded replicates, nearest-rank cut of the
-    # sorted replicate means (relational.py:bootstrap_mean_ci).
-    return R.bootstrap_mean_ci(
-        _t(spark, sf_dir, "events"),
-        "event_type",
-        "value",
-        "event_id",
-        n_replicates=100,
-    )
-
-
-def q_preference_pairs(spark, sf_dir):
-    # DPO/reward-model pair construction: per (source, lang) prompt
-    # bucket, highest- vs lowest-scoring doc by a quality proxy
-    # (n_chars), deterministic struct-max/min, one aggregation
-    # (curation.py:preference_pairs).
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "bucket", F.concat_ws("|", "source", "lang")
-    )
-    return CU.preference_pairs(docs, "bucket", "n_chars", min_margin=1.0)
-
-
-def q_pivot_revenue(spark, sf_dir):
-    # Wide pivot with a DECLARED value list -> one conditional-agg pass,
-    # stable schema, no distinct pre-scan (relational.py:pivot_metric).
-    return R.pivot_metric(
-        _t(spark, sf_dir, "orders"),
-        "o_orderpriority",
-        "o_orderstatus",
-        "o_totalprice",
-        ["F", "O", "P"],
-    )
-
-
-def q_unpivot_profile(spark, sf_dir):
-    # Melt the per-order numeric columns into tidy (id, metric, value)
-    # rows — map-only stack, no shuffle (relational.py:unpivot_metrics).
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 100)
-    return R.unpivot_metrics(
-        li.groupBy("l_orderkey").agg(
-            F.round(F.sum("l_quantity"), 1).alias("qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("price"),
-            F.round(F.sum("l_discount"), 3).alias("discount"),
-        ),
-        "l_orderkey",
-        ["qty", "price", "discount"],
-    )
-
-
-def q_correlation_matrix(spark, sf_dir):
-    # Pairwise Pearson over the lineitem numerics in ONE aggregation
-    # pass (relational.py:correlation_matrix).
-    return R.correlation_matrix(
-        _t(spark, sf_dir, "lineitem"),
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-    )
-
-
-def q_gapfill(spark, sf_dir):
-    # Hypertable-style time_bucket_gapfill: daily per-type averages of
-    # the SPARSE high-value events (value > 95 keeps ~2% of rows, so
-    # real gaps exist), linear interpolation between neighbors, LOCF /
-    # backfill on the open ends (relational.py:time_bucket_gapfill).
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 95)
-    return R.time_bucket_gapfill(
-        ev, "event_type", "ts", "value", bucket_seconds=86400
-    )
-
-
-def q_textrank_keywords(spark, sf_dir):
-    # Corpus-level TextRank: PageRank over the adjacency co-occurrence
-    # graph of the stopword-filtered token stream; reuses graph.pagerank
-    # with a fixed round count so the oracle unrolls identically
-    # (text.py:textrank_keywords).
-    return TX.textrank_keywords(
-        _t(spark, sf_dir, "documents"), iterations=3, k=20
-    )
-
-
-def q_interleave_shards(spark, sf_dir):
-    # Deterministic training-order export: seeded md5 permutation ->
-    # (shard, position); hash order interleaves domains uniformly
-    # (curation.py:interleave_shards).
-    return CU.interleave_shards(
-        _t(spark, sf_dir, "documents"), n_shards=16, seed="ep0"
-    )
-
-
-def q_contamination_matrix(spark, sf_dir):
-    # Per (source x benchmark) leak-rate triage: src0 docs split by lang
-    # play two benchmarks; every other source is scored against both
-    # (curation.py:contamination_matrix).
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("source") == "src0")
-    corpus = docs.filter(F.col("source") != "src0")
-    return CU.contamination_matrix(
-        corpus, bench, bench_name_col="lang", k=3, min_hits=1
-    )
-
-
-def q_normalize_text(spark, sf_dir):
-    # Map-only canonical cleanup (control/zero-width strip, whitespace
-    # collapse) + per-source dirtiness rollup (text.py:normalize_documents).
-    norm = TX.normalize_documents(_t(spark, sf_dir, "documents"))
-    return norm.select(
-        "doc_id", "n_chars_raw", "n_chars_norm", "changed",
-        F.md5("norm_text").alias("norm_fingerprint"),
-    )
-
-
-def q_tfidf_cosine_topk(spark, sf_dir):
-    # Sparse text similarity search: top-3 most similar docs for four
-    # query docs via the inverted-index postings join (broadcast query
-    # slice; map-side-combinable partial dot products).
-    from streaming_demos_spark.functions import tfidf as TI
-
-    return TI.tfidf_cosine_topk(
-        _t(spark, sf_dir, "documents"), query_ids=[0, 1, 2, 3], k=3
-    )
-
-
-def q_bm25_topk(spark, sf_dir):
-    # BM25 keyword retrieval (Robertson/Lucene idf) for a literal query
-    # bag. Zero term-shuffles: per-term tf is a map-side array count,
-    # corpus stats are one broadcast 1-row aggregate, top-k is
-    # TakeOrderedAndProject (see functions/tfidf.py:bm25_topk).
-    from streaming_demos_spark.functions import tfidf as TI
-
-    return TI.bm25_topk(
-        _t(spark, sf_dir, "documents"),
-        query_terms=["spark", "join", "window", "merge"],
-        k=10,
-    )
-
-
-def q_block_dedup(spark, sf_dir):
-    # Sub-document block dedup (RefinedWeb "paragraph dedup" restated
-    # for newline-free corpora): drop 20-word blocks whose exact content
-    # occurred earlier in the corpus, reassemble, report keep ratios
-    # (operators/dedup.py:block_dedup).
-    # no orderBy: the checker canonical-sorts rows itself; a global
-    # sort would only add a range exchange at scale
-    return D.block_dedup(_t(spark, sf_dir, "documents"), block_words=20)
-
-
-_SQL_BLOCK_DEDUP = """
-    WITH toks AS (
-        SELECT doc_id,
-               string_split_regex(lower(trim(text)), '\\s+') AS w
-        FROM documents
-    ),
-    blocks AS (
-        SELECT doc_id, b.pos, b.block
-        FROM (
-            SELECT doc_id,
-                   list_transform(
-                       range(0, greatest(cast(ceil(len(w) / 20.0) AS BIGINT), 1)),
-                       i -> {'pos': i,
-                             'block': array_to_string(w[i*20+1 : i*20+20], ' ')}
-                   ) AS bl
-            FROM toks
-        ), unnest(bl) AS u(b)
-    ),
-    ranked AS (
-        SELECT doc_id, pos, block,
-               row_number() OVER (
-                   PARTITION BY md5(block) ORDER BY doc_id, pos
-               ) = 1 AS keep
-        FROM blocks
-    )
-    SELECT doc_id,
-           coalesce(string_agg(CASE WHEN keep THEN block END, ' '
-                               ORDER BY pos), '') AS text,
-           count(*) AS n_blocks,
-           sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-           ((sum(CASE WHEN keep THEN 1 ELSE 0 END) * 10000 * 2
-             + count(*)) // (2 * count(*)))::BIGINT AS keep_ratio_e4
-    FROM ranked
-    GROUP BY doc_id
-    ORDER BY doc_id
-"""
-
-
-def q_mmr_diversify(spark, sf_dir):
-    # MMR diversified retrieval (similarity.py:mmr_topk): top-5 by
-    # lam*relevance - (1-lam)*max-sim-to-selected over a distributed
-    # TakeOrdered pool of 50, literal query vector.
-    return SIM.mmr_topk(
-        _t(spark, sf_dir, "embeddings"), _pq_query_vec(), k=5, lam=0.7, pool=50
-    )
-
-
-_EIGEN_ORACLE_CACHE: dict = {}
-
-
-def _eigen_oracle_sqls() -> dict[str, str]:
-    """Numpy-computed VALUES-table oracles for the three
-    eigendecomposition keys (``f_svd_embed``, ``llm_word_vectors``,
-    ``llm_whiten_embeddings``).
-
-    Eigendecomposition is not SQL-expressible, so these oracles are a
-    genuine *independent second implementation*: pure Python/numpy
-    (functions/numpy_ref.py — its own tokenizer, its own bit-exact
-    XXH64, exact integer counting, single-matmul gram) reading the same
-    parquet via DuckDB, materialized as a VALUES table for the driver's
-    hash compare. Both engines share only the published determinism
-    conventions (component grid + sign, see tfidf.svd_components), so a
-    hash match certifies the distributed pipeline end-to-end against a
-    single-node reference — the differential-testing analog of the
-    numpy parity tests, made driver-checkable.
-
-    The data dir defaults to the driver's comparison scale (sf0.01);
-    ``ORACLE_SF_DIR`` overrides for local sweeps. Fails soft: on any
-    error the keys are omitted and the driver falls back to its
-    rows-only check.
-    """
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    if sf in _EIGEN_ORACLE_CACHE:
-        return _EIGEN_ORACLE_CACHE[sf]
-    out: dict[str, str] = {}
-    try:
-        import duckdb
-        import numpy as np
-
-        from streaming_demos_spark.functions import numpy_ref as NR
-        from streaming_demos_spark.functions.tfidf import svd_components
-
-        con = duckdb.connect()
-
-        def values_sql(rows, id_sql_type, cols):
-            body = ",\n".join(
-                "(%s, %d, %r)" % (r[0], r[1], float(r[2])) for r in rows
-            )
-            return (
-                "SELECT CAST(c0 AS %s) AS %s, CAST(c1 AS INT) AS %s,\n"
-                "       CAST(c2 AS DOUBLE) AS %s\n"
-                "FROM (VALUES\n%s\n) AS t(c0, c1, c2)"
-                % (id_sql_type, cols[0], cols[1], cols[2], body)
-            )
-
-        def project_rows(ids, vecs, V):
-            # mirror the Spark chain exactly: numpy round(9) inside the
-            # projection UDF, then JVM-HALF_UP F.round(6) in the query.
-            rows = []
-            for i in ids:
-                e = np.round(vecs[i] @ V, 9)
-                rows.extend(
-                    (i, j, NR.jvm_round(e[j], 6)) for j in range(V.shape[1])
-                )
-            return rows
-
-        # f_svd_embed: hashed tf-idf (dim 64) -> top-8 SVD projection.
-        docs = con.sql(
-            f"SELECT doc_id, text FROM read_parquet('{sf}/documents.parquet')"
-            " ORDER BY doc_id"
-        ).fetchall()
-        ids = [r[0] for r in docs]
-        texts = [r[1] for r in docs]
-        tv = NR.hashed_tfidf_vectors(ids, texts, dim=64)
-        X = np.stack([tv[i] for i in ids])
-        V = svd_components(X.T @ X, 8)
-        out["f_svd_embed"] = values_sql(
-            project_rows(ids, tv, V),
-            "BIGINT",
-            ("doc_id", "component_idx", "value"),
-        )
-
-        # llm_word_vectors: PPMI co-occurrence (window 3, min_count 5,
-        # dim 64) -> top-8 SVD projection, per term.
-        pv = NR.ppmi_vectors(texts, window=3, min_count=5, dim=64)
-        terms = sorted(pv)
-        Xp = np.stack([pv[t] for t in terms])
-        Vp = svd_components(Xp.T @ Xp, 8)
-        rows = []
-        for t in terms:
-            e = np.round(pv[t] @ Vp, 9)
-            rows.extend(
-                ("'%s'" % t.replace("'", "''"), j, NR.jvm_round(e[j], 6))
-                for j in range(8)
-            )
-        out["llm_word_vectors"] = values_sql(
-            rows, "VARCHAR", ("term", "component_idx", "value")
-        )
-
-        # llm_whiten_embeddings: ZCA whitening of the embeddings table.
-        emb = con.sql(
-            f"SELECT vec_id, embedding FROM"
-            f" read_parquet('{sf}/embeddings.parquet') ORDER BY vec_id"
-        ).fetchall()
-        eids = [r[0] for r in emb]
-        Xe = np.array([r[1] for r in emb], dtype=np.float64)
-        mu, W = NR.whitening_transform(Xe)
-        white = np.round((Xe - mu) @ W, 6)
-        rows = [
-            (eids[i], j, white[i, j])
-            for i in range(len(eids))
-            for j in range(Xe.shape[1])
-        ]
-        out["llm_whiten_embeddings"] = values_sql(
-            rows, "BIGINT", ("vec_id", "component_idx", "value")
-        )
-    except Exception:
-        out = {}
-    _EIGEN_ORACLE_CACHE[sf] = out
-    return out
-
-
-def _sql_mmr(k: int = 5, lam: float = 0.7, pool: int = 50) -> str:
-    """DuckDB replay of mmr_topk: pool CTE then k unrolled greedy
-    steps, each a correlated max-sim over the union of prior picks."""
-    beta = 1.0 - lam
-    q = ", ".join(repr(x) for x in _pq_query_vec())
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    parts = [f"""
-        pool AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   {cos.format(a="embedding::DOUBLE[]", b=f"[{q}]::DOUBLE[]")}
-                       AS relevance
-            FROM embeddings
-            ORDER BY relevance DESC, vec_id LIMIT {pool}
-        ),
-        sel1 AS (
-            SELECT vec_id, v, relevance, relevance AS mmr
-            FROM pool ORDER BY relevance DESC, vec_id LIMIT 1
-        )"""]
-    for i in range(2, k + 1):
-        prior = " UNION ALL ".join(
-            f"SELECT vec_id, v FROM sel{j}" for j in range(1, i)
-        )
-        parts.append(f"""
-        sel{i} AS (
-            SELECT p.vec_id, p.v, p.relevance,
-                   round({lam!r} * p.relevance - {beta!r} * (
-                       SELECT max({cos.format(a="p.v", b="s.v")})
-                       FROM ({prior}) s
-                   ), 6) AS mmr
-            FROM pool p
-            WHERE p.vec_id NOT IN (SELECT vec_id FROM ({prior}) s2)
-            ORDER BY mmr DESC, p.vec_id LIMIT 1
-        )""")
-    finals = " UNION ALL ".join(
-        f"SELECT {i} AS step, vec_id, relevance, mmr FROM sel{i}"
-        for i in range(1, k + 1)
-    )
-    return "WITH " + ",".join(parts) + f" {finals}"
-
-
-def q_incremental_near_dup(spark, sf_dir):
-    # Crawl-refresh fuzzy gate (dedup.py:incremental_near_dup): delta
-    # docs (doc_id%5==0) checked for near-dups already in the base
-    # corpus (doc_id%5!=0) via a two-table band join + exact verify.
-    docs = _t(spark, sf_dir, "documents")
-    return D.incremental_near_dup(
-        docs.filter(F.col("doc_id") % 5 == 0),
-        docs.filter(F.col("doc_id") % 5 != 0),
-        threshold=0.1,
-    ).orderBy("new_id", "base_id")
-
-
-def _sql_incremental_near_dup(
-    threshold: float = 0.1, num_hashes: int = 12, band_rows: int = 3
-) -> str:
-    """DuckDB replay of incremental_near_dup on the %5 delta/base split:
-    one shared signature pass, bands split by side, bucket cap on the
-    BASE side only, two-table candidate join, exact integer-threshold
-    Jaccard verify with a half-up e4 similarity."""
-    from fractions import Fraction
-
-    _f = Fraction(str(threshold))
-    p_, q_ = _f.numerator, _f.denominator
-    mh_exprs = ",\n               ".join(
-        f"list_min(list_transform(shingles, s -> md5('{h}|' || s))) AS mh_{h}"
-        for h in range(num_hashes)
-    )
-    n_bands = num_hashes // band_rows
-    band_selects = "\n            UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_id, md5({cat}) AS band_hash FROM sig".format(
-            b=b,
-            cat=" || '|' || ".join(f"mh_{b * band_rows + r}" for r in range(band_rows)),
-        )
-        for b in range(n_bands)
-    )
-    return f"""
-        WITH w AS ({_sql_words()}),
-        sh AS ({_sql_shingles()}),
-        sig AS (
-            SELECT doc_id,
-               {mh_exprs}
-            FROM (SELECT doc_id, shingles FROM sh)
-        ),
-        bands AS (
-            {band_selects}
-        ),
-        nb AS (SELECT doc_id AS new_id, band_id, band_hash
-               FROM bands WHERE doc_id % 5 = 0),
-        bbs AS (
-            SELECT doc_id AS base_id, band_id, band_hash,
-                   count(*) OVER (PARTITION BY band_id, band_hash)
-                       AS bucket_n
-            FROM bands WHERE doc_id % 5 <> 0
-        ),
-        bb AS (SELECT base_id, band_id, band_hash FROM bbs
-               WHERE bucket_n <= 50),
-        cand AS (
-            SELECT DISTINCT new_id, base_id
-            FROM nb JOIN bb USING (band_id, band_hash)
-        ),
-        scored AS (
-            SELECT new_id, base_id,
-                   len(list_intersect(list_distinct(sa.shingles),
-                                      list_distinct(sb.shingles))) AS i,
-                   len(list_distinct(sa.shingles))
-                   + len(list_distinct(sb.shingles))
-                   - len(list_intersect(list_distinct(sa.shingles),
-                                        list_distinct(sb.shingles))) AS u
-            FROM cand
-            JOIN sh sa ON cand.new_id = sa.doc_id
-            JOIN sh sb ON cand.base_id = sb.doc_id
-        )
-        SELECT new_id, base_id,
-               ((i * 10000 * 2 + u) // (2 * u))::BIGINT AS jaccard_e4
-        FROM scored WHERE u > 0 AND i * {q_} >= {p_} * u
-        ORDER BY new_id, base_id
-    """
-
-
-def q_bigram_lm_score(spark, sf_dir):
-    # Per-doc mean bigram cross-entropy under a corpus-self-trained
-    # add-1 bigram LM (text.py:bigram_lm_score) — the sequence-aware
-    # perplexity filter that unigram surprisal can't provide.
-    return TX.bigram_lm_score(_t(spark, sf_dir, "documents"))
-
-
-_SQL_LANG_ID = """
-            WITH w AS (
-                SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            s AS (
-                SELECT doc_id,
-                       len(list_filter(words, x -> x IN ('the','a','and','of','is')))  AS score_en,
-                       len(list_filter(words, x -> x IN ('el','la','de','que','y')))   AS score_es,
-                       len(list_filter(words, x -> x IN ('le','la','et','les','des'))) AS score_fr,
-                       len(list_filter(words, x -> x IN ('der','die','und','das','ist'))) AS score_de,
-                       len(list_filter(words, x -> x IN ('de5','shi4','le5','zai4','he2'))) AS score_zh
-                FROM w
-            )
-            SELECT doc_id, score_en, score_es, score_fr, score_de, score_zh,
-                   CASE WHEN greatest(score_en, score_es, score_fr, score_de, score_zh) = 0
-                        THEN 'und'
-                        WHEN score_en = greatest(score_en, score_es, score_fr, score_de, score_zh) THEN 'en'
-                        WHEN score_es = greatest(score_en, score_es, score_fr, score_de, score_zh) THEN 'es'
-                        WHEN score_fr = greatest(score_en, score_es, score_fr, score_de, score_zh) THEN 'fr'
-                        WHEN score_de = greatest(score_en, score_es, score_fr, score_de, score_zh) THEN 'de'
-                        ELSE 'zh' END AS pred_lang
-            FROM s
-        """
-
-
-_SQL_BIGRAM_LM = """
-    WITH toks AS (
-        SELECT doc_id,
-               string_split_regex(lower(trim(text)), '\\s+') AS w
-        FROM documents
-    ),
-    big AS (
-        SELECT doc_id, w[i] || ' ' || w[i + 1] AS bigram
-        FROM toks, unnest(range(1, len(w))) AS t(i)
-        WHERE len(w) >= 2
-    ),
-    cab AS (SELECT bigram, count(*) AS c_ab FROM big GROUP BY 1),
-    ca AS (
-        SELECT string_split(bigram, ' ')[1] AS a, sum(c_ab) AS c_a
-        FROM cab GROUP BY 1
-    ),
-    v AS (
-        SELECT count(DISTINCT t) AS vocab FROM (
-            SELECT unnest(list_filter(
-                string_split_regex(lower(trim(text)), '\\s+'),
-                x -> x != '')) AS t
-            FROM documents
-        )
-    ),
-    lp AS (
-        SELECT bigram,
-               round(-ln((c_ab + 1.0::DOUBLE)
-                         / (c_a + 1.0::DOUBLE * vocab)), 9) AS nll
-        FROM cab
-        JOIN ca ON string_split(cab.bigram, ' ')[1] = ca.a
-        CROSS JOIN v
-    )
-    SELECT doc_id, count(*) AS n_bigrams,
-           round(avg(nll), 4) AS mean_bigram_nll
-    FROM big JOIN lp USING (bigram)
-    GROUP BY doc_id
-"""
-
-
-def q_entity_blocking(spark, sf_dir):
-    # Entity-resolution candidates (relational.py:blocked_similarity_
-    # pairs): customers in the same (nation, segment) block whose names
-    # differ by <= 2 edits, with a 256-record hot-block guard.
-    return R.blocked_similarity_pairs(
-        _t(spark, sf_dir, "customer"),
-        id_col="c_custkey",
-        name_col="c_name",
-        block_cols=["c_nationkey", "c_mktsegment"],
-        max_distance=2,
-        max_block=256,
-    )
-
-
-_SQL_ENTITY_BLOCKING = """
-    WITH ok AS (
-        SELECT c_nationkey, c_mktsegment
-        FROM customer GROUP BY 1, 2 HAVING count(*) <= 256
-    ),
-    c AS (
-        SELECT customer.* FROM customer
-        JOIN ok USING (c_nationkey, c_mktsegment)
-    )
-    SELECT a.c_nationkey, a.c_mktsegment,
-           a.c_custkey AS id_a, b.c_custkey AS id_b,
-           levenshtein(a.c_name, b.c_name) AS distance
-    FROM c a JOIN c b
-      ON a.c_nationkey = b.c_nationkey
-     AND a.c_mktsegment = b.c_mktsegment
-     AND a.c_custkey < b.c_custkey
-    WHERE levenshtein(a.c_name, b.c_name) <= 2
-"""
-
-
-def _calib_weights() -> list[float]:
-    import numpy as np
-
-    rng = np.random.RandomState(17)
-    return [round(float(v), 6) for v in rng.uniform(-1.0, 1.0, 64)]
-
-
-def q_eval_calibration(spark, sf_dir):
-    # Reliability curve (linucb.py:calibration_bins): sigmoid scores of
-    # a literal linear model over the embeddings, binned against the
-    # even-cluster label.
-    from streaming_demos_spark.operators import linucb as LU
-
-    emb = _t(spark, sf_dir, "embeddings")
-    w = _calib_weights()
-    wlit = F.expr("array(%s)" % ", ".join(f"{x!r}D" for x in w))
-    raw = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"), wlit, lambda x, y: x * y
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = emb.select(
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-raw)), 6).alias("score"),
-        (F.col("label") % 2 == 0).cast("int").alias("is_pos"),
-    )
-    return LU.calibration_bins(scored, "score", "is_pos", n_bins=10)
-
-
-def _sql_eval_calibration() -> str:
-    w = _calib_weights()
-    chain = " + ".join(
-        f"embedding[{i + 1}]::DOUBLE * {x!r}" for i, x in enumerate(w)
-    )
-    return f"""
-        WITH scored AS (
-            SELECT round(1.0 / (1.0 + exp(-({chain}))), 6)::DOUBLE AS score,
-                   CASE WHEN label % 2 = 0 THEN 1 ELSE 0 END AS is_pos
-            FROM embeddings
-        )
-        SELECT least(floor(score * 10), 9)::INT AS bin,
-               count(*) AS n,
-               ((sum(cast(round(score * 1000000) as bigint)) * 2 + count(*))
-                // (2 * count(*)))::BIGINT AS mean_score_e6,
-               ((sum(is_pos) * 1000000 * 2 + count(*))
-                // (2 * count(*)))::BIGINT AS pos_rate_e6
-        FROM scored GROUP BY 1 ORDER BY 1
-    """
-
-
-def q_bpe_pair_stats(spark, sf_dir):
-    # Distributed BPE-fitting inner loop: top-20 adjacent character
-    # pairs by corpus frequency (text.py:bpe_pair_stats) — counted on
-    # the distinct-word vocabulary weighted by word count.
-    return TX.bpe_pair_stats(_t(spark, sf_dir, "documents"), top_n=20)
-
-
-_SQL_BPE_PAIR_STATS = """
-    WITH words AS (
-        SELECT w, count(*) AS n_w FROM (
-            SELECT unnest(list_filter(
-                string_split_regex(lower(trim(text)), '\\s+'),
-                t -> t != '')) AS w
-            FROM documents
-        ) GROUP BY 1
-    ),
-    pairs AS (
-        SELECT n_w, substr(w, i, 1) || ' ' || substr(w, i + 1, 1) AS pair
-        FROM words, unnest(range(1, length(w))) AS t(i)
-        WHERE length(w) >= 2
-    )
-    SELECT pair, sum(n_w)::BIGINT AS n_pairs
-    FROM pairs GROUP BY 1
-    ORDER BY n_pairs DESC, pair LIMIT 20
-"""
-
-
-def q_snapshot_diff(spark, sf_dir):
-    # CDC-OUT: diff two snapshot versions into a minimal change feed
-    # (cdc.snapshot_diff — the inverse of s10_cdc_apply_changes). v2 is
-    # derived deterministically from orders: price bump on key%7,
-    # deletes on key%13, negated-key inserts on key%101.
-    orders = _t(spark, sf_dir, "orders")
-    key = F.col("o_orderkey")
-    upd = orders.withColumn(
-        "o_totalprice",
-        F.when(key % 7 == 0, F.col("o_totalprice") + 10).otherwise(
-            F.col("o_totalprice")
-        ),
-    )
-    v2 = upd.filter(key % 13 != 0).unionByName(
-        upd.filter(key % 101 == 0).withColumn("o_orderkey", -key)
-    )
-    return cdc.snapshot_diff(orders, v2, ["o_orderkey"])
-
-
-_SQL_SNAPSHOT_DIFF = """
-    WITH upd AS (
-        SELECT o_orderkey, o_custkey, o_orderstatus,
-               CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10
-                    ELSE o_totalprice END AS o_totalprice,
-               o_orderdate, o_orderpriority
-        FROM orders
-    ),
-    v2 AS (
-        SELECT * FROM upd WHERE o_orderkey % 13 <> 0
-        UNION ALL
-        SELECT -o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-               o_orderdate, o_orderpriority
-        FROM upd WHERE o_orderkey % 101 = 0
-    ),
-    j AS (
-        SELECT coalesce(n.o_orderkey, o.o_orderkey) AS o_orderkey,
-               CASE WHEN o.o_orderkey IS NULL THEN 'i'
-                    WHEN n.o_orderkey IS NULL THEN 'd'
-                    WHEN NOT (o.o_custkey IS NOT DISTINCT FROM n.o_custkey)
-                      OR NOT (o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus)
-                      OR NOT (o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice)
-                      OR NOT (o.o_orderdate IS NOT DISTINCT FROM n.o_orderdate)
-                      OR NOT (o.o_orderpriority IS NOT DISTINCT FROM n.o_orderpriority)
-                    THEN 'u' END AS op,
-               array_to_string(list_sort(list_filter([
-                   CASE WHEN NOT (o.o_custkey IS NOT DISTINCT FROM n.o_custkey) THEN 'o_custkey' END,
-                   CASE WHEN NOT (o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus) THEN 'o_orderstatus' END,
-                   CASE WHEN NOT (o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice) THEN 'o_totalprice' END,
-                   CASE WHEN NOT (o.o_orderdate IS NOT DISTINCT FROM n.o_orderdate) THEN 'o_orderdate' END,
-                   CASE WHEN NOT (o.o_orderpriority IS NOT DISTINCT FROM n.o_orderpriority) THEN 'o_orderpriority' END
-               ], x -> x IS NOT NULL)), ',') AS chg
-        FROM orders o FULL OUTER JOIN v2 n ON o.o_orderkey = n.o_orderkey
-    )
-    SELECT o_orderkey, op,
-           CASE WHEN op = 'u' THEN chg ELSE '' END AS changed_cols
-    FROM j WHERE op IS NOT NULL
-"""
-
-
-def q_event_transitions(spark, sf_dir):
-    # First-order Markov transition matrix over per-user event
-    # sequences (relational.py:event_transitions): every (from -> to)
-    # event-type pair with corpus count and P(to|from).
-    ev = _t(spark, sf_dir, "events")
-    return R.event_transitions(ev, "user_id", "ts", "event_type")
-
-
-_SQL_EVENT_TRANSITIONS = """
-    WITH nxt AS (
-        SELECT event_type AS from_step,
-               lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-               ) AS to_step
-        FROM events
-    ),
-    counts AS (
-        SELECT from_step, to_step, count(*) AS n_transitions
-        FROM nxt WHERE to_step IS NOT NULL
-        GROUP BY 1, 2
-    )
-    SELECT from_step, to_step, n_transitions,
-           ((n_transitions * 10000 * 2
-             + sum(n_transitions) OVER (PARTITION BY from_step))
-            // (2 * sum(n_transitions) OVER (PARTITION BY from_step))
-           )::BIGINT AS p_e4
-    FROM counts
-"""
-
-
-def q_shard_profile(spark, sf_dir):
-    # Pre-flight balance report for a training-shard export: rows +
-    # payload bytes per content-hash shard (curation.py:shard_profile;
-    # the writer itself is write_training_shards, proven deterministic
-    # in tests/test_curation.py).
-    return CU.shard_profile(
-        _t(spark, sf_dir, "documents"), num_shards=16, token_col="n_chars"
-    )
-
-
-# mod-16 of the first 8 md5 hex digits == the value of digit #8 — the
-# oracle reads that digit directly (DuckDB has no hex->int conv()).
-_SQL_SHARD_PROFILE = """
-    SELECT strpos('0123456789abcdef',
-                  substr(md5(doc_id::VARCHAR), 8, 1)) - 1 AS shard,
-           count(*) AS n_rows,
-           sum(n_chars)::BIGINT AS n_tokens
-    FROM documents
-    GROUP BY 1 ORDER BY 1
-"""
-
-
-def q_zorder_profile(spark, sf_dir):
-    # Z-order (Morton) clustering key over (l_partkey, l_suppkey):
-    # integer-quantize each against its observed min/max, interleave 16
-    # bits of each, profile the 256 top-8-bit clusters. This is the key
-    # `catalog.write_zordered` range-sorts files by — at 100 TB the
-    # profile IS the file-skipping story: every cluster is a tight box
-    # in (partkey, suppkey) space, so footer stats prune scans on
-    # EITHER column. Pure integer bit math -> bit-exact across engines.
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    stats = li.agg(
-        F.min("l_partkey").alias("_mn0"),
-        F.max("l_partkey").alias("_mx0"),
-        F.min("l_suppkey").alias("_mn1"),
-        F.max("l_suppkey").alias("_mx1"),
-    )
-    q0 = F.expr("((l_partkey - _mn0) * 65536) DIV (_mx0 - _mn0 + 1)")
-    q1 = F.expr("((l_suppkey - _mn1) * 65536) DIV (_mx1 - _mn1 + 1)")
-    z = zorder_key([q0, q1], bits=16)
-    return (
-        li.crossJoin(F.broadcast(stats))
-        .select(z.alias("_z"))
-        .groupBy(F.shiftright("_z", 24).alias("z_bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("_z").alias("z_min"),
-            F.max("_z").alias("z_max"),
-        )
-        .orderBy("z_bucket")
-    )
-
-
-def _sql_zorder_profile() -> str:
-    """DuckDB oracle for q_zorder_profile: the same quantize+interleave
-    emitted as explicit shift/mask terms (integer-exact, order-free)."""
-    terms = []
-    for i in range(16):
-        terms.append(f"(((q0 >> {i}) & 1) << {2 * i})")
-        terms.append(f"(((q1 >> {i}) & 1) << {2 * i + 1})")
-    chain = " + ".join(terms)
-    return f"""
-        WITH s AS (
-            SELECT min(l_partkey) AS mn0, max(l_partkey) AS mx0,
-                   min(l_suppkey) AS mn1, max(l_suppkey) AS mx1
-            FROM lineitem
-        ),
-        q AS (
-            SELECT ((l_partkey - mn0) * 65536) // (mx0 - mn0 + 1) AS q0,
-                   ((l_suppkey - mn1) * 65536) // (mx1 - mn1 + 1) AS q1
-            FROM lineitem CROSS JOIN s
-        ),
-        z AS (SELECT {chain} AS zval FROM q)
-        SELECT zval >> 24 AS z_bucket, count(*) AS n_rows,
-               min(zval) AS z_min, max(zval) AS z_max
-        FROM z GROUP BY 1 ORDER BY 1
-    """
-
-
-# PQ/ADC constants shared by the Spark query and its generated oracle:
-# deterministic codebooks (8 subspaces x 16 codewords over 64 dims) and
-# a literal 64-dim query vector. Both sides embed the SAME Python
-# floats, and every distance chain is emitted left-to-right in both
-# engines, so codes and ADC scores match bit-for-bit.
-_PQ_CODEBOOKS = SIM.pq_codebooks(64, m=8, k=16, seed=7)
-
-
-def _pq_query_vec() -> list[float]:
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    return [round(float(v), 6) for v in rng.uniform(-0.3, 0.3, 64)]
-
-
-def q_ann_pq_topk(spark, sf_dir):
-    # Product-quantization ADC top-k (Jegou et al. 2011): 32-bit codes
-    # for 64-dim vectors, per-subspace LUT scoring, zero shuffles
-    # (operators/similarity.py:pq_adc_topk).
-    return SIM.pq_adc_topk(
-        _t(spark, sf_dir, "embeddings"), _pq_query_vec(), _PQ_CODEBOOKS, k=10
-    )
-
-
-def _sql_pq_topk(k: int = 10) -> str:
-    """DuckDB oracle for q_ann_pq_topk, generated from the same
-    codebooks/query literals with identical left-to-right chains."""
-    cbs = _PQ_CODEBOOKS
-    luts = SIM.pq_adc_lut(_pq_query_vec(), cbs)
-    dsub = len(cbs[0][0])
-    dist_cols, pos_cols, lut_terms = [], [], []
-    for j, cb in enumerate(cbs):
-        exprs = []
-        for cw in cb:
-            cnorm = 0.0
-            for c in cw:
-                cnorm += c * c
-            chain = " + ".join(
-                f"{c!r} * embedding[{j * dsub + i + 1}]::DOUBLE"
-                for i, c in enumerate(cw)
-            )
-            exprs.append(f"{cnorm!r} - 2.0 * ({chain})")
-        dist_cols.append(f"[{', '.join(exprs)}] AS d{j}")
-        pos_cols.append(f"list_position(d{j}, list_aggregate(d{j}, 'min')) AS p{j}")
-        # cast the indexed element (a DECIMAL list literal in DuckDB)
-        # to DOUBLE so the final sum runs in IEEE double like Spark
-        lut_terms.append(f"([{', '.join(repr(x) for x in luts[j])}][p{j}])::DOUBLE")
-    return f"""
-        WITH d AS (
-            SELECT vec_id, {', '.join(dist_cols)} FROM embeddings
-        ),
-        c AS (
-            SELECT vec_id, {', '.join(pos_cols)} FROM d
-        )
-        SELECT vec_id, round({' + '.join(lut_terms)}, 6) AS adc_dist
-        FROM c ORDER BY adc_dist, vec_id LIMIT {k}
-    """
-
-
-def q_ann_recall_pq(spark, sf_dir):
-    # Recall@10 of the PQ/ADC ranking vs exact squared-L2 on the shared
-    # query panel — the compression-family member of the recall harness
-    # (similarity.py:pq_recall).
-    return SIM.pq_recall(
-        _t(spark, sf_dir, "embeddings"), [0, 1, 2, 3], _PQ_CODEBOOKS, k=10
-    )
-
-
-def _sql_pq_recall(query_ids: list[int], k: int = 10) -> str:
-    """DuckDB oracle for q_ann_recall_pq: same codebook literals, same
-    left-to-right chains for codes, true distance and ADC distance."""
-    cbs = _PQ_CODEBOOKS
-    dsub = len(cbs[0][0])
-    dim = dsub * len(cbs)
-    dist_cols, pos_cols, sel_cols, adc_terms = [], [], [], []
-    for j, cb in enumerate(cbs):
-        exprs = []
-        for cw in cb:
-            cnorm = 0.0
-            for c in cw:
-                cnorm += c * c
-            chain = " + ".join(
-                f"{c!r} * embedding[{j * dsub + i + 1}]::DOUBLE"
-                for i, c in enumerate(cw)
-            )
-            exprs.append(f"{cnorm!r} - 2.0 * ({chain})")
-        dist_cols.append(f"[{', '.join(exprs)}] AS d{j}")
-        pos_cols.append(f"list_position(d{j}, list_aggregate(d{j}, 'min')) AS p{j}")
-        wlit = "[%s]" % ", ".join(
-            "[%s]" % ", ".join(repr(c) for c in cw) for cw in cb
-        )
-        sel_cols.append(f"{wlit}[p{j}] AS w{j}")
-        adc_terms.append(
-            "("
-            + " + ".join(
-                f"(qe[{j * dsub + i + 1}]::DOUBLE - (w{j}[{i + 1}])::DOUBLE)"
-                f" * (qe[{j * dsub + i + 1}]::DOUBLE - (w{j}[{i + 1}])::DOUBLE)"
-                for i in range(dsub)
-            )
-            + ")"
-        )
-    true_chain = " + ".join(
-        f"(c.embedding[{i}]::DOUBLE - qe[{i}]::DOUBLE)"
-        f" * (c.embedding[{i}]::DOUBLE - qe[{i}]::DOUBLE)"
-        for i in range(1, dim + 1)
-    )
-    ids = ", ".join(str(i) for i in query_ids)
-    return f"""
-        WITH d AS (
-            SELECT vec_id, embedding, {', '.join(dist_cols)} FROM embeddings
-        ),
-        cpos AS (
-            SELECT vec_id, embedding, {', '.join(pos_cols)} FROM d
-        ),
-        c AS (
-            SELECT vec_id, embedding, {', '.join(sel_cols)} FROM cpos
-        ),
-        panel AS (
-            SELECT vec_id AS qid, embedding AS qe FROM embeddings
-            WHERE vec_id IN ({ids})
-        ),
-        scored AS (
-            SELECT p.qid, c.vec_id,
-                   round({true_chain}, 6) AS true_d,
-                   round({' + '.join(adc_terms)}, 6) AS adc_d
-            FROM c CROSS JOIN panel p
-            WHERE c.vec_id <> p.qid
-        ),
-        re AS (
-            SELECT qid, vec_id,
-                   row_number() OVER (PARTITION BY qid
-                                      ORDER BY true_d, vec_id) AS rt,
-                   row_number() OVER (PARTITION BY qid
-                                      ORDER BY adc_d, vec_id) AS ra
-            FROM scored
-        ),
-        h AS (
-            SELECT ex.qid, count(*) AS n_hit
-            FROM (SELECT qid, vec_id FROM re WHERE rt <= {k}) ex
-            JOIN (SELECT qid, vec_id FROM re WHERE ra <= {k}) ap
-              USING (qid, vec_id)
-            GROUP BY 1
-        )
-        SELECT p.qid, coalesce(h.n_hit, 0) AS n_hit,
-               round(coalesce(h.n_hit, 0) / {k}, 4) AS recall_at_k
-        FROM panel p LEFT JOIN h ON p.qid = h.qid
-    """
-
-
-def q_dedup_report(spark, sf_dir):
-    # One-row corpus dedup summary: exact-dup rows + near-dup cluster
-    # picture + keep rate (threshold 0.1 like the cluster query).
-    return D.dedup_report(_t(spark, sf_dir, "documents"), threshold=0.1)
-
-
-def q_cdc_snapshot_at(spark, sf_dir):
-    # Time-travel: the orders state AS OF lsn 100000, read as a pure
-    # filter over the SCD-2 history (no window, no shuffle).
-    from streaming_demos_spark.catalog import fan_out
-
-    # fan_out: JSON envelope parse parallelism (see q_debezium_unwrap)
-    orders = fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
-    creates = cdc.make_envelopes(orders, "c", "demo", "orders", lsn_offset=0)
-    updates = cdc.make_envelopes(
-        orders.filter(F.col("o_orderkey") % 2 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        ),
-        "u", "demo", "orders", lsn_offset=1,
-    )
-    deletes = cdc.make_envelopes(
-        orders.filter(F.col("o_orderkey") % 10 == 0), "d", "demo", "orders",
-        lsn_offset=2,
-    )
-    changes = cdc.debezium_unwrap(
-        creates.unionByName(updates).unionByName(deletes), "value", ORDERS
-    )
-    hist = cdc.scd2_history(changes, ["o_orderkey"], seq_col="lsn")
-    snap = cdc.snapshot_at(hist, seq=100_000)
-    return snap.select("o_orderkey", "o_totalprice", "valid_from", "valid_to")
-
-
-def q_embedding_outliers(spark, sf_dir):
-    # Norm z-score outlier gate over the embedding corpus (broken
-    # encoder outputs: zero/exploded/truncated vectors).
-    return SIM.embedding_outliers(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ann_recall_ivf(spark, sf_dir):
-    # IVF recall@10 on the same query panel as the LSH harness —
-    # pruning-family comparison + nprobe tuning signal.
-    return SIM.ann_recall_ivf(
-        _t(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=10
-    )
-
-
-def q_winnow_overlap(spark, sf_dir):
-    # MOSS overlap report: pairs sharing >= 2 winnowed fingerprints,
-    # with shared counts and smaller-set overlap ratio.
-    return TX.winnow_overlap_pairs(
-        _t(spark, sf_dir, "documents"), min_shared=2
-    ).orderBy("doc_a", "doc_b")
-
-
-def q_simhash_pairs(spark, sf_dir):
-    # SimHash pairing: shared 8-bit prefix buckets, exact 32-bit
-    # Hamming verification <= 6.
-    return D.simhash_near_dup_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=6
-    ).orderBy("doc_a", "doc_b")
-
-
-def q_unigram_surprisal(spark, sf_dir):
-    # 'Perplexity filter' analog: corpus-self-estimated unigram
-    # surprisal per doc, add-1 smoothing, both quality tails trimmable.
-    return TX.unigram_surprisal(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_keep_best(spark, sf_dir):
-    # Curation-grade near-dup decision: per duplicate cluster keep the
-    # highest-quality doc (text_stats score), not the min id.
-    return D.near_dup_keep_best(_t(spark, sf_dir, "documents"), threshold=0.1)
-
-
-def q_fuzzy_decontaminate(spark, sf_dir):
-    # Fuzzy (MinHash-LSH) benchmark decontamination: src0 docs play the
-    # eval set; corpus docs are flagged when their exact-Jaccard-verified
-    # similarity to any benchmark doc reaches 0.1. Benchmark bands and
-    # shingles ride broadcasts — the corpus side never shuffles.
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("source") == "src0")
-    corpus = docs.filter(F.col("source") != "src0")
-    return CU.fuzzy_decontaminate(corpus, bench, threshold=0.1)
-
-
-def q_stratified_sample(spark, sf_dir):
-    # Deterministic md5-keyed downsampling: keep 25% of English and 50%
-    # of Chinese docs, everything else intact — reproducible across
-    # engines/partitionings (pure function of doc_id). Map-side filter,
-    # zero shuffle.
-    docs = _t(spark, sf_dir, "documents")
-    return CU.stratified_sample(
-        docs, "lang", {"en": 0.25, "zh": 0.5}, default_rate=1.0
-    ).select("doc_id", "lang", "source", "n_chars")
-
-
-def q_mix_weights(spark, sf_dir):
-    # Domain-mixing weights toward a uniform 20% share per language.
-    docs = _t(spark, sf_dir, "documents")
-    shares = {lang: 0.2 for lang in ["en", "es", "fr", "de", "zh"]}
-    return CU.mix_weights(docs, "lang", shares)
-
-
-def q_mix_token_plan(spark, sf_dir):
-    # Mix planning: per-language sampling rates to hit a 20k-token
-    # budget at uniform 20% shares, with shortfalls surfaced where a
-    # language lacks inventory.
-    docs = _t(spark, sf_dir, "documents")
-    shares = {lang: 0.2 for lang in ["en", "es", "fr", "de", "zh"]}
-    return CU.mix_token_plan(docs, "lang", shares, token_budget=20_000)
-
-
-def q_token_histogram(spark, sf_dir):
-    # Token-length histogram (bucket width 8) with mean char length.
-    return CU.token_histogram(_t(spark, sf_dir, "documents"))
-
-
-def q_repetition_stats(spark, sf_dir):
-    # Gopher-style repetition signals: distinct-token ratio + top-token
-    # mass per document.
-    return CU.repetition_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_pack_sequences(spark, sf_dir):
-    # Fixed-token-budget sequence packing, sharded by source so each
-    # running sum sorts one shard independently (no global orderBy).
-    return CU.pack_sequences(_t(spark, sf_dir, "documents"), budget=256)
-
-
-def q_chunking(spark, sf_dir):
-    # Overlapping 32-token chunks, 8-token overlap — the retrieval /
-    # embedding indexing shape. Pure per-row explode, no shuffle.
-    return CU.chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=32, overlap=8
-    )
-
-
-def q_pii_redact(spark, sf_dir):
-    # PII scrubbing gate. The synthetic corpus carries no PII, so the
-    # query MANUFACTURES deterministic PII-bearing text from customer
-    # rows (email from the name, phone/IP from the key) and redacts it —
-    # non-vacuous counts, byte-identical engine parity on the redaction.
-    customer = _t(spark, sf_dir, "customer")
-    docs = customer.select(
-        F.col("c_custkey").alias("doc_id"),
-        F.concat(
-            F.lit("contact "),
-            F.regexp_replace(F.lower("c_name"), r"[^a-z0-9]", ""),
-            F.lit("@example.com or call 555-"),
-            F.lpad((F.col("c_custkey") % 1000).cast("string"), 3, "0"),
-            F.lit("-"),
-            F.lpad((F.col("c_custkey") % 10000).cast("string"), 4, "0"),
-            F.lit(" from 10.0."),
-            (F.col("c_custkey") % 256).cast("string"),
-            F.lit("."),
-            (F.col("c_custkey") % 100).cast("string"),
-            F.lit(" about "),
-            F.col("c_mktsegment"),
-        ).alias("text"),
-    )
-    return CU.redact_pii(docs)
-
-
-def _hex_be(col, hex_w):
-    # big-endian hex of a NON-NEGATIVE int column, zero-padded to hex_w
-    # digits (F.hex of a negative is 16-digit two's-complement that
-    # lpad would truncate — callers route negatives away first)
-    return F.lpad(F.hex(col), hex_w, "0")
-
-
-def _hex_le(col, hex_w):
-    # little-endian: byte-swap the padded hex pairs
-    hx = F.lpad(F.hex(col), hex_w, "0")
-    pairs = [hx.substr(i, 2) for i in range(hex_w - 1, 0, -2)]
-    return F.concat(*pairs)
-
-
-def _hex_pair(col):
-    return _hex_be(col, 2)
-
-
-def _bmp_frame_hex(doc_id, w, h, f):
-    """Hex of one crafted uncompressed-24bpp BMP, built entirely from
-    JVM expressions (no UDF on the encode side): pixel base value
-    v(x,y) = (doc_id + 11f + 3x + 7y) % 256 with DISTINCT channels
-    (B=v, G=v+85, R=v+170, each mod 256 — so a BGR/RGB mixup cannot
-    cancel out), rows padded to 4-byte words, and storage order
-    alternating by (doc_id + f) parity: even = bottom-up (+height,
-    rows reversed), odd = top-down (negative height i32, natural
-    rows). The decode side (multimodal.decode_bmp) must undo ALL of
-    it to reproduce the oracle's closed-form grid."""
-    top_down = (doc_id + f) % 2 == 1
-
-    def v(x, y):
-        return (doc_id + 11 * f + 3 * x + 7 * y) % 256
-
-    def pix_hex(x, y):  # stored byte order is B,G,R
-        return F.concat(
-            _hex_pair(v(x, y)),
-            _hex_pair((v(x, y) + 85) % 256),
-            _hex_pair((v(x, y) + 170) % 256),
-        )
-
-    pad_n = (4 - (w * 3) % 4) % 4
-    pad_hex = (
-        F.when(pad_n == 0, F.lit(""))
-        .when(pad_n == 1, F.lit("00"))
-        .when(pad_n == 2, F.lit("0000"))
-        .otherwise(F.lit("000000"))
-    )
-
-    def row_hex(j):  # stored row j -> logical y
-        y = F.when(top_down, j).otherwise(h - 1 - j)
-        return F.concat(
-            F.array_join(
-                F.transform(F.sequence(F.lit(0), w - 1),
-                            lambda x: pix_hex(x, y)),
-                ""),
-            pad_hex,
-        )
-
-    img_size = (w * 3 + pad_n) * h
-    height_field = F.when(top_down, F.lit(4294967296) - h).otherwise(h)
-    return F.concat(
-        # BITMAPFILEHEADER: 'BM', file size, reserved, pixel offset 54
-        F.lit("424D"), _hex_le(img_size + 54, 8),
-        F.lit("0000000036000000"),
-        # BITMAPINFOHEADER: size 40, dims, 1 plane, 24bpp, BI_RGB,
-        # image size, 2835 ppm, no palette
-        F.lit("28000000"), _hex_le(w, 8), _hex_le(height_field, 8),
-        F.lit("01001800"), F.lit("00000000"), _hex_le(img_size, 8),
-        F.lit("130B0000130B0000"), F.lit("0000000000000000"),
-        F.array_join(
-            F.transform(F.sequence(F.lit(0), h - 1), row_hex), ""),
-    )
-
-
-# Closed-form SQL mirrors of the crafted pixel math. BMP/PNG/GIF
-# render the identical logical gradient grid, so their oracle needs no
-# format knowledge; JPEG (round 11) renders the blockwise DC-only grid
-# of _jpeg_frame_hex, so the shared fragments branch ONCE on the
-# format-cycle predicate (media_id + frame_idx) % 8 >= 6 and stay
-# container-free otherwise. ``v`` is the base channel value of the
-# source pixel an 8x8 nearest-neighbor cell i reads; luma is the
-# integer Rec.601 fold over the distinct channels R=v+170, G=v+85, B=v
-# (each mod 256) — which for the grayscale JPEG grid (R=G=B=p)
-# collapses to exactly p: (299p+587p+114p)//1000 = p.
-_BMP_SQL_V = ("((media_id + 3 * (((i % 8) * w) // 8)"
-              " + 7 * (((i // 8) * h) // 8)) % 256)")
-
-
-def _bmp_sql_lum(v: str) -> str:
-    return (f"((299 * (({v} + 170) % 256) + 587 * (({v} + 85) % 256)"
-            f" + 114 * {v}) // 1000)")
-
-
-_BMP_SQL_CELL_LUM = _bmp_sql_lum(_BMP_SQL_V)
-_BMP_SQL_FRAME_LUM = _bmp_sql_lum(
-    "((media_id + 11 * frame_idx + 3 * (i % w) + 7 * (i // w)) % 256)")
-
-
-def _jpeg_sql_p(x: str, y: str, f: str) -> str:
-    """Flat-block value at source pixel (x, y) of JPEG frame ``f`` —
-    mirrors _jpeg_frame_hex: p = 128 + a + (blk%2)*delta."""
-    return ("(128 + (media_id % 8 + 8)"
-            f" + (((({y}) // 8) * ((w + 7) // 8) + (({x}) // 8)) % 2)"
-            f" * ((media_id + 11 * ({f})) % 8 + 8))")
-
-
-_JPEG_SQL_CELL_P = _jpeg_sql_p(
-    "((i % 8) * w) // 8", "((i // 8) * h) // 8", "0")
-_JPEG_SQL_FRAME_P = _jpeg_sql_p("i % w", "i // w", "frame_idx")
-# Format-branched cell/frame luma shared by the mm oracles.
-_MM_SQL_CELL_LUM = (f"(CASE WHEN media_id % 8 >= 6 THEN {_JPEG_SQL_CELL_P}"
-                    f" ELSE {_BMP_SQL_CELL_LUM} END)")
-_MM_SQL_FRAME_LUM = (
-    "(CASE WHEN (media_id + frame_idx) % 8 >= 6"
-    f" THEN {_JPEG_SQL_FRAME_P} ELSE {_BMP_SQL_FRAME_LUM} END)")
-
-
-def _png_frame_hex(doc_id, w, h, f):
-    """Hex of one crafted non-interlaced 8-bit RGB PNG carrying the
-    SAME logical pixel grid as ``_bmp_frame_hex`` (v(x,y) =
-    (doc_id + 11f + 3x + 7y) % 256; R=v+170, G=v+85, B=v mod 256) —
-    so the closed-form pixel oracles are format-independent. Built
-    entirely from JVM expressions: the IDAT body is a zlib stream with
-    ONE stored-DEFLATE block (header 0x78 0x01, BFINAL/BTYPE=00,
-    LEN/NLEN), which stdlib inflate consumes through the exact same
-    code path as a compressed stream; scanline filters cycle
-    y%3 -> None/Sub/Up, each closed-form under the linear gradient
-    (Sub bytes are constant 3 past pixel 0, Up bytes constant 7).
-    Chunk CRCs and the adler32 trailer are zeroed — the decoder is a
-    documented tolerant reader (multimodal.decode_png) and the pixel
-    oracle, not the transport checksum, proves correctness. PNG stores
-    RGB (vs BMP's BGR): a channel-order slip cannot cancel across the
-    two formats."""
-    def v(x, y):
-        return (doc_id + 11 * f + 3 * x + 7 * y) % 256
-
-    def pix_hex(x, y):  # stored byte order is R,G,B
-        return F.concat(
-            _hex_pair((v(x, y) + 170) % 256),
-            _hex_pair((v(x, y) + 85) % 256),
-            _hex_pair(v(x, y)),
-        )
-
-    def row_hex(y):
-        none_row = F.concat(
-            F.lit("00"),
-            F.array_join(
-                F.transform(F.sequence(F.lit(0), w - 1),
-                            lambda x: pix_hex(x, y)),
-                ""),
-        )
-        # Sub: first pixel raw (left predictor 0), then every channel
-        # byte is raw(x)-raw(x-1) = 3 mod 256 under the gradient
-        sub_row = F.concat(
-            F.lit("01"), pix_hex(F.lit(0), y),
-            F.repeat(F.lit("03"), ((w - 1) * 3).cast("int")))
-        # Up: y%3==2 implies y>=2, so the prior row always exists and
-        # every byte is raw(x,y)-raw(x,y-1) = 7 mod 256
-        up_row = F.concat(
-            F.lit("02"), F.repeat(F.lit("07"), (w * 3).cast("int")))
-        fy = y % 3
-        return (F.when(fy == 0, none_row)
-                .when(fy == 1, sub_row)
-                .otherwise(up_row))
-
-    scan_len = h * (1 + 3 * w)
-    return F.concat(
-        F.lit("89504E470D0A1A0A"),                     # signature
-        F.lit("0000000D49484452"),                     # IHDR len+type
-        _hex_be(w, 8), _hex_be(h, 8),
-        F.lit("0802000000"),                           # 8-bit RGB, no interlace
-        F.lit("00000000"),                             # IHDR CRC (unverified)
-        _hex_be(scan_len + 11, 8), F.lit("49444154"),  # IDAT len+type
-        F.lit("7801"),                                 # zlib CMF/FLG
-        F.lit("01"),                                   # stored, BFINAL
-        _hex_le(scan_len, 4), _hex_le(65535 - scan_len, 4),
-        F.array_join(
-            F.transform(F.sequence(F.lit(0), h - 1), row_hex), ""),
-        F.lit("00000000"),                             # adler32 (unverified)
-        F.lit("00000000"),                             # IDAT CRC (unverified)
-        F.lit("0000000049454E44AE426082"),             # IEND (real CRC)
-    )
-
-
-# 256-entry GIF palette mapping index v to EXACTLY the RGB the BMP/PNG
-# crafters render for base value v — (R, G, B) = (v+170, v+85, v) mod
-# 256 — so a GIF whose pixel INDEX stream is v(x,y) renders the same
-# logical grid and the pixel oracles stay format-free. A compile-time
-# constant (768 bytes).
-_GIF_PALETTE_HEX = "".join(
-    f"{(i + 170) % 256:02X}{(i + 85) % 256:02X}{i:02X}" for i in range(256)
-)
-
-
-def _idiv(c, d):
-    # exact integer floor-division for NON-NEGATIVE Column values
-    # (Column has no // operator): subtract the remainder, then the
-    # double division is integral before the cast
-    return ((c - c % d) / d).cast("int")
-
-
-def _gif_frame_hex(doc_id, w, h, f):
-    """Hex of one crafted GIF89a carrying the SAME logical pixel grid
-    as the BMP/PNG crafters, built entirely from JVM expressions. The
-    LZW body uses the CLEAR-before-every-symbol construction: with a
-    256-color table the code width is a constant 9 bits (the table
-    never grows — each CLEAR resets it before an entry can be added),
-    so the bitstream is byte-aligned every 4 pixels and each (CLEAR,
-    sym) x4 group packs into one closed-form 9-byte sub-block; the
-    tail emits the leftover 0-3 pixels plus the EOI code. That is a
-    degenerate-but-valid LZW stream — the decode side still runs the
-    real variable-width bit unpacker, dictionary machinery, palette
-    lookup and block walk (multimodal.decode_gif; dictionary GROWTH
-    and the KwKwK case are pinned separately against canonical giflib
-    in tests/test_multimodal_pixels.py)."""
-
-    def v(k):  # pixel k in row-major order: x = k % w, y = k // w
-        # floor(k / w) is exact here: both operands are small ints, so
-        # the double quotient is correctly rounded and integer-valued
-        # quotients are represented exactly
-        y = F.floor(k / w).cast("int")
-        return (doc_id + 11 * f + 3 * (k % w) + 7 * y) % 256
-
-    # 4-pixel group: codes CLEAR(256),s0,CLEAR,s1,CLEAR,s2,CLEAR,s3 at
-    # 9 bits LSB-first = 72 bits = 9 bytes; CLEAR contributes only its
-    # bit 8 (0x100), landing on bits 8/26/44/62 of the group.
-    def group_hex(g):
-        s0, s1, s2, s3 = v(4 * g), v(4 * g + 1), v(4 * g + 2), v(4 * g + 3)
-        return F.concat(
-            F.lit("0900"),                        # block len 9, b0 = 0
-            _hex_pair((s0 % 128) * 2 + 1),        # b1 = 1 | ((s0&127)<<1)
-            _hex_pair(_idiv(s0, 128)),                 # b2 = s0 >> 7
-            _hex_pair((s1 % 32) * 8 + 4),         # b3 = 4 | ((s1&31)<<3)
-            _hex_pair(_idiv(s1, 32)),                  # b4 = s1 >> 5
-            _hex_pair((s2 % 8) * 32 + 16),        # b5 = 16 | ((s2&7)<<5)
-            _hex_pair(_idiv(s2, 8)),                   # b6 = s2 >> 3
-            _hex_pair((s3 % 2) * 128 + 64),       # b7 = 64 | ((s3&1)<<7)
-            _hex_pair(_idiv(s3, 2)),                   # b8 = s3 >> 1
-        )
-
-    n_px = w * h
-    n4 = n_px - n_px % 4  # first un-grouped pixel index
-    # exact: n4 is a multiple of 4 and small, so the double division
-    # is integral before the cast
-    n_groups = (n4 / 4).cast("long")
-    groups = F.when(
-        n4 > 0,
-        F.array_join(
-            F.transform(F.sequence(F.lit(0).cast("long"), n_groups - 1),
-                        group_hex), ""),
-    ).otherwise(F.lit(""))
-    s0, s1, s2 = v(n4), v(n4 + 1), v(n4 + 2)
-    # tail block: leftover pixels then EOI(257 = bits 0 and 8 of its
-    # 9-bit slot); same bit positions as the group math, EOI replacing
-    # the next CLEAR slot.
-    tail = (
-        F.when(n_px % 4 == 0, F.lit("020101"))
-        .when(n_px % 4 == 1, F.concat(
-            F.lit("0400"),
-            _hex_pair((s0 % 128) * 2 + 1),
-            _hex_pair(_idiv(s0, 128) + 4),             # EOI bit 18
-            F.lit("04"),                          # EOI bit 26
-        ))
-        .when(n_px % 4 == 2, F.concat(
-            F.lit("0600"),
-            _hex_pair((s0 % 128) * 2 + 1),
-            _hex_pair(_idiv(s0, 128)),
-            _hex_pair((s1 % 32) * 8 + 4),
-            _hex_pair(_idiv(s1, 32) + 16),             # EOI bit 36
-            F.lit("10"),                          # EOI bit 44
-        ))
-        .otherwise(F.concat(
-            F.lit("0800"),
-            _hex_pair((s0 % 128) * 2 + 1),
-            _hex_pair(_idiv(s0, 128)),
-            _hex_pair((s1 % 32) * 8 + 4),
-            _hex_pair(_idiv(s1, 32)),
-            _hex_pair((s2 % 8) * 32 + 16),
-            _hex_pair(_idiv(s2, 8) + 64),              # EOI bit 54
-            F.lit("40"),                          # EOI bit 62
-        ))
-    )
-    return F.concat(
-        F.lit("474946383961"),                    # "GIF89a"
-        _hex_le(w, 4), _hex_le(h, 4),             # logical screen
-        F.lit("F70000"),                          # GCT present, 256 entries
-        F.lit(_GIF_PALETTE_HEX),
-        F.lit("2C"), F.lit("00000000"),           # image at (0,0)
-        _hex_le(w, 4), _hex_le(h, 4),
-        F.lit("00"),                              # no local table/interlace
-        F.lit("08"),                              # LZW min code size
-        groups, tail,
-        F.lit("003B"),                            # block terminator + trailer
-    )
-
-
-# Constant JPEG header hex for the DC-only craft: SOI; DQT (table 0,
-# all entries 8 — so a flat block's IDCT value is exactly its stored
-# DC coefficient); DHT DC table 0 with the SINGLE symbol category-4 at
-# code length 1 (code "0"); DHT AC table 0 with the single symbol EOB
-# at code length 3 (code "000"); then SOF0 (dims spliced between) and
-# a 1-component SOS. With every DC diff held in category 4, each block
-# is exactly 0|dddd|000 = ONE closed-form byte — the JPEG analog of
-# the GIF craft's constant-9-bit-code trick.
-_JPEG_CRAFT_HEAD = (
-    "FFD8"
-    "FFDB004300" + "08" * 64
-    + "FFC4001400" + "01" + "00" * 15 + "04"
-    + "FFC4001410" + "000001" + "00" * 13 + "00"
-    + "FFC0000B08"
-)
-_JPEG_CRAFT_SOF_TAIL = "01011100"
-_JPEG_CRAFT_SOS = "FFDA0008010100003F00"
-
-
-def _jpeg_frame_hex(doc_id, w, h, f):
-    """Hex of one crafted BASELINE JPEG (grayscale, DC-only blocks)
-    built from JVM expressions. Unlike BMP/PNG/GIF the format is lossy
-    for arbitrary grids, so the JPEG frames render a BLOCKWISE grid
-    that decodes EXACTLY: every 8x8 block is flat at p = 128 + a +
-    (blk%2)*delta with a = doc_id%8+8, delta = (doc_id+11f)%8+8, blk
-    the raster block index — all DC diffs (a first, then alternating
-    +/-delta) sit in Huffman category 4, so with the single-symbol
-    tables of _JPEG_CRAFT_HEAD each block's entropy coding is the one
-    byte (bits << 3), bits = d > 0 ? d : d+15. The decode side
-    (multimodal.decode_jpeg) still runs the REAL marker walk,
-    canonical-Huffman build, bit unpacking, EXTEND, dequant, and IDCT
-    — general AC/subsampling paths are pinned against canonical
-    libjpeg in tests/test_jpeg_decoder.py."""
-    a = doc_id % 8 + 8
-    delta = (doc_id + 11 * f) % 8 + 8
-    bw = _idiv(w + 7, 8)
-    bh = _idiv(h + 7, 8)
-
-    def block_hex(i):
-        bits = (
-            F.when(i == 0, a)
-            .when(i % 2 == 1, delta)
-            .otherwise(15 - delta)
-        )
-        return _hex_pair(bits * 8)
-
-    return F.concat(
-        F.lit(_JPEG_CRAFT_HEAD),
-        _hex_be(h, 4), _hex_be(w, 4),
-        F.lit(_JPEG_CRAFT_SOF_TAIL),
-        F.lit(_JPEG_CRAFT_SOS),
-        F.array_join(
-            F.transform(F.sequence(F.lit(0), bw * bh - 1), block_hex), ""),
-        F.lit("FFD9"),
-    )
-
-
-def _wav_frame_hex(doc_id, n_frames, sr, ch):
-    """Hex of one crafted integer-PCM16 WAV built from JVM expressions
-    (no UDF on the encode side): frame i, channel c stores the 16-bit
-    word u = (doc_id*7 + 9973*i + 5*c) % 65536 little-endian, whose
-    two's-complement reading is the signed sample
-    s(i,c) = ((doc_id*7 + 9973*i + 5*c + 32768) % 65536) - 32768.
-    The 9973 stride sweeps the full 16-bit range inside ANY analysis
-    window, so window energies sit near the uniform mean (~3.58e8 per
-    sample) at every scale factor — a fixed VAD threshold yields a
-    real active/inactive mix regardless of corpus size. The decode
-    side
-    (multimodal.decode_wav_pcm) must undo the RIFF/fmt/data walk and
-    the sign convention to reproduce the closed-form samples; the
-    audio-feature oracles recompute the exact-integer features from
-    the same formula. Staged for the round-11 audio keys."""
-    def u16(i, c):  # two's-complement image of the signed sample
-        return (doc_id * 7 + 9973 * i + 5 * c) % 65536
-
-    def frame_hex(i):
-        return F.concat(
-            *[_hex_le(u16(i, c), 4) for c in range(ch)])
-
-    data_len = n_frames * ch * 2
-    return F.concat(
-        F.lit("52494646"),                        # "RIFF"
-        _hex_le(data_len + 36, 8),                # riff size
-        F.lit("57415645"), F.lit("666D7420"),     # "WAVE" "fmt "
-        F.lit("10000000"), F.lit("0100"),         # fmt len 16, PCM
-        F.lit(f"{ch:02X}00"),                     # channels (const)
-        _hex_le(sr, 8),
-        _hex_le(sr * ch * 2, 8),                  # byte rate
-        F.lit(f"{ch * 2:02X}00"), F.lit("1000"),  # block align, 16 bit
-        F.lit("64617461"), _hex_le(data_len, 8),  # "data"
-        F.array_join(
-            F.transform(F.sequence(F.lit(0), n_frames - 1), frame_hex),
-            ""),
-    )
-
-
-def _gzip_stored_hex(text_col):
-    """Hex of a VALID gzip member wrapping ``text_col``'s UTF-8 bytes
-    in one stored-DEFLATE block (RFC 1952 header, BTYPE=00, LEN/NLEN,
-    raw bytes, no trailer — curation.decompress_text's member walk
-    tolerates a member truncated exactly at the trailer and verifies
-    CRC only when present, so the craft needs no SQL crc32). The
-    decode side runs the REAL header walk + raw inflate. Bounded to
-    the 65,535-byte stored-block limit by the caller's corpus (sf
-    document texts are far smaller). Staged for the round-11
-    decompress keys."""
-    raw = F.encode(text_col, "utf-8")
-    n = F.octet_length(raw)
-    return F.concat(
-        F.lit("1F8B0800000000000003"),  # magic, deflate, no flags
-        F.lit("01"),                    # stored block, BFINAL
-        _hex_le(n, 4), _hex_le(65535 - n, 4),
-        F.hex(raw),
-    )
-
-
-def _gzip_member_full_hex(raw):
-    """Hex of a COMPLETE gzip member (stored-DEFLATE body + the full
-    8-byte CRC32/ISIZE trailer, crc computed JVM-side with F.crc32)
-    over a binary column — the multi-member building block: a member
-    FOLLOWED by another must carry its verified trailer, since
-    curation.decompress_text's walk rejects any non-member bytes after
-    a trailer and only tolerates truncation on the tail member."""
-    n = F.octet_length(raw)
-    return F.concat(
-        F.lit("1F8B0800000000000003"),
-        F.lit("01"),
-        _hex_le(n, 4), _hex_le(65535 - n, 4),
-        F.hex(raw),
-        _hex_le(F.crc32(raw), 8), _hex_le(n, 8),
-    )
-
-
-# --- single-parse SQL forms of the pixel-frame crafts -----------------------
-#
-# The Column-operator craft builders above cost ~1-2 s of py4j round
-# trips PER QUERY CONSTRUCTION (every F.fn call is a ~2-3 ms round trip
-# on this harness — see the construction-cost note in operators/
-# text.py), and their per-pixel transform lambdas evaluate interpreted
-# (higher-order functions never reach codegen). The _sql_* builders
-# below emit the identical byte streams as SQL TEXT parsed by ONE
-# F.expr, and replace the per-pixel hex arithmetic with substring
-# lookups into driver-computed constant tables:
-#
-#   BMP/PNG rows: the x-th pixel triple of a row is trip((c+3x)%256)
-#   with c = (doc_id+11f+7y)%256. Since 3·171 ≡ 1 (mod 256), write
-#   c ≡ 3d (mod 256) with d = 171c mod 256; then the row is the
-#   CONTIGUOUS slice [d, d+w) of the 256-entry table T[t] =
-#   trip((3t)%256) — one substring per ROW instead of 3 hex-pair
-#   expression trees per PIXEL.
-#
-#   GIF groups: bytes (b1,b2) depend only on s0, (b3,b4) on s1, etc.,
-#   so each pair is a 4-hex-char lookup in a 256-entry table — four
-#   substrings per 4-pixel group instead of eight hex-pair chains.
-#
-# Equality with the Column builders was verified exhaustively over the
-# full doc_id residue period (lcm(256,12,9,8,2,7) = 16128 ids, both
-# single- and multi-frame payloads) before the Column forms were
-# retired; the mm oracle hashes re-prove the bytes end-to-end.
-
-_BMP_ROWTAB = "".join(
-    f"{(3 * t) % 256:02X}{((3 * t) + 85) % 256:02X}{((3 * t) + 170) % 256:02X}"
-    for t in range(256)
-) * 2
-_PNG_ROWTAB = "".join(
-    f"{((3 * t) + 170) % 256:02X}{((3 * t) + 85) % 256:02X}{(3 * t) % 256:02X}"
-    for t in range(256)
-) * 2
-# GIF 9-bit LSB-first group-byte pair tables, indexed by symbol value.
-_GIF_TAB_A = "".join(
-    f"{(s % 128) * 2 + 1:02X}{s // 128:02X}" for s in range(256))
-_GIF_TAB_B = "".join(
-    f"{(s % 32) * 8 + 4:02X}{s // 32:02X}" for s in range(256))
-_GIF_TAB_C = "".join(
-    f"{(s % 8) * 32 + 16:02X}{s // 8:02X}" for s in range(256))
-_GIF_TAB_D = "".join(
-    f"{(s % 2) * 128 + 64:02X}{s // 2:02X}" for s in range(256))
-
-
-def _sql_hex_be2(e: str, width: int) -> str:
-    return f"lpad(hex({e}), {width}, '0')"
-
-
-def _sql_hex_le2(e: str, width: int) -> str:
-    hx = _sql_hex_be2(e, width)
-    return "concat(%s)" % ", ".join(
-        f"substring({hx}, {i}, 2)" for i in range(width - 1, 0, -2)
-    )
-
-
-def _bmp_frame_sql(did: str, w: str, h: str, f: str) -> str:
-    """SQL text of the crafted 24bpp BMP of ``_bmp_frame_hex``'s
-    contract: v(x,y) = (doc_id+11f+3x+7y)%256, channels B=v, G=v+85,
-    R=v+170 (mod 256), rows padded to 4-byte words, storage order
-    alternating by (doc_id+f) parity (even bottom-up, odd top-down
-    with negative i32 height)."""
-    td = f"(pmod({did} + {f}, 2) = 1)"
-    y = f"(CASE WHEN {td} THEN j ELSE {h} - 1 - j END)"
-    d = f"pmod(pmod({did} + 11 * {f} + 7 * {y}, 256) * 171, 256)"
-    padn = f"pmod(4 - pmod({w} * 3, 4), 4)"
-    row = (
-        f"concat(substring('{_BMP_ROWTAB}', 6 * {d} + 1, 6 * {w}),"
-        f" substring('000000', 1, 2 * {padn}))"
-    )
-    pixdata = f"array_join(transform(sequence(0, {h} - 1), j -> {row}), '')"
-    img_size = f"(({w} * 3 + {padn}) * {h})"
-    height_field = f"(CASE WHEN {td} THEN 4294967296 - {h} ELSE {h} END)"
-    return "concat(%s)" % ", ".join([
-        "'424D'", _sql_hex_le2(f"({img_size} + 54)", 8),
-        "'0000000036000000'",
-        "'28000000'", _sql_hex_le2(w, 8), _sql_hex_le2(height_field, 8),
-        "'01001800'", "'00000000'", _sql_hex_le2(img_size, 8),
-        "'130B0000130B0000'", "'0000000000000000'",
-        pixdata,
-    ])
-
-
-def _png_frame_sql(did: str, w: str, h: str, f: str) -> str:
-    """SQL text of the crafted non-interlaced 8-bit RGB PNG of
-    ``_png_frame_hex``'s contract (stored-DEFLATE IDAT, y%3 filter
-    cycle None/Sub/Up, zeroed CRCs/adler)."""
-    d = f"pmod(pmod({did} + 11 * {f} + 7 * j, 256) * 171, 256)"
-    none_row = f"concat('00', substring('{_PNG_ROWTAB}', 6 * {d} + 1, 6 * {w}))"
-    sub_row = (
-        f"concat('01', substring('{_PNG_ROWTAB}', 6 * {d} + 1, 6),"
-        f" repeat('03', cast(({w} - 1) * 3 as int)))"
-    )
-    up_row = f"concat('02', repeat('07', cast({w} * 3 as int)))"
-    row = (
-        f"(CASE WHEN pmod(j, 3) = 0 THEN {none_row}"
-        f" WHEN pmod(j, 3) = 1 THEN {sub_row}"
-        f" ELSE {up_row} END)"
-    )
-    rows = f"array_join(transform(sequence(0, {h} - 1), j -> {row}), '')"
-    scan_len = f"({h} * (1 + 3 * {w}))"
-    return "concat(%s)" % ", ".join([
-        "'89504E470D0A1A0A'",
-        "'0000000D49484452'",
-        _sql_hex_be2(w, 8), _sql_hex_be2(h, 8),
-        "'0802000000'",
-        "'00000000'",
-        _sql_hex_be2(f"({scan_len} + 11)", 8), "'49444154'",
-        "'7801'",
-        "'01'",
-        _sql_hex_le2(scan_len, 4), _sql_hex_le2(f"(65535 - {scan_len})", 4),
-        rows,
-        "'00000000'",
-        "'00000000'",
-        "'0000000049454E44AE426082'",
-    ])
-
-
-def _gif_v_sql(did: str, w: str, f: str, k: str) -> str:
-    """GIF pixel value at row-major index ``k`` (see _gif_frame_hex)."""
-    return (
-        f"pmod({did} + 11 * {f} + 3 * ({k} % {w})"
-        f" + 7 * cast(floor(({k}) / {w}) as int), 256)"
-    )
-
-
-def _gif_frame_sql(did: str, w: str, h: str, f: str) -> str:
-    """SQL text of the crafted GIF89a of ``_gif_frame_hex``'s contract
-    (CLEAR-before-every-symbol constant-9-bit LZW, 256-entry palette
-    (v+170, v+85, v))."""
-    s = [_gif_v_sql(did, w, f, k) for k in
-         ("(4 * g)", "(4 * g + 1)", "(4 * g + 2)", "(4 * g + 3)")]
-    ghex = (
-        "concat('0900',"
-        f" substring('{_GIF_TAB_A}', 4 * {s[0]} + 1, 4),"
-        f" substring('{_GIF_TAB_B}', 4 * {s[1]} + 1, 4),"
-        f" substring('{_GIF_TAB_C}', 4 * {s[2]} + 1, 4),"
-        f" substring('{_GIF_TAB_D}', 4 * {s[3]} + 1, 4))"
-    )
-    n_px = f"({w} * {h})"
-    n4 = f"({n_px} - pmod({n_px}, 4))"
-    n_groups = f"cast({n4} / 4 as bigint)"
-    groups = (
-        f"(CASE WHEN {n4} > 0 THEN array_join(transform("
-        f"sequence(cast(0 as bigint), {n_groups} - 1), g -> {ghex}), '')"
-        " ELSE '' END)"
-    )
-    t0 = _gif_v_sql(did, w, f, n4)
-    t1 = _gif_v_sql(did, w, f, f"({n4} + 1)")
-    t2 = _gif_v_sql(did, w, f, f"({n4} + 2)")
-
-    def hx2(e: str) -> str:
-        return f"lpad(hex({e}), 2, '0')"
-
-    tail = (
-        f"(CASE WHEN pmod({n_px}, 4) = 0 THEN '020101'"
-        f" WHEN pmod({n_px}, 4) = 1 THEN concat('0400',"
-        f" {hx2(f'pmod({t0}, 128) * 2 + 1')},"
-        f" {hx2(f'({t0} div 128) + 4')}, '04')"
-        f" WHEN pmod({n_px}, 4) = 2 THEN concat('0600',"
-        f" {hx2(f'pmod({t0}, 128) * 2 + 1')},"
-        f" {hx2(f'{t0} div 128')},"
-        f" {hx2(f'pmod({t1}, 32) * 8 + 4')},"
-        f" {hx2(f'({t1} div 32) + 16')}, '10')"
-        f" ELSE concat('0800',"
-        f" {hx2(f'pmod({t0}, 128) * 2 + 1')},"
-        f" {hx2(f'{t0} div 128')},"
-        f" {hx2(f'pmod({t1}, 32) * 8 + 4')},"
-        f" {hx2(f'{t1} div 32')},"
-        f" {hx2(f'pmod({t2}, 8) * 32 + 16')},"
-        f" {hx2(f'({t2} div 8) + 64')}, '40') END)"
-    )
-    return "concat(%s)" % ", ".join([
-        "'474946383961'",
-        _sql_hex_le2(w, 4), _sql_hex_le2(h, 4),
-        "'F70000'",
-        f"'{_GIF_PALETTE_HEX}'",
-        "'2C'", "'00000000'",
-        _sql_hex_le2(w, 4), _sql_hex_le2(h, 4),
-        "'00'",
-        "'08'",
-        groups, tail,
-        "'003B'",
-    ])
-
-
-def _jpeg_frame_sql(did: str, w: str, h: str, f: str) -> str:
-    """SQL text of the crafted DC-only baseline JPEG of
-    ``_jpeg_frame_hex``'s contract (single-symbol Huffman tables, one
-    closed-form byte per 8x8 block)."""
-    a = f"(pmod({did}, 8) + 8)"
-    delta = f"(pmod({did} + 11 * {f}, 8) + 8)"
-    bw = f"(({w} + 7) div 8)"
-    bh = f"(({h} + 7) div 8)"
-    bits = (
-        f"(CASE WHEN i = 0 THEN {a}"
-        f" WHEN pmod(i, 2) = 1 THEN {delta}"
-        f" ELSE 15 - {delta} END)"
-    )
-    block = f"lpad(hex({bits} * 8), 2, '0')"
-    return "concat(%s)" % ", ".join([
-        f"'{_JPEG_CRAFT_HEAD}'",
-        _sql_hex_be2(h, 4), _sql_hex_be2(w, 4),
-        f"'{_JPEG_CRAFT_SOF_TAIL}'",
-        f"'{_JPEG_CRAFT_SOS}'",
-        f"array_join(transform(sequence(0, {bw} * {bh} - 1), i -> {block}), '')",
-        "'FFD9'",
-    ])
-
-
-def _pixel_frame_sql(did: str, f: str) -> str:
-    """One frame's hex as SQL text: format cycles by (doc_id + f) % 8
-    exactly as the retired Column-form frame_hex did."""
-    w = f"({did} % 12 + 4)"
-    h = f"({did} % 9 + 4)"
-    fmt = f"pmod({did} + {f}, 8)"
-    return (
-        f"(CASE WHEN {fmt} >= 6 THEN {_jpeg_frame_sql(did, w, h, f)}"
-        f" WHEN {fmt} >= 4 THEN {_gif_frame_sql(did, w, h, f)}"
-        f" WHEN {fmt} >= 2 THEN {_png_frame_sql(did, w, h, f)}"
-        f" ELSE {_bmp_frame_sql(did, w, h, f)} END)"
-    )
-
-
-def _crafted_pixel_media(spark, sf_dir, frames=False):
-    """Crafted MIXED-format pixel corpus over documents: w =
-    doc_id%12+4, h = doc_id%9+4 (small grids keep the JVM-side hex
-    craft cheap; every pad width and both BMP storage orders occur).
-    Format cycles by (doc_id + f) % 8 — BMP for 0/1 (both storage
-    orientations survive, since _bmp_frame_hex flips orientation on
-    the same parity), PNG for 2/3, GIF for 4/5, baseline JPEG for 6/7
-    (round 11). BMP/PNG/GIF render the IDENTICAL logical pixel grid;
-    JPEG — lossy for arbitrary grids — renders the BLOCKWISE grid of
-    _jpeg_frame_hex that decodes exactly, so the closed-form oracles
-    branch ONCE on (media_id + frame_idx) % 8 >= 6 and never otherwise
-    mention format. ``frames=True`` packs doc_id%7+1 concatenated
-    frames per doc with the format alternating WITHIN the container (a
-    real mixed-stream walk on the decode side). doc_id >= 0 guards the
-    hex-craft invariant."""
-    from streaming_demos_spark.catalog import fan_out
-
-    # fan_out BEFORE the craft expressions: the per-pixel hex builders
-    # below are interpreted higher-order transforms (never codegen) and
-    # previously evaluated inside the row-group-bound documents scan
-    # (~3 tasks at bench scale) — as_media's own fan_out only
-    # parallelized the already-crafted payloads. Repartitioning first
-    # spreads the craft itself; at real scale the scan has many splits
-    # and fan_out inserts nothing (guide §2.5 input skew).
-    docs = fan_out(
-        _t(spark, sf_dir, "documents").filter(F.col("doc_id") >= 0).select("doc_id"),
-        "doc_id",
-    )
-    doc_id = F.col("doc_id")
-
-    # ONE F.expr for the whole payload (see the _sql_* craft builders
-    # above): parses in a single py4j round trip and swaps the
-    # interpreted per-pixel hex arithmetic for substring table lookups.
-    if frames:
-        payload_hex = F.expr(
-            "array_join(transform(sequence(0, doc_id % 7),"
-            f" f -> {_pixel_frame_sql('doc_id', 'f')}), '')"
-        )
-    else:
-        payload_hex = F.expr(_pixel_frame_sql("doc_id", "0"))
-    crafted = docs.select(
-        doc_id, F.unhex(payload_hex).alias("img"))
-    return MM.as_media(crafted, "doc_id", "img",
-                       kind="video" if frames else "image")
-
-
-def q_multimodal_features(spark, sf_dir):
-    # REAL media metadata extraction (round 8): craft a mixed media
-    # corpus JVM-side — each doc becomes a valid PNG / JPEG(JFIF+SOF0)
-    # / GIF89a / WAV(RIFF fmt) header or raw text by doc_id % 5, with
-    # dimensions derived from doc_id — then round-trip it through the
-    # pure-stdlib header parser (multimodal.parse_media_header over
-    # Arrow batches). The byte streams are built as hex strings + one
-    # unhex (no UDF on the encode side), so the decode step is parsing
-    # genuine binary container headers, not replaying its own input.
-    # The oracle recomputes the declared dimensions closed-form.
-    #
-    # Only the four CRAFTED branches run through the header parser;
-    # the text branch (f=4, and any doc_id < 0, where % keeps sign on
-    # both engines so f_idx matches none of 0..3) emits its 'unknown'
-    # row directly. This mirrors the oracle exactly: a text that
-    # happens to start with a printable magic ('GIF89a', 'RIFF..WAVE')
-    # can never sniff as media on one side only, and the be()/le() hex
-    # helpers (which assume non-negative ints — F.hex of a negative is
-    # 16-digit two's-complement that lpad would TRUNCATE to the high
-    # hex digits) are only reached for doc_id >= 0.
-    docs = _t(spark, sf_dir, "documents")
-    f_idx = F.col("doc_id") % 5
-    w = F.col("doc_id") % 640 + 1
-    h = F.col("doc_id") % 480 + 1
-    sr = (F.col("doc_id") % 8) * 4000 + 8000
-    ch = F.col("doc_id") % 2 + 1
-    be, le = _hex_be, _hex_le
-
-    png_hex = F.concat(
-        # signature + IHDR length(13) + "IHDR"
-        F.lit("89504E470D0A1A0A0000000D49484452"),
-        be(w, 8), be(h, 8),
-        # bit depth 8, color type 6 (RGBA), compression/filter/
-        # interlace 0, CRC (unchecked by any header reader)
-        F.lit("080600000000000000"),
-    )
-    jpeg_hex = F.concat(
-        # SOI + APP0/JFIF (len 16, v1.1, no thumbnail)
-        F.lit("FFD8FFE000104A46494600010100000100010000"),
-        # SOF0: len 17, precision 8, height, width, 3 components
-        F.lit("FFC0001108"), be(h, 4), be(w, 4),
-        F.lit("03011100021101031101"),
-    )
-    gif_hex = F.concat(
-        F.lit("474946383961"),  # "GIF89a"
-        le(w, 4), le(h, 4),
-        F.lit("000000"),  # GCT flags, background, aspect
-    )
-    wav_hex = F.concat(
-        # "RIFF" + riff size 28 + "WAVE" + "fmt " + fmt len 16 + PCM
-        F.lit("524946461C00000057415645666D7420100000000100"),
-        le(ch, 4), le(sr, 8),
-        le(sr * ch * 2, 8),  # byte rate
-        le(ch * 2, 4),       # block align
-        F.lit("1000"),       # 16 bits per sample
-    )
-    payload = (
-        F.when(f_idx == 0, F.unhex(png_hex))
-        .when(f_idx == 1, F.unhex(jpeg_hex))
-        .when(f_idx == 2, F.unhex(gif_hex))
-        .otherwise(F.unhex(wav_hex))
-    )
-    # doc_id >= 0 must be explicit: a NEGATIVE MULTIPLE of 5 has
-    # f_idx == 0 on both engines (sign only survives a non-zero
-    # remainder), so the isin() routing alone would still feed it to
-    # the hex crafter. The oracle applies the identical predicate.
-    is_crafted = (F.col("doc_id") >= 0) & f_idx.isin(0, 1, 2, 3)
-    crafted = docs.filter(is_crafted).select(
-        F.col("doc_id"), payload.alias("media_bytes"))
-    media = MM.as_media(crafted, "doc_id", "media_bytes", kind="mixed")
-    parsed = MM.extract_features(media, decoder="headers")
-    # text/negative branch: the 'unknown' row, emitted directly (never
-    # sniffed). coalesce: a NULL text counts 0 bytes on both sides —
-    # not a NULL-vs-0 bridge split.
-    text_rows = docs.filter(~is_crafted).select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("unknown").alias("format"),
-        F.lit(0).cast("long").alias("width"),
-        F.lit(0).cast("long").alias("height"),
-        F.lit(0).cast("long").alias("sample_rate_hz"),
-        F.lit(0).cast("long").alias("channels"),
-        F.lit(0).cast("long").alias("bit_depth"),
-        F.octet_length(F.coalesce(F.col("text"), F.lit("")))
-        .cast("long").alias("n_bytes"),
-    )
-    return parsed.unionByName(text_rows)
-
-
-def q_mm_resize(spark, sf_dir):
-    # REAL pixel resize over a MIXED-format corpus (round 10; JPEG
-    # joined round 11): crafted 24bpp BMPs (padding, BGR, both storage
-    # orders), non-interlaced RGB PNGs (real stdlib-zlib inflate +
-    # Sub/Up scanline unfiltering), GIF89a images (real LZW
-    # bit-unpacking + 256-entry palette lookup), and baseline JPEGs
-    # (real T.81 marker walk, canonical-Huffman entropy decode,
-    # dequant + IDCT on the exactly-decodable DC-only craft);
-    # decoder="pixels" sniffs the magic per payload and all four
-    # decode paths feed one 2-D nearest-neighbor resize to 8x8 RGB
-    # over Arrow batches. The oracle recomputes every output pixel
-    # closed-form from doc_id — any padding/orientation/channel-order/
-    # filter/code-width/Huffman slip in ANY decoder flips the hash.
-    resized = MM.resize_images(
-        _crafted_pixel_media(spark, sf_dir),
-        width=8, height=8, decoder="pixels")
-    return resized.select(
-        "media_id",
-        F.col("meta")["mime"].alias("mime"),
-        F.col("meta")["n_bytes"].alias("n_bytes"),
-        F.hex("payload").alias("payload_hex"),
-    )
-
-
-def q_mm_frame_sample(spark, sf_dir):
-    # REAL mixed-stream container walk (round 10; JPEG joined round
-    # 11): each doc's payload is doc_id%7+1 concatenated crafted
-    # frames with the FORMAT cycling within the container (BMP stepped
-    # by declared file size, PNG by chunk structure, GIF by block walk
-    # to its 0x3B trailer, JPEG by segment lengths + the entropy scan
-    # to EOI); sample_frames(decoder='pixels') walks the mixed stream,
-    # decodes every 3rd frame through the sniffed decoder, and emits
-    # its integer-luma plane. Oracle: closed-form luma grid per
-    # sampled frame index (one format branch for the JPEG positions).
-    media = _crafted_pixel_media(spark, sf_dir, frames=True)
-    frames = MM.sample_frames(media, every_n=3, decoder="pixels")
-    return frames.select(
-        "media_id",
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        F.hex("frame").alias("frame_hex"),
-    )
-
-
-# --------------------------------------------------------------------------
-# driver contract
-# --------------------------------------------------------------------------
-
-def _sql_words(src: str = "documents") -> str:
-    return f"SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS words FROM {src}"
-
-
-def _sql_shingles() -> str:
-    # Word 3-grams; short docs collapse to one whole-document shingle
-    # (mirrors operators.text.word_shingles).
-    return (
-        "SELECT doc_id, CASE WHEN len(words) >= 3 "
-        "THEN list_transform(range(1, len(words)-1), i -> array_to_string(words[i:i+2], ' ')) "
-        "ELSE [array_to_string(words, ' ')] END AS shingles FROM w"
-    )
-
-
-def _sql_fuzzy_decontaminate(
-    threshold: float = 0.1, num_hashes: int = 12, band_rows: int = 3
-) -> str:
-    """DuckDB replay of the two-table MinHash decontamination pipeline
-    (corpus = source <> 'src0', benchmark = source = 'src0'); exact
-    integer threshold + half-up e4 best similarity."""
-    from fractions import Fraction
-
-    _f = Fraction(str(threshold))
-    p_, q_ = _f.numerator, _f.denominator
-    mh_exprs = ",\n               ".join(
-        f"list_min(list_transform(shingles, s -> md5('{h}|' || s))) AS mh_{h}"
-        for h in range(num_hashes)
-    )
-    n_bands = num_hashes // band_rows
-
-    def bands(sig: str) -> str:
-        return "\n            UNION ALL ".join(
-            "SELECT doc_id, {b} AS band_id, md5({cat}) AS band_hash FROM {sig}".format(
-                b=b,
-                sig=sig,
-                cat=" || '|' || ".join(
-                    f"mh_{b * band_rows + r}" for r in range(band_rows)
-                ),
-            )
-            for b in range(n_bands)
-        )
-
-    shingle_body = (
-        "SELECT doc_id, CASE WHEN len(words) >= 3 "
-        "THEN list_transform(range(1, len(words)-1), i -> array_to_string(words[i:i+2], ' ')) "
-        "ELSE [array_to_string(words, ' ')] END AS shingles FROM {w}"
-    )
-    return f"""
-        WITH cw AS ({_sql_words("documents")} WHERE source <> 'src0'),
-        csh AS ({shingle_body.format(w="cw")}),
-        bw AS ({_sql_words("documents")} WHERE source = 'src0'),
-        bsh AS ({shingle_body.format(w="bw")}),
-        csig AS (SELECT doc_id, {mh_exprs} FROM csh),
-        bsig AS (SELECT doc_id, {mh_exprs} FROM bsh),
-        cbands AS ({bands("csig")}),
-        bbands AS ({bands("bsig")}),
-        csized AS (
-            SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bucket_n
-            FROM cbands
-        ),
-        cand AS (
-            SELECT DISTINCT c.doc_id AS cid, b.doc_id AS bid
-            FROM (SELECT * FROM csized WHERE bucket_n <= 50) c
-            JOIN bbands b
-              ON c.band_id = b.band_id AND c.band_hash = b.band_hash
-        ),
-        scored AS (
-            SELECT cid, bid,
-                   len(list_intersect(list_distinct(sc.shingles),
-                                      list_distinct(sb.shingles))) AS i,
-                   len(list_distinct(sc.shingles))
-                   + len(list_distinct(sb.shingles))
-                   - len(list_intersect(list_distinct(sc.shingles),
-                                        list_distinct(sb.shingles))) AS u
-            FROM cand
-            JOIN csh sc ON cand.cid = sc.doc_id
-            JOIN bsh sb ON cand.bid = sb.doc_id
-        ),
-        hits AS (
-            SELECT cid,
-                   max((i * 10000 * 2 + u) // (2 * u)) AS best_jaccard_e4,
-                   count(*) AS n_matches
-            FROM scored WHERE u > 0 AND i * {q_} >= {p_} * u
-            GROUP BY cid
-        )
-        SELECT d.doc_id, h.cid IS NOT NULL AS contaminated,
-               coalesce(h.best_jaccard_e4, 0)::BIGINT AS best_jaccard_e4,
-               coalesce(h.n_matches, 0) AS n_matches
-        FROM (SELECT doc_id FROM documents WHERE source <> 'src0') d
-        LEFT JOIN hits h ON d.doc_id = h.cid
-    """
-
-
-def _sql_dedup_report(threshold: float = 0.1) -> str:
-    """DuckDB replay of dedup_report: exact-dup counts + aggregates over
-    the recursive-closure cluster labels."""
-    return f"""
-        WITH RECURSIVE
-        pairs AS ({_sql_minhash_pairs(threshold)}),
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM pairs
-            UNION
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        reach(node, lbl) AS (
-            SELECT a, a FROM edges
-            UNION
-            SELECT e.a, r.lbl FROM edges e JOIN reach r ON r.node = e.b
-        ),
-        comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-        labeled AS (
-            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
-            FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        ),
-        sizes AS (
-            SELECT component, count(*) AS n_members FROM labeled GROUP BY component
-        ),
-        per_doc AS (
-            SELECT l.doc_id, l.component, s.n_members,
-                   COALESCE(l.doc_id = l.component, FALSE) AS is_kept
-            FROM labeled l JOIN sizes s USING (component)
-        ),
-        ex AS (
-            SELECT count(*) AS n_docs,
-                   count(DISTINCT md5(text)) AS n_texts
-            FROM documents
-        )
-        SELECT ex.n_docs,
-               ex.n_docs - ex.n_texts AS n_exact_dup_rows,
-               (SELECT count(DISTINCT component) FROM per_doc
-                WHERE n_members > 1) AS n_multi_clusters,
-               (SELECT count(*) FROM per_doc WHERE n_members > 1)
-                   AS n_near_dup_docs,
-               (SELECT count(*) FROM per_doc WHERE is_kept) AS n_near_kept,
-               (((SELECT count(*) FROM per_doc WHERE is_kept)
-                 * 10000 * 2 + ex.n_docs)
-                // (2 * ex.n_docs))::BIGINT AS near_keep_rate_e4
-        FROM ex
-    """
-
-
-def _sql_keep_best(threshold: float = 0.1) -> str:
-    """DuckDB replay of near_dup_keep_best: minhash clusters (recursive
-    closure) joined with the text_stats quality score, rank-1 per
-    component on (quality desc, doc_id)."""
-    return f"""
-        WITH RECURSIVE
-        pairs AS ({_sql_minhash_pairs(threshold)}),
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM pairs
-            UNION
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        reach(node, lbl) AS (
-            SELECT a, a FROM edges
-            UNION
-            SELECT e.a, r.lbl FROM edges e JOIN reach r ON r.node = e.b
-        ),
-        comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-        labeled AS (
-            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
-            FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        ),
-        sizes AS (
-            SELECT component, count(*) AS n_members FROM labeled GROUP BY component
-        ),
-        qw AS (
-            SELECT doc_id, text,
-                   string_split_regex(lower(trim(text)), '\\s+') AS words
-            FROM documents
-        ),
-        q AS (
-            SELECT doc_id,
-                   round(
-                     least(len(words) / 64.0, 1.0) * 0.4
-                     + least((len(list_filter(words, x -> x IN
-                              ('the','a','an','and','of','to','in','is','it','for')))
-                              / len(words)) * 5.0, 1.0) * 0.2
-                     + (length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                        / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END)) * 0.4,
-                   4) AS quality_score
-            FROM qw
-        ),
-        ranked AS (
-            SELECT l.doc_id, l.component, s.n_members, q.quality_score,
-                   row_number() OVER (
-                       PARTITION BY l.component
-                       ORDER BY q.quality_score DESC, l.doc_id
-                   ) AS rn
-            FROM labeled l
-            JOIN sizes s USING (component)
-            JOIN q USING (doc_id)
-        )
-        SELECT doc_id, component, n_members, quality_score,
-               rn = 1 AS keep
-        FROM ranked
-    """
-
-
-def _sql_minhash_pairs(threshold: float = 0.1, num_hashes: int = 12, band_rows: int = 3) -> str:
-    """DuckDB replay of the full MinHash-LSH pipeline (md5-based, so the
-    hashes agree with Spark bit-for-bit). The verify threshold is an
-    exact integer cross-multiplication and the emitted similarity a
-    half-up e4 integer, mirroring minhash_near_dup_pairs."""
-    from fractions import Fraction
-
-    _f = Fraction(str(threshold))
-    p_, q_ = _f.numerator, _f.denominator
-    mh_exprs = ",\n               ".join(
-        f"list_min(list_transform(shingles, s -> md5('{h}|' || s))) AS mh_{h}"
-        for h in range(num_hashes)
-    )
-    n_bands = num_hashes // band_rows
-    band_selects = "\n            UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_id, md5({cat}) AS band_hash FROM sig".format(
-            b=b,
-            cat=" || '|' || ".join(f"mh_{b * band_rows + r}" for r in range(band_rows)),
-        )
-        for b in range(n_bands)
-    )
-    return f"""
-        WITH w AS ({_sql_words()}),
-        sh AS ({_sql_shingles()}),
-        sig AS (
-            SELECT doc_id,
-               {mh_exprs}
-            FROM (SELECT doc_id, shingles FROM sh)
-        ),
-        bands AS (
-            {band_selects}
-        ),
-        sized AS (
-            SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bucket_n
-            FROM bands
-        ),
-        okb AS (SELECT * FROM sized WHERE bucket_n <= 50),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM okb a JOIN okb b
-              ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-             AND a.doc_id < b.doc_id
-        ),
-        scored AS (
-            SELECT doc_a, doc_b,
-                   len(list_intersect(list_distinct(sa.shingles),
-                                      list_distinct(sb.shingles))) AS i,
-                   len(list_distinct(sa.shingles))
-                   + len(list_distinct(sb.shingles))
-                   - len(list_intersect(list_distinct(sa.shingles),
-                                        list_distinct(sb.shingles))) AS u
-            FROM cand
-            JOIN sh sa ON cand.doc_a = sa.doc_id
-            JOIN sh sb ON cand.doc_b = sb.doc_id
-        )
-        SELECT doc_a, doc_b,
-               ((i * 10000 * 2 + u) // (2 * u))::BIGINT AS jaccard_e4
-        FROM scored WHERE u > 0 AND i * {q_} >= {p_} * u
-        ORDER BY doc_a, doc_b
-    """
-
-
-def _sql_neardup_clusters(threshold: float = 0.1) -> str:
-    """DuckDB replay of near_dup_clusters: the minhash-pair SQL (nested
-    as a CTE) -> recursive-CTE transitive closure taking the min
-    reachable id as the component label -> singleton fill + sizes +
-    min-id keep flag. Mirrors operators.dedup.connected_components'
-    fixpoint exactly (both compute min-reachable-id)."""
-    return f"""
-        WITH RECURSIVE
-        pairs AS ({_sql_minhash_pairs(threshold)}),
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM pairs
-            UNION
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        reach(node, lbl) AS (
-            SELECT a, a FROM edges
-            UNION
-            SELECT e.a, r.lbl FROM edges e JOIN reach r ON r.node = e.b
-        ),
-        comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-        labeled AS (
-            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
-            FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        ),
-        sizes AS (
-            SELECT component, count(*) AS n_members FROM labeled GROUP BY component
-        )
-        SELECT l.doc_id, l.component, s.n_members,
-               COALESCE(l.doc_id = l.component, FALSE) AS is_kept
-        FROM labeled l JOIN sizes s USING (component)
-        ORDER BY l.doc_id
-    """
-
-
-def _sql_ngram_jaccard(threshold: float = 0.5, max_bucket: int = 50) -> str:
-    """DuckDB replay of the inverted-index exact Jaccard join
-    (operators.dedup.ngram_jaccard_pairs): same distinct-shingle
-    postings, integer length filter, bucket cap, and per-pair exact
-    intersection threshold + half-up e4 similarity."""
-    from fractions import Fraction
-
-    _f = Fraction(str(threshold))
-    p_, q_ = _f.numerator, _f.denominator
-    return f"""
-        WITH w AS ({_sql_words()}),
-        sh AS ({_sql_shingles()}),
-        ss AS (
-            SELECT doc_id, list_distinct(shingles) AS s
-            FROM sh
-        ),
-        postings AS (
-            SELECT doc_id, len(s) AS n, unnest(s) AS shingle FROM ss
-        ),
-        capped AS (
-            SELECT * FROM (
-                SELECT *, count(*) OVER (PARTITION BY shingle) AS bucket_n
-                FROM postings
-            ) WHERE bucket_n <= {max_bucket}
-        ),
-        agg AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n AS n_a, b.n AS n_b, count(*) AS isect
-            FROM capped a JOIN capped b
-              ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-             AND a.n * {q_} >= b.n * {p_} AND b.n * {q_} >= a.n * {p_}
-            GROUP BY 1, 2, 3, 4
-        )
-        SELECT doc_a, doc_b,
-               ((isect * 10000 * 2 + (n_a + n_b - isect))
-                // (2 * (n_a + n_b - isect)))::BIGINT AS jaccard_e4
-        FROM agg
-        WHERE isect * {q_} >= {p_} * (n_a + n_b - isect)
-        ORDER BY doc_a, doc_b
-    """
-
-
-def _sql_simhash(prefix_bits: int = 8) -> str:
-    bits = " || ".join(
-        f"(CASE WHEN list_sum(list_transform(hw, h -> CASE WHEN substr(h, {j + 1}, 1) >= '8' "
-        "THEN 1 ELSE -1 END)) >= 0 THEN '1' ELSE '0' END)"
-        for j in range(32)
-    )
-    return f"""
-        WITH w AS ({_sql_words()}),
-        hashed AS (SELECT doc_id, list_transform(words, x -> md5(x)) AS hw FROM w),
-        fp AS (SELECT doc_id, {bits} AS simhash FROM hashed)
-        SELECT doc_id, simhash, substr(simhash, 1, {prefix_bits}) AS simhash_prefix FROM fp
-    """
-
-
-_SQL_COS = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-
-def _sql_lsh_bucket_cte(num_planes: int = 4, num_tables: int = 1) -> str:
-    """CTE 'bk': (vec_id, v DOUBLE[], bucket[, bucket_0..]) with the
-    same md5-derived sign-LSH planes as operators.similarity.lsh_bucket;
-    table t uses the independent plane-set t·P .. t·P+P-1. One table
-    keeps the legacy single ``bucket`` column name."""
-
-    def bits(offset: int) -> str:
-        return " || ".join(
-            f"(CASE WHEN list_sum(list_transform(range(1, len(v)+1), "
-            f"j -> v[j] * (CASE WHEN substr(md5('{p}:' || (j-1)::VARCHAR), 1, 1) >= '8' "
-            "THEN 1.0 ELSE -1.0 END))) >= 0 THEN '1' ELSE '0' END)"
-            for p in range(offset, offset + num_planes)
-        )
-
-    if num_tables == 1:
-        cols = f"{bits(0)} AS bucket"
-    else:
-        cols = ", ".join(
-            f"{bits(t * num_planes)} AS bucket_{t}" for t in range(num_tables)
-        )
-    return (
-        "ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), "
-        f"bk AS (SELECT vec_id, v, {cols} FROM ev)"
-    )
-
-
-def q_cdc_scd2_history(spark, sf_dir):
-    # S10 CDC versioned history: the same deterministic c/u/d change
-    # log as q_cdc_apply_changes, but kept as SCD-2 validity intervals
-    # (every version survives; deletes close their predecessor).
-    from streaming_demos_spark.catalog import fan_out
-
-    # fan_out: JSON envelope parse parallelism (see q_debezium_unwrap)
-    orders = fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
-    creates = cdc.make_envelopes(orders, "c", "demo", "orders", lsn_offset=0)
-    updates = cdc.make_envelopes(
-        orders.filter(F.col("o_orderkey") % 2 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        ),
-        "u", "demo", "orders", lsn_offset=1,
-    )
-    deletes = cdc.make_envelopes(
-        orders.filter(F.col("o_orderkey") % 10 == 0), "d", "demo", "orders",
-        lsn_offset=2,
-    )
-    changes = cdc.debezium_unwrap(
-        creates.unionByName(updates).unionByName(deletes), "value", ORDERS
-    )
-    hist = cdc.scd2_history(changes, ["o_orderkey"], seq_col="lsn")
-    return hist.select(
-        "o_orderkey", "o_totalprice", "valid_from", "valid_to", "is_current"
-    )
-
-
-def q_per_key_time_split(spark, sf_dir):
-    # Grouped O4: per-customer temporal 80/20 split (no user's future
-    # leaks into their own training slice). Key-partitioned window —
-    # scale-safe, unlike a global-order split.
-    out = R.per_key_time_split(
-        _t(spark, sf_dir, "orders"), "o_custkey", "o_orderdate",
-        train_frac=0.8, tie_col="o_orderkey",
-    )
-    return out.select("o_custkey", "o_orderkey", "split")
-
-
-def q_table_profile(spark, sf_dir):
-    # One-scan data-quality profile of orders: per-column nulls,
-    # distincts, numeric ranges (approx_count_distinct path available
-    # for wide tables; exact kept for the oracle).
-    return R.table_profile(
-        _t(spark, sf_dir, "orders"),
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-         "o_orderpriority"],
-    )
-
-
-def q_value_histogram(spark, sf_dir):
-    # Equi-width price histogram per return flag: the scalable
-    # distribution profile (min/max broadcast + map-side binning) where
-    # ntile's equal-count bins would need a per-group sort.
-    return R.value_histogram(
-        _t(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice", bins=10
-    )
-
-
-def q_set_partition(spark, sf_dir):
-    # §2.7 set operations: urgent-order customers vs high-value-order
-    # customers partitioned into both / urgent-only / highvalue-only.
-    orders = _t(spark, sf_dir, "orders")
-    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-    high = orders.filter(F.col("o_totalprice") > 200000.0)
-    return R.tagged_set_partition(
-        urgent, high, "o_custkey", tag_a="urgent_only", tag_b="highvalue_only"
-    )
-
-
-def q_quality_filter(spark, sf_dir):
-    # Gopher-style rule-based quality gate: per-rule booleans + the
-    # conjunction, one map-only projection over the corpus.
-    return CU.quality_filter(_t(spark, sf_dir, "documents"))
-
-
-def q_hll_distinct(spark, sf_dir):
-    # Mergeable-sketch distinct rollup: per-(priority,status) HLL
-    # sketches unioned to per-priority estimates, bound-checked against
-    # the exact count (the exact side exists only for this gate).
-    return R.hll_distinct_rollup(
-        _t(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus", "o_custkey"
-    )
-
-
-def q_key_skew_profile(spark, sf_dir):
-    # Shuffle-planning diagnostic: top-15 heaviest l_suppkey values
-    # with row share and skew ratio vs the mean key.
-    return R.key_skew_profile(_t(spark, sf_dir, "lineitem"), "l_suppkey", top_n=15)
-
-
-def q_kmeans_assign(spark, sf_dir):
-    # Spherical k-means assignment against deterministic seed
-    # centroids (k lowest-id vectors, broadcast): the coarse-cell
-    # primitive under IVF search and semantic dedup.
-    return CL.kmeans_assign(_t(spark, sf_dir, "embeddings"), k=8).orderBy("vec_id")
-
-
-def q_kmeans_centroids(spark, sf_dir):
-    # One Lloyd update: component-wise means per cluster as k*d scalar
-    # rows (posexplode + hash-agg; partial aggregation map-side).
-    return CL.kmeans_step_centroids(_t(spark, sf_dir, "embeddings"), k=8)
-
-
-def q_kmeans_round(spark, sf_dir):
-    # Full Lloyd round proven end-to-end: seed-assign -> mean update ->
-    # re-assign against updated centroids -> cluster sizes.
-    return CL.kmeans_two_round_sizes(_t(spark, sf_dir, "embeddings"), k=8)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    # SemDeDup-style semantic near-dup removal: pairwise cosine ONLY
-    # within k-means cells; drop vectors with a lower-id neighbour
-    # above threshold. (0.3 suits this synthetic corpus's cosine
-    # range; real corpora run ~0.92-0.95.)
-    return CL.semantic_dedup(_t(spark, sf_dir, "embeddings"), k=8, threshold=0.3)
-
-
-def q_ann_filtered_topk(spark, sf_dir):
-    # Metadata-filtered exact top-k (RAG serving shape): label
-    # predicate pushed to the scan, broadcast query vector.
-    return CL.filtered_topk(
-        _t(spark, sf_dir, "embeddings"), query_vec_id=0, label=3, k=10
-    )
-
-
-def q_dedup_incremental(spark, sf_dir):
-    # Crawl-refresh dedup: new batch (doc_id % 5 == 0) checked against
-    # the already-deduped base corpus via hash anti-join.
-    docs = _t(spark, sf_dir, "documents")
-    new_docs = docs.filter(F.col("doc_id") % 5 == 0)
-    base_docs = docs.filter(F.col("doc_id") % 5 != 0)
-    return D.incremental_dedup(new_docs, base_docs)
-
-
-def q_window_suite(spark, sf_dir):
-    # Full analytic-window family in ONE per-key pass (lag, lead,
-    # ntile, percent_rank, cume_dist share a single Window spec ->
-    # one shuffle + one sort).
-    return R.window_rank_suite(_t(spark, sf_dir, "events"))
-
-
-def q_set_compare(spark, sf_dir):
-    # §2.7 set ops: customers active in 1995 vs 1996 — intersect /
-    # except / union distinct-set cardinalities in one summary row.
-    orders = _t(spark, sf_dir, "orders")
-    a = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
-    b = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
-    return R.set_compare(a, b)
-
-
-def q_dsir_weights(spark, sf_dir):
-    # DSIR-style importance weight (Xie et al. 2023, public) of every
-    # document against an English-target hashed-n-gram multinomial:
-    # corpus-sized work is doc-keyed; the 256-bucket ratio table joins
-    # back by broadcast (selection.py:dsir_log_weights).
-    docs = _t(spark, sf_dir, "documents")
-    return SEL.dsir_log_weights(
-        docs, F.col("lang") == "en", num_buckets=256, round_dp=4
-    )
-
-
-def q_dsir_resample(spark, sf_dir):
-    # Gumbel-top-k resample of the DSIR weights: deterministic
-    # md5-uniforms make the weighted without-replacement draw a plain
-    # distributed top-k (TakeOrderedAndProject, no global sort).
-    docs = _t(spark, sf_dir, "documents")
-    w = SEL.dsir_log_weights(
-        docs, F.col("lang") == "en", num_buckets=256, round_dp=4
-    )
-    return SEL.dsir_resample(w, k=50)
-
-
-def q_temperature_mix(spark, sf_dir):
-    # Temperature-scaled domain mixture (p_i^0.3 rule) + effective
-    # epochs at a 1M-token budget — one |sources|-row aggregate.
-    return SEL.temperature_mix(
-        _t(spark, sf_dir, "documents"),
-        "source",
-        "n_chars",
-        alpha=0.3,
-        token_budget=1_000_000,
-    )
-
-
-def q_cross_source_overlap(spark, sf_dir):
-    # Cross-domain duplicate matrix (dedup.py:cross_source_overlap) at
-    # block_dedup's 20-word-block granularity: distinct (md5, source)
-    # -> co-partitioned self-join -> |domains|² aggregate; per-source
-    # totals broadcast back. (Whole-document keys report zero overlap
-    # on this corpus — every text is unique — so the query exercises
-    # the block view.)
-    return D.cross_source_overlap(
-        _t(spark, sf_dir, "documents"), "source", block_words=20
-    )
-
-
-def q_contrastive_triplets(spark, sf_dir):
-    # Anchor/positive/hard-negative mining within LSH buckets
-    # (similarity.py:contrastive_triplets): bounded self-join + one
-    # conditional-argmax aggregation, no window, no second shuffle.
-    return SIM.contrastive_triplets(
-        _t(spark, sf_dir, "embeddings"), pos_threshold=0.3, num_planes=4
-    )
-
-
-def q_per_group_sample(spark, sf_dir):
-    # Deterministic per-domain reservoir: exactly min(5, |domain|) docs
-    # per source, md5-ordered (curation.py:per_group_sample) — the
-    # replayable "k eval examples per domain" draw.
-    docs = _t(spark, sf_dir, "documents")
-    return CU.per_group_sample(docs, "source", k=5).select(
-        "doc_id", "source", "lang"
-    )
-
-
-def q_heavy_hitters(spark, sf_dir):
-    # Exact heavy hitters (freq > N/k) via map-side Misra-Gries
-    # candidates + exact candidate-only recount — the vocabulary is
-    # never a shuffle key (sketches.py:heavy_hitters).
-    return SK.heavy_hitter_terms(_t(spark, sf_dir, "documents"), k=100)
-
-
-def q_embedding_pool(spark, sf_dir):
-    # Mean-pool embeddings per label (class centroids / chunk->doc
-    # pooling): posexplode + one combinable avg per (label, dim) — no
-    # executor ever holds a group's vectors together
-    # (similarity.py:pool_embeddings).
-    return SIM.pool_embeddings(_t(spark, sf_dir, "embeddings"), "label")
-
-
-_CMS_PROBES = ["a", "key", "spark", "table", "value", "zzz_absent"]
-
-
-def q_cms_term_counts(spark, sf_dir):
-    # Count-min sketch (d=4, w=256) over corpus tokens + point
-    # estimates for a fixed probe list vs exact counts — the one-sided
-    # est >= exact guarantee is visible in the overcount column
-    # (sketches.py:count_min_sketch/cms_estimates).
-    from streaming_demos_spark.catalog import fan_out
-
-    docs = _t(spark, sf_dir, "documents")
-    # the token stream feeds BOTH the sketch and the exact probe
-    # counts — tokenize once (persist), don't re-run the regex scan
-    toks = (
-        fan_out(docs.select("doc_id", "text"), "doc_id")
-        .select(F.explode(TX.tokens("text")).alias("term"))
-        .persist()
-    )
-    sk = SK.count_min_sketch(toks, "term", depth=4, width=256)
-    est = SK.cms_estimates(sk, _CMS_PROBES, depth=4, width=256)
-    exact = (
-        toks.filter(F.col("term").isin(_CMS_PROBES))
-        .groupBy("term")
-        .agg(F.count("*").alias("exact"))
-    )
-    return (
-        est.join(exact, "term", "left")
-        .select(
-            "term",
-            "est",
-            F.coalesce("exact", F.lit(0)).alias("exact"),
-            (F.col("est") - F.coalesce("exact", F.lit(0))).alias("overcount"),
-        )
-        .orderBy("term")
-    )
-
-
-def q_pmi_collocations(spark, sf_dir):
-    # Top collocations by pointwise mutual information: map-side
-    # zip_with bigrams -> two combinable count shuffles -> count joins
-    # -> TakeOrderedAndProject (text.py:pmi_collocations).
-    return TX.pmi_collocations(
-        _t(spark, sf_dir, "documents"), min_count=5, top_n=100
-    )
-
-
-def q_ewma_smooth(spark, sf_dir):
-    # Per-user bounded-lookback EWMA of event values: one key shuffle,
-    # weighted sum as zip_with+aggregate over the rows-window frame,
-    # closed-form normalizer (relational.py:ewma_smooth).
-    ev = _t(spark, sf_dir, "events")
-    return R.ewma_smooth(
-        ev, "user_id", "ts", "value", "event_id", alpha=0.3, lookback=16
-    )
-
-
-def _trade_edges(spark, sf_dir):
-    # Nation-level trade graph: supplier nation -> customer nation,
-    # weighted by extended price. The edge build is the at-scale part
-    # (lineitem ⋈ orders shuffle join + two broadcast dims).
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("s_nationkey").alias("src"),
-            F.col("c_nationkey").alias("dst"),
-            F.col("l_extendedprice").alias("w"),
-        )
-    )
-
-
-def q_pagerank_trade(spark, sf_dir):
-    # Weighted PageRank (3 fixed rounds, d=0.85) on the nation trade
-    # graph — per-round join+agg, rank frame localCheckpoint-ed, no
-    # driver-side graph state (graph.py:pagerank). Oracle unrolls the
-    # identical rounds as CTE layers.
-    from streaming_demos_spark.operators import graph as G
-
-    ranks = G.pagerank(
-        _trade_edges(spark, sf_dir), "src", "dst", "w", iterations=3
-    )
-    nation = _t(spark, sf_dir, "nation")
-    return ranks.join(
-        F.broadcast(nation), ranks["node"] == nation["n_nationkey"]
-    ).select(
-        F.col("n_name").alias("nation"),
-        F.round("rank", 8).alias("rank"),
-    )
-
-
-def q_trade_degree(spark, sf_dir):
-    # Degree/strength profile of the same graph: two combinable
-    # aggregations full-outer-joined on node (graph.py:degree_profile).
-    from streaming_demos_spark.operators import graph as G
-
-    deg = G.degree_profile(_trade_edges(spark, sf_dir), "src", "dst", "w")
-    nation = _t(spark, sf_dir, "nation")
-    return deg.join(
-        F.broadcast(nation), deg["node"] == nation["n_nationkey"]
-    ).select(
-        F.col("n_name").alias("nation"),
-        "out_deg",
-        "in_deg",
-        "out_w",
-        "in_w",
-    )
-
-
-def q_distinctive_terms(spark, sf_dir):
-    # Per-source distinctive vocabulary: informative-Dirichlet weighted
-    # log-odds z-scores (Monroe et al. 2008), top-10 per source
-    # (text.py:distinctive_terms).
-    return TX.distinctive_terms(
-        _t(spark, sf_dir, "documents"), "source", min_count=5, top_n=10
-    )
-
-
-def q_duplicate_events(spark, sf_dir):
-    # Replay/double-submit detector: same user firing the same event
-    # type twice within 10 minutes — bounded bucket-expansion interval
-    # join, never a per-key cross join
-    # (relational.py:duplicate_events).
-    return R.duplicate_events(
-        _t(spark, sf_dir, "events"),
-        "user_id",
-        "ts",
-        "event_type",
-        "event_id",
-        within_sec=600.0,
-    )
-
-
-def q_uncertainty_sample(spark, sf_dir):
-    # Active-learning batch: the 50 docs the learned quality filter is
-    # least sure about — annotate-next selection via
-    # TakeOrderedAndProject on the rounded margin
-    # (training.py:uncertainty_sample).
-    return TR.uncertainty_sample(
-        _t(spark, sf_dir, "documents"), k=50, iters=3, lr=1.0
-    )
-
-
-def q_funnel_step_times(spark, sf_dir):
-    # Time-to-convert between funnel stages: the funnel fold extended
-    # to carry reach timestamps; exact medians via distributed
-    # selection (relational.py:funnel_step_times).
-    return R.funnel_step_times(
-        _t(spark, sf_dir, "events"), "user_id", "ts", "event_type",
-        stages=["view", "click", "purchase"],
-    )
-
-
-def q_seasonal_profile(spark, sf_dir):
-    # Hour-of-day load shape per event type: seasonal offsets from the
-    # type mean + per-hour variance explained; two combinable
-    # aggregations (relational.py:seasonal_profile).
-    return R.seasonal_profile(
-        _t(spark, sf_dir, "events"), "event_type", "ts", "value"
-    )
-
-
-def q_ab_test(spark, sf_dir):
-    # Two-proportion z-test: does 'click' convert (value > 60) at a
-    # different rate than 'view'? Closed-form from one aggregation;
-    # erfc p-value via shared A-S 7.1.26 constants
-    # (relational.py:ab_test_proportions).
-    ev = _t(spark, sf_dir, "events")
-    return R.ab_test_proportions(
-        ev, "event_type", F.col("value") > 60, "click", "view"
-    )
-
-
-def q_whiten_embeddings(spark, sf_dir):
-    # ZCA whitening: mean/covariance via partition partial sums,
-    # driver eigh of the DxD, map-only projection. Hash-verified
-    # against the independent numpy implementation (functions/
-    # numpy_ref.py): (mu, W) are snapped to a 1e-6 grid driver-side
-    # (W is sign-invariant — V f(L) V^T), outputs rounded at 6 dp
-    # (similarity.py:whiten_embeddings).
-    out = SIM.whiten_embeddings(_t(spark, sf_dir, "embeddings"), round_dp=6)
-    return out.select(
-        "vec_id", F.posexplode("whitened").alias("component_idx", "value")
-    )
-
-
-def q_kaplan_meier(spark, sf_dir):
-    # Time-to-first-error survival per user: duration = days from the
-    # user's first event to their first 'error' (observed) or to their
-    # last event (censored — no error yet). The KM product runs in log
-    # domain on the distinct-duration grid (relational.py:kaplan_meier).
-    from streaming_demos_spark.functions.scalars import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(epoch_us(F.col("ts"))).alias("_first"),
-        F.max(epoch_us(F.col("ts"))).alias("_last"),
-        F.min(
-            F.when(F.col("event_type") == "error", epoch_us(F.col("ts")))
-        ).alias("_err"),
-    )
-    spans = per_user.select(
-        (
-            (F.coalesce(F.col("_err"), F.col("_last")) - F.col("_first"))
-            / F.lit(86400 * 1000000)
-        ).cast("int").alias("duration_days"),
-        F.col("_err").isNotNull().alias("errored"),
-    )
-    return R.kaplan_meier(spans, "duration_days", "errored")
-
-
-def q_nelson_aalen(spark, sf_dir):
-    # Cumulative-hazard companion to the KM curve, same time-to-first-
-    # error spans, additive running sum on the distinct-duration grid
-    # (relational.py:nelson_aalen).
-    from streaming_demos_spark.functions.scalars import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(epoch_us(F.col("ts"))).alias("_first"),
-        F.max(epoch_us(F.col("ts"))).alias("_last"),
-        F.min(
-            F.when(F.col("event_type") == "error", epoch_us(F.col("ts")))
-        ).alias("_err"),
-    )
-    spans = per_user.select(
-        (
-            (F.coalesce(F.col("_err"), F.col("_last")) - F.col("_first"))
-            / F.lit(86400 * 1000000)
-        ).cast("int").alias("duration_days"),
-        F.col("_err").isNotNull().alias("errored"),
-    )
-    return R.nelson_aalen(spans, "duration_days", "errored")
-
-
-def q_welch_ttest(spark, sf_dir):
-    # Inferential layer over the reference's descriptive event metrics
-    # (product-demos/streamlit/utils.py:25-29): is the purchase value
-    # distribution actually different from clicks? Two-level moment
-    # aggregation, closed-form t (stats.py:welch_ttest).
-    ev = _t(spark, sf_dir, "events")
-    return ST.welch_ttest(ev, "event_type", "value", "purchase", "click")
-
-
-def q_anova(spark, sf_dir):
-    # One-way ANOVA F across ALL event types: per-group sufficient
-    # statistics then one combine — the tree-aggregation shape that
-    # holds at any group count (stats.py:one_way_anova).
-    ev = _t(spark, sf_dir, "events")
-    return ST.one_way_anova(ev, "event_type", "value")
-
-
-def q_mann_whitney(spark, sf_dir):
-    # Rank-sum test without a global sort: midranks from the distinct-
-    # value grid (values pre-rounded to 2dp to bound the grid at scale),
-    # tie-corrected normal approximation (stats.py:mann_whitney_u).
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.round("value", 2).alias("value")
-    )
-    return ST.mann_whitney_u(ev, "event_type", "value", "purchase", "view")
-
-
-def q_ks_test(spark, sf_dir):
-    # Two-sample Kolmogorov-Smirnov distribution drift check between
-    # purchase and click values — ECDFs as grid running sums, sup as a
-    # max over jump points (stats.py:ks_two_sample).
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.round("value", 2).alias("value")
-    )
-    return ST.ks_two_sample(ev, "event_type", "value", "purchase", "click")
-
-
-def q_chi_square(spark, sf_dir):
-    # Independence of customer nation x market segment (25 x 5 cells):
-    # cell-count agg, marginals re-aggregated from the CELLS and
-    # broadcast back (stats.py:chi_square_independence).
-    cust = _t(spark, sf_dir, "customer")
-    return ST.chi_square_independence(cust, "c_nationkey", "c_mktsegment")
-
-
-def q_spearman(spark, sf_dir):
-    # Monotone association between a user's activity volume and total
-    # event value — midranks via the value-grid device per column, then
-    # Pearson on ranks in moment form (stats.py:spearman_correlation).
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    return ST.spearman_correlation(per_user, "n_events", "total_value")
-
-
-def q_log_rank(spark, sf_dir):
-    # A/A sanity test for the survival family: log-rank over the same
-    # time-to-first-error spans as the KM/Nelson-Aalen curves, cohorted
-    # by a randomized user-id parity split (every behavioural cohort in
-    # this dense corpus is degenerate — ~66 events/user means everyone
-    # purchases — so the null split is the honest demonstration;
-    # stats.py:log_rank_test).
-    from streaming_demos_spark.functions.scalars import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(epoch_us(F.col("ts"))).alias("_first"),
-        F.max(epoch_us(F.col("ts"))).alias("_last"),
-        F.min(
-            F.when(F.col("event_type") == "error", epoch_us(F.col("ts")))
-        ).alias("_err"),
-    )
-    spans = per_user.select(
-        (
-            (F.coalesce(F.col("_err"), F.col("_last")) - F.col("_first"))
-            / F.lit(86400 * 1000000)
-        ).cast("int").alias("duration_days"),
-        F.col("_err").isNotNull().alias("errored"),
-        F.when(F.col("user_id") % 2 == 0, F.lit("even"))
-        .otherwise(F.lit("odd"))
-        .alias("cohort"),
-    )
-    return ST.log_rank_test(spans, "duration_days", "errored", "cohort", "even")
-
-
-def q_fdr_screen(spark, sf_dir):
-    # Which nations' account-balance means deviate from the global mean
-    # after multiple-testing control? Per-nation z-tests (broadcast
-    # global moments) -> Benjamini-Hochberg suffix-min over the 25-row
-    # TESTS frame (stats.py:bh_adjust).
-    cust = _t(spark, sf_dir, "customer")
-    per = cust.groupBy("c_nationkey").agg(
-        F.count("*").alias("n"), F.sum("c_acctbal").alias("s1")
-    )
-    glob = cust.agg(
-        F.avg("c_acctbal").alias("_mu"),
-        F.var_samp("c_acctbal").alias("_var"),
-    )
-    z = F.try_divide(
-        F.col("s1") / F.col("n") - F.col("_mu"),
-        F.sqrt(F.col("_var") / F.col("n")),
-    )
-    tests = per.crossJoin(F.broadcast(glob)).select(
-        "c_nationkey",
-        F.round(ST.norm_sf_2sided(z), 9).alias("p_value"),
-    )
-    out = ST.bh_adjust(tests, ["c_nationkey"], "p_value")
-    return out.select(
-        "c_nationkey", "p_value", "p_rank", "q_value"
-    ).orderBy("p_rank")
-
-
-def q_association_rules(spark, sf_dir):
-    # Frequently-bought-together: directional brand pair rules per
-    # order, ranked by lift (relational.py:association_rules). The
-    # basket self-join co-locates by order key; item marginals ride a
-    # broadcast.
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    baskets = li.join(
-        F.broadcast(part), li.l_partkey == part.p_partkey
-    ).select("l_orderkey", "p_brand")
-    return R.association_rules(baskets, "l_orderkey", "p_brand", top_n=20)
-
-
-def q_rfm_segmentation(spark, sf_dir):
-    # Classic RFM quartile segmentation of the customer base from the
-    # orders fact: broadcast percentile boundaries, comparison scoring,
-    # no ntile window (relational.py:rfm_segmentation).
-    orders = _t(spark, sf_dir, "orders")
-    return R.rfm_segmentation(
-        orders, "o_custkey", "o_orderdate", "o_totalprice"
-    )
-
-
-def q_containment_pairs(spark, sf_dir):
-    # Sub-document duplication: asymmetric shingle containment pairs
-    # (fragment-of detection) via the inverted-postings join with no
-    # length prune (dedup.py:containment_pairs).
-    docs = _t(spark, sf_dir, "documents")
-    return D.containment_pairs(docs, threshold=0.5).orderBy(
-        "doc_a", "doc_b"
-    )
-
-
-def q_edit_distance_pairs(spark, sf_dir):
-    # Character-level Levenshtein verification under prefix +
-    # length-band blocking; JVM levenshtein on capped heads
-    # (dedup.py:edit_distance_pairs).
-    docs = _t(spark, sf_dir, "documents")
-    return D.edit_distance_pairs(docs).orderBy("doc_a", "doc_b")
-
-
-def q_link_prediction(spark, sf_dir):
-    # Adamic-Adar link prediction on the part co-purchase graph (same
-    # support>=2 edge set as the triangle census): top-20 absent pairs
-    # by summed 1/ln(deg) over common neighbors, hub middles capped
-    # (graph.py:link_prediction).
-    from streaming_demos_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
-    return (
-        G.link_prediction(edges, "p1", "p2", max_degree=1000)
-        .orderBy(F.desc("aa_score"), "node_a", "node_b")
-        .limit(20)
-    )
-
-
-def q_k_anonymity(spark, sf_dir):
-    # Re-identification audit of the customer table: equivalence
-    # classes over (nation, whole-dollar balance) smaller than k=5,
-    # with market-segment l-diversity (curation.py:k_anonymity_profile).
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_nationkey",
-        F.round("c_acctbal", 0).alias("bal_dollars"),
-        "c_mktsegment",
-    )
-    return CU.k_anonymity_profile(
-        cust,
-        ["c_nationkey", "bal_dollars"],
-        sensitive_col="c_mktsegment",
-        k=5,
-    ).orderBy("c_nationkey", "bal_dollars")
-
-
-_FS_MAX_BLOCK = 256
-
-
-def _fs_blocked_pairs(c):
-    # Shared Fellegi-Sunter candidate generator. The blocking key is
-    # (nation, segment, name-prefix band): the band (all but the last
-    # 3 name characters) has cardinality PROPORTIONAL TO THE DATA, so
-    # pair volume grows linearly with rows — a fixed (nation, segment)
-    # key alone is 125 blocks forever and goes quadratic at scale (the
-    # 10x probe hit 10.4x before this band existed). A 256-record
-    # hot-block guard (the blocked_similarity_pairs contract,
-    # relational.py) skips degenerate bands on top.
-    band = F.expr("substring(c_name, 1, length(c_name) - 3)")
-    keyed = c.select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey",
-        "c_mktsegment", band.alias("name_band"),
-    )
-    block_cols = ["c_nationkey", "c_mktsegment", "name_band"]
-    sizes = keyed.groupBy(*block_cols).agg(F.count("*").alias("_bn"))
-    keyed = keyed.join(
-        F.broadcast(sizes.filter(F.col("_bn") <= _FS_MAX_BLOCK)),
-        block_cols,
-    ).drop("_bn")
-    a = keyed.select(
-        *block_cols,
-        F.col("c_custkey").alias("id_a"),
-        F.col("c_name").alias("name_a"),
-        F.col("c_acctbal").alias("bal_a"),
-    )
-    b = keyed.select(
-        *block_cols,
-        F.col("c_custkey").alias("id_b"),
-        F.col("c_name").alias("name_b"),
-        F.col("c_acctbal").alias("bal_b"),
-    )
-    return a.join(b, block_cols).filter(F.col("id_a") < F.col("id_b"))
-
-
-_FS_ORACLE_PAIRS = """
-            keyed AS (
-                SELECT c_custkey, c_name, c_acctbal, c_nationkey,
-                       c_mktsegment,
-                       substr(c_name, 1, length(c_name) - 3) AS name_band
-                FROM {customer}
-            ),
-            ok AS (
-                SELECT c_nationkey, c_mktsegment, name_band
-                FROM keyed GROUP BY 1, 2, 3 HAVING count(*) <= 256
-            ),
-            kept AS (SELECT keyed.* FROM keyed JOIN ok
-                     USING (c_nationkey, c_mktsegment, name_band)),
-            fs_pairs AS (
-                SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                       a.c_name AS name_a, b.c_name AS name_b,
-                       a.c_acctbal AS bal_a, b.c_acctbal AS bal_b
-                FROM kept a JOIN kept b
-                  ON a.c_nationkey = b.c_nationkey
-                 AND a.c_mktsegment = b.c_mktsegment
-                 AND a.name_band = b.name_band
-                 AND a.c_custkey < b.c_custkey
-            )
-"""
-
-
-def q_fs_linkage(spark, sf_dir):
-    # Fellegi-Sunter probabilistic linkage over (nation, segment,
-    # name-band) blocked customer pairs: name-edit / balance /
-    # balance-sign agreement weighted by log2(m/u), top-200 of the
-    # match + review queue (relational.py:fs_match_scores).
-    # The agree flags are coalesced to False at creation so the output
-    # BOOLEANs are schema-non-nullable (driver pandas-bridge safety:
-    # None vs NaN; a NULL comparand reads as disagreement, which is
-    # also what fs_match_scores' WHEN/OTHERWISE already scored NULL as).
-    # Oracle mirrors the COALESCE.
-    pairs = _fs_blocked_pairs(_t(spark, sf_dir, "customer")).select(
-        "id_a",
-        "id_b",
-        F.coalesce(
-            F.levenshtein("name_a", "name_b") <= 2, F.lit(False)
-        ).alias("name_agree"),
-        F.coalesce(
-            F.abs(F.col("bal_a") - F.col("bal_b")) < 500.0, F.lit(False)
-        ).alias("bal_agree"),
-        F.coalesce(
-            (F.col("bal_a") < 0.0) == (F.col("bal_b") < 0.0),
-            F.lit(False),
-        ).alias("sign_agree"),
-    )
-    scored = R.fs_match_scores(
-        pairs,
-        {
-            "name_agree": (0.95, 0.02),
-            "bal_agree": (0.9, 0.02),
-            "sign_agree": (0.98, 0.7),
-        },
-        upper=8.0,
-        lower=2.0,
-    )
-    return (
-        scored.filter(F.col("decision") != "non_match")
-        .orderBy(F.desc("match_weight"), "id_a", "id_b")
-        .limit(200)
-    )
-
-
-def q_bloom_semijoin(spark, sf_dir):
-    # Bloom-filter semi-join reduction: bits built over the parts
-    # shipped in 1995-03, every part probed, exact membership joined
-    # back to count false positives — one summary row with the
-    # realized FP rate (sketches.py:bloom_bits/bloom_probe).
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-03-01"))
-        & (F.col("l_shipdate") < F.lit("1995-04-01"))
-    )
-    bits = SK.bloom_bits(li, "l_partkey", num_hashes=3, num_bits=4096)
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    probed = SK.bloom_probe(bits, part, "p_partkey", num_hashes=3,
-                            num_bits=4096)
-    actual = li.select(
-        F.col("l_partkey").alias("p_partkey")
-    ).distinct().withColumn("is_member", F.lit(True))
-    return (
-        probed.join(actual, "p_partkey", "left")
-        .select(
-            "bloom_hit",
-            F.coalesce("is_member", F.lit(False)).alias("is_member"),
-        )
-        .groupBy()
-        .agg(
-            F.count("*").alias("n_probes"),
-            F.sum(F.col("is_member").cast("int")).alias("n_members"),
-            F.sum(F.col("bloom_hit").cast("int")).alias("n_hits"),
-            F.sum(
-                (F.col("bloom_hit") & ~F.col("is_member")).cast("int")
-            ).alias("n_false_pos"),
-            # exact integer denominator instead of a rounded ratio —
-            # integer/integer quotients land ON decimal midpoints,
-            # where Spark (HALF_UP on binary) and DuckDB (shortest-
-            # decimal repr) disagree by the final digit
-            F.sum((~F.col("is_member")).cast("int")).alias(
-                "n_non_members"
-            ),
-        )
-    )
-
-
-def q_quantile_shift(spark, sf_dir):
-    # Quantile treatment effects: the purchase-vs-view value shift at
-    # every decile (effect heterogeneity a mean test hides), from the
-    # distributed histogram-selection percentiles; the shift subtracts
-    # the published 6dp quantiles, so it is exact
-    # (relational.py:grouped_quantiles_selection).
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(["purchase", "view"])
-    ).select("event_type", F.round("value", 2).alias("value"))
-    gq = R.grouped_quantiles_selection(
-        ev, "event_type", "value", [i / 10 for i in range(1, 10)]
-    )
-    a = gq.filter(F.col("event_type") == "purchase").select(
-        *[F.col(f"p{p}").alias(f"_a{p}") for p in range(10, 100, 10)]
-    )
-    b = gq.filter(F.col("event_type") == "view").select(
-        *[F.col(f"p{p}").alias(f"_b{p}") for p in range(10, 100, 10)]
-    )
-    stacked = a.crossJoin(b).selectExpr(
-        "stack(9, "
-        + ", ".join(
-            f"{p}, _a{p}, _b{p}" for p in range(10, 100, 10)
-        )
-        + ") AS (pct, q_treat, q_control)"
-    )
-    return stacked.select(
-        "pct",
-        "q_treat",
-        "q_control",
-        F.round(F.col("q_treat") - F.col("q_control"), 6).alias("shift"),
-    ).orderBy("pct")
-
-
-def q_rmst(spark, sf_dir):
-    # Restricted mean time-to-first-error (tau = 30 days): area under
-    # the same KM curve ext_kaplan_meier publishes, integrated exactly
-    # over the event grid (relational.py:restricted_mean_survival).
-    from streaming_demos_spark.functions.scalars import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(epoch_us(F.col("ts"))).alias("_first"),
-        F.max(epoch_us(F.col("ts"))).alias("_last"),
-        F.min(
-            F.when(F.col("event_type") == "error", epoch_us(F.col("ts")))
-        ).alias("_err"),
-    )
-    spans = per_user.select(
-        (
-            (F.coalesce(F.col("_err"), F.col("_last")) - F.col("_first"))
-            / F.lit(86400 * 1000000)
-        ).cast("int").alias("duration_days"),
-        F.col("_err").isNotNull().alias("errored"),
-    )
-    return R.restricted_mean_survival(
-        spans, "duration_days", "errored", tau=30.0
-    )
-
-
-def q_control_chart(spark, sf_dir):
-    # I-MR control chart of daily event value per type: limits at
-    # center +/- 2.66 * mean moving range, out-of-control points
-    # flagged (relational.py:imr_control_chart).
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-    ).agg(F.round(F.sum("value"), 4).alias("total"))
-    return R.imr_control_chart(
-        daily, "event_type", "day", "total"
-    ).orderBy("event_type", "day")
-
-
-def q_oov_rate(spark, sf_dir):
-    # Lexical-transfer signal: the share of each source's token
-    # occurrences whose TYPE appears in no other source
-    # (text.py:oov_rate).
-    docs = _t(spark, sf_dir, "documents")
-    return TX.oov_rate(docs).orderBy("source")
-
-
-def q_price_elasticity(spark, sf_dir):
-    # Log-log demand curve per brand: ln(qty) ~ ln(unit price) +
-    # discount via the closed-form grouped OLS — b1 is the price
-    # elasticity (relational.py:grouped_ols).
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    rows = li.join(p, li.l_partkey == p.p_partkey).select(
-        "p_brand",
-        F.log(F.col("l_quantity")).alias("ln_qty"),
-        F.log(
-            F.col("l_extendedprice") / F.col("l_quantity")
-        ).alias("ln_price"),
-        "l_discount",
-    )
-    return R.grouped_ols(
-        rows, "p_brand", "ln_qty", "ln_price", "l_discount"
-    ).orderBy("p_brand")
-
-
-def q_sax_symbols(spark, sf_dir):
-    # SAX discretization of each event type's daily-revenue series:
-    # 6 PAA segments z-normalized per series, 4-letter Gaussian
-    # alphabet (relational.py:sax_symbols).
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(F.round(F.sum("value"), 4).alias("total"))
-    return R.sax_symbols(
-        daily, "event_type", "day", "total", n_segments=6
-    ).orderBy("event_type", "segment")
-
-
-def q_charclass_profile(spark, sf_dir):
-    # Character-class composition per source (alpha/digit/space/other)
-    # - the wrong-script / binary-garbage crawl monitor
-    # (text.py:charclass_profile).
-    docs = _t(spark, sf_dir, "documents")
-    return TX.charclass_profile(docs).orderBy("source")
-
-
-def q_yuen_ttest(spark, sf_dir):
-    # Robust two-sample comparison of purchase vs view values: Yuen's
-    # 20%-trimmed t with winsorized variance, all order statistics
-    # from the per-group value grid (stats.py:yuen_trimmed_ttest).
-    # int_scale=100: exact integer-cents sums (no partition-order float
-    # noise) and exact scaled-integer trimmed means — environment-proof.
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.round("value", 2).alias("value")
-    )
-    return ST.yuen_trimmed_ttest(
-        ev, "event_type", "value", "purchase", "view", int_scale=100
-    )
-
-
-def q_matryoshka_eval(spark, sf_dir):
-    # Recall@10 of truncated-dimension cosine ranking (8/16/32/64 of
-    # the 64-dim embeddings) vs the full-dim ranking over a fixed
-    # query panel — the Matryoshka serving trade-off curve
-    # (similarity.py:matryoshka_recall).
-    emb = _t(spark, sf_dir, "embeddings")
-    return SIM.matryoshka_recall(
-        emb, [0, 7, 21, 42, 77], dims=[8, 16, 32, 64], k=10
-    ).orderBy("dim")
-
-
-def q_harmonic_2hop(spark, sf_dir):
-    # Radius-2 harmonic centrality on the co-purchase graph: 1-hop
-    # degree + half-weighted exactly-distance-2 count, all equality
-    # joins (graph.py:harmonic_centrality_2hop). Top-100 by centrality.
-    from streaming_demos_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
-    return (
-        G.harmonic_centrality_2hop(edges, "p1", "p2")
-        .orderBy(F.desc("harmonic_c2"), "node")
-        .limit(100)
-    )
-
-
-def q_cumulative_users(spark, sf_dir):
-    # Audience-growth curve: first-seen users per day + running total
-    # over the 30-day calendar frame (relational.py:cumulative_new_users).
-    ev = _t(spark, sf_dir, "events")
-    return R.cumulative_new_users(ev, "user_id", "ts", bucket="day").orderBy(
-        "bucket_ts"
-    )
-
-
-def q_binseg_changepoints(spark, sf_dir):
-    # Top-3 mean-shift changepoints in the daily event-value series by
-    # binary segmentation (depth 2) over prefix sums of the 30-point
-    # daily grid (relational.py:binseg_changepoints).
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.dayofmonth("ts").cast("double").alias("day")
-    ).agg(F.round(F.sum("value"), 4).alias("total"))
-    return R.binseg_changepoints(daily, "day", "total", depth=2).orderBy(
-        "split_rank"
-    )
-
-
-def q_diff_in_diff(spark, sf_dir):
-    # DiD over a synthetic 2x2: even-user "treatment" x month-half
-    # "period" on event value — all four cells from ONE conditional
-    # aggregation (stats.py:diff_in_diff).
-    ev = _t(spark, sf_dir, "events").select(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        (F.dayofmonth("ts") > 15).alias("post"),
-        "value",
-    )
-    return ST.diff_in_diff(ev, "treat", "post", "value")
-
-
-def q_cuped(spark, sf_dir):
-    # CUPED variance reduction: per-user pre-period value adjusts the
-    # post-period metric; theta from one global moment pass, per-arm
-    # adjusted variance by pure algebra (stats.py:cuped_adjusted).
-    ev = _t(spark, sf_dir, "events")
-    units = ev.groupBy("user_id").agg(
-        F.round(
-            F.sum(
-                F.when(F.dayofmonth("ts") <= 15, F.col("value")).otherwise(
-                    F.lit(0.0)
-                )
-            ),
-            4,
-        ).alias("pre"),
-        F.round(
-            F.sum(
-                F.when(F.dayofmonth("ts") > 15, F.col("value")).otherwise(
-                    F.lit(0.0)
-                )
-            ),
-            4,
-        ).alias("post"),
-    ).select(
-        # coalesce BEFORE grouping (oracle mirrors at the same stage):
-        # non-nullable BOOLEAN arm key for the driver's pandas bridge.
-        F.coalesce(F.col("user_id") % 2 == 0, F.lit(False)).alias("arm"),
-        "pre",
-        "post",
-    )
-    return ST.cuped_adjusted(units, "arm", "pre", "post").orderBy("arm")
-
-
-def q_power_analysis(spark, sf_dir):
-    # How many users per arm to re-detect the observed high-value-user
-    # rate gap at alpha=5% / power=80% — the experiment-duration
-    # calculator (stats.py:proportion_power).
-    ev = _t(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        # "high-value user": mean event value above 50 — stated as
-        # rounded-sum > 50*n so the boundary is ulp-exact cross-engine
-        (
-            F.round(F.sum("value"), 4) > F.lit(50.0) * F.count("*")
-        ).cast("int").alias("converted")
-    ).select(
-        F.when(F.col("user_id") % 2 == 0, F.lit("A"))
-        .otherwise(F.lit("B"))
-        .alias("arm"),
-        "converted",
-    )
-    return ST.proportion_power(users, "arm", "converted", "A", "B")
-
-
-def q_compression_ratio(spark, sf_dir):
-    # Tokenizer economy per source: chars per whitespace token and per
-    # BPE-ish regex token — the mix-budgeting proxy
-    # (text.py:compression_ratio).
-    docs = _t(spark, sf_dir, "documents")
-    return TX.compression_ratio(docs).orderBy("source")
-
-
-def q_holt_forecast(spark, sf_dir):
-    # Holt double-exponential level/trend per nation over the monthly
-    # revenue series, one-month-ahead forecast — the recursion is a
-    # JVM aggregate fold over the sorted per-group array, no Python,
-    # no window (relational.py:holt_linear_forecast).
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            "n_name",
-            (
-                F.year("o_orderdate") * F.lit(12) + F.month("o_orderdate")
-            ).alias("mon"),
-        )
-        .agg(F.round(F.sum("o_totalprice"), 4).alias("rev"))
-    )
-    return R.holt_linear_forecast(
-        monthly, "n_name", "mon", "rev", alpha=0.5, beta=0.3, horizon=1
-    ).orderBy("n_name")
-
-
-def q_fs_em(spark, sf_dir):
-    # Unsupervised EM calibration of the Fellegi-Sunter m/u
-    # probabilities from the same blocked customer-pair agreement
-    # vectors ext_fs_linkage scores — the 2^3 pattern table is the
-    # bounded sufficient statistic (relational.py:fs_em_params).
-    # Candidates come from the shared capped (nation, segment,
-    # name-band) generator — linear pair growth, never quadratic.
-    pairs = _fs_blocked_pairs(_t(spark, sf_dir, "customer")).select(
-        (F.levenshtein("name_a", "name_b") <= 2).alias("name_agree"),
-        (F.abs(F.col("bal_a") - F.col("bal_b")) < 500.0).alias(
-            "bal_agree"
-        ),
-        ((F.col("bal_a") < 0.0) == (F.col("bal_b") < 0.0)).alias(
-            "sign_agree"
-        ),
-    )
-    return R.fs_em_params(
-        pairs, ["name_agree", "bal_agree", "sign_agree"], iterations=10
-    ).orderBy("field")
-
-
-def q_isotonic_calibration(spark, sf_dir):
-    # Monotone calibration of "event value -> purchase probability":
-    # PAVA over the distributed (score, n, positives) grid, block
-    # means exact integer ratios (training.py:isotonic_calibration).
-    ev = _t(spark, sf_dir, "events").select(
-        F.round("value", 0).alias("score"),
-        (F.col("event_type") == "purchase").cast("int").alias("label"),
-    )
-    return TR.isotonic_calibration(ev, "score", "label").orderBy("score")
-
-
-def q_period_end_balance(spark, sf_dir):
-    # Semi-additive rollup: each user's LAST event value per day
-    # (max_by over a (ts, id) struct), summed across users — the
-    # balance semantics a naive SUM gets wrong
-    # (relational.py:period_end_balance).
-    ev = _t(spark, sf_dir, "events")
-    return R.period_end_balance(
-        ev, "user_id", "ts", "value", "event_id", bucket="day"
-    ).orderBy("bucket_ts")
-
-
-def q_ratio_to_parent(spark, sf_dir):
-    # Percent-of-parent drill-down: each nation's revenue share within
-    # its region — child cells re-aggregated to parent totals and
-    # broadcast back (relational.py:ratio_to_parent).
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    rows = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .select("r_name", "n_name", "o_totalprice")
-    )
-    return R.ratio_to_parent(rows, "r_name", "n_name", "o_totalprice").orderBy(
-        "r_name", "n_name"
-    )
-
-
-def q_pairwise_contrasts(spark, sf_dir):
-    # Post-hoc table after the ANOVA: all 10 event-type pairs with
-    # Welch SE and normal p — inequality join over the 5-row group
-    # frame (stats.py:pairwise_mean_contrasts).
-    ev = _t(spark, sf_dir, "events")
-    return ST.pairwise_mean_contrasts(ev, "event_type", "value").orderBy(
-        "group_a", "group_b"
-    )
-
-
-def q_assortativity(spark, sf_dir):
-    # Degree assortativity of the part co-purchase graph: Pearson of
-    # endpoint degrees over directed-both-ways edges, integer-exact
-    # moment sums (graph.py:degree_assortativity).
-    from streaming_demos_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
-    return G.degree_assortativity(edges, "p1", "p2")
-
-
-def q_fd_violations(spark, sf_dir):
-    # Functional-dependency audit of the part catalog: where does
-    # p_brand -> p_type break, and how many rows would a repair touch
-    # (relational.py:fd_violations).
-    p = _t(spark, sf_dir, "part")
-    return R.fd_violations(p, ["p_brand"], "p_type").orderBy("p_brand")
-
-
-def q_seasonal_anomalies(spark, sf_dir):
-    # Events z-scored against their own (type, hour-of-day) baseline —
-    # a 3am spike is judged against 3am, not the daily mean
-    # (relational.py:seasonal_anomalies).
-    ev = _t(spark, sf_dir, "events")
-    return R.seasonal_anomalies(
-        ev, "event_type", "ts", "value", "event_id"
-    ).orderBy("event_id")
-
-
-def q_price_volume_mix(spark, sf_dir):
-    # Revenue bridge 1995 -> 1996 decomposed into price / volume /
-    # mix / new / discontinued effects per part — one conditional
-    # aggregation per key, then a 5-row unpivot; the effects sum
-    # exactly to the revenue delta (relational.py:price_volume_mix).
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.year("l_shipdate").alias("yr"),
-        "l_quantity",
-        "l_extendedprice",
-    )
-    return R.price_volume_mix(
-        li, "l_partkey", "yr", "l_quantity", "l_extendedprice",
-        period_a=1995, period_b=1996,
-    ).orderBy("effect")
-
-
-def q_theil_index(spark, sf_dir):
-    # Order-value inequality decomposed by nation: Theil-T within /
-    # between terms from one (n, Σx, Σ x ln x) aggregation per nation
-    # (stats.py:theil_decomposition).
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rows = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select("n_name", "o_totalprice")
-    )
-    return ST.theil_decomposition(rows, "n_name", "o_totalprice").orderBy(
-        "n_name"
-    )
-
-
-def q_pythagorean_means(spark, sf_dir):
-    # AM / GM / HM of order value per priority class in one combinable
-    # aggregation — the GM/AM gap is a scale-free evenness signal
-    # (stats.py:pythagorean_means).
-    o = _t(spark, sf_dir, "orders")
-    return ST.pythagorean_means(o, "o_orderpriority", "o_totalprice").orderBy(
-        "o_orderpriority"
-    )
-
-
-def q_readability(spark, sf_dir):
-    # Flesch reading ease + FK grade per document from vowel-group
-    # syllable counting — three regex counts, all JVM column
-    # expressions, no UDF (text.py:readability_scores).
-    docs = _t(spark, sf_dir, "documents")
-    return TX.readability_scores(docs).orderBy("doc_id")
-
-
-def q_kendall_tau(spark, sf_dir):
-    # Is part size rank-associated with price? Kendall tau-b from the
-    # joint CELL GRID (price bucketed to $100 to bound it): the
-    # inequality self-join runs over cells, never row pairs
-    # (stats.py:kendall_tau_b).
-    p = _t(spark, sf_dir, "part").select(
-        "p_size", F.round("p_retailprice", -2).alias("price_bucket")
-    )
-    return ST.kendall_tau_b(p, "p_size", "price_bucket")
-
-
-def q_grouped_moments(spark, sf_dir):
-    # Shape profile of event values per type: mean / variance /
-    # skewness / excess kurtosis from raw power sums in one combinable
-    # aggregation (stats.py:grouped_moments).
-    ev = _t(spark, sf_dir, "events")
-    return ST.grouped_moments(ev, "event_type", "value").orderBy(
-        "event_type"
-    )
-
-
-def q_roc_curve(spark, sf_dir):
-    # Full ROC curve for "does event value predict a purchase?":
-    # TPR/FPR at every distinct 2dp score from cumulative sums down
-    # the score grid (stats.py:roc_curve).
-    ev = _t(spark, sf_dir, "events").select(
-        F.round("value", 2).alias("score"),
-        (F.col("event_type") == "purchase").cast("int").alias("label"),
-    )
-    return ST.roc_curve(ev, "score", "label").orderBy(F.desc("threshold"))
-
-
-def q_cohort_ltv(spark, sf_dir):
-    # Cohort LTV triangle: customers by first-order month, revenue by
-    # months-since-cohort with a per-cohort running total — window
-    # bounded by the month count (relational.py:cohort_ltv).
-    o = _t(spark, sf_dir, "orders")
-    return R.cohort_ltv(
-        o, "o_custkey", "o_orderdate", "o_totalprice"
-    ).orderBy("cohort_mon", "age_mon")
-
-
-def q_theil_sen(spark, sf_dir):
-    # Robust monthly revenue trend per nation: median of pairwise
-    # slopes over the ~80-point monthly series (bounded pair join),
-    # slope median via the engine-portable grid selection
-    # (stats.py:theil_sen_slope). Monthly revenue pre-rounded so both
-    # engines divide identical numerators.
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            "n_name",
-            (
-                F.year("o_orderdate") * F.lit(12) + F.month("o_orderdate")
-            ).alias("mon"),
-        )
-        .agg(F.round(F.sum("o_totalprice"), 4).alias("rev"))
-    )
-    return ST.theil_sen_slope(monthly, "n_name", "mon", "rev").orderBy(
-        "n_name"
-    )
-
-
-def q_grouped_mad(spark, sf_dir):
-    # Robust scale of event values per type: median absolute deviation
-    # via two passes of the grid-median selection, scaled by 1.4826
-    # (stats.py:grouped_mad).
-    ev = _t(spark, sf_dir, "events")
-    return ST.grouped_mad(ev, "event_type", "value").orderBy("event_type")
-
-
-def q_multi_touch(spark, sf_dir):
-    # First/last/linear multi-touch attribution of purchase value to
-    # the preceding 7 days of touches: user-keyed interval join (the
-    # batch analog of the streaming attribution join), per-conversion
-    # window bounded by the lookback horizon
-    # (relational.py:multi_touch_attribution).
-    ev = _t(spark, sf_dir, "events")
-    return R.multi_touch_attribution(
-        ev, "user_id", "ts", "event_type", "value", "event_id",
-        conversion_channel="purchase", lookback_days=7,
-    ).orderBy("channel")
-
-
-def q_quantile_normalize(spark, sf_dir):
-    # Cross-source score calibration: each document's length score
-    # mapped to its within-source midrank percentile, making scores
-    # comparable across sources before mixing
-    # (curation.py:quantile_normalize).
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    return CU.quantile_normalize(docs, "source", "n_chars").orderBy(
-        "doc_id"
-    )
-
-
-def q_pareto_skyline(spark, sf_dir):
-    # Skyline of the part catalog: cheapest / smallest / best-selling
-    # Pareto frontier. Local skylines via Arrow-batched sum-ordered
-    # dominance scans, then a broadcast dominance anti-join over the
-    # small candidate union (relational.py:pareto_skyline). Objectives
-    # are exact values (raw price/size, integer-valued quantity sum) so
-    # dominance is ulp-safe across engines.
-    li = _t(spark, sf_dir, "lineitem").groupBy("l_partkey").agg(
-        F.sum("l_quantity").alias("total_qty")
-    )
-    part = _t(spark, sf_dir, "part")
-    prof = part.join(li, part.p_partkey == li.l_partkey).select(
-        "p_partkey", "p_retailprice", "p_size", "total_qty"
-    )
-    return R.pareto_skyline(
-        prof,
-        {"p_retailprice": "min", "p_size": "min", "total_qty": "max"},
-    ).orderBy("p_partkey")
-
-
-def q_k_core(spark, sf_dir):
-    # 2-core of the part co-purchase graph (same support>=2 edge set as
-    # the triangle census): iterative degree peeling, one aggregation +
-    # two semi joins per round, raises on non-convergence so the
-    # fixed-round oracle replay is exact (graph.py:k_core).
-    from streaming_demos_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
-    return G.k_core(edges, "p1", "p2", k=2, max_rounds=12).orderBy("node")
-
-
-def q_funnel_conversion_ci(spark, sf_dir):
-    # Uncertainty-aware funnel: view->click->purchase step conversions
-    # with Wilson 95% intervals - exact integer counts + half-up e4
-    # conversion, bounds are deterministic closed-form doubles
-    # (relational.py:funnel_conversion_ci).
-    ev = _t(spark, sf_dir, "events")
-    return R.funnel_conversion_ci(
-        ev, "user_id", "event_type", ["view", "click", "purchase"]
-    ).orderBy("step")
-
-
-def q_abc_classification(spark, sf_dir):
-    # Pareto/ABC split of parts by revenue: per-part totals collapse
-    # onto the distinct-total grid, the cumulative runs over that grid
-    # (value cardinality, not parts), class cut is an exact integer
-    # predicate (relational.py:abc_classification).
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
-    )
-    return R.abc_classification(li, "l_partkey", "rev")
-
-
-def q_srm_check(spark, sf_dir):
-    # Experiment guardrail: sample-ratio-mismatch chi-square over a
-    # 3-arm md5-free assignment (user_id % 3), distinct units counted
-    # once; exact integer numerator/denominator + half-up chi2*1e6
-    # (stats.py:srm_check).
-    ev = _t(spark, sf_dir, "events")
-    return ST.srm_check(ev, "user_id", F.col("user_id") % 3, n_arms=3)
-
-
-def q_cusum_drift(spark, sf_dir):
-    # Upward-drift monitor of daily revenue per event type: one-sided
-    # CUSUM in its closed prefix form (cumsum + running-min windows over
-    # the calendar grid, no sequential fold), trained on the first 20
-    # days, alarm at 50% of the training mean - all exact BIGINTs
-    # (relational.py:cusum_drift).
-    ev = _t(spark, sf_dir, "events")
-    return R.cusum_drift(ev, "event_type", "ts", "value").orderBy(
-        "event_type", "day"
-    )
-
-
-def q_pinball_eval(spark, sf_dir):
-    # P90 capacity-planning backtest: per-type train-quantile forecast
-    # scored by exact-integer pinball loss on the holdout days
-    # (relational.py:quantile_forecast_pinball).
-    ev = _t(spark, sf_dir, "events")
-    return R.quantile_forecast_pinball(
-        ev, "event_type", "ts", "value"
-    ).orderBy("event_type")
-
-
-def q_tokenizer_fertility(spark, sf_dir):
-    # Per-language tokenizer cost model: sub-word pieces (4-char BPE
-    # proxy) per word and per 100 chars, exact integer totals and
-    # half-up e3 ratios - the fertility table token-budget mixture
-    # planning consumes (text.py:tokenizer_fertility).
-    return TX.tokenizer_fertility(_t(spark, sf_dir, "documents")).orderBy(
-        "slice"
-    )
-
-
-def q_gains_table(spark, sf_dir):
-    # Targeting readout: decile gains table of event value as a
-    # purchase-propensity score - distributed decile cuts broadcast
-    # back, integer-safe boundary comparison, cumulative capture over
-    # the 10-row frame (relational.py:gains_table).
-    ev = _t(spark, sf_dir, "events").select(
-        F.round("value", 2).alias("value"),
-        (F.col("event_type") == "purchase").alias("resp"),
-    )
-    return R.gains_table(ev, "value", "resp").orderBy("bin")
-
-
-def q_stratified_ate(spark, sf_dir):
-    # Observational treatment read: even-custkey "treated" orders vs
-    # control within market-segment strata; exact integer counts and
-    # cent-sums, treated-control mean gap as a half-up e4 integer
-    # (stats.py:stratified_ate).
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice", (F.col("o_custkey") % 2 == 0).alias("treat")
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    rows = o.join(c, F.col("o_custkey") == F.col("c_custkey"))
-    return ST.stratified_ate(
-        rows, "c_mktsegment", "treat", "o_totalprice"
-    ).orderBy("stratum")
-
-
-def q_mann_kendall(spark, sf_dir):
-    # Monotonic-trend screen of each event type's daily revenue:
-    # Mann-Kendall S over the calendar-bounded daily grid (grid x grid
-    # pair join, never row-scaled), tie-corrected variance, exact
-    # BIGINT S/ties (stats.py:mann_kendall_trend).
-    ev = _t(spark, sf_dir, "events")
-    return ST.mann_kendall_trend(ev, "event_type", "ts", "value").orderBy(
-        "event_type"
-    )
-
-
-def q_seasonal_mase(spark, sf_dir):
-    # Seasonal-naive backtest of daily revenue per event type: last-7
-    # observations held out, forecast = value one week earlier, scale =
-    # in-sample one-step naive; exact integer-cents numerators, no
-    # rounded quotient (relational.py:seasonal_naive_mase).
-    ev = _t(spark, sf_dir, "events")
-    return R.seasonal_naive_mase(
-        ev, "event_type", "ts", "value", season=7
-    ).orderBy("event_type")
-
-
-def q_span_corruption(spark, sf_dir):
-    # T5 span-corruption dry run over the corpus: hash-deterministic
-    # span starts/lengths, merged-run sentinel counts - the denoising
-    # mask profile a mixture designer monitors
-    # (curation.py:span_corruption_plan).
-    return CU.span_corruption_plan(_t(spark, sf_dir, "documents"))
-
-
-def q_hll_set_overlap(spark, sf_dir):
-    # Pairwise audience overlap of the five event types over sketch
-    # bytes: per-type HLL built once, every |A|/|B|/union/intersection
-    # estimate is scalar arithmetic on the 10-pair sketch frame;
-    # exact counts + bound flags exist for the gate only
-    # (relational.py:hll_set_overlap).
-    ev = _t(spark, sf_dir, "events")
-    return R.hll_set_overlap(ev, "event_type", "user_id")
-
-
-def q_conformal_interval(spark, sf_dir):
-    # Split-conformal prediction interval per event type: md5-parity
-    # calibration/test split, conformal radius = the ceil((n+1)(1-a))-th
-    # smallest |calibration residual| from the distinct-value grid,
-    # coverage counted on the test half - all exact BIGINT arithmetic
-    # scaled by n_cal, no division anywhere (stats.py:conformal_interval).
-    ev = _t(spark, sf_dir, "events")
-    return ST.conformal_interval(
-        ev, "event_type", "value", "event_id", alpha=0.1
-    ).orderBy("event_type")
-
-
-def q_label_propagation(spark, sf_dir):
-    # Communities of the part co-purchase graph by 3 rounds of
-    # synchronous label propagation — per-round join + count + argmax,
-    # ties to the smallest label so the fixed-round replay is exact
-    # (graph.py:label_propagation). Oracle unrolls the identical
-    # rounds as chained MATERIALIZED CTE layers.
-    from streaming_demos_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
-    return G.label_propagation(edges, "p1", "p2", rounds=3).orderBy("node")
-
-
-def q_weighted_median(spark, sf_dir):
-    # Exact quantity-weighted median line price per return flag — the
-    # 50% point of the weight mass from a per-group value-grid running
-    # sum, split-interpolated at exact-half boundaries
-    # (relational.py:grouped_weighted_median).
-    li = _t(spark, sf_dir, "lineitem")
-    return R.grouped_weighted_median(
-        li, "l_returnflag", "l_extendedprice", "l_quantity"
-    ).orderBy("l_returnflag")
-
-
-def q_feature_hash(spark, sf_dir):
-    # Signed hashing-trick vectorizer (Weinberger et al. 2009) over a
-    # 1-in-7 document sample: token -> md5 bucket mod 64 with an
-    # independent sign bit, signs summed per (doc, idx) so collisions
-    # cancel in expectation (selection.py:feature_hash_signed).
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
-    return SEL.feature_hash_signed(docs, dim=64).orderBy("doc_id", "idx")
-
-
-def q_kruskal_wallis(spark, sf_dir):
-    # Rank-based one-way ANOVA across ALL event types: per-(value,
-    # group) cells + midranks from the distinct-value grid (values
-    # pre-rounded to 2dp to bound the grid at scale), tie-corrected
-    # closed-form H (stats.py:kruskal_wallis).
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.round("value", 2).alias("value")
-    )
-    return ST.kruskal_wallis(ev, "event_type", "value")
-
-
-def q_brown_forsythe(spark, sf_dir):
-    # Variance-homogeneity test across event types: ANOVA on |x -
-    # group median|, the median taken from the engine-portable value-
-    # grid selection so both engines subtract bit-identical centers
-    # (stats.py:brown_forsythe, grid_group_median).
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.round("value", 2).alias("value")
-    )
-    return ST.brown_forsythe(ev, "event_type", "value")
-
-
-def q_ohlc_bars(spark, sf_dir):
-    # Hourly OHLC candlesticks of event value per event type — open /
-    # close via min_by/max_by over a (ts, event_id) struct, the whole
-    # bar one hash aggregation with map-side combine
-    # (relational.py:ohlc_bars).
-    ev = _t(spark, sf_dir, "events")
-    return R.ohlc_bars(
-        ev, "ts", "value", "event_type", "event_id", bucket="hour"
-    ).orderBy("event_type", "bucket_ts")
-
-
-def q_target_encoding(spark, sf_dir):
-    # Leakage-safe leave-one-out target encoding of the customer
-    # market segment against order value, shrunk toward the global
-    # prior (m=20) — per-category aggregate broadcast back, singleton
-    # categories fall back to the prior (training.py:target_encode_loo).
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    rows = o.select("o_orderkey", "o_custkey", "o_totalprice").join(
-        c, F.col("o_custkey") == F.col("c_custkey")
-    )
-    return (
-        TR.target_encode_loo(rows, "c_mktsegment", "o_totalprice")
-        .select("o_orderkey", "c_mktsegment", "loo_enc")
-        .orderBy("o_orderkey")
-    )
-
-
-def q_jackknife_ci(spark, sf_dir):
-    # Distribution-free CI for the mean event value: 32 md5 buckets,
-    # leave-one-out means recomputed algebraically from bucket
-    # aggregates — one scan, zero resampling passes
-    # (relational.py:jackknife_mean_ci).
-    return R.jackknife_mean_ci(
-        _t(spark, sf_dir, "events"), "value", "event_id", n_buckets=32
-    )
-
-
-def q_fair_allocation(spark, sf_dir):
-    # Max-min fair token-budget allocation across sources (caps =
-    # available chars): sorted water-filling closed form, one window
-    # over the per-source table (curation.py:fair_allocation).
-    caps = (
-        _t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(F.sum("n_chars").alias("cap"))
-    )
-    return CU.fair_allocation(caps, "source", "cap", budget=200000.0)
-
-
-def q_cohens_kappa(spark, sf_dir):
-    # Agreement between two quality gates (length vs token-count)
-    # beyond chance (curation.py:cohens_kappa).
-    docs = _t(spark, sf_dir, "documents")
-    return CU.cohens_kappa(
-        docs,
-        F.col("n_chars") >= 250,
-        TX.token_count("text") >= 50,
-    )
-
-
-def q_autocorrelation(spark, sf_dir):
-    # Per-type ACF at lags 1..5: one ordered window makes every lag
-    # column, one aggregation computes all lags (shared-scan shape,
-    # relational.py:autocorrelation).
-    return R.autocorrelation(
-        _t(spark, sf_dir, "events"), "event_type", "ts", "value", "event_id",
-        max_lag=5,
-    )
-
-
-def q_concentration(spark, sf_dir):
-    # Mass concentration: suppliers covering 90% of each nation's
-    # revenue + top-1 share; ranking runs on the per-key table, never
-    # rows (relational.py:concentration_profile).
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    rev = li.join(
-        F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"]
-    ).select(
-        F.col("s_nationkey").alias("nationkey"),
-        F.col("l_suppkey").alias("suppkey"),
-        F.col("l_extendedprice").alias("price"),
-    )
-    return R.concentration_profile(rev, "nationkey", "suppkey", "price")
-
-
-def q_gini(spark, sf_dir):
-    # Per-type inequality of event values (skew screen): sorted-rank
-    # Gini identity, per-group window (relational.py:gini_coefficient).
-    return R.gini_coefficient(_t(spark, sf_dir, "events"), "event_type", "value")
-
-
-def q_ngram_novelty(spark, sf_dir):
-    # Corpus-order novelty: fraction of each doc's distinct 3-grams
-    # first seen in that doc — shingle-keyed first-occurrence join,
-    # no doc-vs-doc comparison (text.py:ngram_novelty).
-    return TX.ngram_novelty(_t(spark, sf_dir, "documents"), k=3)
-
-
-def q_lsh_tuning(spark, sf_dir):
-    # Banding design tool: expected recall + candidate rate per (b, r)
-    # config from the measured Jaccard distribution, one pair-table
-    # pass for every config (dedup.py:lsh_tuning).
-    return D.lsh_tuning(
-        _t(spark, sf_dir, "documents"),
-        configs=((4, 3), (3, 4), (2, 6), (6, 2)),
-        pair_threshold=0.05,
-        target=0.5,
-    )
-
-
-def q_changepoint(spark, sf_dir):
-    # Per-type mean-shift changepoint: CUSUM running sum, argmax |S| on
-    # the rounded statistic (relational.py:cusum_changepoint).
-    return R.cusum_changepoint(
-        _t(spark, sf_dir, "events"), "event_type", "ts", "value", "event_id"
-    )
-
-
-def q_benford(spark, sf_dir):
-    # First-digit Benford screen on prices: integer-domain leading
-    # digit, one 9-key aggregation (relational.py:benford_profile).
-    return R.benford_profile(_t(spark, sf_dir, "lineitem"), "l_extendedprice")
-
-
-def q_grouped_trend(spark, sf_dir):
-    # Per-type OLS trend of event values over time: closed-form moment
-    # aggregates, one combinable shuffle (relational.py:grouped_trend).
-    from streaming_demos_spark.functions.scalars import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    return R.grouped_trend(
-        ev, "event_type", epoch_us(F.col("ts")) / F.lit(1e6), "value"
-    )
-
-
-def q_mutual_info(spark, sf_dir):
-    # Column-dependence census: MI(lang; source) in bits + chi-squared
-    # + dof from one contingency aggregation
-    # (relational.py:mutual_information).
-    return R.mutual_information(_t(spark, sf_dir, "documents"), "lang", "source")
-
-
-def q_impute_mode(spark, sf_dir):
-    # Mode imputation: null out event_type on a deterministic stripe,
-    # refill with the user's modal type (relational.py:impute_mode).
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "event_type",
-        F.when(F.col("event_id") % 97 == 0, F.lit(None)).otherwise(
-            F.col("event_type")
-        ),
-    )
-    return R.impute_mode(ev, "user_id", "event_type").select(
-        "event_id",
-        "user_id",
-        "event_type_was_null",
-        "event_type_imputed",
-    )
-
-
-def q_mm_phash_neardup(spark, sf_dir):
-    # Perceptual-hash near-dup pairs over REAL pixels from a MIXED
-    # BMP+PNG+GIF corpus (round 10): all formats decode to the same
-    # closed-form grid, get luma-planed and 8x8-resampled into a
-    # genuine average-hash (multimodal._ahash_pixels via the sniffing
-    # 'pixels' decoder), then the SimHash-style band join + exact
-    # Hamming verify pairs near-dups (multimodal.py:perceptual_hash/
-    # phash_near_dup_pairs) — cross-format pairs included, exactly
-    # what a real image-dedup pass wants. The oracle recomputes the 64
-    # luma cells closed-form from doc_id and mirrors the banding.
-    hashes = MM.perceptual_hash(
-        _crafted_pixel_media(spark, sf_dir), decoder="pixels")
-    return MM.phash_near_dup_pairs(hashes, max_hamming=8)
-
-
-def q_word_vectors(spark, sf_dir):
-    # PPMI-SVD word embeddings (Levy & Goldberg 2014): directional
-    # windowed co-occurrence -> slot-hashed PPMI rows -> distributed
-    # gram + driver eigh + map-only projection. Hash-verified against
-    # the independent numpy implementation (functions/numpy_ref.py)
-    # via the component-grid convention (tfidf.svd_components) and a
-    # 6-dp output round. Output unnested to scalar rows.
-    from streaming_demos_spark.functions import tfidf as TI
-
-    emb = TI.ppmi_word_vectors(
-        _t(spark, sf_dir, "documents"), window=3, min_count=5, dim=64, k=8
-    )
-    return emb.select(
-        "term", F.posexplode("embedding").alias("component_idx", "_v")
-    ).select(
-        "term", "component_idx", F.round(F.col("_v"), 6).alias("value")
-    )
-
-
-def q_auto_histogram(spark, sf_dir):
-    # Freedman-Diaconis auto-binned per-type value histogram: exact
-    # distributed IQR picks the width, then the same broadcast +
-    # map-side floor as value_histogram (relational.py:auto_histogram).
-    # int_scale=100: whole-cent ceil bin widths and integer bin
-    # assignment — the float span/nb width rounded 6dp straddled a
-    # 1-ulp midpoint at sf0.1.
-    return R.auto_histogram(
-        _t(spark, sf_dir, "events"), "event_type", "value", int_scale=100
-    )
-
-
-def q_minhash_lsh_eval(spark, sf_dir):
-    # Dedup-pipeline quality harness: MinHash-LSH verified pairs vs the
-    # exact inverted-index Jaccard join at the same threshold — recall
-    # of the banding as shipped (dedup.py:minhash_lsh_eval).
-    return D.minhash_lsh_eval(
-        _t(spark, sf_dir, "documents"), threshold=0.1
-    )
-
-
-def q_hybrid_rerank(spark, sf_dir):
-    # Hybrid retrieval: reciprocal-rank fusion of TF-IDF cosine and
-    # shingle-Jaccard rankings for query doc 0 — each side capped at 20
-    # candidates via TakeOrderedAndProject; the Jaccard side is fully
-    # map-side (tfidf.py:hybrid_rerank).
-    from streaming_demos_spark.functions import tfidf as TI
-
-    return TI.hybrid_rerank(
-        _t(spark, sf_dir, "documents"), query_id=0, k_candidates=20, k=10
-    )
-
-
-def q_dataset_card(spark, sf_dir):
-    # One-row corpus composition card: size, dup rate, token volume,
-    # mean quality, language-mix entropy, exact median length — four
-    # column-pruned scans, all 1-row/edge-bounded aggregates
-    # (curation.py:dataset_card).
-    return CU.dataset_card(_t(spark, sf_dir, "documents"))
-
-
-def q_exact_stratified_split(spark, sf_dir):
-    # Exact-quota stratified selection: exactly floor(0.25 * n_source)
-    # docs per source, chosen by md5 rank — partitioning-independent
-    # (curation.py:exact_stratified_split).
-    out = CU.exact_stratified_split(
-        _t(spark, sf_dir, "documents"), "source", 0.25
-    )
-    return out.select("doc_id", "source", "lang", "n_chars")
-
-
-_DECAY_REF = "2024-01-25 00:00:00"
-
-
-def q_decayed_engagement(spark, sf_dir):
-    # Frecency: per-user half-life-decayed event count/value as of a
-    # fixed reference instant — map-side weights, one combinable
-    # aggregation (curation.py:decayed_engagement).
-    return CU.decayed_engagement(
-        _t(spark, sf_dir, "events"),
-        "user_id",
-        "ts",
-        "value",
-        _DECAY_REF,
-        half_life_sec=86400.0,
-    )
-
-
-def q_join_size_profile(spark, sf_dir):
-    # Pre-flight join sizing: predict the events-by-user self-join's
-    # output rows and biggest-key task from count aggregates alone —
-    # never running the join (relational.py:join_size_profile).
-    ev = _t(spark, sf_dir, "events")
-    return R.join_size_profile(ev, "user_id", ev, "user_id")
-
-
-def q_zipf_fit(spark, sf_dir):
-    # Zipf exponent of the corpus term-frequency distribution:
-    # closed-form log-log regression over the vocabulary-bounded
-    # frequency table (relational.py:zipf_fit).
-    toks = _t(spark, sf_dir, "documents").select(
-        F.explode(TX.tokens("text")).alias("term")
-    )
-    return R.zipf_fit(toks, "term")
-
-
-def q_knn_label_noise(spark, sf_dir):
-    # k-NN label disagreement within LSH buckets: probable mislabels
-    # surface as high disagree_frac (similarity.py:knn_label_noise).
-    return SIM.knn_label_noise(
-        _t(spark, sf_dir, "embeddings"), k=5, num_planes=3
-    )
-
-
-def q_ppmi_cooccurrence(spark, sf_dir):
-    # Windowed co-occurrence PPMI (count-based embedding statistic):
-    # map-side nested-transform pair build, one pair-count shuffle,
-    # marginals derived from the count table (text.py:ppmi_cooccurrence).
-    return TX.ppmi_cooccurrence(
-        _t(spark, sf_dir, "documents"), window=3, min_count=5, top_n=100
-    )
-
-
-def q_triangle_count(spark, sf_dir):
-    # Triangle census of the part co-purchase graph (pairs co-occurring
-    # in >= 2 orders): degree-oriented wedge join bounds the work at
-    # O(m^1.5) regardless of hubs (graph.py:triangle_stats). The
-    # support threshold is the scale lever — random co-occurrence
-    # rarely repeats, so the edge set stays sparse as orders grow.
-    from streaming_demos_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(
-        F.col("l_orderkey"), F.col("l_partkey").alias("p1")
-    )
-    b = li.select(
-        F.col("l_orderkey"), F.col("l_partkey").alias("p2")
-    )
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 2)
-    )
-    return G.triangle_stats(edges, "p1", "p2")
-
-
-def q_winsorize(spark, sf_dir):
-    # Per-source winsorization of document lengths at [p05, p95]:
-    # exact distributed thresholds broadcast back, map-side clamp
-    # (relational.py:winsorize).
-    return R.winsorize(
-        _t(spark, sf_dir, "documents"), "source", "n_chars", "doc_id"
-    )
-
-
-def q_dup_spans(spark, sf_dir):
-    # Arbitrary-offset duplicate spans: every maximal run of 15-token
-    # windows repeating an earlier corpus occurrence — the suffix-array
-    # substring-dedup core, join-shaped (dedup.py:duplicate_spans).
-    return D.duplicate_spans(_t(spark, sf_dir, "documents"), k=15)
-
-
-def q_robust_anomalies(spark, sf_dir):
-    # Median/MAD outlier flags per event type (modified z-score > 3.5)
-    # — exact medians via distributed selection, no per-key buffering
-    # (relational.py:robust_anomalies). int_scale=100: the z-score is
-    # an exact half-up integer (z*1e4) and the flag is a pure integer
-    # predicate — the float 0.6745*dev/MAD rounded 4dp lands ON decimal
-    # midpoints at sf0.1.
-    ev = _t(spark, sf_dir, "events")
-    return R.robust_anomalies(
-        ev, "event_type", "value", "event_id", threshold=3.5,
-        int_scale=100,
-    ).orderBy("event_id")
-
-
-def q_lr_sweep(spark, sf_dir):
-    # Hyperparameter sweep with SHARED corpus scans: every learning
-    # rate's gradient computed in the same aggregation pass (grid size
-    # adds agg columns, not scans); final losses in one more pass
-    # (training.py:logreg_lr_sweep).
-    return TR.logreg_lr_sweep(
-        _t(spark, sf_dir, "documents"), lrs=[0.1, 0.5, 1.0, 2.0], iters=3
-    )
-
-
-def q_quality_drift(spark, sf_dir):
-    # Distribution-drift monitor: PSI between two corpus snapshots
-    # (even/odd doc ids as deterministic stand-ins) on a fixed decile
-    # grid derived from the baseline via exact quantile selection
-    # (curation.py:quality_drift_psi).
-    docs = _t(spark, sf_dir, "documents")
-    return CU.quality_drift_psi(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        "n_chars",
-        n_bins=10,
-    )
-
-
-def q_sequence_gaps(spark, sf_dir):
-    # Change-feed integrity: every missing run in the event-id sequence
-    # (ids % 97 == 13 withheld to manufacture deterministic gaps) via
-    # bucketed gap detection — complete buckets never re-inspected, no
-    # global sort over the id space (relational.py:sequence_gaps).
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 97 != 13)
-    return R.sequence_gaps(ev, "event_id", bucket_width=1024)
-
-
-def q_data_quality(spark, sf_dir):
-    # Declarative constraint pre-flight over the star schema: all
-    # scan-side checks (pk duplicates, null rates, value ranges) in ONE
-    # aggregation pass + one left-anti count per foreign key
-    # (relational.py:data_quality_report).
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    return R.data_quality_report(
-        orders,
-        pk_cols=["o_orderkey"],
-        not_null_cols=["o_custkey", "o_orderstatus"],
-        range_checks=[("o_totalprice", 0.0, 1e9)],
-        fks=[("o_custkey", customer, "c_custkey", "orders_customer")],
-    )
-
-
-def q_quality_eval(spark, sf_dir):
-    # The capstone composition: near-dup CLUSTER split (no holdout
-    # contamination) -> fit the quality logreg on train only -> exact
-    # Mann-Whitney AUC on the holdout. One row (auc, n_train,
-    # n_holdout); oracle replays split + GD + AUC end-to-end
-    # (training.py:quality_eval_leakage_free).
-    return TR.quality_eval_leakage_free(
-        _t(spark, sf_dir, "documents"), iters=3, lr=1.0, holdout_pct=30
-    )
-
-
-def q_incremental_agg(spark, sf_dir):
-    # Materialized-view maintenance: refresh a grouped sum/count from a
-    # retraction-stream delta (d(old)+i(new) pairs, Flink changelog
-    # semantics) — one delta-sized shuffle + a co-partitioned join with
-    # the stored aggregate, never a base-table rescan. The oracle
-    # recomputes the aggregate from the reconstructed new snapshot, so
-    # a green hash PROVES incremental == recompute
-    # (relational.py:incremental_agg_refresh).
-    orders = _t(spark, sf_dir, "orders")
-    key = F.col("o_orderkey")
-    cents = F.expr("cast(round(o_totalprice * 100) as bigint)")
-    img = lambda op, df: df.select(  # noqa: E731 - local shorthand
-        F.lit(op).alias("op"),
-        "o_orderpriority",
-        cents.alias("revenue_cents"),
-    )
-    base_agg = orders.groupBy("o_orderpriority").agg(
-        F.sum(cents).alias("revenue_cents"), F.count("*").alias("n_rows")
-    )
-    deletes = img("d", orders.filter(key % 10 == 0))
-    upd_src = orders.filter((key % 7 == 3) & (key % 10 != 0))
-    upd = img("d", upd_src).unionByName(
-        img("i", upd_src.withColumn("o_totalprice", F.col("o_totalprice") * 2))
-    )
-    inserts = img("i", orders.filter(key % 5 == 1))
-    delta = deletes.unionByName(upd).unionByName(inserts)
-    return (
-        R.incremental_agg_refresh(
-            base_agg, delta, ["o_orderpriority"], ["revenue_cents"]
-        )
-        .select(
-            "o_orderpriority",
-            F.col("revenue_cents").cast("long").alias("revenue_cents"),
-            "n_rows",
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-def q_embedding_quantize(spark, sf_dir):
-    # Symmetric per-vector int8 scalar quantization pre-flight: scale,
-    # RMSE and max reconstruction error per vector — map-only, zero
-    # shuffle (similarity.py:quantize_embeddings_int8).
-    return SIM.quantize_embeddings_int8(_t(spark, sf_dir, "embeddings"))
-
-
-def q_curriculum_bins(spark, sf_dir):
-    # Curriculum/difficulty deciles of document length: EXACT quantile
-    # thresholds via distributed histogram selection (broadcast back as
-    # one row), then a map-side thresholds-exceeded count — the
-    # scalable ntile substitute (curation.py:curriculum_bins).
-    return CU.curriculum_bins(
-        _t(spark, sf_dir, "documents"), "n_chars", n_bins=10
-    )
-
-
-def q_bpe_encode(spark, sf_dir):
-    # Frozen-tokenizer BPE APPLY (the other half of llm_bpe_pair_stats'
-    # fit loop): per-doc whitespace vs BPE token counts under a static
-    # merge table — encode once per DISTINCT word, join back by word
-    # (text.py:bpe_encode_stats).
-    return TX.bpe_encode_stats(_t(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-def q_quality_classifier(spark, sf_dir):
-    # LEARNED quality filter: logistic regression fit by 3 distributed
-    # full-batch GD steps (each = one map-side-combinable aggregation;
-    # only d+1 doubles reach the driver), then a map-only scoring pass
-    # with the weights folded in as literals (training.py).
-    return TR.quality_classifier_scores(
-        _t(spark, sf_dir, "documents"), iters=3, lr=1.0
-    )
-
-
-def q_random_projection(spark, sf_dir):
-    # Johnson-Lindenstrauss ±1 random projection 64 -> 8 dims: the sign
-    # matrix is deterministic md5-derived driver literals, the
-    # projection a zero-shuffle codegen fold (similarity.py:
-    # random_projection). Long-form scalar output (vec_id, dim_idx, v).
-    return SIM.random_projection(
-        _t(spark, sf_dir, "embeddings"), in_dim=64, out_dim=8
-    )
-
-
-def q_cluster_split(spark, sf_dir):
-    # Leakage-free train/holdout split: near-dup CLUSTER label (not doc
-    # id) is the md5 split key, so near-copies always co-assign and the
-    # holdout can't be contaminated by a training-set near-duplicate
-    # (dedup.py:cluster_split).
-    return D.cluster_split(
-        _t(spark, sf_dir, "documents"), threshold=0.1, holdout_pct=10
-    ).orderBy("doc_id")
-
-
-def q_tpch_q3(spark, sf_dir):
-    # Classic shipping-priority: 3-table join + top-k (tpch.py).
-    return TPCH.q3_shipping_priority(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_tpch_q4(spark, sf_dir):
-    # Semi-join with a non-equi lateness conjunct (tpch.py).
-    return TPCH.q4_order_priority(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_tpch_q5(spark, sf_dir):
-    # 6-table local-supply-chain join with broadcast dims (tpch.py).
-    return TPCH.q5_local_supplier_volume(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "region"),
-    )
-
-
-def q_tpch_q6(spark, sf_dir):
-    # Pure pushdown probe: scan-filter-aggregate, no join (tpch.py).
-    return TPCH.q6_forecast_revenue(_t(spark, sf_dir, "lineitem"))
-
-
-def q_tpch_q7(spark, sf_dir):
-    # Bilateral nation trade volume, dual-aliased broadcast dim (tpch.py).
-    return TPCH.q7_nation_volume(
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_tpch_q10(spark, sf_dir):
-    # Returned-item top-k with scan-side predicates (tpch.py).
-    return TPCH.q10_returned_items(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_tpch_q14(spark, sf_dir):
-    # Conditional aggregation (promo revenue share) (tpch.py).
-    return TPCH.q14_promo_effect(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_tpch_q15(spark, sf_dir):
-    # Aggregate-vs-global-max (top supplier) (tpch.py).
-    return TPCH.q15_top_supplier(
-        _t(spark, sf_dir, "supplier"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_tpch_q17(spark, sf_dir):
-    # Correlated per-part mean as a single-shuffle window (tpch.py).
-    return TPCH.q17_small_quantity_revenue(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_tpch_q18(spark, sf_dir):
-    # HAVING-subquery aggregate computed once and reused (tpch.py).
-    return TPCH.q18_large_volume_customer(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_tpch_q19(spark, sf_dir):
-    # Disjunctive multi-clause join predicate (tpch.py).
-    return TPCH.q19_discounted_revenue(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_tpch_q22(spark, sf_dir):
-    # Scalar-subquery threshold + anti-join on recent orders (tpch.py).
-    return TPCH.q22_dormant_high_balance(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_tpch_q2(spark, sf_dir):
-    # Correlated-min supplier choice over the observed supply relation
-    # (tpch.py:q2_min_cost_supplier).
-    return TPCH.q2_min_cost_supplier(
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "region"),
-    )
-
-
-def q_tpch_q8(spark, sf_dir):
-    # Nation market share: conditional share over a 7-table join
-    # (tpch.py:q8_market_share).
-    return TPCH.q8_market_share(
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "region"),
-    )
-
-
-def q_tpch_q9(spark, sf_dir):
-    # Product profit by supplier nation and year (tpch.py:q9_product_profit).
-    return TPCH.q9_product_profit(
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_tpch_q11(spark, sf_dir):
-    # Fraction-of-total important parts (tpch.py:q11_important_stock).
-    return TPCH.q11_important_stock(
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_tpch_q12(spark, sf_dir):
-    # Ship-delay tiers vs order priority (tpch.py:q12_late_shipment_priority).
-    return TPCH.q12_late_shipment_priority(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_tpch_q13(spark, sf_dir):
-    # Customer order-count distribution incl. zero bucket
-    # (tpch.py:q13_customer_distribution).
-    return TPCH.q13_customer_distribution(
-        _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    )
-
-
-def q_tpch_q16(spark, sf_dir):
-    # Distinct supplier counts per part spec (tpch.py:q16_supplier_part_counts).
-    return TPCH.q16_supplier_part_counts(
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_tpch_q20(spark, sf_dir):
-    # Nested semi-join + correlated threshold (tpch.py:q20_excess_shippers).
-    return TPCH.q20_excess_shippers(
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_tpch_q21(spark, sf_dir):
-    # Sole-late-supplier detection: exists + not-exists as ONE per-order
-    # aggregate (tpch.py:q21_waiting_orders).
-    return TPCH.q21_waiting_orders(
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_mcnemar(spark, sf_dir):
-    # Paired funnel shift: per-user click vs purchase flags; only the
-    # discordant users carry signal. Exact integer counts + half-up
-    # chi2*1e6 in DECIMAL intermediates (stats.py:mcnemar_test).
-    ev = _t(spark, sf_dir, "events")
-    return ST.mcnemar_test(
-        ev,
-        "user_id",
-        F.col("event_type") == "click",
-        F.col("event_type") == "purchase",
-    )
-
-
-def q_cramers_v(spark, sf_dir):
-    # Feature-vs-label association screen: order priority x status.
-    # chi2 as exact e6 integer (per-cell DECIMAL divisions), V through
-    # IEEE-exact divide+sqrt only (stats.py:cramers_v).
-    return ST.cramers_v(_t(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus")
-
-
-def q_fleiss_kappa(spark, sf_dir):
-    # Multi-rater agreement: lineitems "rate" their part with a return
-    # flag; variable raters per item, e6 integer agreement/chance/kappa
-    # with sign device (stats.py:fleiss_kappa).
-    return ST.fleiss_kappa(_t(spark, sf_dir, "lineitem"), "l_partkey", "l_returnflag")
-
-
-def q_iptw_ate(spark, sf_dir):
-    # Observational uplift: IPW ATE of click exposure on purchase value
-    # with a clipped-LINEAR propensity (250*n_events at e4, clamped to
-    # [0.05, 0.95]) - the whole estimator is exact integer arithmetic,
-    # no transcendental (stats.py:iptw_ate).
-    ev = _t(spark, sf_dir, "events")
-    return ST.iptw_ate(
-        ev,
-        "user_id",
-        treated=F.col("event_type") == "click",
-        outcome_cents=F.when(
-            F.col("event_type") == "purchase",
-            F.expr("cast(round(value * 100) as bigint)"),
-        ).otherwise(F.lit(0).cast("bigint")),
-        exposure_count=F.lit(1).cast("long"),
-    )
-
-
-def q_kneser_ney(spark, sf_dir):
-    # Production n-gram smoothing: KN bigram probabilities with d=3/4,
-    # computed entirely as e9 integers (continuation counts from the
-    # bigram table, never row-scaled) (text.py:kneser_ney_bigram).
-    return TX.kneser_ney_bigram(_t(spark, sf_dir, "documents"))
-
-
-def q_heavy_changes(spark, sf_dir):
-    # Corpus drift: top relative-frequency movers between even/odd doc
-    # slices, ranked by an exact e9 integer |delta| with explicit sign
-    # (text.py:heavy_changes).
-    return TX.heavy_changes(_t(spark, sf_dir, "documents"))
-
-
-
-def q_cochran_q(spark, sf_dir):
-    # k-treatment paired binary test: do the same users view/click/
-    # purchase at different rates? Exact integer Q at e6 in DECIMAL
-    # intermediates (stats.py:cochran_q).
-    ev = _t(spark, sf_dir, "events")
-    return ST.cochran_q(
-        ev,
-        "user_id",
-        {
-            "view": F.col("event_type") == "view",
-            "click": F.col("event_type") == "click",
-            "purchase": F.col("event_type") == "purchase",
-        },
-    )
-
-
-def q_odds_ratio(spark, sf_dir):
-    # 2x2 exposure->outcome effect: odds ratio + relative risk as exact
-    # e6 integers, Katz log-normal CI as noise-digit doubles
-    # (stats.py:odds_ratio).
-    ev = _t(spark, sf_dir, "events")
-    return ST.odds_ratio(
-        ev,
-        "user_id",
-        exposed=F.col("event_type") == "click",
-        outcome=F.col("event_type") == "purchase",
-    )
-
-
-def q_weibull_fit(spark, sf_dir):
-    # Parametric survival summary: Weibull shape/scale from the KM
-    # curve's integerized log-survival device via the ln(-ln S) x ln t
-    # linearization, closed-form OLS on the bounded duration grid
-    # (relational.py:weibull_survival_fit).
-    from streaming_demos_spark.functions.scalars import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    pu = ev.groupBy("user_id").agg(
-        F.min(epoch_us(F.col("ts"))).alias("_f"),
-        F.max(epoch_us(F.col("ts"))).alias("_l"),
-        F.min(
-            F.when(F.col("event_type") == "error", epoch_us(F.col("ts")))
-        ).alias("_e"),
-    )
-    spans = pu.select(
-        F.expr("cast((coalesce(_e, _l) - _f) div 86400000000 as int)").alias(
-            "duration_days"
-        ),
-        F.col("_e").isNotNull().alias("errored"),
-    )
-    return R.weibull_survival_fit(spans, "duration_days", "errored")
-
-
-def q_vocab_growth(spark, sf_dir):
-    # Heaps-law vocabulary growth over 10 id-threshold corpus prefixes
-    # - exact integer (prefix, n_tokens, vocab) curve, no global sort
-    # (text.py:vocab_growth).
-    return TX.vocab_growth(_t(spark, sf_dir, "documents"))
-
-
-
-def q_burst_windows(spark, sf_dir):
-    # Rate-anomaly detector: max events per event type in any sliding
-    # 5-minute window over the 1-minute bucket grid - combinable bucket
-    # counts, per-key RANGE window on the calendar-bounded grid, exact
-    # integers (relational.py:burst_windows).
-    return R.burst_windows(_t(spark, sf_dir, "events"), "event_type", "ts")
-
-
-def q_lorenz_curve(spark, sf_dir):
-    # Inequality curve per region: cumulative revenue share of the
-    # bottom-p% customers at 10 population cuts - exact e6 integer
-    # shares over BIGINT cents (relational.py:lorenz_curve).
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    joined = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-        F.col("c_nationkey").alias("nation"),
-        F.col("c_custkey"),
-        F.col("o_totalprice"),
-    )
-    return R.lorenz_curve(joined, "nation", "c_custkey", "o_totalprice")
-
-
-def q_peak_concurrency(spark, sf_dir):
-    # Max simultaneously-active users (1-second resolution spans):
-    # +1/-1 sweep over the calendar-bounded distinct-second grid
-    # (relational.py:peak_concurrency).
-    return R.peak_concurrency(
-        _t(spark, sf_dir, "events"), "user_id", "ts", "event_id"
-    )
-
-
-def q_dup_cluster_sizes(spark, sf_dir):
-    # Duplicate-structure summary: histogram of near-dup cluster sizes
-    # with keep-one removal counts - exact integers over the
-    # LSH->connected-components labels (dedup.py:
-    # cluster_size_distribution).
-    return D.cluster_size_distribution(
-        _t(spark, sf_dir, "documents"), threshold=0.1
-    )
-
-
-
-def q_hhi(spark, sf_dir):
-    # Herfindahl concentration of customer revenue per nation - exact
-    # e6 integer HHI over BIGINT cents (relational.py:herfindahl_index).
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    joined = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-        F.col("c_nationkey").alias("nation"),
-        F.col("c_custkey"),
-        F.col("o_totalprice"),
-    )
-    return R.herfindahl_index(joined, "nation", "c_custkey", "o_totalprice")
-
-
-def q_runs_test(spark, sf_dir):
-    # Wald-Wolfowitz serial-randomness screen on daily revenue per
-    # event type: exact integer runs/sign counts over the calendar
-    # grid, z as a noise-digit double (stats.py:runs_test).
-    return ST.runs_test(_t(spark, sf_dir, "events"), "event_type", "ts", "value")
-
-
-def q_lang_confusion(spark, sf_dir):
-    # Language-ID eval: marker-word predictions vs the labeled lang
-    # column as an exact-integer confusion matrix (text.py:lang_id).
-    docs = _t(spark, sf_dir, "documents")
-    preds = TX.lang_id(docs).select("doc_id", "pred_lang")
-    return (
-        docs.select("doc_id", F.col("lang").alias("label_lang"))
-        .join(preds, "doc_id")
-        .groupBy("label_lang", "pred_lang")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("label_lang", "pred_lang")
-    )
-
-
-def q_mm_exact_dedup(spark, sf_dir):
-    # Byte-level media dedup summary: md5-keyed combinable aggregation,
-    # payloads never shuffle (multimodal.py:exact_media_dedup_summary).
-    media = MM.as_media(_t(spark, sf_dir, "documents"), "doc_id", "text")
-    return MM.exact_media_dedup_summary(media)
-
-
-# --------------------------------------------------------------------------
-# round-7 driver-environment probes (operators/probes.py). 10 window
-# keys are driver-red while every local gate passes; each probe below
-# is one data-free or checksum-exact red/green bit whose pattern in
-# CORRECTNESS_r07 localizes the divergence (data slice vs timestamp
-# values vs comparison semantics vs engine build vs harness env).
-# --------------------------------------------------------------------------
-
-def q_probe_li_9596(spark, sf_dir):
-    return PR.slice_checksums_lineitem(
-        _t(spark, sf_dir, "lineitem"), "1995-01-01", "1997-01-01")
-
-
-def q_probe_li_97h1(spark, sf_dir):
-    return PR.slice_checksums_lineitem(
-        _t(spark, sf_dir, "lineitem"), "1997-01-01", "1997-07-01")
-
-
-def q_probe_li_97q3(spark, sf_dir):
-    # the slice tpch_q15 (GREEN) aggregates — expected green control
-    return PR.slice_checksums_lineitem(
-        _t(spark, sf_dir, "lineitem"), "1997-07-01", "1997-10-01")
-
-
-def q_probe_li_97q4(spark, sf_dir):
-    # inside tpch_q5/q6/q12's red year, adjacent to the green Q3
-    return PR.slice_checksums_lineitem(
-        _t(spark, sf_dir, "lineitem"), "1997-10-01", "1998-01-01")
-
-
-def q_probe_li_98(spark, sf_dir):
-    return PR.slice_checksums_lineitem(
-        _t(spark, sf_dir, "lineitem"), "1998-01-01", "1999-01-01")
-
-
-def q_probe_li_99p(spark, sf_dir):
-    return PR.slice_checksums_lineitem(
-        _t(spark, sf_dir, "lineitem"), "1999-01-01", "2002-01-01")
-
-
-def q_probe_ord_9596(spark, sf_dir):
-    return PR.slice_checksums_orders(
-        _t(spark, sf_dir, "orders"), "1995-01-01", "1997-01-01")
-
-
-def q_probe_ord_97q123(spark, sf_dir):
-    # covers tpch_q4's GREEN quarter
-    return PR.slice_checksums_orders(
-        _t(spark, sf_dir, "orders"), "1997-01-01", "1997-10-01")
-
-
-def q_probe_ord_97q4(spark, sf_dir):
-    # tpch_q10's RED quarter
-    return PR.slice_checksums_orders(
-        _t(spark, sf_dir, "orders"), "1997-10-01", "1998-01-01")
-
-
-def q_probe_ord_98p(spark, sf_dir):
-    return PR.slice_checksums_orders(
-        _t(spark, sf_dir, "orders"), "1998-01-01", "2002-01-01")
-
-
-def q_probe_ev_values(spark, sf_dir):
-    return PR.events_value_checksums(_t(spark, sf_dir, "events"))
-
-
-def q_probe_ev_epoch(spark, sf_dir):
-    return PR.events_epoch_checksums(_t(spark, sf_dir, "events"))
-
-
-def q_probe_pred_domains(spark, sf_dir):
-    return PR.predicate_domains(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders"))
-
-
-def q_probe_round_canary(spark, sf_dir):
-    return PR.engine_round_canary(spark)
-
-
-def q_probe_libm_canary(spark, sf_dir):
-    return PR.engine_libm_canary(spark)
-
-
-def q_probe_hash_canary(spark, sf_dir):
-    return PR.engine_hash_canary(spark)
-
-
-def q_probe_render_canary(spark, sf_dir):
-    return PR.engine_render_canary(spark)
-
-
-def q_probe_env_tz(spark, sf_dir):
-    return PR.env_session_tz(spark)
-
-
-def q_probe_env_versions(spark, sf_dir):
-    return PR.env_spark_version(spark).crossJoin(
-        PR.env_duckdb_version(spark))
 
 
 # Correctness-window order. The correctness gate re-proves the first 50
@@ -6161,8410 +93,9 @@ def _correctness_rounds() -> tuple[dict, ...]:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Returned in correctness-window order (window_order above).
-    d = {
-        "ext_quantile_shift": q_quantile_shift,
-        "ext_rmst": q_rmst,
-        "ext_control_chart": q_control_chart,
-        "llm_oov_rate": q_oov_rate,
-        "ext_price_elasticity": q_price_elasticity,
-        "ext_sax_symbols": q_sax_symbols,
-        "llm_charclass_profile": q_charclass_profile,
-        "ext_yuen_ttest": q_yuen_ttest,
-        "llm_matryoshka_eval": q_matryoshka_eval,
-        "ext_harmonic_2hop": q_harmonic_2hop,
-        "ext_cumulative_users": q_cumulative_users,
-        "ext_binseg_changepoints": q_binseg_changepoints,
-        "ext_diff_in_diff": q_diff_in_diff,
-        "ext_cuped": q_cuped,
-        "ext_power_analysis": q_power_analysis,
-        "llm_compression_ratio": q_compression_ratio,
-        "ext_holt_forecast": q_holt_forecast,
-        "ext_fs_em": q_fs_em,
-        "llm_isotonic_calibration": q_isotonic_calibration,
-        "ext_period_end_balance": q_period_end_balance,
-        "ext_ratio_to_parent": q_ratio_to_parent,
-        "ext_pairwise_contrasts": q_pairwise_contrasts,
-        "ext_assortativity": q_assortativity,
-        "ext_fd_violations": q_fd_violations,
-        "ext_seasonal_anomalies": q_seasonal_anomalies,
-        "ext_price_volume_mix": q_price_volume_mix,
-        "ext_theil_index": q_theil_index,
-        "ext_pythagorean_means": q_pythagorean_means,
-        "llm_readability": q_readability,
-        "ext_kendall_tau": q_kendall_tau,
-        "ext_grouped_moments": q_grouped_moments,
-        "ext_roc_curve": q_roc_curve,
-        "ext_cohort_ltv": q_cohort_ltv,
-        "ext_theil_sen": q_theil_sen,
-        "ext_grouped_mad": q_grouped_mad,
-        "ext_multi_touch": q_multi_touch,
-        "llm_quantile_normalize": q_quantile_normalize,
-        "ext_pareto_skyline": q_pareto_skyline,
-        "ext_k_core": q_k_core,
-        "ext_label_propagation": q_label_propagation,
-        "ext_conformal_interval": q_conformal_interval,
-        "ext_hll_set_overlap": q_hll_set_overlap,
-        "llm_span_corruption": q_span_corruption,
-        "ext_seasonal_mase": q_seasonal_mase,
-        "ext_mann_kendall": q_mann_kendall,
-        "ext_stratified_ate": q_stratified_ate,
-        "ext_gains_table": q_gains_table,
-        "llm_tokenizer_fertility": q_tokenizer_fertility,
-        "ext_cusum_drift": q_cusum_drift,
-        "ext_pinball_eval": q_pinball_eval,
-        "ext_srm_check": q_srm_check,
-        "ext_abc_classification": q_abc_classification,
-        "ext_funnel_conversion_ci": q_funnel_conversion_ci,
-        "ext_weighted_median": q_weighted_median,
-        "llm_feature_hash": q_feature_hash,
-        "ext_kruskal_wallis": q_kruskal_wallis,
-        "ext_brown_forsythe": q_brown_forsythe,
-        "ext_ohlc_bars": q_ohlc_bars,
-        "ext_target_encoding": q_target_encoding,
-        "ext_link_prediction": q_link_prediction,
-        "ext_k_anonymity": q_k_anonymity,
-        "ext_fs_linkage": q_fs_linkage,
-        "ext_bloom_semijoin": q_bloom_semijoin,
-        "llm_dedup_containment": q_containment_pairs,
-        "llm_dedup_edit_distance": q_edit_distance_pairs,
-        "ext_association_rules": q_association_rules,
-        "ext_rfm_segmentation": q_rfm_segmentation,
-        "ext_welch_ttest": q_welch_ttest,
-        "ext_anova": q_anova,
-        "ext_mann_whitney": q_mann_whitney,
-        "ext_ks_test": q_ks_test,
-        "ext_chi_square": q_chi_square,
-        "ext_spearman": q_spearman,
-        "ext_log_rank": q_log_rank,
-        "ext_fdr_screen": q_fdr_screen,
-        "ext_nelson_aalen": q_nelson_aalen,
-        "ext_histogram_2d": q_histogram_2d,
-        "ext_grouped_ols": q_grouped_ols,
-        "ext_bootstrap_ci": q_bootstrap_ci,
-        "llm_preference_pairs": q_preference_pairs,
-        "ext_pivot_revenue": q_pivot_revenue,
-        "ext_unpivot_profile": q_unpivot_profile,
-        "ext_correlation_matrix": q_correlation_matrix,
-        "ext_gapfill": q_gapfill,
-        "llm_textrank_keywords": q_textrank_keywords,
-        "llm_interleave_shards": q_interleave_shards,
-        "llm_contamination_matrix": q_contamination_matrix,
-        "llm_normalize_text": q_normalize_text,
-        "tpch_q2": q_tpch_q2,
-        "tpch_q8": q_tpch_q8,
-        "tpch_q9": q_tpch_q9,
-        "tpch_q11": q_tpch_q11,
-        "tpch_q12": q_tpch_q12,
-        "tpch_q13": q_tpch_q13,
-        "tpch_q16": q_tpch_q16,
-        "tpch_q20": q_tpch_q20,
-        "tpch_q21": q_tpch_q21,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q4": q_tpch_q4,
-        "tpch_q5": q_tpch_q5,
-        "tpch_q6": q_tpch_q6,
-        "tpch_q7": q_tpch_q7,
-        "tpch_q10": q_tpch_q10,
-        "tpch_q14": q_tpch_q14,
-        "tpch_q15": q_tpch_q15,
-        "tpch_q17": q_tpch_q17,
-        "tpch_q18": q_tpch_q18,
-        "tpch_q19": q_tpch_q19,
-        "tpch_q22": q_tpch_q22,
-        "llm_distinctive_terms": q_distinctive_terms,
-        "ext_duplicate_events": q_duplicate_events,
-        "llm_uncertainty_sample": q_uncertainty_sample,
-        "ext_funnel_step_times": q_funnel_step_times,
-        "ext_seasonal_profile": q_seasonal_profile,
-        "ext_ab_test": q_ab_test,
-        "llm_whiten_embeddings": q_whiten_embeddings,
-        "ext_kaplan_meier": q_kaplan_meier,
-        "ext_jackknife_ci": q_jackknife_ci,
-        "llm_fair_allocation": q_fair_allocation,
-        "ext_cohens_kappa": q_cohens_kappa,
-        "ext_autocorrelation": q_autocorrelation,
-        "ext_concentration": q_concentration,
-        "ext_gini": q_gini,
-        "llm_ngram_novelty": q_ngram_novelty,
-        "llm_lsh_tuning": q_lsh_tuning,
-        "ext_changepoint": q_changepoint,
-        "ext_benford": q_benford,
-        "ext_grouped_trend": q_grouped_trend,
-        "ext_mutual_info": q_mutual_info,
-        "ext_impute_mode": q_impute_mode,
-        "mm_phash_neardup": q_mm_phash_neardup,
-        "llm_word_vectors": q_word_vectors,
-        "ext_auto_histogram": q_auto_histogram,
-        "llm_minhash_lsh_eval": q_minhash_lsh_eval,
-        "llm_hybrid_rerank": q_hybrid_rerank,
-        "llm_dataset_card": q_dataset_card,
-        "llm_exact_stratified_split": q_exact_stratified_split,
-        "ext_decayed_engagement": q_decayed_engagement,
-        "ext_join_size_profile": q_join_size_profile,
-        "llm_zipf_fit": q_zipf_fit,
-        "llm_knn_label_noise": q_knn_label_noise,
-        "llm_ppmi_cooccurrence": q_ppmi_cooccurrence,
-        "ext_triangle_count": q_triangle_count,
-        "llm_winsorize": q_winsorize,
-        "llm_pmi_collocations": q_pmi_collocations,
-        "ext_ewma_smooth": q_ewma_smooth,
-        "ext_pagerank_trade": q_pagerank_trade,
-        "ext_trade_degree": q_trade_degree,
-        "llm_embedding_pool": q_embedding_pool,
-        "ext_cms_term_counts": q_cms_term_counts,
-        "llm_dup_spans": q_dup_spans,
-        "ext_robust_anomalies": q_robust_anomalies,
-        "llm_lr_sweep": q_lr_sweep,
-        "llm_quality_drift": q_quality_drift,
-        "ext_sequence_gaps": q_sequence_gaps,
-        "ext_data_quality": q_data_quality,
-        "llm_quality_eval": q_quality_eval,
-        "ext_incremental_agg": q_incremental_agg,
-        "llm_embedding_quantize": q_embedding_quantize,
-        "llm_curriculum_bins": q_curriculum_bins,
-        "llm_bpe_encode": q_bpe_encode,
-        "llm_quality_classifier": q_quality_classifier,
-        "llm_random_projection": q_random_projection,
-        "llm_cluster_split": q_cluster_split,
-        "llm_dsir_weights": q_dsir_weights,
-        "llm_dsir_resample": q_dsir_resample,
-        "llm_temperature_mix": q_temperature_mix,
-        "ext_heavy_hitters": q_heavy_hitters,
-        "llm_per_group_sample": q_per_group_sample,
-        "llm_contrastive_triplets": q_contrastive_triplets,
-        "llm_cross_source_overlap": q_cross_source_overlap,
-        "s10_cdc_scd2_history": q_cdc_scd2_history,
-        "eval_ndcg": q_eval_ndcg,
-        "llm_decontaminate_fuzzy": q_fuzzy_decontaminate,
-        "llm_tfidf_cosine_topk": q_tfidf_cosine_topk,
-        "llm_dedup_keep_best": q_dedup_keep_best,
-        "llm_mix_token_plan": q_mix_token_plan,
-        "ext_value_histogram": q_value_histogram,
-        "ext_set_partition": q_set_partition,
-        "ext_table_profile": q_table_profile,
-        "o4_per_key_time_split": q_per_key_time_split,
-        "llm_quality_filter": q_quality_filter,
-        "ext_hll_distinct": q_hll_distinct,
-        "ext_key_skew_profile": q_key_skew_profile,
-        "ext_user_journeys": q_user_journeys,
-        "ext_funnel": q_funnel,
-        "ext_retention": q_retention,
-        "ext_zscore_anomalies": q_zscore_anomalies,
-        "ext_quantile_summary": q_quantile_summary,
-        "ext_quantile_approx": q_quantile_approx,
-        "llm_dedup_exact": q_dedup_exact,
-        "llm_dedup_minhash_pairs": q_dedup_minhash_pairs,
-        "llm_dedup_clusters": q_dedup_clusters,
-        "llm_dedup_jaccard": q_dedup_jaccard,
-        "llm_dedup_simhash": q_dedup_simhash,
-        "llm_text_stats": q_text_stats,
-        "llm_lang_id": q_lang_id,
-        "llm_fingerprint": q_fingerprint,
-        "llm_ngram_entropy": q_ngram_entropy,
-        "llm_vocab_stats": q_vocab_stats,
-        "llm_winnow_fingerprints": q_winnow_fingerprints,
-        "llm_ann_cosine_topk": q_ann_cosine_topk,
-        "llm_ann_lsh_topk": q_ann_lsh_topk,
-        "llm_ann_ivf_topk": q_ann_ivf_topk,
-        "llm_neardup_embedding": q_neardup_embedding,
-        "llm_ann_recall": q_ann_recall,
-        "llm_ann_lsh_multi_topk": q_ann_lsh_multi_topk,
-        "llm_ann_recall_multi": q_ann_recall_multi,
-        "llm_curation_pipeline": q_curation_pipeline,
-        "llm_decontaminate": q_decontaminate,
-        "llm_stratified_sample": q_stratified_sample,
-        "llm_mix_weights": q_mix_weights,
-        "llm_token_histogram": q_token_histogram,
-        "llm_repetition_stats": q_repetition_stats,
-        "llm_pack_sequences": q_pack_sequences,
-        "llm_chunking": q_chunking,
-        "llm_pii_redact": q_pii_redact,
-        "mm_media_features": q_multimodal_features,
-        "mm_resize": q_mm_resize,
-        "mm_frame_sample": q_mm_frame_sample,
-        "f_svd_embed": q_svd_embed,
-        "llm_kmeans_assign": q_kmeans_assign,
-        "llm_kmeans_centroids": q_kmeans_centroids,
-        "llm_kmeans_round": q_kmeans_round,
-        "llm_semantic_dedup": q_semantic_dedup,
-        "llm_ann_filtered_topk": q_ann_filtered_topk,
-        "llm_dedup_incremental": q_dedup_incremental,
-        "ext_window_suite": q_window_suite,
-        "ext_set_compare": q_set_compare,
-        # Post-window round-3 additions (driver checks the first 50
-        # declared keys; these carry their own oracles for judge-side
-        # verification, like the 33 beyond-window keys did in r2).
-        "llm_unigram_surprisal": q_unigram_surprisal,
-        "llm_dedup_simhash_pairs": q_simhash_pairs,
-        "llm_winnow_overlap": q_winnow_overlap,
-        "llm_ann_recall_ivf": q_ann_recall_ivf,
-        "llm_embedding_outliers": q_embedding_outliers,
-        "s10_cdc_snapshot_at": q_cdc_snapshot_at,
-        "llm_dedup_report": q_dedup_report,
-        "llm_bm25_topk": q_bm25_topk,
-        "llm_ann_pq_topk": q_ann_pq_topk,
-        "ext_zorder_profile": q_zorder_profile,
-        "llm_block_dedup": q_block_dedup,
-        "llm_shard_profile": q_shard_profile,
-        "llm_ann_recall_pq": q_ann_recall_pq,
-        "ext_event_transitions": q_event_transitions,
-        "s10_snapshot_diff": q_snapshot_diff,
-        "llm_bpe_pair_stats": q_bpe_pair_stats,
-        "eval_calibration": q_eval_calibration,
-        "ext_entity_blocking": q_entity_blocking,
-        "llm_bigram_lm_score": q_bigram_lm_score,
-        "ext_grouping_sets": q_grouping_sets,
-        "llm_incremental_near_dup": q_incremental_near_dup,
-        "llm_mmr_diversify": q_mmr_diversify,
-        "q1_pricing_summary": q_pricing_summary,
-        "p1_p2_j1_j2_dashboard_feed": q_dashboard_feed,
-        "a1_a2_a9_dashboard_metrics": q_dashboard_metrics,
-        "a3_o1_grouped_revenue_nation": q_grouped_revenue_nation,
-        "a3_grouped_revenue_segment": q_grouped_revenue_segment,
-        "a4_metric_deltas": q_metric_deltas,
-        "a5_a8_tumbling_stats": q_tumbling_stats,
-        "o2_top5_parts": q_top5_parts,
-        "o2_top3_parts_per_brand": q_top3_parts_per_brand,
-        "o4_time_split": q_time_split,
-        "p2_time_filter": q_time_filter,
-        "f_json_extract": q_json_extract,
-        "f_scalar_strings": q_scalar_strings,
-        "f_datetime_buckets": q_datetime_buckets,
-        "f_conditional_status": q_conditional_status,
-        "a13_weighted_distribution": q_weighted_distribution,
-        "j6_semi_join": q_semi_join,
-        "j6_anti_join": q_anti_join,
-        "s10_debezium_unwrap": q_debezium_unwrap,
-        "s10_cdc_apply_changes": q_cdc_apply_changes,
-        "t6_late_tagging": q_late_tagging,
-        "s1_s8_csv_declared_schema": q_csv_declared_schema,
-        "p3_o3_limit_probe": q_limit_probe,
-        "p5_p6_drop_columns": q_drop_columns,
-        "p7_numeric_projection": q_numeric_projection,
-        "j4_zip_join": q_zip_join,
-        "f_array_vector": q_array_vector,
-        "f_struct_json": q_struct_json,
-        "f_ground_truth_score": q_ground_truth_score,
-        "f_status_timestamps": q_status_timestamps,
-        "a10_j3_linucb_fit": q_linucb_fit,
-        "a12_linucb_score_top5": q_linucb_score_top5,
-        "f_feature_engineering": q_feature_engineering,
-        "eval_ranking_metrics": q_eval_ranking,
-        "eval_auc": q_eval_auc,
-        "f_tfidf_top_terms": q_tfidf_top_terms,
-        "p4_split_by_predicate": q_split_by_predicate,
-        "p9_align_schema": q_align_schema,
-        "p10_null_defaults": q_null_defaults,
-        "j_asof_enrichment": q_asof_enrichment,
-        "j_interval_join": q_interval_join,
-        "ext_rollup_revenue": q_rollup_revenue,
-        "ext_hierarchical_rollup": q_hierarchical_rollup,
-        "t14_sliding_window": q_sliding_window,
-        "ext_session_window": q_session_window,
-        "ext_moving_average": q_moving_average,
-        "ext_cube_revenue": q_cube_revenue,
-        "ext_argmax_per_group": q_argmax_part_per_brand,
-        "llm_weighted_sample": q_weighted_sample,
-        "ext_mcnemar": q_mcnemar,
-        "ext_cramers_v": q_cramers_v,
-        "ext_fleiss_kappa": q_fleiss_kappa,
-        "ext_iptw_ate": q_iptw_ate,
-        "llm_kneser_ney_bigram": q_kneser_ney,
-        "llm_heavy_changes": q_heavy_changes,
-        "ext_cochran_q": q_cochran_q,
-        "ext_burst_windows": q_burst_windows,
-        "ext_lorenz_curve": q_lorenz_curve,
-        "ext_peak_concurrency": q_peak_concurrency,
-        "llm_dup_cluster_sizes": q_dup_cluster_sizes,
-        "ext_hhi": q_hhi,
-        "ext_runs_test": q_runs_test,
-        "llm_lang_confusion": q_lang_confusion,
-        "mm_exact_dedup": q_mm_exact_dedup,
-        "ext_odds_ratio": q_odds_ratio,
-        "ext_weibull_fit": q_weibull_fit,
-        "llm_vocab_growth": q_vocab_growth,
-        # round-7 driver-environment probes (operators/probes.py)
-        "probe_env_tz": q_probe_env_tz,
-        "probe_env_versions": q_probe_env_versions,
-        "probe_round_canary": q_probe_round_canary,
-        "probe_libm_canary": q_probe_libm_canary,
-        "probe_hash_canary": q_probe_hash_canary,
-        "probe_render_canary": q_probe_render_canary,
-        "probe_pred_domains": q_probe_pred_domains,
-        "probe_li_9596": q_probe_li_9596,
-        "probe_li_97h1": q_probe_li_97h1,
-        "probe_li_97q3": q_probe_li_97q3,
-        "probe_li_97q4": q_probe_li_97q4,
-        "probe_li_98": q_probe_li_98,
-        "probe_li_99p": q_probe_li_99p,
-        "probe_ord_9596": q_probe_ord_9596,
-        "probe_ord_97q123": q_probe_ord_97q123,
-        "probe_ord_97q4": q_probe_ord_97q4,
-        "probe_ord_98p": q_probe_ord_98p,
-        "probe_ev_values": q_probe_ev_values,
-        "probe_ev_epoch": q_probe_ev_epoch,
-        # round-11 audio + decompression keys (section at the bottom
-        # of this file)
-        "mm_audio_features": q_mm_audio_features,
-        "mm_audio_windows": q_mm_audio_windows,
-        "mm_audio_vad": q_mm_audio_vad,
-        "llm_decompress_corpus": q_llm_decompress_corpus,
-    }
+    d = Q.builders()
     return {k: d[k] for k in window_order(list(d), _correctness_rounds())}
 
 
-# DSIR hashed-n-gram importance weights (unigrams + word bigrams into
-# 256 md5 buckets; add-one-smoothed target/raw multinomials; target =
-# lang 'en'). Shared by the weights and resample oracles.
-_SQL_DSIR_CTE = """
-    WITH w AS (
-        SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\\s+') AS words
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id, lang,
-               unnest(list_concat(
-                   words,
-                   list_transform(range(1, len(words)),
-                                  i -> words[i] || ' ' || words[i + 1])
-               )) AS gram
-        FROM w
-    ),
-    feat AS (
-        SELECT doc_id, lang,
-               ('0x' || substr(md5(gram), 1, 6))::BIGINT % 256 AS bucket,
-               count(*) AS cnt
-        FROM g GROUP BY 1, 2, 3
-    ),
-    pb AS (
-        SELECT bucket, sum(cnt) AS r_b,
-               sum(CASE WHEN lang = 'en' THEN cnt ELSE 0 END) AS t_b
-        FROM feat GROUP BY 1
-    ),
-    tot AS (SELECT sum(r_b) AS r_tot, sum(t_b) AS t_tot FROM pb),
-    ratio AS (
-        SELECT bucket,
-               ln((t_b + 1) / (t_tot + 256.0))
-             - ln((r_b + 1) / (r_tot + 256.0)) AS log_ratio
-        FROM pb, tot
-    ),
-    lw AS (
-        SELECT f.doc_id, round(sum(f.cnt * r.log_ratio), 4) AS log_weight
-        FROM feat f JOIN ratio r USING (bucket) GROUP BY 1
-    )
-"""
-
-
-def _matryoshka_oracle_sql(qids: list[int], dims: list[int], k: int) -> str:
-    """Per-dim truncated-cosine recall vs the full-dim ranking, one
-    top-k CTE per dim over the shared scored base."""
-    qlist = ", ".join(str(q) for q in qids)
-
-    def topk_cte(name: str, d: int) -> str:
-        cos = _SQL_COS.format(a=f"v[1:{d}]", b=f"qv[1:{d}]")
-        return (
-            f"{name} AS MATERIALIZED (SELECT qid, vec_id FROM ("
-            f"SELECT qid, vec_id, row_number() OVER ("
-            f"PARTITION BY qid ORDER BY {cos} DESC, vec_id) AS rn"
-            f" FROM base) WHERE rn <= {k})"
-        )
-
-    blocks = []
-    for d in dims:
-        blocks.append(
-            f"SELECT {d} AS dim,"
-            f" (SELECT count(*) FROM panel) AS n_queries,"
-            f" round((SELECT count(*) FROM truth t"
-            f" JOIN top{d} a ON t.qid = a.qid AND t.vec_id = a.vec_id"
-            f")::DOUBLE / {float(k)} / (SELECT count(*) FROM panel), 6)"
-            f" AS avg_recall"
-        )
-    ctes = [
-        "emb AS MATERIALIZED (SELECT vec_id,"
-        " embedding::DOUBLE[] AS v FROM embeddings)",
-        f"panel AS MATERIALIZED (SELECT vec_id AS qid, v AS qv"
-        f" FROM emb WHERE vec_id IN ({qlist}))",
-        "base AS MATERIALIZED (SELECT p.qid, e.vec_id, e.v, p.qv"
-        " FROM emb e JOIN panel p ON e.vec_id <> p.qid)",
-        topk_cte("truth", 64),
-    ] + [topk_cte(f"top{d}", d) for d in dims]
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL ".join(blocks)
-        + "\nORDER BY dim"
-    )
-
-
-_NUMERIC_ORACLE_CACHE: dict[str, dict[str, str]] = {}
-
-
-def _numeric_oracle_sqls() -> dict[str, str]:
-    """Pure-Python reference oracles (VALUES tables) for the three
-    sequential-recursion keys — Holt smoothing, Fellegi-Sunter EM, and
-    isotonic PAVA — which no SQL window can express. Same device as
-    ``_eigen_oracle_sqls``: the reference reads the SAME parquet via
-    DuckDB, re-derives the sufficient statistics with its own SQL, and
-    replays the recursion in plain Python. Determinism is by
-    construction: the recursions consume exact inputs (4dp-rounded
-    sums, integer counts), block/EM means are ratios of exact sums,
-    and fsum-free accumulations run in one canonical (sorted) order in
-    BOTH implementations. Fails soft to the driver's rows-only check.
-    """
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    if sf in _NUMERIC_ORACLE_CACHE:
-        return _NUMERIC_ORACLE_CACHE[sf]
-    out: dict[str, str] = {}
-    try:
-        import duckdb
-
-        from streaming_demos_spark.functions.numpy_ref import jvm_round
-
-        con = duckdb.connect()
-
-        # --- ext_holt_forecast: replay the level/trend fold ---------
-        monthly = con.sql(f"""
-            SELECT n_name,
-                   extract(year FROM o_orderdate) * 12
-                   + extract(month FROM o_orderdate) AS mon,
-                   round(sum(o_totalprice), 4) AS rev
-            FROM read_parquet('{sf}/orders.parquet') o
-            JOIN read_parquet('{sf}/customer.parquet') c
-              ON o_custkey = c_custkey
-            JOIN read_parquet('{sf}/nation.parquet') n
-              ON c_nationkey = n_nationkey
-            GROUP BY 1, 2 ORDER BY n_name, mon
-        """).fetchall()
-        series: dict[str, list[float]] = {}
-        for name, _, rev in monthly:
-            series.setdefault(name, []).append(float(rev))
-        a, b = 0.5, 0.3
-        holt_rows = []
-        for name in sorted(series):
-            ys = series[name]
-            if len(ys) < 2:
-                continue
-            level, trend = ys[0], ys[1] - ys[0]
-            for y in ys[1:]:
-                lvl = a * y + (1.0 - a) * (level + trend)
-                trend = b * (lvl - level) + (1.0 - b) * trend
-                level = lvl
-            holt_rows.append(
-                "(%r, %d, %r, %r, %r)" % (
-                    name, len(ys), jvm_round(level, 6),
-                    jvm_round(trend, 6),
-                    jvm_round(level + 1.0 * trend, 6),
-                )
-            )
-        out["ext_holt_forecast"] = (
-            "SELECT c0 AS n_name, CAST(c1 AS INT) AS n_points,"
-            " CAST(c2 AS DOUBLE) AS level, CAST(c3 AS DOUBLE) AS trend,"
-            " CAST(c4 AS DOUBLE) AS forecast FROM (VALUES\n"
-            + ",\n".join(holt_rows)
-            + "\n) AS t(c0, c1, c2, c3, c4) ORDER BY n_name"
-        )
-
-        # --- ext_fs_em: replay EM on the 2^3 pattern table -----------
-        # same capped (nation, segment, name-band) candidate generator
-        # as the Spark side (_fs_blocked_pairs)
-        patt = con.sql(
-            "WITH "
-            + _FS_ORACLE_PAIRS.format(
-                customer=f"read_parquet('{sf}/customer.parquet')"
-            )
-            + """
-            SELECT (levenshtein(name_a, name_b) <= 2)::INT AS g0,
-                   (abs(bal_a - bal_b) < 500.0)::INT AS g1,
-                   ((bal_a < 0.0) = (bal_b < 0.0))::INT AS g2,
-                   count(*) AS n
-            FROM fs_pairs
-            GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-        """).fetchall()
-        counts = sorted(((r[0], r[1], r[2]), int(r[3])) for r in patt)
-        fields = ["name_agree", "bal_agree", "sign_agree"]
-        k = 3
-        m = [0.9] * k
-        u = [0.1] * k
-        lam = 0.1
-        for _ in range(10):
-            num_m = [0.0] * k
-            num_u = [0.0] * k
-            w_sum = 0.0
-            n_sum = 0.0
-            for g, n in counts:
-                pm, pu = lam, 1.0 - lam
-                for j in range(k):
-                    pm *= m[j] if g[j] else (1.0 - m[j])
-                    pu *= u[j] if g[j] else (1.0 - u[j])
-                w = pm / (pm + pu)
-                w_sum += w * n
-                n_sum += n
-                for j in range(k):
-                    if g[j]:
-                        num_m[j] += w * n
-                        num_u[j] += (1.0 - w) * n
-            m = [num_m[j] / w_sum for j in range(k)]
-            u = [num_u[j] / (n_sum - w_sum) for j in range(k)]
-            lam = w_sum / n_sum
-        import math as _math
-
-        em_rows = [
-            "(%r, %r, %r, %r, %r, %r)" % (
-                fields[j], round(m[j], 6), round(u[j], 6),
-                round(_math.log2(m[j] / u[j]), 6),
-                round(_math.log2((1.0 - m[j]) / (1.0 - u[j])), 6),
-                round(lam, 6),
-            )
-            for j in range(k)
-        ]
-        out["ext_fs_em"] = (
-            "SELECT c0 AS field, CAST(c1 AS DOUBLE) AS m_prob,"
-            " CAST(c2 AS DOUBLE) AS u_prob,"
-            " CAST(c3 AS DOUBLE) AS w_agree,"
-            " CAST(c4 AS DOUBLE) AS w_disagree,"
-            " CAST(c5 AS DOUBLE) AS match_prior FROM (VALUES\n"
-            + ",\n".join(em_rows)
-            + "\n) AS t(c0, c1, c2, c3, c4, c5) ORDER BY field"
-        )
-
-        # --- llm_isotonic_calibration: independent PAVA --------------
-        grid = con.sql(f"""
-            SELECT round(value, 0) AS score, count(*) AS n,
-                   sum((event_type = 'purchase')::INT) AS n_pos
-            FROM read_parquet('{sf}/events.parquet')
-            GROUP BY 1 ORDER BY 1
-        """).fetchall()
-        # O(n^2) re-scan PAVA (different style from the operator's
-        # stack form; block means are exact integer ratios so any
-        # correct PAVA lands on identical probabilities)
-        blocks = [
-            [int(n_pos), int(n), [float(score)]]
-            for score, n, n_pos in grid
-        ]
-        changed = True
-        while changed:
-            changed = False
-            i = 0
-            while i + 1 < len(blocks):
-                s1, w1, sc1 = blocks[i]
-                s2, w2, sc2 = blocks[i + 1]
-                if s1 * w2 >= s2 * w1:  # mean_i >= mean_{i+1}: pool
-                    blocks[i] = [s1 + s2, w1 + w2, sc1 + sc2]
-                    del blocks[i + 1]
-                    changed = True
-                else:
-                    i += 1
-        iso_rows = []
-        per_score = {
-            float(score): (int(n), int(n_pos))
-            for score, n, n_pos in grid
-        }
-        for s, w, scores in blocks:
-            p = round(s / w, 6)
-            for sc in scores:
-                n, n_pos = per_score[sc]
-                iso_rows.append(
-                    "('all', %r, %d, %d, %r)" % (sc, n, n_pos, p)
-                )
-        out["llm_isotonic_calibration"] = (
-            "SELECT c0 AS \"group\", CAST(c1 AS DOUBLE) AS score,"
-            " CAST(c2 AS BIGINT) AS n, CAST(c3 AS BIGINT) AS n_pos,"
-            " CAST(c4 AS DOUBLE) AS iso_prob FROM (VALUES\n"
-            + ",\n".join(iso_rows)
-            + "\n) AS t(c0, c1, c2, c3, c4) ORDER BY score"
-        )
-        # --- ext_binseg_changepoints: replay binary segmentation -----
-        daily = con.sql(f"""
-            SELECT extract(day FROM ts)::DOUBLE AS day,
-                   round(sum(value), 4) AS total
-            FROM read_parquet('{sf}/events.parquet')
-            GROUP BY 1 ORDER BY 1
-        """).fetchall()
-        xs = [float(r[0]) for r in daily]
-        cn, cs = [], []
-        run_n, run_s = 0.0, 0.0
-        for _, y in daily:
-            run_n += 1.0
-            run_s += float(y)
-            cn.append(run_n)
-            cs.append(run_s)
-        big_n, big_s = cn[-1], cs[-1]
-
-        def bs_best(lo_n, lo_s, hi_n, hi_s):
-            best = None
-            seg_term = (hi_s - lo_s) * (hi_s - lo_s) / (hi_n - lo_n)
-            for i in range(len(xs)):
-                if not (lo_n < cn[i] < hi_n):
-                    continue
-                nl, sl = cn[i] - lo_n, cs[i] - lo_s
-                nr, sr = hi_n - cn[i], hi_s - cs[i]
-                gain = sl * sl / nl + sr * sr / nr - seg_term
-                if best is None or gain > best[1] or (
-                    gain == best[1] and xs[i] < best[0]
-                ):
-                    best = (xs[i], gain, cn[i], cs[i])
-            return best
-
-        segs = [(0.0, 0.0, big_n, big_s)]
-        found = []
-        for _ in range(2):
-            nxt = []
-            for lo_n, lo_s, hi_n, hi_s in segs:
-                if hi_n - lo_n < 2:
-                    continue
-                bb = bs_best(lo_n, lo_s, hi_n, hi_s)
-                if bb is None:
-                    continue
-                found.append((bb[0], bb[1]))
-                nxt.append((lo_n, lo_s, bb[2], bb[3]))
-                nxt.append((bb[2], bb[3], hi_n, hi_s))
-            segs = nxt
-        found.sort(key=lambda t: -t[1])
-        bs_rows = [
-            "(%d, %r, %r)" % (i + 1, x, round(g, 4))
-            for i, (x, g) in enumerate(found)
-        ]
-        out["ext_binseg_changepoints"] = (
-            "SELECT CAST(c0 AS INT) AS split_rank,"
-            " CAST(c1 AS DOUBLE) AS x_split,"
-            " CAST(c2 AS DOUBLE) AS gain FROM (VALUES\n"
-            + ",\n".join(bs_rows)
-            + "\n) AS t(c0, c1, c2) ORDER BY split_rank"
-        )
-    except Exception:
-        out = {}
-    _NUMERIC_ORACLE_CACHE[sf] = out
-    return out
-
-
-def _k_core_oracle_sql(k: int = 3, rounds: int = 8) -> str:
-    """Fixed-round replay of the k-core peel as chained CTEs — exact
-    because graph.py:k_core RAISES unless it converges within the same
-    budget, and peeling is idempotent once stable."""
-    # MATERIALIZED is load-bearing: each s{i} is referenced twice by
-    # round i+1, and DuckDB inlines plain CTEs — the replay would
-    # otherwise expand to 2^rounds copies of the base scan.
-    ctes = [
-        """e0 AS MATERIALIZED (
-            SELECT a.l_partkey AS p1, b.l_partkey AS p2
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2 HAVING count(*) >= 2
-        )""",
-        "s0 AS MATERIALIZED (SELECT p1 AS a, p2 AS b FROM e0"
-        " UNION ALL SELECT p2 AS a, p1 AS b FROM e0)",
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"k{i} AS MATERIALIZED (SELECT a FROM s{i-1} GROUP BY a"
-            f" HAVING count(*) >= {k})"
-        )
-        ctes.append(
-            f"s{i} AS MATERIALIZED (SELECT s.a, s.b FROM s{i-1} s"
-            f" JOIN k{i} ka ON s.a = ka.a JOIN k{i} kb ON s.b = kb.a)"
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT a AS node, count(*) AS core_degree FROM s{rounds}"
-        + " GROUP BY 1 ORDER BY node"
-    )
-
-
 def oracle_sql() -> dict[str, str]:
-    return {
-        # --- Eigendecomposition keys: independent numpy-reference
-        # VALUES tables (see _eigen_oracle_sqls) -- empty (-> driver
-        # rows-only fallback) only if the data dir is unreadable.
-        **_eigen_oracle_sqls(),
-        # --- Sequential-recursion keys: pure-Python reference replays
-        # (Holt fold, FS-EM, isotonic PAVA) as VALUES tables.
-        **_numeric_oracle_sqls(),
-        # --- Round-11 additions: closed-form WAV/audio + gzip-member
-        # oracles (section at the bottom of this file).
-        **_r11_oracle_sqls(),
-        # --- Hypothesis tests (operators/stats.py). The normal-CDF
-        # p-values restate the A&S 7.1.26 erf polynomial VERBATIM in
-        # the same association order as the Spark columns, so both
-        # engines evaluate the identical FP expression.
-        "ext_quantile_shift": """
-            WITH two AS (
-                SELECT event_type, round(value, 2) AS v
-                FROM events WHERE event_type IN ('purchase', 'view')
-            ),
-            q AS (
-                SELECT event_type,
-                       round(quantile_cont(v, 0.1), 6) AS q10, round(quantile_cont(v, 0.2), 6) AS q20, round(quantile_cont(v, 0.3), 6) AS q30, round(quantile_cont(v, 0.4), 6) AS q40, round(quantile_cont(v, 0.5), 6) AS q50, round(quantile_cont(v, 0.6), 6) AS q60, round(quantile_cont(v, 0.7), 6) AS q70, round(quantile_cont(v, 0.8), 6) AS q80, round(quantile_cont(v, 0.9), 6) AS q90
-                FROM two GROUP BY 1
-            ),
-            a AS (SELECT * FROM q WHERE event_type = 'purchase'),
-            b AS (SELECT * FROM q WHERE event_type = 'view')
-            SELECT 10 AS pct, a.q10 AS q_treat, b.q10 AS q_control, round(a.q10 - b.q10, 6) AS shift FROM a, b
-            UNION ALL SELECT 20 AS pct, a.q20 AS q_treat, b.q20 AS q_control, round(a.q20 - b.q20, 6) AS shift FROM a, b
-            UNION ALL SELECT 30 AS pct, a.q30 AS q_treat, b.q30 AS q_control, round(a.q30 - b.q30, 6) AS shift FROM a, b
-            UNION ALL SELECT 40 AS pct, a.q40 AS q_treat, b.q40 AS q_control, round(a.q40 - b.q40, 6) AS shift FROM a, b
-            UNION ALL SELECT 50 AS pct, a.q50 AS q_treat, b.q50 AS q_control, round(a.q50 - b.q50, 6) AS shift FROM a, b
-            UNION ALL SELECT 60 AS pct, a.q60 AS q_treat, b.q60 AS q_control, round(a.q60 - b.q60, 6) AS shift FROM a, b
-            UNION ALL SELECT 70 AS pct, a.q70 AS q_treat, b.q70 AS q_control, round(a.q70 - b.q70, 6) AS shift FROM a, b
-            UNION ALL SELECT 80 AS pct, a.q80 AS q_treat, b.q80 AS q_control, round(a.q80 - b.q80, 6) AS shift FROM a, b
-            UNION ALL SELECT 90 AS pct, a.q90 AS q_treat, b.q90 AS q_control, round(a.q90 - b.q90, 6) AS shift FROM a, b
-            ORDER BY pct
-        """,
-        "ext_rmst": """
-            WITH pu AS (
-                SELECT user_id,
-                       min(epoch_us(ts)) AS f,
-                       max(epoch_us(ts)) AS l,
-                       min(CASE WHEN event_type = 'error'
-                                THEN epoch_us(ts) END) AS e
-                FROM events GROUP BY 1
-            ),
-            spans AS (
-                SELECT ((coalesce(e, l) - f) // 86400000000)::INT AS t,
-                       (e IS NOT NULL) AS errored
-                FROM pu
-            ),
-            per_t AS (
-                SELECT t, count(*) AS total,
-                       sum(errored::INT) AS n_events
-                FROM spans GROUP BY 1
-            ),
-            grid AS (
-                SELECT t, n_events,
-                       sum(total) OVER ()
-                       - coalesce(sum(total) OVER (
-                             ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0) AS n_at_risk
-                FROM per_t
-            ),
-            stepped AS (
-                SELECT t, n_events,
-                       CASE WHEN min(1.0 - n_events / n_at_risk::DOUBLE)
-                                 OVER (ORDER BY t
-                                       ROWS UNBOUNDED PRECEDING) <= 0
-                            THEN 0.0::DOUBLE
-                            ELSE exp(sum(CASE WHEN 1.0 - n_events
-                                                   / n_at_risk::DOUBLE > 0
-                                         THEN ln(1.0 - n_events
-                                                 / n_at_risk::DOUBLE)
-                                         ELSE 0.0::DOUBLE END)
-                                     OVER (ORDER BY t
-                                           ROWS UNBOUNDED PRECEDING))
-                       END AS s
-                FROM grid
-            ),
-            km AS (
-                SELECT t::DOUBLE AS t,
-                       CASE WHEN ls IS NULL THEN 0.0::DOUBLE
-                            ELSE exp(ls / 1e12) END AS survival
-                FROM (
-                    SELECT t, n_events,
-                           CASE WHEN min(1.0 - n_events
-                                         / n_at_risk::DOUBLE)
-                                     OVER (ORDER BY t
-                                           ROWS UNBOUNDED PRECEDING) <= 0
-                                THEN NULL
-                                ELSE sum(CASE WHEN 1.0 - n_events
-                                                   / n_at_risk::DOUBLE > 0
-                                         THEN cast(round(ln(1.0 - n_events
-                                                  / n_at_risk::DOUBLE)
-                                                  * 1000000000000)
-                                                  as bigint)
-                                         ELSE 0 END)
-                                     OVER (ORDER BY t
-                                           ROWS UNBOUNDED PRECEDING)
-                           END AS ls
-                    FROM grid
-                ) WHERE n_events > 0
-            ),
-            seg AS (
-                SELECT t,
-                       survival * (least(coalesce(lead(t) OVER (ORDER BY t),
-                                                  30.0), 30.0)
-                                   - least(t, 30.0)) AS sg
-                FROM km
-            )
-            SELECT 30.0::DOUBLE AS tau,
-                   count(*) AS n_steps,
-                   round(least(min(t), 30.0) + sum(sg), 4) AS rmst
-            FROM seg
-        """,
-        "ext_control_chart": """
-            WITH daily AS (
-                SELECT event_type,
-                       date_trunc('day', ts)::DATE AS day,
-                       round(sum(value), 4) AS total
-                FROM events GROUP BY 1, 2
-            ),
-            pts AS (
-                SELECT event_type, day, total AS y,
-                       abs(total - lag(total) OVER (
-                           PARTITION BY event_type ORDER BY day)) AS mr
-                FROM daily
-            ),
-            lims AS (
-                SELECT event_type,
-                       sum(y) / count(y) AS center,
-                       sum(mr) / count(mr) AS mrbar
-                FROM pts GROUP BY 1
-            )
-            SELECT p.event_type,
-                   strftime(p.day, '%Y-%m-%d') AS day,
-                   round(p.y, 6) AS y,
-                   round(l.center + 2.66 * l.mrbar, 6) AS ucl,
-                   round(l.center - 2.66 * l.mrbar, 6) AS lcl,
-                   COALESCE(p.y > l.center + 2.66 * l.mrbar
-                            OR p.y < l.center - 2.66 * l.mrbar, FALSE)
-                       AS out_of_control
-            FROM pts p JOIN lims l ON p.event_type = l.event_type
-            ORDER BY p.event_type, p.day
-        """,
-        "llm_oov_rate": """
-            WITH toks AS (
-                SELECT source AS src,
-                       unnest(string_split_regex(lower(trim(text)),
-                                                 '\\s+')) AS t
-                FROM documents
-            ),
-            grid AS (
-                SELECT src, t, count(*) AS occ FROM toks GROUP BY 1, 2
-            ),
-            spread AS (
-                SELECT t, count(*) AS n_src FROM grid GROUP BY 1
-            ),
-            agg AS (
-                SELECT src AS source,
-                       sum(occ)::BIGINT AS total_tokens,
-                       sum(CASE WHEN n_src = 1 THEN occ
-                                ELSE 0 END)::BIGINT AS oov_tokens
-                FROM grid JOIN spread USING (t)
-                GROUP BY 1
-            )
-            SELECT source, total_tokens, oov_tokens,
-                   round(oov_tokens::DOUBLE / total_tokens, 6)
-                       AS oov_rate
-            FROM agg ORDER BY source
-        """,
-        "ext_price_elasticity": """
-            WITH rws AS (
-                SELECT p_brand,
-                       ln(l_quantity) AS y,
-                       ln(l_extendedprice / l_quantity) AS x1,
-                       l_discount AS x2
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-            ),
-            m AS (
-                SELECT p_brand, avg(y) AS my, avg(x1) AS m1,
-                       avg(x2) AS m2, count(*) AS n_rows
-                FROM rws GROUP BY 1
-            ),
-            s AS (
-                SELECT r.p_brand, m.my, m.m1, m.m2, m.n_rows,
-                       sum((r.x1 - m.m1) * (r.x1 - m.m1)) AS s11,
-                       sum((r.x2 - m.m2) * (r.x2 - m.m2)) AS s22,
-                       sum((r.x1 - m.m1) * (r.x2 - m.m2)) AS s12,
-                       sum((r.x1 - m.m1) * (r.y - m.my)) AS s1y,
-                       sum((r.x2 - m.m2) * (r.y - m.my)) AS s2y,
-                       sum((r.y - m.my) * (r.y - m.my)) AS syy
-                FROM rws r JOIN m USING (p_brand)
-                GROUP BY r.p_brand, m.my, m.m1, m.m2, m.n_rows
-            ),
-            b AS (
-                SELECT *,
-                       (s1y * s22 - s2y * s12)
-                           / nullif(s11 * s22 - s12 * s12, 0) AS b1,
-                       (s2y * s11 - s1y * s12)
-                           / nullif(s11 * s22 - s12 * s12, 0) AS b2
-                FROM s
-            )
-            SELECT p_brand,
-                   round(my - b1 * m1 - b2 * m2, 6) AS b0,
-                   round(b1, 6) AS b1, round(b2, 6) AS b2,
-                   round(1.0::DOUBLE - (syy - b1 * s1y - b2 * s2y)
-                         / nullif(syy, 0), 6) AS r2,
-                   n_rows
-            FROM b
-            ORDER BY p_brand
-        """,
-        "ext_sax_symbols": """
-            WITH daily AS (
-                SELECT event_type,
-                       date_trunc('day', ts)::DATE AS day,
-                       round(sum(value), 4) AS total
-                FROM events GROUP BY 1, 2
-            ),
-            seg AS (
-                SELECT event_type, total AS y,
-                       ntile(6) OVER (PARTITION BY event_type
-                           ORDER BY day) - 1 AS segment
-                FROM daily
-            ),
-            m AS (
-                SELECT event_type, count(*) AS n, sum(y) AS s1,
-                       sum(y*y) AS s2
-                FROM seg GROUP BY 1
-            ),
-            mm AS (
-                SELECT event_type, s1 / n AS mean,
-                       sqrt(greatest(0.0,
-                           (s2 - s1*s1/n) / (n - 1))) AS std
-                FROM m
-            ),
-            paa AS (
-                SELECT event_type, segment, avg(y) AS paa
-                FROM seg GROUP BY 1, 2
-            ),
-            j AS (
-                SELECT paa.event_type, segment,
-                       round(paa, 6) AS paa_mean,
-                       round((paa - mean) / std, 6) AS z
-                FROM paa JOIN mm ON paa.event_type = mm.event_type
-            )
-            SELECT event_type, segment, paa_mean, z,
-                   CASE WHEN z < -0.6745 THEN 'a'
-                        WHEN z < 0.0 THEN 'b'
-                        WHEN z < 0.6745 THEN 'c'
-                        ELSE 'd' END AS letter
-            FROM j ORDER BY event_type, segment
-        """,
-        "llm_charclass_profile": """
-            WITH per AS (
-                SELECT source,
-                       length(lower(text)) AS chars,
-                       length(lower(text))
-                       - length(regexp_replace(lower(text),
-                           '[a-z]', '', 'g')) AS a,
-                       length(lower(text))
-                       - length(regexp_replace(lower(text),
-                           '[0-9]', '', 'g')) AS d,
-                       length(lower(text))
-                       - length(regexp_replace(lower(text),
-                           '\\s', '', 'g')) AS s
-                FROM documents
-            ),
-            agg AS (
-                SELECT source, count(*) AS n_docs,
-                       sum(chars)::BIGINT AS total_chars,
-                       sum(a) AS sa, sum(d) AS sd, sum(s) AS ss
-                FROM per GROUP BY 1
-            )
-            SELECT source, n_docs, total_chars,
-                   round(sa / total_chars::DOUBLE, 4) AS alpha_ratio,
-                   round(sd / total_chars::DOUBLE, 4) AS digit_ratio,
-                   round(ss / total_chars::DOUBLE, 4) AS space_ratio,
-                   round((total_chars - sa - sd - ss)
-                         / total_chars::DOUBLE, 4) AS other_ratio
-            FROM agg ORDER BY source
-        """,
-        "ext_yuen_ttest": """
-            WITH two AS (
-                SELECT event_type AS g,
-                       round(round(value, 2) * 100)::BIGINT AS v
-                FROM events WHERE event_type IN ('purchase', 'view')
-            ),
-            grid AS (SELECT g, v, count(*) AS c FROM two GROUP BY 1, 2),
-            cum AS (
-                SELECT g, v, c,
-                       coalesce(sum(c) OVER (PARTITION BY g ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0)::BIGINT AS cb,
-                       (sum(c) OVER (PARTITION BY g))::BIGINT AS n
-                FROM grid
-            ),
-            per AS (
-                SELECT g, max(n) AS n_rows,
-                       max(floor(0.2 * n)::BIGINT) AS tg,
-                       sum(v * greatest(0::BIGINT,
-                           least(cb + c, n - floor(0.2 * n)::BIGINT)
-                           - greatest(cb, floor(0.2 * n)::BIGINT)
-                           ))::BIGINT AS st,
-                       sum(v * v * greatest(0::BIGINT,
-                           least(cb + c, n - floor(0.2 * n)::BIGINT)
-                           - greatest(cb, floor(0.2 * n)::BIGINT)
-                           ))::BIGINT AS sst,
-                       min(CASE WHEN cb + c >= floor(0.2 * n)::BIGINT + 1
-                                THEN v END) AS lo,
-                       min(CASE WHEN cb + c >= n - floor(0.2 * n)::BIGINT
-                                THEN v END) AS hi
-                FROM cum GROUP BY 1
-            ),
-            w AS (
-                SELECT g, n_rows, st, (n_rows - 2 * tg)::BIGINT AS h,
-                       (st + tg * lo + tg * hi)::DOUBLE AS win_sum,
-                       (sst + tg * lo * lo + tg * hi * hi)::DOUBLE
-                           AS win_ss
-                FROM per
-            ),
-            stats AS (
-                SELECT g, n_rows, st, h,
-                       st::DOUBLE / h::DOUBLE AS tmean,
-                       (n_rows::DOUBLE - 1) * greatest(0.0::DOUBLE,
-                           (win_ss - win_sum * win_sum / n_rows::DOUBLE)
-                           / (n_rows::DOUBLE - 1))
-                       / (h::DOUBLE * (h::DOUBLE - 1)) AS d
-                FROM w
-            ),
-            ab AS (
-                SELECT a.n_rows AS n_a, b.n_rows AS n_b,
-                       a.h AS h_a, b.h AS h_b,
-                       a.st AS st_a, b.st AS st_b,
-                       (a.tmean - b.tmean) / sqrt(a.d + b.d) AS t
-                FROM stats a, stats b
-                WHERE a.g = 'purchase' AND b.g = 'view'
-            ),
-            e1 AS (SELECT *, abs(t)/sqrt(2.0) AS x FROM ab),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2)
-            SELECT n_a, n_b, h_a::BIGINT AS h_a, h_b::BIGINT AS h_b,
-                   (st_a * 10000) // h_a AS tmean_a_e6,
-                   (st_b * 10000) // h_b AS tmean_b_e6,
-                   round(t, 6) AS t_stat,
-                   round(1.0 - erf, 6) AS p_normal
-            FROM e3
-        """,
-        "llm_matryoshka_eval": _matryoshka_oracle_sql(
-            [0, 7, 21, 42, 77], [8, 16, 32, 64], 10
-        ),
-        "ext_harmonic_2hop": """
-            WITH e0 AS MATERIALIZED (
-                SELECT a.l_partkey AS p1, b.l_partkey AS p2
-                FROM lineitem a JOIN lineitem b
-                  ON a.l_orderkey = b.l_orderkey
-                 AND a.l_partkey < b.l_partkey
-                GROUP BY 1, 2 HAVING count(*) >= 2
-            ),
-            sym AS MATERIALIZED (
-                SELECT p1 AS a, p2 AS b FROM e0
-                UNION ALL SELECT p2 AS a, p1 AS b FROM e0
-            ),
-            n1 AS MATERIALIZED (
-                SELECT a, count(*) AS n1 FROM sym GROUP BY 1
-            ),
-            mid AS (SELECT a FROM n1 WHERE n1 <= 64),
-            h2 AS MATERIALIZED (
-                SELECT DISTINCT e1.a, e2.b AS c
-                FROM sym e1
-                JOIN mid ON e1.b = mid.a
-                JOIN sym e2 ON e1.b = e2.a
-                WHERE e1.a <> e2.b
-            ),
-            h2x AS (
-                SELECT h2.a, h2.c
-                FROM h2 LEFT JOIN sym s
-                  ON h2.a = s.a AND h2.c = s.b
-                WHERE s.a IS NULL
-            ),
-            n2 AS (SELECT a, count(*) AS n2 FROM h2x GROUP BY 1)
-            SELECT n1.a AS node, n1.n1 AS n_1hop,
-                   coalesce(n2.n2, 0) AS n_2hop,
-                   round(n1.n1 + coalesce(n2.n2, 0) / 2.0, 6)
-                       AS harmonic_c2
-            FROM n1 LEFT JOIN n2 ON n1.a = n2.a
-            ORDER BY harmonic_c2 DESC, node LIMIT 100
-        """,
-        "ext_cumulative_users": """
-            WITH fst AS (
-                SELECT user_id,
-                       min(date_trunc('day', ts))::DATE AS bucket_ts
-                FROM events GROUP BY 1
-            ),
-            per AS (
-                SELECT bucket_ts, count(*) AS new_users
-                FROM fst GROUP BY 1
-            )
-            SELECT strftime(bucket_ts, '%Y-%m-%d') AS bucket_ts,
-                   new_users,
-                   sum(new_users) OVER (ORDER BY bucket_ts
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW)::BIGINT AS cumulative_users
-            FROM per ORDER BY 1
-        """,
-        "ext_diff_in_diff": """
-            WITH rws AS (
-                SELECT (user_id % 2 = 0) AS t,
-                       (extract(day FROM ts) > 15) AS p,
-                       value::DOUBLE AS x
-                FROM events
-            ),
-            agg AS (
-                SELECT
-                    sum(CASE WHEN t AND p THEN 1 ELSE 0 END) AS ntp,
-                    sum(CASE WHEN t AND p THEN x ELSE 0.0::DOUBLE END) AS stp,
-                    sum(CASE WHEN t AND p THEN x*x ELSE 0.0::DOUBLE END) AS qtp,
-                    sum(CASE WHEN t AND NOT p THEN 1 ELSE 0 END) AS nt0,
-                    sum(CASE WHEN t AND NOT p THEN x ELSE 0.0::DOUBLE END) AS st0,
-                    sum(CASE WHEN t AND NOT p THEN x*x ELSE 0.0::DOUBLE END) AS qt0,
-                    sum(CASE WHEN NOT t AND p THEN 1 ELSE 0 END) AS ncp,
-                    sum(CASE WHEN NOT t AND p THEN x ELSE 0.0::DOUBLE END) AS scp,
-                    sum(CASE WHEN NOT t AND p THEN x*x ELSE 0.0::DOUBLE END) AS qcp,
-                    sum(CASE WHEN NOT t AND NOT p THEN 1 ELSE 0 END) AS nc0,
-                    sum(CASE WHEN NOT t AND NOT p THEN x ELSE 0.0::DOUBLE END) AS sc0,
-                    sum(CASE WHEN NOT t AND NOT p THEN x*x ELSE 0.0::DOUBLE END) AS qc0
-                FROM rws
-            ),
-            c AS (
-                SELECT stp/ntp AS mtp, st0/nt0 AS mt0,
-                       scp/ncp AS mcp, sc0/nc0 AS mc0,
-                       greatest(0.0, (qtp - stp*stp/ntp)/(ntp-1))/ntp AS vtp,
-                       greatest(0.0, (qt0 - st0*st0/nt0)/(nt0-1))/nt0 AS vt0,
-                       greatest(0.0, (qcp - scp*scp/ncp)/(ncp-1))/ncp AS vcp,
-                       greatest(0.0, (qc0 - sc0*sc0/nc0)/(nc0-1))/nc0 AS vc0
-                FROM agg
-            )
-            SELECT round(mt0, 6) AS treat_pre,
-                   round(mtp, 6) AS treat_post,
-                   round(mc0, 6) AS control_pre,
-                   round(mcp, 6) AS control_post,
-                   round((mtp - mt0) - (mcp - mc0), 6) AS did_estimate,
-                   round(sqrt(vtp + vt0 + vcp + vc0), 6) AS did_se,
-                   round(((mtp - mt0) - (mcp - mc0))
-                         / sqrt(vtp + vt0 + vcp + vc0), 6) AS z_stat
-            FROM c
-        """,
-        "ext_cuped": """
-            WITH units AS (
-                SELECT COALESCE(user_id % 2 = 0, FALSE) AS arm,
-                       round(sum(CASE WHEN extract(day FROM ts) <= 15
-                                 THEN value ELSE 0.0::DOUBLE END), 4) AS pre,
-                       round(sum(CASE WHEN extract(day FROM ts) > 15
-                                 THEN value ELSE 0.0::DOUBLE END), 4) AS post
-                FROM events GROUP BY user_id
-            ),
-            gm AS (
-                SELECT count(*)::DOUBLE AS gn, sum(pre) AS gx,
-                       sum(post) AS gy, sum(pre*post) AS gxy,
-                       sum(pre*pre) AS gxx
-                FROM units
-            ),
-            g AS (
-                SELECT (gxy - gx*gy/gn) / (gxx - gx*gx/gn) AS theta,
-                       gx / gn AS mpre
-                FROM gm
-            ),
-            per AS (
-                SELECT arm, count(*) AS n_units,
-                       sum(pre) AS x, sum(post) AS y,
-                       sum(pre*post) AS xy, sum(pre*pre) AS xx,
-                       sum(post*post) AS yy
-                FROM units GROUP BY 1
-            ),
-            c AS (
-                SELECT arm, n_units, theta,
-                       y / n_units AS my, x / n_units AS mx, mpre,
-                       yy / n_units - (y/n_units)*(y/n_units) AS vy,
-                       xx / n_units - (x/n_units)*(x/n_units) AS vxa,
-                       xy / n_units - (x/n_units)*(y/n_units) AS cxy
-                FROM per, g
-            )
-            SELECT arm, n_units,
-                   round(my, 6) AS mean_post,
-                   round(my - theta * (mx - mpre), 6) AS mean_adjusted,
-                   round(vy, 6) AS var_post,
-                   round(vy + theta*theta*vxa - 2.0*theta*cxy, 6)
-                       AS var_adjusted,
-                   round((1.0 - (vy + theta*theta*vxa - 2.0*theta*cxy)
-                                / vy) * 100.0, 6) AS var_reduction_pct
-            FROM c ORDER BY arm
-        """,
-        "ext_power_analysis": """
-            WITH users AS (
-                SELECT CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END
-                           AS arm,
-                       (round(sum(value), 4) > 50.0 * count(*))::INT
-                           AS converted
-                FROM events GROUP BY user_id
-            ),
-            agg AS (
-                SELECT sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS na,
-                       sum(CASE WHEN arm = 'A' THEN converted ELSE 0 END)
-                           AS sa,
-                       sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS nb,
-                       sum(CASE WHEN arm = 'B' THEN converted ELSE 0 END)
-                           AS sb
-                FROM users
-            ),
-            c AS (
-                SELECT na, nb, sa, sb,
-                       sa::DOUBLE / na AS p1, sb::DOUBLE / nb AS p2,
-                       (sa + sb)::DOUBLE / (na + nb) AS pbar
-                FROM agg
-            ),
-            f AS (
-                SELECT na, nb, sa, sb, p1, p2,
-                       1.959964 * sqrt(2.0 * pbar * (1.0 - pbar))
-                       + 0.841621 * sqrt(p1 * (1.0 - p1)
-                                         + p2 * (1.0 - p2)) AS num,
-                       p1 - p2 AS diff
-                FROM c
-            )
-            SELECT na::BIGINT AS n_a, nb::BIGINT AS n_b,
-                   ((sa * 1000000 * 2 + na) // (2 * na))::BIGINT
-                       AS rate_a_e6,
-                   ((sb * 1000000 * 2 + nb) // (2 * nb))::BIGINT
-                       AS rate_b_e6,
-                   ((CASE WHEN sa * nb - sb * na < 0 THEN -1 ELSE 1 END)
-                    * ((abs(sa * nb - sb * na) * 1000000 * 2 + na * nb)
-                       // (2 * na * nb)))::BIGINT AS observed_diff_e6,
-                   ceil(round(coalesce(num * num
-                              / nullif(diff * diff, 0.0), 0.0::DOUBLE),
-                        6))::BIGINT AS n_required_per_arm
-            FROM f
-        """,
-        "llm_compression_ratio": """
-            WITH per AS (
-                SELECT source, length(text) AS chars,
-                       len(string_split_regex(lower(trim(text)),
-                           '\\s+')) AS ws,
-                       len(regexp_extract_all(lower(text),
-                           '([a-z]+|[0-9]+|[^a-z0-9\\s])', 1)) AS bpe
-                FROM documents
-            ),
-            agg AS (
-                SELECT source, count(*) AS n_docs,
-                       sum(chars)::BIGINT AS total_chars,
-                       sum(ws)::BIGINT AS total_ws_tokens,
-                       sum(bpe)::BIGINT AS total_bpe_tokens
-                FROM per GROUP BY 1
-            )
-            SELECT source, n_docs, total_chars, total_ws_tokens,
-                   total_bpe_tokens,
-                   round(total_chars::DOUBLE / total_ws_tokens, 4)
-                       AS chars_per_ws_token,
-                   round(total_chars::DOUBLE / total_bpe_tokens, 4)
-                       AS chars_per_bpe_token
-            FROM agg ORDER BY source
-        """,
-        "ext_period_end_balance": """
-            WITH ranked AS (
-                SELECT user_id,
-                       date_trunc('day', ts)::DATE AS bucket_ts,
-                       value,
-                       row_number() OVER (
-                           PARTITION BY user_id, date_trunc('day', ts)
-                           ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events
-            ),
-            per AS (
-                SELECT user_id, bucket_ts, value AS last_v
-                FROM ranked WHERE rn = 1
-            )
-            SELECT strftime(bucket_ts, '%Y-%m-%d') AS bucket_ts,
-                   count(*) AS n_entities,
-                   round(sum(last_v), 4) AS total_balance
-            FROM per GROUP BY bucket_ts ORDER BY 1
-        """,
-        "ext_ratio_to_parent": """
-            WITH rows_ AS (
-                SELECT r_name, n_name, o_totalprice::DOUBLE AS v
-                FROM orders
-                JOIN customer ON o_custkey = c_custkey
-                JOIN nation ON c_nationkey = n_nationkey
-                JOIN region ON n_regionkey = r_regionkey
-            ),
-            cells AS (
-                SELECT r_name, n_name, sum(v) AS cv
-                FROM rows_ GROUP BY 1, 2
-            ),
-            parents AS (
-                SELECT r_name, sum(cv) AS pv FROM cells GROUP BY 1
-            )
-            SELECT c.r_name, c.n_name,
-                   round(c.cv, 2) AS value,
-                   round(c.cv / p.pv, 6) AS share_of_parent
-            FROM cells c JOIN parents p ON c.r_name = p.r_name
-            ORDER BY c.r_name, c.n_name
-        """,
-        "ext_pairwise_contrasts": """
-            WITH per AS (
-                SELECT event_type AS g, count(value) AS n,
-                       sum(value) AS s1, sum(value*value) AS s2
-                FROM events GROUP BY 1
-            ),
-            m AS (
-                SELECT g, n, s1 / n AS mean,
-                       greatest(0.0,
-                           (s2 - s1*s1/n) / (n - 1)) AS var
-                FROM per
-            ),
-            pairs AS (
-                SELECT a.g AS group_a, b.g AS group_b,
-                       a.mean - b.mean AS diff,
-                       sqrt(a.var / a.n + b.var / b.n) AS se
-                FROM m a JOIN m b ON a.g < b.g
-            ),
-            z AS (
-                SELECT group_a, group_b, diff, se,
-                       diff / se AS zv
-                FROM pairs
-            ),
-            e1 AS (SELECT *, abs(zv)/sqrt(2.0) AS x FROM z),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2)
-            SELECT group_a, group_b,
-                   round(diff, 6) AS mean_diff,
-                   round(se, 6) AS welch_se,
-                   round(zv, 6) AS z_stat,
-                   round(1.0 - erf, 6) AS p_normal
-            FROM e3 ORDER BY group_a, group_b
-        """,
-        "ext_assortativity": """
-            WITH e0 AS MATERIALIZED (
-                SELECT a.l_partkey AS p1, b.l_partkey AS p2
-                FROM lineitem a JOIN lineitem b
-                  ON a.l_orderkey = b.l_orderkey
-                 AND a.l_partkey < b.l_partkey
-                GROUP BY 1, 2 HAVING count(*) >= 2
-            ),
-            s AS MATERIALIZED (
-                SELECT p1 AS a, p2 AS b FROM e0
-                UNION ALL SELECT p2 AS a, p1 AS b FROM e0
-            ),
-            deg AS MATERIALIZED (
-                SELECT a, count(*) AS d FROM s GROUP BY 1
-            ),
-            dec AS (
-                SELECT da.d AS dx, db.d AS dy
-                FROM s JOIN deg da ON s.a = da.a
-                       JOIN deg db ON s.b = db.a
-            ),
-            agg AS (
-                SELECT count(*)::DOUBLE AS n,
-                       sum(dx) AS sx, sum(dy) AS sy,
-                       sum(dx*dy) AS sxy,
-                       sum(dx*dx) AS sxx, sum(dy*dy) AS syy
-                FROM dec
-            )
-            SELECT n::BIGINT AS n_edge_ends,
-                   round((sxy - sx*sy/n)
-                         / sqrt(greatest(0.0,
-                               (sxx - sx*sx/n) * (syy - sy*sy/n))),
-                         6) AS assortativity
-            FROM agg
-        """,
-        "ext_fd_violations": """
-            WITH cells AS (
-                SELECT p_brand, p_type, count(*) AS c
-                FROM part GROUP BY 1, 2
-            ),
-            per AS (
-                SELECT p_brand,
-                       count(DISTINCT p_type) AS n_rhs_values,
-                       sum(c)::BIGINT AS n_rows,
-                       max(c) AS dom
-                FROM cells GROUP BY 1
-            )
-            SELECT p_brand, n_rhs_values, n_rows,
-                   (n_rows - dom)::BIGINT AS n_violating_rows,
-                   round(dom::DOUBLE / n_rows, 6) AS dominant_share
-            FROM per WHERE n_rhs_values > 1
-            ORDER BY p_brand
-        """,
-        "ext_seasonal_anomalies": """
-            WITH base AS (
-                SELECT event_type AS k, extract(hour FROM ts) AS h,
-                       count(value) AS n, sum(value) AS s1,
-                       sum(value*value) AS s2
-                FROM events GROUP BY 1, 2
-            ),
-            stats AS (
-                SELECT k, h, s1 / n AS mean,
-                       sqrt(greatest(0.0,
-                           (s2 - s1*s1/n) / (n - 1))) AS std
-                FROM base
-            ),
-            z AS (
-                SELECT e.event_id, e.event_type, e.ts, e.value,
-                       round((e.value - s.mean) / s.std, 6)
-                           AS z_seasonal
-                FROM events e JOIN stats s
-                  ON e.event_type = s.k
-                 AND extract(hour FROM e.ts) = s.h
-            )
-            SELECT * FROM z WHERE abs(z_seasonal) > 3.0
-            ORDER BY event_id
-        """,
-        "ext_price_volume_mix": """
-            WITH per AS (
-                SELECT l_partkey,
-                       sum(CASE WHEN extract(year FROM l_shipdate) = 1995
-                                THEN l_quantity ELSE 0.0::DOUBLE END) AS q1,
-                       round(sum(CASE WHEN extract(year FROM l_shipdate) = 1995
-                                THEN l_extendedprice ELSE 0.0::DOUBLE END),
-                             4) AS r1,
-                       sum(CASE WHEN extract(year FROM l_shipdate) = 1996
-                                THEN l_quantity ELSE 0.0::DOUBLE END) AS q2,
-                       round(sum(CASE WHEN extract(year FROM l_shipdate) = 1996
-                                THEN l_extendedprice ELSE 0.0::DOUBLE END),
-                             4) AS r2
-                FROM lineitem
-                WHERE extract(year FROM l_shipdate) IN (1995, 1996)
-                GROUP BY 1
-            ),
-            eff AS (
-                SELECT
-                    sum(CASE WHEN q1 > 0 AND q2 > 0
-                        THEN (r2/q2 - r1/q1) * q1
-                        ELSE 0.0::DOUBLE END) AS price,
-                    sum(CASE WHEN q1 > 0 AND q2 > 0
-                        THEN (q2 - q1) * (r1/q1)
-                        ELSE 0.0::DOUBLE END) AS volume,
-                    sum(CASE WHEN q1 > 0 AND q2 > 0
-                        THEN (r2/q2 - r1/q1) * (q2 - q1)
-                        ELSE 0.0::DOUBLE END) AS mix,
-                    sum(CASE WHEN NOT (q1 > 0) THEN r2
-                        ELSE 0.0::DOUBLE END) AS new,
-                    sum(CASE WHEN NOT (q2 > 0) THEN -r1
-                        ELSE 0.0::DOUBLE END) AS discontinued
-                FROM per
-            )
-            SELECT effect, round(amount, 4) AS amount FROM (
-                SELECT 'price' AS effect, price AS amount FROM eff
-                UNION ALL SELECT 'volume', volume FROM eff
-                UNION ALL SELECT 'mix', mix FROM eff
-                UNION ALL SELECT 'new', new FROM eff
-                UNION ALL SELECT 'discontinued', discontinued FROM eff
-            ) ORDER BY effect
-        """,
-        "ext_theil_index": """
-            WITH rows_ AS (
-                SELECT n_name, o_totalprice::DOUBLE AS v
-                FROM orders
-                JOIN customer ON o_custkey = c_custkey
-                JOIN nation ON c_nationkey = n_nationkey
-                WHERE o_totalprice > 0
-            ),
-            per AS (
-                SELECT n_name, count(v) AS n_rows,
-                       sum(v) AS s, sum(v * ln(v)) AS sl
-                FROM rows_ GROUP BY 1
-            ),
-            tot AS (SELECT sum(n_rows) AS tot_n, sum(s) AS tot_s
-                    FROM per)
-            SELECT n_name, n_rows,
-                   round(s / n_rows, 6) AS mean,
-                   round(s / tot_s, 6) AS income_share,
-                   round(sl / s - ln(s / n_rows), 6) AS theil_within,
-                   round((s / tot_s)
-                         * ln((s / n_rows) / (tot_s / tot_n)), 6)
-                       AS between_term
-            FROM per, tot ORDER BY n_name
-        """,
-        "ext_pythagorean_means": """
-            WITH per AS (
-                SELECT o_orderpriority,
-                       count(*) AS n_rows,
-                       sum(o_totalprice) AS s,
-                       sum(ln(o_totalprice)) AS sl,
-                       sum(1.0::DOUBLE / o_totalprice) AS si
-                FROM orders WHERE o_totalprice > 0
-                GROUP BY 1
-            )
-            SELECT o_orderpriority, n_rows,
-                   round(s / n_rows, 6) AS mean_arith,
-                   round(exp(sl / n_rows), 6) AS mean_geom,
-                   round(n_rows / si, 6) AS mean_harm
-            FROM per ORDER BY o_orderpriority
-        """,
-        "llm_readability": """
-            WITH c AS (
-                SELECT doc_id,
-                       len(string_split_regex(trim(text), '\\s+'))
-                           AS n_words,
-                       greatest(1, len(regexp_extract_all(text,
-                           '[.!?]+'))) AS n_sentences,
-                       len(regexp_extract_all(lower(text), '[aeiouy]+'))
-                           AS n_syllables
-                FROM documents
-            )
-            SELECT doc_id, n_words, n_sentences, n_syllables,
-                   round(206.835
-                         - 1.015 * (n_words::DOUBLE / n_sentences)
-                         - 84.6 * (n_syllables::DOUBLE / n_words), 4)
-                       AS flesch_ease,
-                   round(0.39 * (n_words::DOUBLE / n_sentences)
-                         + 11.8 * (n_syllables::DOUBLE / n_words)
-                         - 15.59, 4) AS fk_grade
-            FROM c ORDER BY doc_id
-        """,
-        "ext_kendall_tau": """
-            WITH cells AS (
-                SELECT p_size AS x, round(p_retailprice, -2) AS y,
-                       count(*) AS c
-                FROM part GROUP BY 1, 2
-            ),
-            cd AS (
-                SELECT sum(CASE WHEN a.y < b.y THEN a.c * b.c
-                                ELSE 0 END) AS C,
-                       sum(CASE WHEN a.y > b.y THEN a.c * b.c
-                                ELSE 0 END) AS D
-                FROM cells a JOIN cells b
-                  ON a.x < b.x AND a.y <> b.y
-            ),
-            tx AS (
-                SELECT sum(t * (t - 1) / 2) AS n1, sum(t) AS n
-                FROM (SELECT sum(c) AS t FROM cells GROUP BY x)
-            ),
-            ty AS (
-                SELECT sum(t * (t - 1) / 2) AS n2
-                FROM (SELECT sum(c) AS t FROM cells GROUP BY y)
-            )
-            SELECT n::BIGINT AS n_rows,
-                   coalesce(C, 0)::BIGINT AS concordant,
-                   coalesce(D, 0)::BIGINT AS discordant,
-                   round(coalesce(
-                       (coalesce(C, 0) - coalesce(D, 0))::DOUBLE
-                       / nullif(sqrt((n::DOUBLE * (n - 1) / 2.0 - n1)
-                                * (n::DOUBLE * (n - 1) / 2.0 - n2)),
-                                0.0),
-                       0.0::DOUBLE), 6) AS tau_b
-            FROM cd, tx, ty
-        """,
-        "ext_grouped_moments": """
-            WITH per AS (
-                SELECT event_type,
-                       count(value) AS n_rows,
-                       sum(value) AS s1,
-                       sum(value*value) AS s2,
-                       sum(value*value*value) AS s3,
-                       sum(value*value*value*value) AS s4
-                FROM events GROUP BY 1
-            ),
-            m AS (
-                SELECT event_type, n_rows,
-                       s1 / n_rows AS mean,
-                       s2 / n_rows - (s1/n_rows) * (s1/n_rows) AS m2,
-                       s3 / n_rows
-                         - 3.0 * (s1/n_rows) * (s2 / n_rows)
-                         + 2.0 * (s1/n_rows) * (s1/n_rows) * (s1/n_rows)
-                         AS m3,
-                       s4 / n_rows
-                         - 4.0 * (s1/n_rows) * (s3 / n_rows)
-                         + 6.0 * (s1/n_rows) * (s1/n_rows) * (s2 / n_rows)
-                         - 3.0 * (s1/n_rows) * (s1/n_rows)
-                               * (s1/n_rows) * (s1/n_rows)
-                         AS m4
-                FROM per
-            )
-            SELECT event_type, n_rows,
-                   round(mean, 6) AS mean,
-                   round(m2, 6) AS var_pop,
-                   round(m3 / sqrt(m2*m2*m2), 6) AS skewness,
-                   round(m4 / (m2*m2) - 3.0, 6) AS kurtosis_excess
-            FROM m ORDER BY event_type
-        """,
-        "ext_roc_curve": """
-            WITH per AS (
-                SELECT round(value, 2) AS threshold,
-                       sum(CASE WHEN event_type = 'purchase'
-                                THEN 1 ELSE 0 END) AS p,
-                       sum(CASE WHEN event_type = 'purchase'
-                                THEN 0 ELSE 1 END) AS neg
-                FROM events GROUP BY 1
-            )
-            SELECT threshold,
-                   round(sum(p) OVER (ORDER BY threshold DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW)::DOUBLE
-                         / sum(p) OVER (), 6) AS tpr,
-                   round(sum(neg) OVER (ORDER BY threshold DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW)::DOUBLE
-                         / sum(neg) OVER (), 6) AS fpr
-            FROM per ORDER BY threshold DESC
-        """,
-        "ext_cohort_ltv": """
-            WITH base AS (
-                SELECT o_custkey AS cust,
-                       extract(year FROM o_orderdate) * 12
-                       + extract(month FROM o_orderdate) AS mon,
-                       o_totalprice::DOUBLE AS val
-                FROM orders
-            ),
-            cohorts AS (
-                SELECT cust, min(mon) AS cohort FROM base GROUP BY 1
-            ),
-            cells AS (
-                SELECT cohort AS cohort_mon, mon - cohort AS age_mon,
-                       count(DISTINCT base.cust) AS n_active,
-                       round(sum(val), 4) AS revenue
-                FROM base JOIN cohorts ON base.cust = cohorts.cust
-                GROUP BY 1, 2
-            )
-            SELECT cohort_mon, age_mon, n_active, revenue,
-                   round(sum(revenue) OVER (PARTITION BY cohort_mon
-                         ORDER BY age_mon
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW), 4) AS cum_revenue
-            FROM cells ORDER BY cohort_mon, age_mon
-        """,
-        "ext_theil_sen": """
-            WITH monthly AS (
-                SELECT n_name,
-                       extract(year FROM o_orderdate) * 12
-                       + extract(month FROM o_orderdate) AS mon,
-                       round(sum(o_totalprice), 4) AS rev
-                FROM orders
-                JOIN customer ON o_custkey = c_custkey
-                JOIN nation ON c_nationkey = n_nationkey
-                GROUP BY 1, 2
-            ),
-            slopes AS (
-                SELECT a.n_name AS g,
-                       (b.rev - a.rev) / (b.mon - a.mon) AS s
-                FROM monthly a JOIN monthly b
-                  ON a.n_name = b.n_name AND a.mon < b.mon
-            ),
-            grid AS (SELECT g, s AS v, count(*) AS c FROM slopes
-                     GROUP BY 1, 2),
-            cum AS (
-                SELECT g, v,
-                       sum(c) OVER (PARTITION BY g ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cum,
-                       sum(c) OVER (PARTITION BY g) AS n
-                FROM grid
-            ),
-            med AS (
-                SELECT g,
-                       (min(CASE WHEN cum >= ((n + 1) // 2) THEN v END)
-                        + min(CASE WHEN cum >= (n // 2 + 1) THEN v END)
-                       ) / 2.0 AS med
-                FROM cum GROUP BY 1
-            ),
-            np AS (SELECT g, count(*) AS n_pairs FROM slopes GROUP BY 1)
-            SELECT g AS n_name, round(med, 6) AS ts_slope, n_pairs
-            FROM med JOIN np USING (g) ORDER BY n_name
-        """,
-        "ext_grouped_mad": """
-            WITH ev AS (
-                SELECT event_type AS g, value::DOUBLE AS x FROM events
-            ),
-            g1 AS (SELECT g, x AS v, count(*) AS c FROM ev GROUP BY 1, 2),
-            c1 AS (
-                SELECT g, v,
-                       sum(c) OVER (PARTITION BY g ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cum,
-                       sum(c) OVER (PARTITION BY g) AS n
-                FROM g1
-            ),
-            m1 AS (
-                SELECT g,
-                       (min(CASE WHEN cum >= ((n + 1) // 2) THEN v END)
-                        + min(CASE WHEN cum >= (n // 2 + 1) THEN v END)
-                       ) / 2.0 AS med
-                FROM c1 GROUP BY 1
-            ),
-            dev AS (
-                SELECT ev.g, abs(ev.x - m1.med) AS d
-                FROM ev JOIN m1 USING (g)
-            ),
-            g2 AS (SELECT g, d AS v, count(*) AS c FROM dev GROUP BY 1, 2),
-            c2 AS (
-                SELECT g, v,
-                       sum(c) OVER (PARTITION BY g ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cum,
-                       sum(c) OVER (PARTITION BY g) AS n
-                FROM g2
-            ),
-            m2 AS (
-                SELECT g,
-                       (min(CASE WHEN cum >= ((n + 1) // 2) THEN v END)
-                        + min(CASE WHEN cum >= (n // 2 + 1) THEN v END)
-                       ) / 2.0 AS mad
-                FROM c2 GROUP BY 1
-            )
-            SELECT m1.g AS event_type,
-                   round(m1.med, 6) AS median,
-                   round(m2.mad, 6) AS mad,
-                   round(m2.mad * 1.4826, 6) AS sigma_robust
-            FROM m1 JOIN m2 ON m1.g = m2.g
-            ORDER BY 1
-        """,
-        "ext_multi_touch": """
-            WITH conv AS (
-                SELECT user_id AS u, ts AS cts, event_id AS cid,
-                       cast(round(value * 100) as bigint) AS cval
-                FROM events WHERE event_type = 'purchase'
-            ),
-            touch AS (
-                SELECT user_id AS u, ts AS tts, event_id AS tid,
-                       event_type AS channel
-                FROM events WHERE event_type <> 'purchase'
-            ),
-            pairs AS (
-                SELECT c.cid, c.cval, t.channel, t.tts, t.tid
-                FROM conv c JOIN touch t
-                  ON c.u = t.u
-                 AND t.tts <= c.cts
-                 AND t.tts > c.cts - INTERVAL 7 DAY
-            ),
-            ranked AS (
-                SELECT cid, cval, channel,
-                       row_number() OVER (PARTITION BY cid
-                           ORDER BY tts, tid) AS ra,
-                       row_number() OVER (PARTITION BY cid
-                           ORDER BY tts DESC, tid DESC) AS rd,
-                       count(*) OVER (PARTITION BY cid) AS n
-                FROM pairs
-            )
-            SELECT channel,
-                   sum(CASE WHEN ra = 1 THEN cval
-                            ELSE 0 END)::BIGINT AS first_touch_cents,
-                   sum(CASE WHEN rd = 1 THEN cval
-                            ELSE 0 END)::BIGINT AS last_touch_cents,
-                   sum((cval * 10000 * 2 + n) // (2 * n))::BIGINT
-                       AS linear_cents_e4,
-                   count(DISTINCT cid) AS n_conversions_touched
-            FROM ranked GROUP BY 1 ORDER BY 1
-        """,
-        "llm_quantile_normalize": """
-            WITH grid AS (
-                SELECT source AS g, n_chars::DOUBLE AS v, count(*) AS t
-                FROM documents GROUP BY 1, 2
-            ),
-            ranks AS (
-                SELECT g, v,
-                       (coalesce(sum(t) OVER (PARTITION BY g ORDER BY v
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND 1 PRECEDING), 0)
-                        + (t + 1) / 2.0)
-                       / sum(t) OVER (PARTITION BY g) AS pct
-                FROM grid
-            )
-            SELECT d.doc_id, d.source, d.n_chars,
-                   round(r.pct, 6) AS pct_rank
-            FROM documents d JOIN ranks r
-              ON d.source = r.g AND d.n_chars::DOUBLE = r.v
-            ORDER BY d.doc_id
-        """,
-        "ext_k_core": _k_core_oracle_sql(2, 12),
-        "ext_funnel_conversion_ci": """
-            WITH flags AS (
-                SELECT user_id,
-                       max((event_type = 'view')::INT) AS s0,
-                       max((event_type = 'click')::INT) AS s1,
-                       max((event_type = 'purchase')::INT) AS s2
-                FROM events GROUP BY user_id
-            ),
-            one AS (
-                SELECT sum(s0)::BIGINT AS n0,
-                       sum(s0 * s1)::BIGINT AS k0,
-                       sum(s1)::BIGINT AS n1,
-                       sum(s1 * s2)::BIGINT AS k1
-                FROM flags
-            ),
-            rows_ AS (
-                SELECT 'view->click' AS step, n0 AS n, k0 AS k FROM one
-                UNION ALL
-                SELECT 'click->purchase', n1, k1 FROM one
-            ),
-            w AS (
-                SELECT step, n, k,
-                       (k * 10000 * 2 + n) // (2 * n) AS conv_e4,
-                       k::DOUBLE / n::DOUBLE AS p,
-                       1.0 + (1.96 * 1.96) / n::DOUBLE AS denom,
-                       (k::DOUBLE / n::DOUBLE
-                        + (1.96 * 1.96) / (2.0 * n::DOUBLE))
-                       / (1.0 + (1.96 * 1.96) / n::DOUBLE) AS center,
-                       1.96 * sqrt((k::DOUBLE / n::DOUBLE)
-                           * (1.0 - k::DOUBLE / n::DOUBLE) / n::DOUBLE
-                           + (1.96 * 1.96)
-                             / (4.0 * n::DOUBLE * n::DOUBLE))
-                       / (1.0 + (1.96 * 1.96) / n::DOUBLE) AS half
-                FROM rows_
-            )
-            SELECT step, n, k, conv_e4,
-                   round(center - half, 6) AS wilson_lo,
-                   round(center + half, 6) AS wilson_hi
-            FROM w ORDER BY step
-        """,
-        "ext_abc_classification": """
-            WITH per AS (
-                SELECT l_partkey AS k,
-                       sum(round(l_extendedprice * (1 - l_discount)
-                                 * 100))::BIGINT AS v
-                FROM lineitem GROUP BY 1
-            ),
-            grid AS (SELECT v, count(*) AS nk FROM per GROUP BY v),
-            tot AS (SELECT sum(v)::BIGINT AS t FROM per),
-            cum AS (
-                SELECT v, nk,
-                       sum(v * nk) OVER (ORDER BY v DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW)::BIGINT AS c,
-                       t
-                FROM grid, tot
-            ),
-            cls AS (
-                SELECT CASE WHEN c * 100 <= 80 * t THEN 'A'
-                            WHEN c * 100 <= 95 * t THEN 'B'
-                            ELSE 'C' END AS abc_class,
-                       nk, v, t
-                FROM cum
-            ),
-            agg AS (
-                SELECT abc_class,
-                       sum(nk)::BIGINT AS n_keys,
-                       sum(v * nk)::BIGINT AS total_units,
-                       max(t) AS t
-                FROM cls GROUP BY abc_class
-            )
-            SELECT abc_class, n_keys, total_units,
-                   (total_units * 10000 * 2 + t) // (2 * t) AS share_e4
-            FROM agg ORDER BY abc_class
-        """,
-        "ext_srm_check": """
-            WITH units AS (
-                SELECT DISTINCT user_id AS u, user_id % 3 AS a
-                FROM events
-            ),
-            per AS (SELECT a, count(*) AS o FROM units GROUP BY a),
-            tot AS (
-                SELECT sum(o)::BIGINT AS n_units,
-                       min(o)::BIGINT AS min_arm,
-                       max(o)::BIGINT AS max_arm,
-                       sum((3 * o) * (3 * o))::BIGINT AS skoo
-                FROM per
-            )
-            SELECT n_units, 3 AS n_arms, min_arm, max_arm,
-                   (skoo - 3 * n_units * n_units)::BIGINT AS chi2_num,
-                   (3 * n_units)::BIGINT AS chi2_den,
-                   ((skoo - 3 * n_units * n_units) * 1000000 * 2
-                    + 3 * n_units) // (2 * 3 * n_units) AS chi2_e6
-            FROM tot
-        """,
-        "ext_cusum_drift": """
-            WITH daily AS (
-                SELECT event_type AS k,
-                       date_trunc('day', ts)::DATE AS day,
-                       sum(round(value * 100)::BIGINT)::BIGINT AS y
-                FROM events GROUP BY 1, 2
-            ),
-            marked AS (
-                SELECT k, day, y,
-                       row_number() OVER (PARTITION BY k ORDER BY day)
-                           AS rn
-                FROM daily
-            ),
-            train AS (
-                SELECT k, sum(y)::BIGINT AS ts, count(*) AS tn
-                FROM marked WHERE rn <= 20
-                GROUP BY k HAVING count(*) = 20
-            ),
-            dev AS (
-                SELECT m.k, m.day, m.rn, t.ts,
-                       (m.y * t.tn - t.ts)::BIGINT AS d
-                FROM marked m JOIN train t ON m.k = t.k
-            ),
-            pref AS (
-                SELECT k, day, rn, ts,
-                       sum(d) OVER (PARTITION BY k ORDER BY day
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW)::BIGINT AS p
-                FROM dev
-            ),
-            s AS (
-                SELECT k, day, rn, ts,
-                       p - least(0, min(p) OVER (PARTITION BY k
-                           ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                                              AND CURRENT ROW))::BIGINT
-                           AS su
-                FROM pref
-            )
-            SELECT k AS event_type,
-                   strftime(day, '%Y-%m-%d') AS day,
-                   su AS cusum_units,
-                   COALESCE(su * 100 > 50 * ts, FALSE) AS alarm
-            FROM s WHERE rn > 20
-            ORDER BY event_type, day
-        """,
-        "ext_pinball_eval": """
-            WITH daily AS (
-                SELECT event_type AS k,
-                       date_trunc('day', ts)::DATE AS d,
-                       sum(round(value * 100)::BIGINT)::BIGINT AS y
-                FROM events GROUP BY 1, 2
-            ),
-            marked AS (
-                SELECT k, d, y,
-                       row_number() OVER (PARTITION BY k ORDER BY d)
-                           AS rn
-                FROM daily
-            ),
-            qh AS (
-                SELECT k,
-                       round(quantile_cont(y, 0.9) * 10)::BIGINT
-                           AS yhat_e1
-                FROM marked WHERE rn <= 20 GROUP BY k
-            ),
-            test AS (
-                SELECT m.k, qh.yhat_e1,
-                       m.y * 10 - qh.yhat_e1 AS dd
-                FROM marked m JOIN qh ON m.k = qh.k
-                WHERE m.rn > 20
-            )
-            SELECT k AS event_type,
-                   count(*) AS n_test,
-                   max(yhat_e1) AS yhat_e1,
-                   sum(greatest(9 * dd, -1 * dd))::BIGINT
-                       AS pinball_units,
-                   sum((dd <= 0)::INT)::BIGINT AS n_under
-            FROM test GROUP BY k ORDER BY event_type
-        """,
-        "llm_tokenizer_fertility": """
-            WITH w AS (
-                SELECT lang AS slice,
-                       string_split_regex(lower(trim(text)), '\\s+') AS ws,
-                       length(text)::BIGINT AS c
-                FROM documents
-            ),
-            per AS (
-                SELECT slice, c,
-                       len(ws)::BIGINT AS nw,
-                       list_sum(list_transform(ws,
-                           t -> (length(t) + 3) // 4))::BIGINT AS np
-                FROM w
-            ),
-            agg AS (
-                SELECT slice, count(*) AS n_docs,
-                       sum(nw)::BIGINT AS n_words,
-                       sum(c)::BIGINT AS n_chars,
-                       sum(np)::BIGINT AS n_pieces
-                FROM per GROUP BY slice
-            )
-            SELECT slice, n_docs, n_words, n_chars, n_pieces,
-                   (n_pieces * 1000 * 2 + n_words) // (2 * n_words)
-                       AS pieces_per_word_e3,
-                   (n_pieces * 100000 * 2 + n_chars) // (2 * n_chars)
-                       AS pieces_per_100chars_e3
-            FROM agg ORDER BY slice
-        """,
-        "ext_gains_table": """
-            WITH src AS (
-                SELECT round(value, 2) AS s,
-                       (event_type = 'purchase') AS r
-                FROM events
-            ),
-            cuts AS (
-                SELECT """ + ",\n                       ".join(
-                    "round(quantile_cont(s, %s) * 1000)::BIGINT AS c%d"
-                    % (i / 10.0, i - 1) for i in range(1, 10)
-                ) + """
-                FROM src
-            ),
-            binned AS (
-                SELECT 1 + """ + "\n                         + ".join(
-                    "(round(src.s * 100)::BIGINT * 10 > cuts.c%d)::INT"
-                    % i for i in range(9)
-                ) + """ AS bin, r
-                FROM src, cuts
-            ),
-            per AS (
-                SELECT bin, count(*) AS n,
-                       sum(r::INT)::BIGINT AS n_resp
-                FROM binned GROUP BY bin
-            )
-            SELECT bin, n, n_resp,
-                   sum(n) OVER (ORDER BY bin
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW)::BIGINT AS cum_n,
-                   sum(n_resp) OVER (ORDER BY bin
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW)::BIGINT AS cum_resp
-            FROM per ORDER BY bin
-        """,
-        "ext_stratified_ate": """
-            WITH rows_ AS (
-                SELECT c_mktsegment AS stratum,
-                       (o_custkey % 2 = 0) AS t,
-                       round(o_totalprice * 100)::BIGINT AS y
-                FROM orders JOIN customer ON o_custkey = c_custkey
-            ),
-            per AS (
-                SELECT stratum,
-                       sum(t::INT)::BIGINT AS n_t,
-                       sum((NOT t)::INT)::BIGINT AS n_c,
-                       sum(CASE WHEN t THEN y ELSE 0 END)::BIGINT
-                           AS sum_t_units,
-                       sum(CASE WHEN NOT t THEN y ELSE 0 END)::BIGINT
-                           AS sum_c_units
-                FROM rows_ GROUP BY stratum
-            )
-            SELECT stratum, n_t, n_c, sum_t_units, sum_c_units,
-                   (CASE WHEN sum_t_units * n_c - sum_c_units * n_t < 0
-                         THEN -1 ELSE 1 END)
-                   * ((abs(sum_t_units * n_c - sum_c_units * n_t)
-                       * 100 * 2 + n_t * n_c) // (2 * n_t * n_c))
-                       AS diff_e4
-            FROM per
-            WHERE n_t > 0 AND n_c > 0
-            ORDER BY stratum
-        """,
-        "ext_mann_kendall": """
-            WITH daily AS (
-                SELECT event_type AS g,
-                       date_trunc('day', ts)::DATE AS d,
-                       sum(round(value * 100)::BIGINT)::BIGINT AS y
-                FROM events GROUP BY 1, 2
-            ),
-            s AS (
-                SELECT a.g,
-                       sum(CASE WHEN b.y > a.y THEN 1
-                                WHEN b.y < a.y THEN -1
-                                ELSE 0 END)::BIGINT AS s_stat
-                FROM daily a JOIN daily b
-                  ON a.g = b.g AND a.d < b.d
-                GROUP BY a.g
-            ),
-            ties AS (
-                SELECT g,
-                       sum(t * (t - 1) * (2 * t + 5))::BIGINT AS tie_term,
-                       sum(t)::BIGINT AS n_days
-                FROM (SELECT g, y, count(*) AS t FROM daily GROUP BY 1, 2)
-                GROUP BY g
-            ),
-            j AS (
-                SELECT s.g, n_days, s_stat, tie_term,
-                       (n_days::DOUBLE * (n_days::DOUBLE - 1)
-                        * (2 * n_days::DOUBLE + 5)
-                        - tie_term::DOUBLE) / 18.0 AS v
-                FROM s JOIN ties ON s.g = ties.g
-            ),
-            z0 AS (
-                SELECT g, n_days, s_stat, tie_term,
-                       CASE WHEN s_stat > 0
-                            THEN (s_stat::DOUBLE - 1) / sqrt(v)
-                            WHEN s_stat < 0
-                            THEN (s_stat::DOUBLE + 1) / sqrt(v)
-                            ELSE 0.0::DOUBLE END AS z
-                FROM j
-            ),
-            e1 AS (SELECT *, abs(z)/sqrt(2.0) AS x FROM z0),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2)
-            SELECT g AS event_type, n_days, s_stat, tie_term,
-                   round(z, 6) AS z,
-                   round(1.0 - erf, 6) AS p_normal
-            FROM e3 ORDER BY event_type
-        """,
-        "ext_seasonal_mase": """
-            WITH daily AS (
-                SELECT event_type,
-                       date_trunc('day', ts)::DATE AS d,
-                       sum(round(value * 100)::BIGINT)::BIGINT AS y
-                FROM events GROUP BY 1, 2
-            ),
-            marked AS (
-                SELECT event_type, y,
-                       row_number() OVER (PARTITION BY event_type
-                           ORDER BY d) AS rn,
-                       count(*) OVER (PARTITION BY event_type) AS n,
-                       lag(y, 7) OVER (PARTITION BY event_type
-                           ORDER BY d) AS ys,
-                       lag(y, 1) OVER (PARTITION BY event_type
-                           ORDER BY d) AS y1
-                FROM daily
-            ),
-            agg AS (
-                SELECT event_type,
-                       max(n) AS n_obs,
-                       count(CASE WHEN rn > n - 7
-                                  THEN abs(y - ys) END) AS n_test,
-                       sum(CASE WHEN rn > n - 7
-                                THEN abs(y - ys) END)::BIGINT AS sae_units,
-                       count(CASE WHEN rn >= 2 AND rn <= n - 7
-                                  THEN abs(y - y1) END) AS n_scale,
-                       sum(CASE WHEN rn >= 2 AND rn <= n - 7
-                                THEN abs(y - y1) END)::BIGINT AS snd_units
-                FROM marked GROUP BY event_type
-            )
-            SELECT * FROM agg WHERE n_obs >= 9 ORDER BY event_type
-        """,
-        "llm_span_corruption": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS ws
-                FROM documents
-            ),
-            toks AS (
-                SELECT doc_id, unnest(range(len(ws)))::BIGINT AS pos FROM w
-            ),
-            h AS (
-                SELECT doc_id, pos,
-                       ('0x' || substr(md5(doc_id::VARCHAR || ':'
-                            || pos::VARCHAR), 1, 8))::BIGINT AS hv
-                FROM toks
-            ),
-            starts AS (
-                SELECT doc_id, pos AS sp, 2 + hv % 3 AS ln
-                FROM h WHERE hv % 20 = 0
-            ),
-            covered AS (
-                SELECT DISTINCT t.doc_id, t.pos
-                FROM toks t JOIN starts s
-                  ON t.doc_id = s.doc_id
-                 AND t.pos >= s.sp AND t.pos < s.sp + s.ln
-            ),
-            runs AS (
-                SELECT doc_id,
-                       (coalesce(lag(pos) OVER (PARTITION BY doc_id
-                            ORDER BY pos), -2) != pos - 1)::INT AS nr
-                FROM covered
-            ),
-            m AS (
-                SELECT doc_id, count(*) AS n_masked,
-                       sum(nr)::BIGINT AS n_spans
-                FROM runs GROUP BY doc_id
-            ),
-            tot AS (
-                SELECT doc_id, count(*) AS n_tokens FROM toks GROUP BY doc_id
-            )
-            SELECT tot.doc_id, n_tokens,
-                   coalesce(n_masked, 0) AS n_masked,
-                   coalesce(n_spans, 0) AS n_spans
-            FROM tot LEFT JOIN m USING (doc_id) ORDER BY doc_id
-        """,
-        "ext_hll_set_overlap": """
-            -- exact set algebra; the sketch-estimate bound flags are
-            -- gate-constant TRUE (the estimates live only in Spark,
-            -- same contract as ext_hll_distinct)
-            WITH vals AS (
-                SELECT DISTINCT event_type AS s, user_id AS v FROM events
-            ),
-            ex AS (SELECT s, count(*) AS n FROM vals GROUP BY s),
-            inter AS (
-                SELECT a.s AS set_a, b.s AS set_b, count(*) AS exact_inter
-                FROM vals a JOIN vals b
-                  ON a.v = b.v AND a.s < b.s
-                GROUP BY 1, 2
-            )
-            SELECT a.s AS set_a, b.s AS set_b,
-                   a.n AS exact_a, b.n AS exact_b,
-                   a.n + b.n - coalesce(i.exact_inter, 0) AS exact_union,
-                   coalesce(i.exact_inter, 0) AS exact_inter,
-                   TRUE AS est_a_ok, TRUE AS est_b_ok,
-                   TRUE AS est_union_ok, TRUE AS est_inter_ok
-            FROM ex a JOIN ex b ON a.s < b.s
-            LEFT JOIN inter i ON i.set_a = a.s AND i.set_b = b.s
-            ORDER BY set_a, set_b
-        """,
-        "ext_conformal_interval": """
-            WITH base AS (
-                SELECT event_type AS g,
-                       round(value * 100)::BIGINT AS v,
-                       (('0x' || substr(md5(event_id::VARCHAR), 1, 4))
-                            ::BIGINT % 2 = 0) AS cal
-                FROM events
-            ),
-            cs AS (
-                SELECT g, sum(v)::BIGINT AS s, count(*) AS n_cal
-                FROM base WHERE cal GROUP BY g
-            ),
-            dev AS (
-                SELECT b.g, b.cal, cs.n_cal,
-                       abs(b.v * cs.n_cal - cs.s)::BIGINT AS r
-                FROM base b JOIN cs USING (g)
-            ),
-            ks AS (
-                SELECT g,
-                       least(n_cal,
-                             ((n_cal + 1) * 900 + 999) // 1000) AS k_rank
-                FROM cs
-            ),
-            grid AS (
-                SELECT g, r, count(*) AS c
-                FROM dev WHERE cal GROUP BY 1, 2
-            ),
-            cum AS (
-                SELECT g, r,
-                       sum(c) OVER (PARTITION BY g ORDER BY r
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cm
-                FROM grid
-            ),
-            q AS (
-                SELECT cum.g, min(r) AS q_num, max(k_rank) AS k_rank
-                FROM cum JOIN ks USING (g)
-                WHERE cm >= k_rank GROUP BY cum.g
-            )
-            SELECT d.g AS event_type,
-                   max(d.n_cal) AS n_cal,
-                   count(*) AS n_test,
-                   max(q.k_rank) AS k_rank,
-                   max(q.q_num) AS q_num,
-                   sum((d.r <= q.q_num)::INT)::BIGINT AS n_covered
-            FROM dev d JOIN q ON d.g = q.g
-            WHERE NOT d.cal
-            GROUP BY d.g ORDER BY event_type
-        """,
-        "ext_label_propagation": """
-            WITH e0 AS MATERIALIZED (
-                SELECT a.l_partkey AS p1, b.l_partkey AS p2
-                FROM lineitem a JOIN lineitem b
-                  ON a.l_orderkey = b.l_orderkey
-                 AND a.l_partkey < b.l_partkey
-                GROUP BY 1, 2 HAVING count(*) >= 2
-            ),
-            sym AS MATERIALIZED (
-                SELECT p1 AS a, p2 AS b FROM e0
-                UNION ALL SELECT p2 AS a, p1 AS b FROM e0
-            ),
-            l0 AS MATERIALIZED (
-                SELECT DISTINCT a AS node, a AS lbl FROM sym
-            ),
-            r1 AS MATERIALIZED (
-                SELECT node, lbl FROM (
-                    SELECT s.a AS node, l.lbl, count(*) AS c,
-                           row_number() OVER (PARTITION BY s.a
-                               ORDER BY count(*) DESC, l.lbl) AS rn
-                    FROM sym s JOIN l0 l ON s.b = l.node
-                    GROUP BY s.a, l.lbl
-                ) WHERE rn = 1
-            ),
-            r2 AS MATERIALIZED (
-                SELECT node, lbl FROM (
-                    SELECT s.a AS node, l.lbl, count(*) AS c,
-                           row_number() OVER (PARTITION BY s.a
-                               ORDER BY count(*) DESC, l.lbl) AS rn
-                    FROM sym s JOIN r1 l ON s.b = l.node
-                    GROUP BY s.a, l.lbl
-                ) WHERE rn = 1
-            ),
-            r3 AS MATERIALIZED (
-                SELECT node, lbl FROM (
-                    SELECT s.a AS node, l.lbl, count(*) AS c,
-                           row_number() OVER (PARTITION BY s.a
-                               ORDER BY count(*) DESC, l.lbl) AS rn
-                    FROM sym s JOIN r2 l ON s.b = l.node
-                    GROUP BY s.a, l.lbl
-                ) WHERE rn = 1
-            )
-            SELECT node, lbl AS community FROM r3 ORDER BY node
-        """,
-        "ext_pareto_skyline": """
-            WITH prof AS (
-                SELECT p_partkey, p_retailprice, p_size,
-                       sum(l_quantity) AS total_qty
-                FROM part JOIN lineitem ON p_partkey = l_partkey
-                GROUP BY 1, 2, 3
-            )
-            SELECT s.p_partkey, s.p_retailprice, s.p_size, s.total_qty
-            FROM prof s
-            WHERE NOT EXISTS (
-                SELECT 1 FROM prof d
-                WHERE d.p_retailprice <= s.p_retailprice
-                  AND d.p_size <= s.p_size
-                  AND d.total_qty >= s.total_qty
-                  AND (d.p_retailprice < s.p_retailprice
-                       OR d.p_size < s.p_size
-                       OR d.total_qty > s.total_qty)
-            )
-            ORDER BY s.p_partkey
-        """,
-        "ext_weighted_median": """
-            WITH grid AS (
-                SELECT l_returnflag AS g, l_extendedprice AS v,
-                       sum(l_quantity) AS w
-                FROM lineitem GROUP BY 1, 2
-            ),
-            cum AS (
-                SELECT g, v,
-                       sum(w) OVER (PARTITION BY g ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cumw,
-                       sum(w) OVER (PARTITION BY g) AS tw
-                FROM grid
-            )
-            SELECT g AS l_returnflag,
-                   round((min(CASE WHEN cumw >= tw / 2.0 THEN v END)
-                          + min(CASE WHEN cumw > tw / 2.0 THEN v END)
-                         ) / 2.0, 6) AS weighted_median,
-                   max(tw) AS total_weight
-            FROM cum GROUP BY 1 ORDER BY 1
-        """,
-        "llm_feature_hash": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(string_split_regex(lower(trim(text)),
-                                                 '\\s+')) AS t
-                FROM documents WHERE doc_id % 7 = 0
-            ),
-            h AS (
-                SELECT doc_id,
-                       ('0x' || substr(md5(t), 1, 6))::BIGINT % 64 AS idx,
-                       CASE WHEN ('0x' || substr(md5(t), 7, 1))::BIGINT
-                                 % 2 = 0
-                            THEN 1 ELSE -1 END AS s
-                FROM toks
-            )
-            SELECT doc_id, idx, sum(s)::BIGINT AS val
-            FROM h GROUP BY 1, 2 HAVING sum(s) != 0
-            ORDER BY doc_id, idx
-        """,
-        "ext_kruskal_wallis": """
-            WITH cells AS (
-                SELECT round(value, 2) AS v, event_type AS g,
-                       count(*) AS c
-                FROM events GROUP BY 1, 2
-            ),
-            per_v AS (SELECT v, sum(c) AS t FROM cells GROUP BY 1),
-            grid AS (
-                SELECT v, t,
-                       coalesce(sum(t) OVER (
-                           ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0)
-                       + (t + 1) / 2.0 AS midrank
-                FROM per_v
-            ),
-            per_g AS (
-                SELECT g, sum(c) AS n, sum(c * midrank) AS r
-                FROM cells JOIN grid USING (v) GROUP BY 1
-            ),
-            ties AS (
-                SELECT sum(t::DOUBLE * t * t - t) AS ties FROM grid
-            ),
-            tot AS (
-                SELECT count(*) AS k_groups, sum(n)::BIGINT AS n_total,
-                       sum(r * r / n) AS rr
-                FROM per_g
-            ),
-            h AS (
-                SELECT k_groups, n_total, ties,
-                       12.0 / (n_total::DOUBLE * (n_total + 1)) * rr
-                       - 3.0 * (n_total + 1) AS h_stat,
-                       1.0 - ties / (n_total::DOUBLE * n_total * n_total
-                                     - n_total) AS corr
-                FROM tot, ties
-            )
-            SELECT k_groups, n_total,
-                   round(h_stat, 6) AS h_stat,
-                   round(h_stat / corr, 6) AS h_corrected,
-                   (k_groups - 1)::BIGINT AS dof
-            FROM h
-        """,
-        "ext_brown_forsythe": """
-            WITH ev AS (
-                SELECT event_type AS g, round(value, 2) AS x FROM events
-            ),
-            grid AS (
-                SELECT g, x AS v, count(*) AS c FROM ev GROUP BY 1, 2
-            ),
-            cum AS (
-                SELECT g, v,
-                       sum(c) OVER (PARTITION BY g ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cum,
-                       sum(c) OVER (PARTITION BY g) AS n
-                FROM grid
-            ),
-            med AS (
-                SELECT g,
-                       (min(CASE WHEN cum >= ((n + 1) // 2) THEN v END)
-                        + min(CASE WHEN cum >= (n // 2 + 1) THEN v END)
-                       ) / 2.0 AS med
-                FROM cum GROUP BY 1
-            ),
-            z AS (
-                SELECT ev.g, abs(ev.x - med.med) AS z
-                FROM ev JOIN med USING (g)
-            ),
-            per AS (
-                SELECT g, count(z) AS n, sum(z) AS s1, sum(z*z) AS s2
-                FROM z GROUP BY 1
-            ),
-            tot AS (
-                SELECT count(*) AS k_groups,
-                       sum(n)::BIGINT AS n_total,
-                       sum(s1*s1/n) AS sb_raw,
-                       sum(s1) AS S1, sum(s2) AS S2
-                FROM per
-            ),
-            c AS (
-                SELECT k_groups, n_total,
-                       greatest(0.0, sb_raw - S1*S1/n_total) AS ssb,
-                       greatest(0.0, S2 - sb_raw) AS ssw
-                FROM tot
-            )
-            SELECT k_groups, n_total,
-                   round(ssb, 3) AS ss_between,
-                   round(ssw, 3) AS ss_within,
-                   round((ssb / (k_groups - 1))
-                         / (ssw / (n_total - k_groups)), 6) AS f_stat
-            FROM c
-        """,
-        "ext_ohlc_bars": """
-            WITH ranked AS (
-                SELECT event_type,
-                       strftime(date_trunc('hour', ts),
-                                '%Y-%m-%d %H:%M:%S') AS bucket_ts,
-                       value,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts, event_id) AS rn_a,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts DESC, event_id DESC) AS rn_d
-                FROM events
-            )
-            SELECT event_type, bucket_ts,
-                   min(CASE WHEN rn_a = 1 THEN value END) AS open,
-                   max(value) AS high,
-                   min(value) AS low,
-                   min(CASE WHEN rn_d = 1 THEN value END) AS close,
-                   round(sum(round(value * 10000.0)::BIGINT)
-                         / (count(*) * 10000.0), 6) AS mean_price,
-                   count(*) AS n_ticks
-            FROM ranked GROUP BY 1, 2
-            ORDER BY event_type, bucket_ts
-        """,
-        "ext_target_encoding": """
-            WITH rws AS (
-                SELECT o.o_orderkey, c.c_mktsegment,
-                       o.o_totalprice::DOUBLE AS y
-                FROM orders o JOIN customer c
-                  ON o.o_custkey = c.c_custkey
-            ),
-            per AS (
-                SELECT c_mktsegment, count(y) AS n, sum(y) AS s
-                FROM rws GROUP BY 1
-            ),
-            prior AS (SELECT avg(y) AS prior FROM rws)
-            SELECT r.o_orderkey, r.c_mktsegment,
-                   round((s - y + 20.0 * prior) / (n - 1 + 20.0), 6)
-                       AS loo_enc
-            FROM rws r JOIN per USING (c_mktsegment), prior
-            ORDER BY o_orderkey
-        """,
-        "ext_link_prediction": """
-            WITH e0 AS (
-                SELECT a.l_partkey AS p1, b.l_partkey AS p2
-                FROM lineitem a JOIN lineitem b
-                  ON a.l_orderkey = b.l_orderkey
-                 AND a.l_partkey < b.l_partkey
-            ),
-            edges AS (
-                SELECT p1, p2 FROM e0 GROUP BY 1, 2 HAVING count(*) >= 2
-            ),
-            adj AS (
-                SELECT p1 AS u, p2 AS z FROM edges
-                UNION ALL
-                SELECT p2 AS u, p1 AS z FROM edges
-            ),
-            deg AS (SELECT z, count(*) AS dz FROM adj GROUP BY z),
-            mid AS (
-                SELECT adj.u, adj.z, deg.dz
-                FROM adj JOIN deg USING (z) WHERE deg.dz <= 1000
-            ),
-            scored AS (
-                SELECT l.u AS node_a, r.u AS node_b,
-                       count(*) AS common_neighbors,
-                       round(sum(1.0::DOUBLE / ln(l.dz)), 6) AS aa_score
-                FROM mid l JOIN mid r ON l.z = r.z AND l.u < r.u
-                GROUP BY 1, 2
-            )
-            SELECT s.* FROM scored s
-            WHERE NOT EXISTS (
-                SELECT 1 FROM edges e
-                WHERE e.p1 = s.node_a AND e.p2 = s.node_b
-            )
-            ORDER BY aa_score DESC, node_a, node_b
-            LIMIT 20
-        """,
-        "ext_k_anonymity": """
-            WITH c AS (
-                SELECT c_nationkey, round(c_acctbal, 0) AS bal_dollars,
-                       c_mktsegment
-                FROM customer
-            )
-            SELECT c_nationkey, bal_dollars,
-                   count(*) AS class_size,
-                   count(DISTINCT c_mktsegment) AS l_diversity,
-                   ((1000000 * 2 + count(*))
-                    // (2 * count(*)))::BIGINT AS max_reident_risk_e6
-            FROM c GROUP BY 1, 2 HAVING count(*) < 5
-            ORDER BY c_nationkey, bal_dollars
-        """,
-        "ext_fs_linkage": """
-            WITH """ + _FS_ORACLE_PAIRS.format(customer="customer") + """,
-            p AS (
-                SELECT id_a, id_b,
-                       COALESCE(levenshtein(name_a, name_b) <= 2,
-                                FALSE) AS name_agree,
-                       COALESCE(abs(bal_a - bal_b) < 500.0,
-                                FALSE) AS bal_agree,
-                       COALESCE((bal_a < 0.0) = (bal_b < 0.0),
-                                FALSE) AS sign_agree
-                FROM fs_pairs
-            ),
-            w AS (
-                SELECT *,
-                    CASE WHEN name_agree
-                         THEN log2(0.95::DOUBLE / 0.02::DOUBLE)
-                         ELSE log2((1.0::DOUBLE - 0.95::DOUBLE) / (1.0::DOUBLE - 0.02::DOUBLE))
-                    END AS w_name_agree,
-                    CASE WHEN bal_agree
-                         THEN log2(0.9::DOUBLE / 0.02::DOUBLE)
-                         ELSE log2((1.0::DOUBLE - 0.9::DOUBLE) / (1.0::DOUBLE - 0.02::DOUBLE))
-                    END AS w_bal_agree,
-                    CASE WHEN sign_agree
-                         THEN log2(0.98::DOUBLE / 0.7::DOUBLE)
-                         ELSE log2((1.0::DOUBLE - 0.98::DOUBLE) / (1.0::DOUBLE - 0.7::DOUBLE))
-                    END AS w_sign_agree
-                FROM p
-            ),
-            s AS (
-                SELECT *, round(w_name_agree + w_bal_agree + w_sign_agree, 6)
-                          AS match_weight
-                FROM w
-            ),
-            d AS (
-                SELECT *,
-                    CASE WHEN match_weight >= 8.0 THEN 'match'
-                         WHEN match_weight < 2.0 THEN 'non_match'
-                         ELSE 'possible_match' END AS decision
-                FROM s
-            )
-            SELECT * FROM d WHERE decision <> 'non_match'
-            ORDER BY match_weight DESC, id_a, id_b
-            LIMIT 200
-        """,
-        "ext_bloom_semijoin": """
-            WITH li AS (
-                SELECT l_partkey FROM lineitem
-                WHERE l_shipdate >= '1995-03-01'
-                  AND l_shipdate < '1995-04-01'
-            ),
-            bits AS (
-                SELECT DISTINCT
-                    ('0x' || substr(md5(l_partkey::VARCHAR),
-                                    1 + 6 * r.range, 6))::BIGINT % 4096
-                        AS bit
-                FROM li, range(3) r
-            ),
-            probe_bits AS (
-                SELECT p_partkey,
-                       ('0x' || substr(md5(p_partkey::VARCHAR),
-                                       1 + 6 * r.range, 6))::BIGINT % 4096
-                           AS bit
-                FROM part, range(3) r
-            ),
-            probed AS (
-                SELECT pb.p_partkey,
-                       min(CASE WHEN bits.bit IS NULL THEN 0 ELSE 1 END) = 1
-                           AS bloom_hit
-                FROM probe_bits pb LEFT JOIN bits USING (bit)
-                GROUP BY 1
-            ),
-            actual AS (SELECT DISTINCT l_partkey AS p_partkey FROM li),
-            flagged AS (
-                SELECT probed.bloom_hit,
-                       actual.p_partkey IS NOT NULL AS is_member
-                FROM probed LEFT JOIN actual USING (p_partkey)
-            )
-            SELECT count(*) AS n_probes,
-                   sum(is_member::INT)::BIGINT AS n_members,
-                   sum(bloom_hit::INT)::BIGINT AS n_hits,
-                   sum((bloom_hit AND NOT is_member)::INT)::BIGINT AS n_false_pos,
-                   sum((NOT is_member)::INT)::BIGINT AS n_non_members
-            FROM flagged
-        """,
-        "llm_dedup_containment": """
-            WITH w AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS words FROM documents),
-            sh AS (
-                SELECT doc_id, CASE WHEN len(words) >= 3
-                    THEN list_transform(range(1, len(words)-1),
-                                        i -> array_to_string(words[i:i+2], ' '))
-                    ELSE [array_to_string(words, ' ')] END AS shingles
-                FROM w
-            ),
-            ss AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
-            postings AS (
-                SELECT doc_id, len(s) AS n, unnest(s) AS shingle FROM ss
-            ),
-            capped AS (
-                SELECT * FROM (
-                    SELECT *, count(*) OVER (PARTITION BY shingle)
-                        AS bucket_n
-                    FROM postings
-                ) WHERE bucket_n <= 50
-            ),
-            agg AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       a.n AS n_a, b.n AS n_b, count(*) AS isect
-                FROM capped a JOIN capped b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2, 3, 4
-            ),
-            scored AS (
-                SELECT doc_a, doc_b,
-                       ((isect * 10000 * 2 + n_a)
-                        // (2 * n_a))::BIGINT AS containment_a_e4,
-                       ((isect * 10000 * 2 + n_b)
-                        // (2 * n_b))::BIGINT AS containment_b_e4
-                FROM agg
-                WHERE isect * 2 >= least(n_a, n_b)
-            )
-            SELECT * FROM scored
-            ORDER BY doc_a, doc_b
-        """,
-        "llm_dedup_edit_distance": """
-            WITH blocked AS (
-                SELECT doc_id,
-                       md5(substr(lower(trim(text)), 1, 32)) AS blk,
-                       length(lower(trim(text))) // 64 AS band,
-                       substr(lower(trim(text)), 1, 256) AS head
-                FROM documents
-            )
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   levenshtein(a.head, b.head) AS edit_dist
-            FROM blocked a
-            JOIN blocked b
-              ON a.blk = b.blk AND a.band = b.band
-             AND a.doc_id < b.doc_id
-            WHERE levenshtein(a.head, b.head) <= 24
-            ORDER BY doc_a, doc_b
-        """,
-        "ext_association_rules": """
-            WITH items AS (
-                SELECT DISTINCT l_orderkey AS bk, p_brand AS it
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-            ),
-            tot AS (SELECT count(DISTINCT bk) AS nb FROM items),
-            cnt AS (SELECT it, count(*) AS c FROM items GROUP BY 1),
-            pairs AS (
-                SELECT a.it AS item_a, b.it AS item_b,
-                       count(*) AS pair_n
-                FROM items a
-                JOIN items b ON a.bk = b.bk AND a.it <> b.it
-                GROUP BY 1, 2
-            ),
-            rules AS (
-                SELECT item_a, item_b, pair_n,
-                       ((pair_n * 1000000 * 2 + nb)
-                        // (2 * nb))::BIGINT AS support_e6,
-                       ((pair_n * 1000000 * 2 + ca.c)
-                        // (2 * ca.c))::BIGINT AS confidence_e6,
-                       ((pair_n * nb * 1000000 * 2 + ca.c * cb.c)
-                        // (2 * ca.c * cb.c))::BIGINT AS lift_e6
-                FROM pairs
-                JOIN cnt ca ON pairs.item_a = ca.it
-                JOIN cnt cb ON pairs.item_b = cb.it
-                CROSS JOIN tot
-            )
-            SELECT item_a, item_b, pair_n,
-                   support_e6, confidence_e6, lift_e6
-            FROM rules
-            ORDER BY lift_e6 DESC, item_a, item_b
-            LIMIT 20
-        """,
-        "ext_rfm_segmentation": """
-            WITH per_c AS (
-                SELECT o_custkey,
-                       max(o_orderdate) AS last_o,
-                       count(*) AS freq,
-                       round(sum(o_totalprice), 2) AS money
-                FROM orders GROUP BY 1
-            ),
-            ref AS (SELECT max(last_o) AS r FROM per_c),
-            rfm AS (
-                SELECT date_diff('day', last_o::DATE, r::DATE) AS rec,
-                       freq, money
-                FROM per_c CROSS JOIN ref
-            ),
-            q AS (
-                -- boundaries rounded at 6dp to mirror the Spark
-                -- selection operator's round_dp=6 output
-                SELECT list_transform(
-                           quantile_cont(rec, [0.25, 0.5, 0.75]),
-                           x -> round(x, 6)) AS qr,
-                       list_transform(
-                           quantile_cont(freq, [0.25, 0.5, 0.75]),
-                           x -> round(x, 6)) AS qf,
-                       list_transform(
-                           quantile_cont(money, [0.25, 0.5, 0.75]),
-                           x -> round(x, 6)) AS qm
-                FROM rfm
-            ),
-            scored AS (
-                SELECT (5 - (1 + (rec > qr[1])::INT + (rec > qr[2])::INT
-                             + (rec > qr[3])::INT)) AS r_score,
-                       (1 + (freq > qf[1])::INT + (freq > qf[2])::INT
-                        + (freq > qf[3])::INT) AS f_score,
-                       (1 + (money > qm[1])::INT + (money > qm[2])::INT
-                        + (money > qm[3])::INT) AS m_score,
-                       money
-                FROM rfm CROSS JOIN q
-            )
-            SELECT r_score, f_score, m_score,
-                   count(*) AS n_customers,
-                   round(sum(round(money * 100.0)::BIGINT)
-                         / (count(*) * 100.0), 2) AS avg_monetary
-            FROM scored GROUP BY 1, 2, 3
-        """,
-        "ext_welch_ttest": """
-            WITH per AS (
-                SELECT event_type, count(value) AS n,
-                       sum(value) AS s1, sum(value*value) AS s2
-                FROM events
-                WHERE event_type IN ('purchase', 'click')
-                GROUP BY 1
-            ),
-            st AS (
-                SELECT event_type, n, s1 / n AS mean,
-                       greatest(0.0, (s2 - s1*s1/n) / (n - 1)) AS var
-                FROM per
-            ),
-            j AS (
-                SELECT a.n AS n_a, a.mean AS ma, a.var AS va,
-                       b.n AS n_b, b.mean AS mb, b.var AS vb
-                FROM st a, st b
-                WHERE a.event_type = 'purchase' AND b.event_type = 'click'
-            ),
-            c AS (
-                SELECT n_a, n_b, ma, mb,
-                       (ma - mb) / sqrt(va/n_a + vb/n_b) AS t_stat,
-                       (va/n_a + vb/n_b) * (va/n_a + vb/n_b)
-                       / ((va/n_a)*(va/n_a)/(n_a - 1)
-                          + (vb/n_b)*(vb/n_b)/(n_b - 1)) AS dfw
-                FROM j
-            ),
-            e1 AS (SELECT *, abs(t_stat)/sqrt(2.0) AS x FROM c),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2)
-            SELECT n_a, n_b,
-                   round(ma, 6) AS mean_a, round(mb, 6) AS mean_b,
-                   round(t_stat, 6) AS t_stat, round(dfw, 6) AS df_welch,
-                   round(1.0 - erf, 6) AS p_normal
-            FROM e3
-        """,
-        "ext_anova": """
-            WITH per AS (
-                SELECT event_type, count(value) AS n,
-                       sum(value) AS s1, sum(value*value) AS s2
-                FROM events GROUP BY 1
-            ),
-            tot AS (
-                SELECT count(*) AS k_groups,
-                       sum(n)::BIGINT AS n_total,
-                       sum(s1*s1/n) AS sb_raw,
-                       sum(s1) AS S1, sum(s2) AS S2
-                FROM per
-            ),
-            c AS (
-                SELECT k_groups, n_total,
-                       greatest(0.0, sb_raw - S1*S1/n_total) AS ssb,
-                       greatest(0.0, S2 - sb_raw) AS ssw
-                FROM tot
-            )
-            SELECT k_groups, n_total,
-                   round(ssb, 3) AS ss_between,
-                   round(ssw, 3) AS ss_within,
-                   round((ssb / (k_groups - 1))
-                         / (ssw / (n_total - k_groups)), 6) AS f_stat
-            FROM c
-        """,
-        "ext_mann_whitney": """
-            WITH two AS (
-                SELECT round(value, 2) AS v, event_type
-                FROM events
-                WHERE event_type IN ('purchase', 'view')
-            ),
-            per AS (
-                SELECT v, count(*) AS t,
-                       sum(CASE WHEN event_type = 'purchase'
-                                THEN 1 ELSE 0 END) AS ta
-                FROM two GROUP BY 1
-            ),
-            g AS (
-                SELECT t, ta,
-                       coalesce(sum(t) OVER (
-                           ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0)
-                       + (t + 1) / 2.0 AS midrank
-                FROM per
-            ),
-            a AS (
-                SELECT sum(ta) AS n_a, sum(t - ta) AS n_b,
-                       sum(ta * midrank) AS ra,
-                       sum(t::DOUBLE * t * t - t) AS ties
-                FROM g
-            ),
-            c AS (
-                SELECT n_a, n_b,
-                       ra - n_a * (n_a + 1) / 2.0 AS u_a,
-                       (ra - n_a * (n_a + 1) / 2.0 - n_a*n_b/2.0)
-                       / sqrt(n_a*n_b/12.0
-                              * ((n_a + n_b + 1)
-                                 - ties / ((n_a + n_b)
-                                           * (n_a + n_b - 1)))) AS z
-                FROM a
-            ),
-            e1 AS (SELECT *, abs(z)/sqrt(2.0) AS x FROM c),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2)
-            SELECT n_a::BIGINT AS n_a, n_b::BIGINT AS n_b,
-                   round(u_a, 6) AS u_stat, round(z, 6) AS z_stat,
-                   round(1.0 - erf, 6) AS p_normal
-            FROM e3
-        """,
-        "ext_ks_test": """
-            WITH two AS (
-                SELECT round(value, 2) AS v, event_type
-                FROM events
-                WHERE event_type IN ('purchase', 'click')
-            ),
-            per AS (
-                SELECT v,
-                       sum(CASE WHEN event_type = 'purchase'
-                                THEN 1 ELSE 0 END) AS ca,
-                       sum(CASE WHEN event_type = 'click'
-                                THEN 1 ELSE 0 END) AS cb
-                FROM two GROUP BY 1
-            ),
-            ecdf AS (
-                SELECT
-                    sum(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                        / (sum(ca) OVER ())::DOUBLE AS fa,
-                    sum(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                        / (sum(cb) OVER ())::DOUBLE AS fb,
-                    sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-                FROM per
-            ),
-            a AS (
-                SELECT max(abs(fa - fb)) AS d,
-                       max(na)::BIGINT AS n_a, max(nb)::BIGINT AS n_b
-                FROM ecdf
-            )
-            SELECT n_a, n_b, round(d, 6) AS d_stat,
-                   round(least(1.0, 2.0 * exp(
-                       -2.0 * (n_a::DOUBLE * n_b / (n_a + n_b)) * d * d
-                   )), 6) AS p_asymptotic
-            FROM a
-        """,
-        "ext_chi_square": """
-            WITH cells AS (
-                SELECT c_nationkey AS a, c_mktsegment AS b,
-                       count(*) AS o
-                FROM customer GROUP BY 1, 2
-            ),
-            rm AS (SELECT a, sum(o) AS ra FROM cells GROUP BY 1),
-            cm AS (SELECT b, sum(o) AS cb FROM cells GROUP BY 1),
-            tot AS (
-                SELECT sum(o)::BIGINT AS n,
-                       count(DISTINCT a) AS ka,
-                       count(DISTINCT b) AS kb
-                FROM cells
-            ),
-            x AS (
-                SELECT (c.o - rm.ra::DOUBLE * cm.cb / t.n)
-                       * (c.o - rm.ra::DOUBLE * cm.cb / t.n)
-                       / (rm.ra::DOUBLE * cm.cb / t.n) AS x2,
-                       t.n, t.ka, t.kb
-                FROM cells c
-                JOIN rm ON c.a = rm.a
-                JOIN cm ON c.b = cm.b
-                CROSS JOIN tot t
-            ),
-            agg AS (
-                SELECT n, ka, kb, sum(x2) AS chi2
-                FROM x GROUP BY 1, 2, 3
-            )
-            SELECT n AS n_rows,
-                   ((ka - 1) * (kb - 1))::BIGINT AS dof,
-                   round(chi2, 6) AS chi2,
-                   round(sqrt(chi2 / (n * least(ka - 1, kb - 1))), 6)
-                       AS cramers_v
-            FROM agg
-        """,
-        "ext_spearman": """
-            WITH rows_in AS (
-                SELECT count(*)::DOUBLE AS rx_in, user_id,
-                       count(*) AS n_events,
-                       round(sum(value), 2) AS total_value
-                FROM events GROUP BY user_id
-            ),
-            base AS (
-                SELECT n_events::DOUBLE AS x, total_value AS y
-                FROM rows_in
-            ),
-            gx AS (
-                SELECT x AS v, count(*) AS t FROM base GROUP BY 1
-            ),
-            mx AS (
-                SELECT v,
-                       coalesce(sum(t) OVER (
-                           ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0)
-                       + (t + 1) / 2.0 AS r
-                FROM gx
-            ),
-            gy AS (
-                SELECT y AS v, count(*) AS t FROM base GROUP BY 1
-            ),
-            my AS (
-                SELECT v,
-                       coalesce(sum(t) OVER (
-                           ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0)
-                       + (t + 1) / 2.0 AS r
-                FROM gy
-            ),
-            ranked AS (
-                SELECT mx.r AS rx, my.r AS ry
-                FROM base
-                JOIN mx ON base.x = mx.v
-                JOIN my ON base.y = my.v
-            ),
-            a AS (
-                SELECT count(*) AS n_rows,
-                       sum(rx) AS sx, sum(ry) AS sy,
-                       sum(rx*ry) AS sxy,
-                       sum(rx*rx) AS sxx, sum(ry*ry) AS syy
-                FROM ranked
-            )
-            SELECT n_rows,
-                   round((sxy - sx*sy/n_rows)
-                         / sqrt(greatest(0.0,
-                               (sxx - sx*sx/n_rows)
-                               * (syy - sy*sy/n_rows))), 6)
-                       AS spearman_rho
-            FROM a
-        """,
-        "ext_log_rank": """
-            WITH pu AS (
-                SELECT user_id,
-                       min(epoch_us(ts)) AS f,
-                       max(epoch_us(ts)) AS l,
-                       min(CASE WHEN event_type = 'error'
-                                THEN epoch_us(ts) END) AS e
-                FROM events GROUP BY 1
-            ),
-            spans AS (
-                SELECT ((coalesce(e, l) - f) // 86400000000)::INT AS t,
-                       (e IS NOT NULL)::INT AS ev,
-                       CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END
-                           AS in_a
-                FROM pu
-            ),
-            per_t AS (
-                SELECT t, count(*) AS tot,
-                       sum(in_a) AS tot_a,
-                       sum(ev) AS d,
-                       sum(CASE WHEN in_a = 1 THEN ev ELSE 0 END) AS da
-                FROM spans GROUP BY 1
-            ),
-            grid AS (
-                SELECT d, da,
-                       sum(tot) OVER ()
-                       - coalesce(sum(tot) OVER (
-                             ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0) AS n,
-                       sum(tot_a) OVER ()
-                       - coalesce(sum(tot_a) OVER (
-                             ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0) AS na
-                FROM per_t
-            ),
-            terms AS (
-                SELECT da - d * (na::DOUBLE / n) AS oe,
-                       coalesce(d * (na::DOUBLE / n)
-                                * (1.0 - na::DOUBLE / n)
-                                * (n - d)
-                                / nullif((n - 1)::DOUBLE, 0.0),
-                                0.0) AS v
-                FROM grid WHERE d > 0
-            ),
-            a AS (
-                SELECT sum(oe) AS soe, sum(v) AS sv,
-                       count(*) AS n_event_times
-                FROM terms
-            ),
-            c AS (
-                SELECT n_event_times, soe,
-                       coalesce(soe * soe / nullif(sv, 0.0), 0.0) AS chi2,
-                       coalesce(soe / nullif(sqrt(sv), 0.0), 0.0) AS z
-                FROM a
-            ),
-            e1 AS (SELECT *, abs(z)/sqrt(2.0) AS x FROM c),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2)
-            SELECT n_event_times,
-                   round(soe, 6) AS observed_minus_expected,
-                   round(chi2, 6) AS chi2,
-                   round(1.0 - erf, 6) AS p_normal
-            FROM e3
-        """,
-        "ext_fdr_screen": """
-            WITH per AS (
-                SELECT c_nationkey, count(*) AS n,
-                       sum(c_acctbal) AS s1
-                FROM customer GROUP BY 1
-            ),
-            gl AS (
-                SELECT avg(c_acctbal) AS mu,
-                       var_samp(c_acctbal) AS var
-                FROM customer
-            ),
-            c AS (
-                SELECT c_nationkey,
-                       (s1 / n - mu) / sqrt(var / n) AS z
-                FROM per CROSS JOIN gl
-            ),
-            e1 AS (SELECT *, abs(z)/sqrt(2.0) AS x FROM c),
-            e2 AS (SELECT *, 1.0/(1.0 + 0.3275911*x) AS tt FROM e1),
-            e3 AS (SELECT *,
-                       1.0 - (0.254829592*tt - 0.284496736*tt*tt
-                              + 1.421413741*tt*tt*tt
-                              - 1.453152027*tt*tt*tt*tt
-                              + 1.061405429*tt*tt*tt*tt*tt)
-                             * exp(-x*x) AS erf
-                   FROM e2),
-            tests AS (
-                SELECT c_nationkey, round(1.0 - erf, 9) AS p_value
-                FROM e3
-            ),
-            ranked AS (
-                SELECT c_nationkey, p_value,
-                       row_number() OVER (
-                           ORDER BY p_value, c_nationkey) AS p_rank,
-                       count(*) OVER () AS m
-                FROM tests
-            )
-            SELECT c_nationkey, p_value, p_rank,
-                   round(least(1.0, min(p_value * m / p_rank) OVER (
-                       ORDER BY p_rank
-                       ROWS BETWEEN CURRENT ROW
-                                AND UNBOUNDED FOLLOWING)), 6) AS q_value
-            FROM ranked
-            ORDER BY p_rank
-        """,
-        # --- TPC-H suite (operators/tpch.py) -- rounding and aliases
-        # mirror the Spark plans exactly; every LIMIT is preceded by a
-        # total order with a unique tie-breaker key.
-        "tpch_q2": """
-            WITH supply AS (
-                SELECT l_partkey, l_suppkey,
-                       floor(min(l_extendedprice
-                                 / nullif(l_quantity, 0)) * 10000 + 0.5)
-                           / 10000 AS supply_cost
-                FROM lineitem GROUP BY l_partkey, l_suppkey
-            ),
-            regional AS (
-                SELECT p.p_partkey, p.p_brand, s.s_suppkey, s.s_name,
-                       n.n_name, sp.supply_cost,
-                       row_number() OVER (
-                           PARTITION BY p.p_partkey
-                           ORDER BY sp.supply_cost, s.s_suppkey) AS rk
-                FROM supply sp
-                JOIN supplier s ON sp.l_suppkey = s.s_suppkey
-                JOIN nation n ON s.s_nationkey = n.n_nationkey
-                JOIN region r ON n.n_regionkey = r.r_regionkey
-                JOIN part p ON sp.l_partkey = p.p_partkey
-                WHERE r.r_name = 'EUROPE' AND p.p_size = 15
-            )
-            SELECT p_partkey, p_brand, s_suppkey, s_name, n_name,
-                   supply_cost
-            FROM regional WHERE rk = 1
-            ORDER BY supply_cost DESC, p_partkey
-            LIMIT 20
-        """,
-        "tpch_q8": """
-            SELECT year(o.o_orderdate) AS o_year,
-                   sum(CASE WHEN n2.n_name = 'NATION_3'
-                            THEN cast(round(l.l_extendedprice
-                                 * (1 - l.l_discount) * 10000) as bigint)
-                            ELSE 0 END)::BIGINT AS nation_volume_e4,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT
-                       AS total_volume_e4
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-            JOIN region r ON n1.n_regionkey = r.r_regionkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-            WHERE p.p_type = 'PROMO' AND r.r_name = 'ASIA'
-              AND o.o_orderdate >= TIMESTAMP '1997-01-01'
-              AND o.o_orderdate < TIMESTAMP '1999-01-01'
-            GROUP BY o_year
-            ORDER BY o_year
-        """,
-        "tpch_q9": """
-            SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint)
-                       - cast(round(0.6 * p.p_retailprice * l.l_quantity
-                                    * 10000) as bigint))::BIGINT AS sum_profit_e4
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            WHERE contains(p.p_name, 'red')
-            GROUP BY nation, o_year
-            ORDER BY nation, o_year DESC
-        """,
-        "tpch_q11": """
-            WITH traded AS (
-                SELECT l.l_partkey,
-                       sum(cast(round(l.l_extendedprice * l.l_quantity
-                                      * 100) as bigint)) AS part_value_cents
-                FROM lineitem l
-                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                JOIN nation n ON s.s_nationkey = n.n_nationkey
-                WHERE n.n_name = 'NATION_7'
-                GROUP BY l.l_partkey
-            )
-            SELECT l_partkey, part_value_cents::BIGINT AS part_value_cents
-            FROM traded
-            WHERE part_value_cents * 1000 > (SELECT sum(part_value_cents)
-                                             FROM traded)
-            ORDER BY part_value_cents DESC, l_partkey
-        """,
-        "tpch_q12": """
-            SELECT CASE
-                       WHEN date_diff('day', o.o_orderdate::DATE, l.l_shipdate::DATE)
-                            BETWEEN 30 AND 59 THEN '30-60d'
-                       ELSE '>60d'
-                   END AS delay_tier,
-                   sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                            THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-                   sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                            THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-              AND l.l_shipdate < TIMESTAMP '1998-01-01'
-              AND date_diff('day', o.o_orderdate::DATE, l.l_shipdate::DATE) >= 30
-            GROUP BY delay_tier
-            ORDER BY delay_tier
-        """,
-        "tpch_q13": """
-            WITH per_cust AS (
-                SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-                FROM customer c
-                LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-                                  AND o.o_orderpriority <> '5-LOW'
-                GROUP BY c.c_custkey
-            )
-            SELECT c_count, count(*) AS custdist
-            FROM per_cust
-            GROUP BY c_count
-            ORDER BY custdist DESC, c_count DESC
-        """,
-        "tpch_q16": """
-            SELECT p.p_brand, p.p_type, p.p_size,
-                   count(DISTINCT sp.l_suppkey) AS supplier_cnt
-            FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) sp
-            JOIN part p ON sp.l_partkey = p.p_partkey
-            WHERE p.p_brand <> 'Brand#5'
-              AND p.p_size IN (1, 7, 14, 23, 36, 45, 49, 3)
-              AND sp.l_suppkey NOT IN (
-                  SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-            GROUP BY p.p_brand, p.p_type, p.p_size
-            ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
-        """,
-        "tpch_q20": """
-            WITH promo AS (
-                SELECT p_partkey FROM part WHERE p_type = 'PROMO'
-            ),
-            yr AS (
-                SELECT l_suppkey, sum(l_quantity) AS q
-                FROM lineitem JOIN promo ON l_partkey = p_partkey
-                WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-                  AND l_shipdate < TIMESTAMP '1998-01-01'
-                GROUP BY l_suppkey
-            ),
-            alltime AS (
-                SELECT l_suppkey, sum(l_quantity) AS q
-                FROM lineitem JOIN promo ON l_partkey = p_partkey
-                GROUP BY l_suppkey
-            )
-            SELECT s.s_suppkey, s.s_name
-            FROM supplier s
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            WHERE n.n_name = 'NATION_2'
-              AND s.s_suppkey IN (
-                  SELECT yr.l_suppkey FROM yr
-                  JOIN alltime a ON yr.l_suppkey = a.l_suppkey
-                  WHERE yr.q > 0.18::DOUBLE * a.q)
-            ORDER BY s.s_suppkey
-        """,
-        "tpch_q21": """
-            WITH li AS (
-                SELECT l.l_orderkey, l.l_suppkey,
-                       CASE WHEN l.l_shipdate
-                                 > o.o_orderdate + INTERVAL 60 DAY
-                            THEN 1 ELSE 0 END AS late
-                FROM lineitem l
-                JOIN orders o ON l.l_orderkey = o.o_orderkey
-                WHERE o.o_orderstatus = 'F'
-            ),
-            per_order AS (
-                SELECT l_orderkey,
-                       count(DISTINCT l_suppkey) AS n_supp,
-                       count(DISTINCT CASE WHEN late = 1
-                                           THEN l_suppkey END) AS n_late
-                FROM li GROUP BY l_orderkey
-            ),
-            sole AS (
-                SELECT DISTINCT li.l_orderkey, li.l_suppkey
-                FROM li JOIN per_order p ON li.l_orderkey = p.l_orderkey
-                WHERE li.late = 1 AND p.n_supp > 1 AND p.n_late = 1
-            )
-            SELECT s.s_name, count(*) AS numwait
-            FROM sole
-            JOIN supplier s ON sole.l_suppkey = s.s_suppkey
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            WHERE n.n_name = 'NATION_14'
-            GROUP BY s.s_name
-            ORDER BY numwait DESC, s.s_name
-            LIMIT 100
-        """,
-        "tpch_q3": """
-            SELECT l.l_orderkey,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT AS revenue_e4,
-                   o.o_orderdate
-            FROM customer c
-            JOIN orders o ON c.c_custkey = o.o_custkey
-            JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-            WHERE c.c_mktsegment = 'BUILDING'
-              AND o.o_orderdate < TIMESTAMP '1998-06-15'
-              AND l.l_shipdate > TIMESTAMP '1998-06-15'
-            GROUP BY l.l_orderkey, o.o_orderdate
-            ORDER BY revenue_e4 DESC, l.l_orderkey
-            LIMIT 10
-        """,
-        "tpch_q4": """
-            SELECT o_orderpriority, count(*) AS order_count
-            FROM orders o
-            WHERE o.o_orderdate >= TIMESTAMP '1997-07-01'
-              AND o.o_orderdate < TIMESTAMP '1997-10-01'
-              AND EXISTS (
-                  SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey
-                    AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-              )
-            GROUP BY o_orderpriority
-            ORDER BY o_orderpriority
-        """,
-        "tpch_q5": """
-            SELECT n.n_name,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT AS revenue_e4
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                           AND c.c_nationkey = s.s_nationkey
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
-            WHERE r.r_name = 'ASIA'
-              AND o.o_orderdate >= TIMESTAMP '1997-01-01'
-              AND o.o_orderdate < TIMESTAMP '1998-01-01'
-            GROUP BY n.n_name
-            ORDER BY revenue_e4 DESC, n.n_name
-        """,
-        "tpch_q6": """
-            SELECT sum(cast(round(l_extendedprice * l_discount * 10000)
-                            as bigint))::BIGINT AS revenue_e4
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-              AND l_shipdate < TIMESTAMP '1998-01-01'
-              AND l_discount >= 0.05 AND l_discount <= 0.07
-              AND l_quantity < 24.0
-        """,
-        "tpch_q7": """
-            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   year(l.l_shipdate) AS l_year,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT AS revenue_e4
-            FROM lineitem l
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-            WHERE l.l_shipdate >= TIMESTAMP '1998-01-01'
-              AND l.l_shipdate < TIMESTAMP '2000-01-01'
-              AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_14')
-                   OR (n1.n_name = 'NATION_14' AND n2.n_name = 'NATION_3'))
-            GROUP BY supp_nation, cust_nation, l_year
-            ORDER BY supp_nation, cust_nation, l_year
-        """,
-        "tpch_q10": """
-            SELECT c.c_custkey, c.c_name,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT AS revenue_e4,
-                   c.c_acctbal, n.n_name
-            FROM orders o
-            JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            WHERE o.o_orderdate >= TIMESTAMP '1997-10-01'
-              AND o.o_orderdate < TIMESTAMP '1998-01-01'
-              AND l.l_returnflag = 'R'
-            GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-            ORDER BY revenue_e4 DESC, c.c_custkey
-            LIMIT 20
-        """,
-        "tpch_q14": """
-            SELECT sum(CASE WHEN p.p_type = 'PROMO'
-                            THEN cast(round(l.l_extendedprice
-                                 * (1 - l.l_discount) * 10000) as bigint)
-                            ELSE 0 END)::BIGINT AS promo_revenue_e4,
-                   sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT
-                       AS total_revenue_e4
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            WHERE l.l_shipdate >= TIMESTAMP '1998-03-01'
-              AND l.l_shipdate < TIMESTAMP '1998-04-01'
-        """,
-        "tpch_q15": """
-            WITH rev AS (
-                SELECT l_suppkey,
-                       sum(cast(round(l_extendedprice * (1 - l_discount)
-                                      * 10000) as bigint))
-                           AS total_revenue_e4
-                FROM lineitem
-                WHERE l_shipdate >= TIMESTAMP '1997-07-01'
-                  AND l_shipdate < TIMESTAMP '1997-10-01'
-                GROUP BY l_suppkey
-            )
-            SELECT s.s_suppkey, s.s_name,
-                   r.total_revenue_e4::BIGINT AS total_revenue_e4
-            FROM rev r
-            JOIN supplier s ON r.l_suppkey = s.s_suppkey
-            WHERE r.total_revenue_e4 = (SELECT max(total_revenue_e4) FROM rev)
-            ORDER BY s.s_suppkey
-        """,
-        "tpch_q17": """
-            WITH brand_lines AS (
-                SELECT l.l_quantity, l.l_extendedprice,
-                       avg(l.l_quantity)
-                           OVER (PARTITION BY l.l_partkey) AS avg_qty
-                FROM lineitem l
-                JOIN part p ON l.l_partkey = p.p_partkey
-                WHERE p.p_brand = 'Brand#9'
-            )
-            SELECT sum(cast(round(l_extendedprice * 100) as bigint))::BIGINT
-                       AS total_revenue_cents,
-                   7.0::DOUBLE AS years
-            FROM brand_lines
-            WHERE l_quantity < 0.2 * avg_qty
-        """,
-        "tpch_q18": """
-            WITH big AS (
-                SELECT l_orderkey, round(sum(l_quantity), 1) AS total_qty
-                FROM lineitem
-                GROUP BY l_orderkey
-                HAVING round(sum(l_quantity), 1) > 300.0
-            )
-            SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate,
-                   o.o_totalprice, b.total_qty
-            FROM big b
-            JOIN orders o ON b.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            ORDER BY o.o_totalprice DESC, o.o_orderkey
-            LIMIT 100
-        """,
-        "tpch_q19": """
-            SELECT sum(cast(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 10000) as bigint))::BIGINT AS revenue_e4
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-                   AND l.l_quantity BETWEEN 1.0 AND 20.0)
-               OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 10 AND 30
-                   AND l.l_quantity BETWEEN 10.0 AND 30.0)
-               OR (p.p_brand = 'Brand#9' AND p.p_size BETWEEN 20 AND 50
-                   AND l.l_quantity BETWEEN 20.0 AND 50.0)
-        """,
-        "tpch_q22": """
-            SELECT n.n_name, count(*) AS numcust,
-                   sum(cast(round(c.c_acctbal * 100) as bigint))::BIGINT
-                       AS totacctbal_cents
-            FROM customer c
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            WHERE cast(round(c.c_acctbal * 100) as bigint)
-                  * (SELECT count(*) FROM customer WHERE c_acctbal > 0)
-                  > (SELECT sum(cast(round(c_acctbal * 100) as bigint))
-                     FROM customer WHERE c_acctbal > 0)
-              AND NOT EXISTS (
-                  SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '1999-08-01'
-              )
-            GROUP BY n.n_name
-            ORDER BY n.n_name
-        """,
-        "ext_mcnemar": """
-            WITH per AS (
-                SELECT user_id,
-                       max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-                       max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-                FROM events GROUP BY 1
-            ),
-            t AS (
-                SELECT count(*) AS n_units,
-                       sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END) AS b01,
-                       sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END) AS b10
-                FROM per
-            )
-            SELECT n_units, b01::BIGINT AS b01, b10::BIGINT AS b10,
-                   CASE WHEN b01 + b10 > 0 THEN
-                       (((b01 - b10) * (b01 - b10) * 1000000 * 2
-                         + (b01 + b10)) // (2 * (b01 + b10)))::BIGINT
-                   END AS chi2_e6
-            FROM t
-        """,
-        "ext_cramers_v": """
-            WITH cells AS (
-                SELECT o_orderpriority AS x, o_orderstatus AS y,
-                       count(*) AS obs
-                FROM orders GROUP BY 1, 2
-            ),
-            rm AS (SELECT x, sum(obs) AS ri FROM cells GROUP BY 1),
-            cm AS (SELECT y, sum(obs) AS cj FROM cells GROUP BY 1),
-            tt AS (
-                SELECT sum(obs) AS n, count(DISTINCT x) AS r,
-                       count(DISTINCT y) AS c
-                FROM cells
-            ),
-            -- full r x c grid: unobserved cells still contribute (0-E)^2/E
-            grid AS (
-                SELECT rm.x, cm.y, rm.ri, cm.cj,
-                       coalesce(cells.obs, 0) AS nij
-                FROM rm CROSS JOIN cm
-                LEFT JOIN cells ON cells.x = rm.x AND cells.y = cm.y
-            ),
-            terms AS (
-                SELECT ((n * nij - ri * cj) * (n * nij - ri * cj) * 1000000)
-                       // (n * ri * cj) AS term, n, r, c
-                FROM grid CROSS JOIN tt
-            ),
-            agg AS (
-                SELECT max(n) AS n, max(r) AS nx, max(c) AS ny,
-                       sum(term) AS chi2_e6
-                FROM terms
-            )
-            SELECT n::BIGINT AS n, nx::BIGINT AS n_x_cats,
-                   ny::BIGINT AS n_y_cats, chi2_e6::BIGINT AS chi2_e6,
-                   round(sqrt((chi2_e6::DOUBLE / 1000000.0)
-                              / (n::DOUBLE * least(nx - 1, ny - 1)::DOUBLE)),
-                         6) AS cramers_v
-            FROM agg
-        """,
-        "ext_fleiss_kappa": """
-            WITH cell AS (
-                SELECT l_partkey AS i, l_returnflag AS j, count(*) AS nij
-                FROM lineitem GROUP BY 1, 2
-            ),
-            per_item AS (
-                SELECT i, sum(nij) AS ni, sum(nij * (nij - 1)) AS agree
-                FROM cell GROUP BY 1 HAVING sum(nij) >= 2
-            ),
-            items AS (
-                SELECT i, ni,
-                       ((agree * 1000000 * 2 + ni * (ni - 1))
-                        // (2 * ni * (ni - 1)))::BIGINT AS pi_e6
-                FROM per_item
-            ),
-            cat AS (
-                SELECT j, sum(nij) AS cj FROM cell
-                WHERE i IN (SELECT i FROM per_item) GROUP BY 1
-            ),
-            sc AS (
-                SELECT count(*) AS n_items, sum(ni) AS n_ratings,
-                       sum(pi_e6) AS sum_pi
-                FROM items
-            ),
-            pe AS (
-                SELECT max(n_items) AS n_items, max(n_ratings) AS n_ratings,
-                       max(sum_pi) AS sum_pi, sum(cj * cj) AS sum_cj2
-                FROM cat CROSS JOIN sc
-            ),
-            o AS (
-                SELECT n_items, n_ratings,
-                       ((sum_pi * 2 + n_items) // (2 * n_items))::BIGINT
-                           AS pbar_e6,
-                       ((sum_cj2 * 1000000 * 2 + n_ratings * n_ratings)
-                        // (2 * n_ratings * n_ratings))::BIGINT AS pe_e6
-                FROM pe
-            )
-            SELECT n_items::BIGINT AS n_items, n_ratings::BIGINT AS n_ratings,
-                   pbar_e6, pe_e6,
-                   CASE WHEN 1000000 - pe_e6 > 0 THEN
-                       ((CASE WHEN pbar_e6 < pe_e6 THEN -1 ELSE 1 END)
-                        * ((abs(pbar_e6 - pe_e6) * 1000000 * 2
-                            + (1000000 - pe_e6))
-                           // (2 * (1000000 - pe_e6))))::BIGINT
-                   END AS kappa_e6
-            FROM o
-        """,
-        "ext_iptw_ate": """
-            WITH per AS (
-                SELECT user_id,
-                       max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                           AS t,
-                       sum(CASE WHEN event_type = 'purchase'
-                                THEN cast(round(value * 100) as bigint)
-                                ELSE 0 END) AS y,
-                       count(*) AS x
-                FROM events GROUP BY 1
-            ),
-            sc AS (
-                SELECT t, y,
-                       least(9500, greatest(500, 250 * x)) AS p
-                FROM per
-            ),
-            tot AS (
-                SELECT sum(t) AS n_treated, sum(1 - t) AS n_control,
-                       sum(CASE WHEN t = 1
-                                THEN (CASE WHEN y < 0 THEN -1 ELSE 1 END)
-                                     * ((abs(y) * 10000 * 2 + p) // (2 * p))
-                                ELSE 0 END) AS wt,
-                       sum(CASE WHEN t = 0
-                                THEN (CASE WHEN y < 0 THEN -1 ELSE 1 END)
-                                     * ((abs(y) * 10000 * 2 + (10000 - p))
-                                        // (2 * (10000 - p)))
-                                ELSE 0 END) AS wc,
-                       count(*) AS n
-                FROM sc
-            )
-            SELECT n_treated::BIGINT AS n_treated,
-                   n_control::BIGINT AS n_control,
-                   wt::BIGINT AS wsum_treated_cents,
-                   wc::BIGINT AS wsum_control_cents,
-                   ((CASE WHEN wt < wc THEN -1 ELSE 1 END)
-                    * ((abs(wt - wc) * 2 + n) // (2 * n)))::BIGINT
-                       AS ate_cents
-            FROM tot
-        """,
-        "llm_kneser_ney_bigram": """
-            WITH toks AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS w
-                FROM documents
-            ),
-            big AS (
-                SELECT w[i] || ' ' || w[i + 1] AS bigram
-                FROM toks, unnest(range(1, len(w))) AS t(i)
-                WHERE len(w) >= 2
-            ),
-            cab AS (SELECT bigram, count(*) AS c_ab FROM big GROUP BY 1),
-            typed AS (
-                SELECT bigram, c_ab,
-                       string_split(bigram, ' ')[1] AS a,
-                       string_split(bigram, ' ')[2] AS b
-                FROM cab
-            ),
-            ctx AS (
-                SELECT a, sum(c_ab) AS c_a, count(*) AS n1p_fwd
-                FROM typed GROUP BY 1
-            ),
-            cont AS (SELECT b, count(*) AS n1p_cont FROM typed GROUP BY 1),
-            sc AS (SELECT count(*) AS d FROM cab),
-            scored AS (
-                SELECT bigram, c_ab, c_a,
-                       ((greatest(4 * c_ab - 3, 0) * 1000000000)
-                        // (4 * c_a))::BIGINT
-                       + ((3 * n1p_fwd * n1p_cont * 1000000000)
-                          // (4 * c_a * d))::BIGINT AS p_kn_e9
-                FROM typed JOIN ctx USING (a) JOIN cont USING (b)
-                CROSS JOIN sc
-            )
-            SELECT bigram, c_ab::BIGINT AS c_ab, c_a::BIGINT AS c_a,
-                   p_kn_e9
-            FROM scored ORDER BY c_ab DESC, bigram LIMIT 20
-        """,
-        "llm_heavy_changes": """
-            WITH ts AS (
-                SELECT term,
-                       sum(CASE WHEN firsthalf THEN 1 ELSE 0 END) AS c_first,
-                       sum(CASE WHEN firsthalf THEN 0 ELSE 1 END) AS c_second
-                FROM (
-                    SELECT (doc_id % 2 = 0) AS firsthalf,
-                           unnest(string_split_regex(lower(trim(text)),
-                                                     '\\s+')) AS term
-                    FROM documents
-                ) GROUP BY 1
-                HAVING count(*) >= 5
-            ),
-            tt AS (SELECT sum(c_first) AS t1, sum(c_second) AS t2 FROM ts),
-            scored AS (
-                SELECT term, c_first, c_second,
-                       CASE WHEN c_first * t2 < c_second * t1
-                            THEN -1 ELSE 1 END AS direction,
-                       ((abs(c_first * t2 - c_second * t1)
-                         * 1000000000 * 2 + t1 * t2)
-                        // (2 * t1 * t2))::BIGINT AS abs_delta_e9
-                FROM ts CROSS JOIN tt
-            )
-            SELECT term, c_first::BIGINT AS c_first,
-                   c_second::BIGINT AS c_second,
-                   direction::INT AS direction, abs_delta_e9
-            FROM scored ORDER BY abs_delta_e9 DESC, term LIMIT 20
-        """,
-        "ext_cochran_q": """
-            WITH per AS (
-                SELECT user_id,
-                       max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                           AS f0,
-                       max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                           AS f1,
-                       max(CASE WHEN event_type = 'purchase'
-                                THEN 1 ELSE 0 END) AS f2
-                FROM events GROUP BY 1
-            ),
-            t AS (
-                SELECT count(*) AS n_units,
-                       sum(f0 + f1 + f2) AS sr,
-                       sum((f0 + f1 + f2) * (f0 + f1 + f2)) AS sr2,
-                       sum(f0) AS c0, sum(f1) AS c1, sum(f2) AS c2
-                FROM per
-            )
-            SELECT n_units, 3 AS k_treatments, sr::BIGINT AS n_positives,
-                   CASE WHEN 3 * sr - sr2 > 0 THEN
-                       ((2 * (3 * (c0 * c0 + c1 * c1 + c2 * c2) - sr * sr)
-                         * 1000000 * 2 + (3 * sr - sr2))
-                        // (2 * (3 * sr - sr2)))::BIGINT
-                   END AS q_e6
-            FROM t
-        """,
-        "ext_odds_ratio": """
-            WITH per AS (
-                SELECT user_id,
-                       max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                           AS e,
-                       max(CASE WHEN event_type = 'purchase'
-                                THEN 1 ELSE 0 END) AS o
-                FROM events GROUP BY 1
-            ),
-            t AS (
-                SELECT sum(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END) AS a,
-                       sum(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END) AS b,
-                       sum(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END) AS c,
-                       sum(CASE WHEN e = 0 AND o = 0 THEN 1 ELSE 0 END) AS d
-                FROM per
-            )
-            SELECT a::BIGINT AS a, b::BIGINT AS b,
-                   c::BIGINT AS c, d::BIGINT AS d,
-                   CASE WHEN b > 0 AND c > 0 THEN
-                       ((a * d * 1000000 * 2 + b * c)
-                        // (2 * b * c))::BIGINT END AS odds_ratio_e6,
-                   CASE WHEN c > 0 AND a + b > 0 THEN
-                       ((a * (c + d) * 1000000 * 2 + c * (a + b))
-                        // (2 * c * (a + b)))::BIGINT
-                   END AS relative_risk_e6,
-                   CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                       round(exp(ln((a::DOUBLE * d) / (b::DOUBLE * c))
-                                 - 1.96 * sqrt(1.0 / a + 1.0 / b
-                                               + 1.0 / c + 1.0 / d)), 6)
-                   END AS or_ci_lo,
-                   CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                       round(exp(ln((a::DOUBLE * d) / (b::DOUBLE * c))
-                                 + 1.96 * sqrt(1.0 / a + 1.0 / b
-                                               + 1.0 / c + 1.0 / d)), 6)
-                   END AS or_ci_hi
-            FROM t
-        """,
-        "ext_weibull_fit": """
-            WITH pu AS (
-                SELECT user_id,
-                       min(epoch_us(ts)) AS f,
-                       max(epoch_us(ts)) AS l,
-                       min(CASE WHEN event_type = 'error'
-                                THEN epoch_us(ts) END) AS e
-                FROM events GROUP BY 1
-            ),
-            spans AS (
-                SELECT ((coalesce(e, l) - f) // 86400000000)::INT AS t,
-                       (e IS NOT NULL) AS errored
-                FROM pu
-            ),
-            per_t AS (
-                SELECT t, count(*) AS total,
-                       sum(errored::INT) AS n_events
-                FROM spans GROUP BY 1
-            ),
-            grid AS (
-                SELECT t, n_events,
-                       sum(total) OVER ()
-                       - coalesce(sum(total) OVER (
-                             ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0) AS n_at_risk
-                FROM per_t
-            ),
-            km AS (
-                SELECT t, n_events,
-                       CASE WHEN min(1.0 - n_events / n_at_risk::DOUBLE)
-                                 OVER (ORDER BY t
-                                       ROWS UNBOUNDED PRECEDING) <= 0
-                            THEN NULL
-                            ELSE sum(CASE WHEN 1.0 - n_events
-                                               / n_at_risk::DOUBLE > 0
-                                     THEN cast(round(ln(1.0 - n_events
-                                              / n_at_risk::DOUBLE)
-                                              * 1000000000000) as bigint)
-                                     ELSE 0 END)
-                                 OVER (ORDER BY t
-                                       ROWS UNBOUNDED PRECEDING)
-                       END AS ls
-                FROM grid
-            ),
-            pts AS (
-                SELECT ln(t::DOUBLE) AS x, ln(-ls / 1e12) AS y
-                FROM km
-                WHERE n_events > 0 AND t > 0
-                  AND ls IS NOT NULL AND ls < 0
-            ),
-            a AS (
-                SELECT count(*) AS n_points,
-                       covar_pop(x, y) AS cxy, var_pop(x) AS vx,
-                       var_pop(y) AS vy, avg(x) AS mx, avg(y) AS my
-                FROM pts
-            )
-            SELECT n_points,
-                   round(cxy / nullif(vx, 0.0), 6) AS shape,
-                   round(exp(-(my - (cxy / nullif(vx, 0.0)) * mx)
-                             / nullif(cxy / nullif(vx, 0.0), 0.0)), 6)
-                       AS scale,
-                   round((cxy * cxy) / nullif(vx * vy, 0.0), 6) AS fit_r2
-            FROM a
-        """,
-        "llm_vocab_growth": """
-            WITH toks AS (
-                SELECT doc_id AS id,
-                       unnest(string_split_regex(lower(trim(text)),
-                                                 '\\s+')) AS t
-                FROM documents
-            ),
-            mx AS (SELECT max(doc_id) AS m FROM documents),
-            pt AS (SELECT t, min(id) AS firstdoc FROM toks GROUP BY 1),
-            dt AS (SELECT id, count(*) AS n FROM toks GROUP BY 1),
-            pr AS (SELECT unnest(range(1, 11)) AS prefix),
-            -- LEFT joins: every prefix row must exist even when no
-            -- term/doc has arrived by its threshold (the Spark side
-            -- emits (prefix, 0, 0) there; inner joins would drop the
-            -- row and split the row sets on such slices)
-            v AS (
-                SELECT prefix, count(pt.t) AS vocab
-                FROM pr CROSS JOIN mx
-                LEFT JOIN pt ON pt.firstdoc <= (m * prefix) // 10
-                GROUP BY 1
-            ),
-            tk AS (
-                SELECT prefix,
-                       COALESCE(sum(CASE WHEN id <= (m * prefix) // 10
-                                         THEN n ELSE 0 END), 0)
-                           AS n_tokens
-                FROM pr CROSS JOIN mx LEFT JOIN dt ON true
-                GROUP BY 1
-            )
-            SELECT tk.prefix::INT AS prefix,
-                   tk.n_tokens::BIGINT AS n_tokens,
-                   v.vocab::BIGINT AS vocab
-            FROM tk JOIN v USING (prefix)
-            ORDER BY prefix
-        """,
-        "ext_burst_windows": """
-            WITH pb AS (
-                SELECT event_type, epoch_us(ts) // 60000000 AS b,
-                       count(*) AS n
-                FROM events GROUP BY 1, 2
-            ),
-            rolled AS (
-                SELECT event_type, b,
-                       sum(n) OVER (PARTITION BY event_type ORDER BY b
-                                    RANGE BETWEEN 4 PRECEDING
-                                          AND CURRENT ROW) AS roll
-                FROM pb
-            )
-            SELECT event_type,
-                   (b - 4)::BIGINT AS window_start_bucket,
-                   b::BIGINT AS window_end_bucket,
-                   roll::BIGINT AS max_events
-            FROM (SELECT *, row_number() OVER (PARTITION BY event_type
-                                               ORDER BY roll DESC, b) AS rn
-                  FROM rolled)
-            WHERE rn = 1
-            ORDER BY event_type
-        """,
-        "ext_lorenz_curve": """
-            WITH pk AS (
-                SELECT c.c_nationkey AS nation, c.c_custkey AS k,
-                       sum(cast(round(o.o_totalprice * 100) as bigint)) AS v
-                FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-                GROUP BY 1, 2
-            ),
-            r AS (
-                SELECT nation,
-                       row_number() OVER (PARTITION BY nation
-                                          ORDER BY v, k) AS rk,
-                       sum(v) OVER (PARTITION BY nation ORDER BY v, k
-                                    ROWS UNBOUNDED PRECEDING) AS cum,
-                       count(*) OVER (PARTITION BY nation) AS nk,
-                       sum(v) OVER (PARTITION BY nation) AS tot
-                FROM pk
-            ),
-            pr AS (SELECT unnest(range(1, 11)) AS decile)
-            SELECT nation, pr.decile::INT AS decile,
-                   rk::BIGINT AS n_bottom_keys,
-                   CASE WHEN tot > 0 THEN
-                       ((cum * 1000000 * 2 + tot) // (2 * tot))::BIGINT
-                   END AS cum_share_e6
-            FROM r JOIN pr ON r.rk = (r.nk * pr.decile) // 10
-            ORDER BY nation, decile
-        """,
-        "ext_peak_concurrency": """
-            WITH spans AS (
-                SELECT user_id,
-                       min(epoch_us(ts)) // 1000000 AS s,
-                       max(epoch_us(ts)) // 1000000 AS e
-                FROM events GROUP BY 1
-            ),
-            d AS (
-                SELECT s AS t, 1 AS d FROM spans
-                UNION ALL
-                SELECT e + 1, -1 FROM spans
-            ),
-            g AS (SELECT t, sum(d) AS dd FROM d GROUP BY 1),
-            r AS (
-                SELECT t, sum(dd) OVER (ORDER BY t
-                                        ROWS UNBOUNDED PRECEDING) AS c
-                FROM g
-            )
-            SELECT c::BIGINT AS peak_concurrent,
-                   t::BIGINT AS peak_at_epoch_sec
-            FROM (SELECT *, row_number() OVER (ORDER BY c DESC, t) AS rn
-                  FROM r)
-            WHERE rn = 1
-        """,
-        "ext_hhi": """
-            WITH pk AS (
-                SELECT c.c_nationkey AS nation, c.c_custkey AS k,
-                       sum(cast(round(o.o_totalprice * 100) as bigint)) AS v
-                FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-                GROUP BY 1, 2
-            ),
-            a AS (
-                SELECT nation, count(*) AS n_keys, sum(v) AS t,
-                       sum(v * v) AS sv2
-                FROM pk GROUP BY 1
-            )
-            SELECT nation, n_keys,
-                   CASE WHEN t > 0 THEN
-                       ((sv2 * 1000000 * 2 + t * t)
-                        // (2 * t * t))::BIGINT END AS hhi_e6
-            FROM a ORDER BY nation
-        """,
-        "ext_runs_test": """
-            WITH daily AS (
-                SELECT event_type, ts::DATE AS day,
-                       sum(cast(round(value * 100) as bigint)) AS v
-                FROM events GROUP BY 1, 2
-            ),
-            grid AS (
-                SELECT event_type, v::DOUBLE AS v, count(*) AS c
-                FROM daily GROUP BY 1, 2
-            ),
-            cum AS (
-                SELECT event_type, v,
-                       sum(c) OVER (PARTITION BY event_type ORDER BY v
-                                    ROWS UNBOUNDED PRECEDING) AS cm,
-                       sum(c) OVER (PARTITION BY event_type) AS n
-                FROM grid
-            ),
-            med AS (
-                SELECT event_type,
-                       (min(CASE WHEN cm >= floor((n + 1) / 2)
-                                 THEN v END)
-                        + min(CASE WHEN cm >= floor(n / 2) + 1
-                                   THEN v END)) / 2.0 AS m
-                FROM cum GROUP BY 1
-            ),
-            signed AS (
-                SELECT daily.event_type, day,
-                       (v >= m)::INT AS s
-                FROM daily JOIN med ON daily.event_type = med.event_type
-            ),
-            runs AS (
-                SELECT event_type,
-                       count(*) AS n_days,
-                       sum(s) AS n_plus,
-                       sum(1 - s) AS n_minus,
-                       1 + sum(CASE WHEN prev IS NOT NULL AND s <> prev
-                                    THEN 1 ELSE 0 END) AS n_runs
-                FROM (SELECT event_type, day, s,
-                             lag(s) OVER (PARTITION BY event_type
-                                          ORDER BY day) AS prev
-                      FROM signed)
-                GROUP BY 1
-            )
-            SELECT event_type, n_days,
-                   n_plus::BIGINT AS n_plus, n_minus::BIGINT AS n_minus,
-                   n_runs::BIGINT AS n_runs,
-                   CASE WHEN n_plus > 0 AND n_minus > 0 THEN
-                       round((n_runs - (1.0 + 2.0 * n_plus * n_minus
-                                        / (n_plus + n_minus)))
-                             / sqrt(2.0 * n_plus * n_minus
-                                    * (2.0 * n_plus * n_minus
-                                       - (n_plus + n_minus))
-                                    / ((n_plus + n_minus)
-                                       * (n_plus + n_minus)
-                                       * ((n_plus + n_minus) - 1.0))), 6)
-                   END AS z
-            FROM runs ORDER BY event_type
-        """,
-        "mm_exact_dedup": """
-            WITH ph AS (
-                SELECT md5(text) AS h, count(*) AS n,
-                       max(octet_length(encode(text))) AS b
-                FROM documents GROUP BY 1
-            )
-            SELECT sum(n)::BIGINT AS n_media,
-                   count(*) AS n_distinct_payloads,
-                   sum(n - 1)::BIGINT AS n_exact_dupes,
-                   sum(n * b)::BIGINT AS bytes_total,
-                   sum((n - 1) * b)::BIGINT AS bytes_dedupable
-            FROM ph
-        """,
-        "llm_decontaminate_fuzzy": _sql_fuzzy_decontaminate(threshold=0.1),
-        "llm_dedup_keep_best": _sql_keep_best(threshold=0.1),
-        "llm_dedup_report": _sql_dedup_report(threshold=0.1),
-        "s10_cdc_snapshot_at": """
-            WITH ch AS (
-                SELECT o_orderkey, o_totalprice, 'c' AS op,
-                       o_orderkey * 10 AS lsn
-                FROM orders
-                UNION ALL
-                SELECT o_orderkey, o_totalprice * 2, 'u', o_orderkey * 10 + 1
-                FROM orders WHERE o_orderkey % 2 = 0
-                UNION ALL
-                SELECT o_orderkey, o_totalprice, 'd', o_orderkey * 10 + 2
-                FROM orders WHERE o_orderkey % 10 = 0
-            ),
-            v AS (
-                SELECT *, lsn AS valid_from,
-                       lead(lsn) OVER (PARTITION BY o_orderkey ORDER BY lsn)
-                           AS valid_to
-                FROM ch
-            )
-            SELECT o_orderkey, o_totalprice, valid_from, valid_to
-            FROM v
-            WHERE op <> 'd'
-              AND valid_from <= 100000
-              AND (valid_to IS NULL OR valid_to > 100000)
-        """,
-        "llm_embedding_outliers": """
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            norms AS (
-                SELECT vec_id, round(sqrt(list_dot_product(v, v)), 6) AS norm
-                FROM ev
-            ),
-            m AS (SELECT avg(norm) AS mu, stddev_samp(norm) AS sd FROM norms)
-            SELECT vec_id, norm,
-                   round(CASE WHEN sd > 0 THEN (norm - mu) / sd END, 4) AS z,
-                   coalesce(
-                       abs(round(CASE WHEN sd > 0
-                                 THEN (norm - mu) / sd END, 4)) > 2.0,
-                       FALSE) AS is_outlier
-            FROM norms, m
-        """,
-        "llm_ann_recall_ivf": """
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            cent AS (SELECT vec_id AS cid, v AS cv FROM ev WHERE vec_id < 8),
-            assigned AS (
-                SELECT vec_id, v, cid FROM (
-                    SELECT e.vec_id, e.v, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY round(list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM ev e CROSS JOIN cent c
-                ) WHERE rn = 1
-            ),
-            panel AS (SELECT vec_id AS qid, v AS qv FROM ev
-                      WHERE vec_id IN (0, 1, 2, 3, 4)),
-            probe AS (
-                SELECT qid, cid FROM (
-                    SELECT p.qid, c.cid,
-                           row_number() OVER (
-                               PARTITION BY p.qid
-                               ORDER BY round(list_dot_product(c.cv, p.qv) / (sqrt(list_dot_product(c.cv, c.cv)) * sqrt(list_dot_product(p.qv, p.qv))), 6) DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM cent c CROSS JOIN panel p
-                ) WHERE rn <= 2
-            ),
-            scored AS (
-                SELECT p.qid, a.vec_id,
-                       round(list_dot_product(a.v, p.qv) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(p.qv, p.qv))), 6) AS cos_sim,
-                       a.cid
-                FROM assigned a CROSS JOIN panel p
-                WHERE a.vec_id <> p.qid
-            ),
-            exact AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rnk
-                    FROM scored) WHERE rnk <= 10
-            ),
-            approx AS (
-                SELECT qid, vec_id FROM (
-                    SELECT s.qid, s.vec_id, row_number() OVER (
-                        PARTITION BY s.qid ORDER BY s.cos_sim DESC, s.vec_id) AS rnk
-                    FROM scored s JOIN probe pr
-                      ON s.qid = pr.qid AND s.cid = pr.cid
-                ) WHERE rnk <= 10
-            ),
-            na AS (SELECT qid, count(*) AS n_approx FROM approx GROUP BY 1),
-            hit AS (
-                SELECT e.qid, count(*) AS n_hit
-                FROM exact e JOIN approx a ON e.qid = a.qid AND e.vec_id = a.vec_id
-                GROUP BY 1
-            )
-            SELECT p.qid,
-                   COALESCE(na.n_approx, 0) AS n_approx,
-                   COALESCE(hit.n_hit, 0) AS n_hit,
-                   round(COALESCE(hit.n_hit, 0) / 10.0::DOUBLE, 4) AS recall_at_k
-            FROM panel p LEFT JOIN na ON p.qid = na.qid
-            LEFT JOIN hit ON p.qid = hit.qid
-        """,
-        "llm_winnow_overlap": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(words) >= 3
-                            THEN list_transform(range(1, len(words)-1),
-                                                i -> array_to_string(words[i:i+2], ' '))
-                            ELSE [array_to_string(words, ' ')] END AS shingles
-                FROM w
-            ),
-            hs AS (
-                SELECT doc_id, list_transform(shingles, s -> md5(s)) AS h
-                FROM sh
-            ),
-            f AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                           range(1, greatest(len(h) - 3, 1) + 1),
-                           i -> list_min(h[i:i+3]))) AS fps
-                FROM hs
-            ),
-            fpt AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-            sized AS (
-                SELECT *, count(*) OVER (PARTITION BY fp) AS pn FROM fpt
-            ),
-            ok AS (SELECT * FROM sized WHERE pn <= 50),
-            shared AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       count(*) AS n_shared
-                FROM ok a JOIN ok b
-                  ON a.fp = b.fp AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-                HAVING count(*) >= 2
-            ),
-            counts AS (SELECT doc_id, count(*) AS n_fps FROM fpt GROUP BY doc_id)
-            SELECT s.doc_a, s.doc_b, s.n_shared,
-                   ((s.n_shared * 10000 * 2 + least(ca.n_fps, cb.n_fps))
-                    // (2 * least(ca.n_fps, cb.n_fps)))::BIGINT
-                       AS overlap_ratio_e4
-            FROM shared s
-            JOIN counts ca ON s.doc_a = ca.doc_id
-            JOIN counts cb ON s.doc_b = cb.doc_id
-            ORDER BY s.doc_a, s.doc_b
-        """,
-        "llm_dedup_simhash_pairs": f"""
-            WITH fpq AS ({_sql_simhash(prefix_bits=8)}),
-            sized AS (
-                SELECT *, count(*) OVER (PARTITION BY simhash_prefix) AS bn
-                FROM fpq
-            ),
-            ok AS (SELECT * FROM sized WHERE bn <= 50),
-            pairs AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       len(list_filter(range(1, 33),
-                           i -> substr(a.simhash, i, 1) <> substr(b.simhash, i, 1)))
-                           AS hamming
-                FROM ok a JOIN ok b
-                  ON a.simhash_prefix = b.simhash_prefix
-                 AND a.doc_id < b.doc_id
-            )
-            SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 6
-            ORDER BY doc_a, doc_b
-        """,
-        "llm_unigram_surprisal": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(string_split_regex(lower(trim(text)), '\\s+'))
-                           AS term
-                FROM documents
-            ),
-            cf AS (SELECT term, count(*) AS cf FROM toks GROUP BY term),
-            totals AS (SELECT sum(cf) AS t, count(*) AS v FROM cf),
-            lp AS (
-                SELECT term,
-                       round(-ln((cf + 1.0) / (t + 1.0 * v)), 9) AS surprisal
-                FROM cf CROSS JOIN totals
-            )
-            SELECT doc_id, count(*) AS n_tokens,
-                   round(avg(surprisal), 4) AS mean_surprisal
-            FROM toks JOIN lp USING (term)
-            GROUP BY doc_id
-        """,
-        "llm_mix_token_plan": """
-            WITH t AS (
-                SELECT lang,
-                       len(string_split_regex(lower(trim(text)), '\\s+'))
-                           AS n_tok
-                FROM documents
-            ),
-            counts AS (
-                SELECT lang, count(*) AS n_docs, sum(n_tok) AS avail_tokens
-                FROM t GROUP BY lang
-            ),
-            planned AS (
-                SELECT lang, n_docs, avail_tokens,
-                       CASE WHEN lang IN ('en','es','fr','de','zh')
-                            THEN 0.2::DOUBLE ELSE 0.0::DOUBLE END AS tgt
-                FROM counts
-            )
-            SELECT lang, n_docs, avail_tokens::BIGINT AS avail_tokens,
-                   round(tgt, 6) AS target_share,
-                   round(tgt * 20000.0, 2) AS desired_tokens,
-                   round(CASE WHEN avail_tokens > 0
-                              THEN least(1.0::DOUBLE,
-                                         (tgt * 20000.0) / avail_tokens)
-                              ELSE 0.0::DOUBLE END, 6) AS sample_rate,
-                   round(least(tgt * 20000.0, avail_tokens::DOUBLE), 2)
-                       AS planned_tokens,
-                   round(greatest(0.0::DOUBLE,
-                                  tgt * 20000.0 - avail_tokens), 2)
-                       AS shortfall_tokens
-            FROM planned
-        """,
-        "llm_ann_pq_topk": _sql_pq_topk(k=10),
-        "ext_zorder_profile": _sql_zorder_profile(),
-        "llm_block_dedup": _SQL_BLOCK_DEDUP,
-        "llm_shard_profile": _SQL_SHARD_PROFILE,
-        "llm_ann_recall_pq": _sql_pq_recall([0, 1, 2, 3], k=10),
-        "ext_event_transitions": _SQL_EVENT_TRANSITIONS,
-        "s10_snapshot_diff": _SQL_SNAPSHOT_DIFF,
-        "llm_bpe_pair_stats": _SQL_BPE_PAIR_STATS,
-        "eval_calibration": _sql_eval_calibration(),
-        "ext_entity_blocking": _SQL_ENTITY_BLOCKING,
-        "llm_bigram_lm_score": _SQL_BIGRAM_LM,
-        "ext_grouping_sets": _SQL_GROUPING_SETS,
-        "llm_incremental_near_dup": _sql_incremental_near_dup(threshold=0.1),
-        "llm_mmr_diversify": _sql_mmr(k=5, lam=0.7, pool=50),
-        "llm_bm25_topk": """
-            WITH base AS (
-                SELECT doc_id,
-                       len(list_filter(string_split_regex(lower(text),
-                           '[^a-z0-9]+'), t -> t != '')) AS dl,
-                       len(list_filter(string_split_regex(lower(text),
-                           '[^a-z0-9]+'), t -> t = 'spark')) AS tf0,
-                       len(list_filter(string_split_regex(lower(text),
-                           '[^a-z0-9]+'), t -> t = 'join')) AS tf1,
-                       len(list_filter(string_split_regex(lower(text),
-                           '[^a-z0-9]+'), t -> t = 'window')) AS tf2,
-                       len(list_filter(string_split_regex(lower(text),
-                           '[^a-z0-9]+'), t -> t = 'merge')) AS tf3
-                FROM documents
-            ),
-            stats AS (
-                SELECT count(*) AS n, avg(dl) AS avgdl,
-                       sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                       sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-                       sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2,
-                       sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS df3
-                FROM base
-            ),
-            scored AS (
-                SELECT doc_id, round(
-                    ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-                        / (tf0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-                  + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-                        / (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-                  + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * tf2 * 2.2
-                        / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-                  + ln(1.0 + (n - df3 + 0.5) / (df3 + 0.5)) * tf3 * 2.2
-                        / (tf3 + 1.2 * (0.25 + 0.75 * dl / avgdl)), 6) AS bm25
-                FROM base CROSS JOIN stats
-            )
-            SELECT doc_id, bm25 FROM scored WHERE bm25 > 0
-            ORDER BY bm25 DESC, doc_id LIMIT 10
-        """,
-        "llm_tfidf_cosine_topk": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(list_filter(
-                           string_split_regex(lower(text), '[^a-z0-9]+'),
-                           t -> t != '')) AS term
-                FROM documents
-            ),
-            tf AS (
-                SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2
-            ),
-            dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-            n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-            sparse AS (
-                SELECT doc_id, term,
-                       round(tf * (ln((1.0 + n_docs) / (1.0 + df)) + 1.0), 9)
-                           AS w
-                FROM tf JOIN dfreq USING (term) CROSS JOIN n
-            ),
-            norms AS (
-                SELECT doc_id, sqrt(sum(w * w)) AS nrm
-                FROM sparse GROUP BY doc_id
-            ),
-            q AS (
-                SELECT doc_id AS query_id, term, w AS qw
-                FROM sparse WHERE doc_id IN (0, 1, 2, 3)
-            ),
-            dots AS (
-                SELECT q.query_id, s.doc_id, sum(s.w * q.qw) AS dot
-                FROM sparse s JOIN q USING (term)
-                WHERE s.doc_id <> q.query_id
-                GROUP BY 1, 2
-            ),
-            scored AS (
-                SELECT d.query_id, d.doc_id,
-                       round(d.dot / (n1.nrm * n2.nrm), 6) AS cosine
-                FROM dots d
-                JOIN norms n1 ON d.doc_id = n1.doc_id
-                JOIN norms n2 ON d.query_id = n2.doc_id
-            ),
-            ranked AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY query_id ORDER BY cosine DESC, doc_id
-                ) AS rn
-                FROM scored
-            )
-            SELECT query_id, doc_id, cosine FROM ranked WHERE rn <= 3
-        """,
-        "o4_per_key_time_split": """
-            WITH r AS (
-                SELECT o_custkey, o_orderkey,
-                       row_number() OVER (
-                           PARTITION BY o_custkey
-                           ORDER BY o_orderdate, o_orderkey
-                       ) AS rk,
-                       count(*) OVER (PARTITION BY o_custkey) AS nk
-                FROM orders
-            )
-            SELECT o_custkey, o_orderkey,
-                   CASE WHEN rk <= ceil(nk * 0.8) THEN 'train'
-                        ELSE 'test' END AS split
-            FROM r
-        """,
-        "ext_table_profile": """
-            SELECT 'o_orderkey' AS "column", count(*) AS n_rows,
-                   sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-                   count(DISTINCT o_orderkey) AS n_distinct,
-                   round(min(o_orderkey), 4)::DOUBLE AS min_value,
-                   round(max(o_orderkey), 4)::DOUBLE AS max_value
-            FROM orders
-            UNION ALL
-            SELECT 'o_custkey', count(*),
-                   sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT o_custkey),
-                   round(min(o_custkey), 4)::DOUBLE,
-                   round(max(o_custkey), 4)::DOUBLE
-            FROM orders
-            UNION ALL
-            SELECT 'o_orderstatus', count(*),
-                   sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT o_orderstatus),
-                   NULL::DOUBLE, NULL::DOUBLE
-            FROM orders
-            UNION ALL
-            SELECT 'o_totalprice', count(*),
-                   sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT o_totalprice),
-                   round(min(o_totalprice), 4)::DOUBLE,
-                   round(max(o_totalprice), 4)::DOUBLE
-            FROM orders
-            UNION ALL
-            SELECT 'o_orderpriority', count(*),
-                   sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT o_orderpriority),
-                   NULL::DOUBLE, NULL::DOUBLE
-            FROM orders
-        """,
-        "ext_value_histogram": """
-            WITH rng AS (
-                SELECT l_returnflag,
-                       min(l_extendedprice) AS lo, max(l_extendedprice) AS hi
-                FROM lineitem GROUP BY l_returnflag
-            ),
-            binned AS (
-                SELECT l.l_returnflag, l.l_extendedprice,
-                       coalesce(CASE WHEN r.hi > r.lo
-                            THEN least(9, floor((l.l_extendedprice - r.lo)
-                                   / nullif((r.hi - r.lo) / 10, 0))::INT)
-                            ELSE 0 END, 0) AS bin
-                FROM lineitem l JOIN rng r USING (l_returnflag)
-            )
-            SELECT l_returnflag, bin, count(*) AS n_rows,
-                   round(min(l_extendedprice), 2) AS bin_min,
-                   round(max(l_extendedprice), 2) AS bin_max,
-                   round(avg(l_extendedprice), 4) AS bin_avg
-            FROM binned
-            GROUP BY l_returnflag, bin
-            ORDER BY l_returnflag, bin
-        """,
-        "ext_set_partition": """
-            WITH a AS (SELECT DISTINCT o_custkey FROM orders
-                       WHERE o_orderpriority = '1-URGENT'),
-            b AS (SELECT DISTINCT o_custkey FROM orders
-                  WHERE o_totalprice > 200000.0)
-            SELECT 'both' AS tag, o_custkey FROM (
-                SELECT o_custkey FROM a INTERSECT SELECT o_custkey FROM b)
-            UNION ALL
-            SELECT 'urgent_only', o_custkey FROM (
-                SELECT o_custkey FROM a EXCEPT SELECT o_custkey FROM b)
-            UNION ALL
-            SELECT 'highvalue_only', o_custkey FROM (
-                SELECT o_custkey FROM b EXCEPT SELECT o_custkey FROM a)
-        """,
-        "eval_ndcg": """
-            WITH log AS (
-                SELECT o_custkey AS user_id, o_orderkey AS product_id,
-                       round((o_totalprice % 1000.0) / 1000.0, 6) AS score,
-                       CAST(o_orderstatus = 'F' AS INT) AS reward
-                FROM orders
-            ),
-            ranked AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY user_id ORDER BY score DESC, product_id
-                ) AS rnk
-                FROM log
-            ),
-            per_user AS (
-                SELECT user_id,
-                       sum(CASE WHEN rnk <= 5 THEN reward * (CASE rnk
-                               WHEN 1 THEN 1.0::DOUBLE
-                               WHEN 2 THEN 0.630929753571::DOUBLE
-                               WHEN 3 THEN 0.5::DOUBLE
-                               WHEN 4 THEN 0.430676558073::DOUBLE
-                               WHEN 5 THEN 0.386852807235::DOUBLE END)
-                           ELSE 0.0::DOUBLE END) AS dcg,
-                       sum(reward) AS positives
-                FROM ranked GROUP BY user_id
-            )
-            SELECT round(avg(dcg / (CASE least(positives, 5)
-                       WHEN 1 THEN 1.0::DOUBLE
-                       WHEN 2 THEN 1.630929753571::DOUBLE
-                       WHEN 3 THEN 2.130929753571::DOUBLE
-                       WHEN 4 THEN 2.561606311644::DOUBLE
-                       WHEN 5 THEN 2.948459118879::DOUBLE END)), 6) AS ndcg_at_k
-            FROM per_user WHERE positives > 0
-        """,
-        "s10_cdc_scd2_history": """
-            WITH ch AS (
-                SELECT o_orderkey, o_totalprice, 'c' AS op,
-                       o_orderkey * 10 AS lsn
-                FROM orders
-                UNION ALL
-                SELECT o_orderkey, o_totalprice * 2, 'u', o_orderkey * 10 + 1
-                FROM orders WHERE o_orderkey % 2 = 0
-                UNION ALL
-                SELECT o_orderkey, o_totalprice, 'd', o_orderkey * 10 + 2
-                FROM orders WHERE o_orderkey % 10 = 0
-            ),
-            v AS (
-                SELECT *, lsn AS valid_from,
-                       lead(lsn) OVER (PARTITION BY o_orderkey ORDER BY lsn)
-                           AS valid_to
-                FROM ch
-            )
-            SELECT o_orderkey, o_totalprice, valid_from, valid_to,
-                   valid_to IS NULL AS is_current
-            FROM v WHERE op <> 'd'
-        """,
-        "llm_quality_filter": """
-            WITH w AS (
-                SELECT doc_id, text,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            s AS (
-                SELECT doc_id,
-                       len(words) AS n_tokens,
-                       CASE WHEN len(words) > 0 THEN len(words) ELSE 1 END AS safe_n,
-                       length(text) AS n_chars,
-                       len(list_filter(words, x -> regexp_matches(x, '[a-z]')))
-                           AS alpha_words,
-                       len(list_filter(words, x -> x IN
-                           ('the','a','an','and','of','to','in','is','it','for')))
-                           AS stop_hits
-                FROM w
-            )
-            SELECT doc_id, n_tokens,
-                   round((n_chars - (n_tokens - 1)) / safe_n, 4) AS mean_word_len,
-                   round(alpha_words / safe_n, 4) AS alpha_word_ratio,
-                   stop_hits,
-                   COALESCE(n_tokens BETWEEN 10 AND 100000,
-                            FALSE) AS ok_tokens,
-                   COALESCE(((n_chars - (n_tokens - 1)) / safe_n)
-                                BETWEEN 2.0 AND 12.0,
-                            FALSE) AS ok_word_len,
-                   COALESCE((alpha_words / safe_n) >= 0.7,
-                            FALSE) AS ok_alpha_words,
-                   COALESCE(stop_hits >= 2, FALSE) AS ok_stopwords,
-                   COALESCE((n_tokens BETWEEN 10 AND 100000)
-                       AND (((n_chars - (n_tokens - 1)) / safe_n)
-                            BETWEEN 2.0 AND 12.0)
-                       AND ((alpha_words / safe_n) >= 0.7)
-                       AND (stop_hits >= 2), FALSE) AS passes
-            FROM s
-        """,
-        "ext_hll_distinct": """
-            SELECT o_orderpriority,
-                   count(DISTINCT o_orderstatus) AS n_subgroups,
-                   count(DISTINCT o_custkey)     AS exact_distinct,
-                   true                          AS estimate_ok
-            FROM orders
-            GROUP BY o_orderpriority
-            ORDER BY o_orderpriority
-        """,
-        "ext_key_skew_profile": """
-            WITH c AS (
-                SELECT l_suppkey, count(*) AS key_rows
-                FROM lineitem GROUP BY l_suppkey
-            ),
-            m AS (SELECT sum(key_rows) AS total, avg(key_rows) AS mean FROM c)
-            SELECT l_suppkey, key_rows,
-                   round(key_rows / m.total, 6) AS row_share,
-                   round(key_rows / m.mean, 4)  AS skew_ratio
-            FROM c, m
-            ORDER BY key_rows DESC, l_suppkey
-            LIMIT 15
-        """,
-        "q1_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2)                                        AS sum_qty,
-                   round(sum(l_extendedprice), 2)                                   AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
-                   round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
-                   round(avg(l_quantity), 4)                                        AS avg_qty,
-                   round(avg(l_extendedprice), 4)                                   AS avg_price,
-                   round(avg(l_discount), 6)                                        AS avg_disc,
-                   count(*)                                                         AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "p1_p2_j1_j2_dashboard_feed": """
-            SELECT c_custkey AS user_id, c_name AS user_name, c_mktsegment AS segment,
-                   c_nationkey AS nation_id, o_orderkey AS order_id,
-                   o_orderstatus AS order_status, o_orderdate AS created_at,
-                   l_partkey AS item_id, p_name AS item_name, p_type AS category,
-                   p_retailprice AS cost,
-                   l_extendedprice * (1 - l_discount) AS sale_price
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN part     ON l_partkey = p_partkey
-            WHERE o_orderdate >= (SELECT max(o_orderdate) FROM orders)
-                                 - INTERVAL '43200 minutes'
-        """,
-        "a1_a2_a9_dashboard_metrics": """
-            SELECT count(DISTINCT o_orderkey)                          AS n_orders,
-                   count(DISTINCT l_partkey)                           AS n_items,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)   AS total_revenue,
-                   round(avg(l_extendedprice * (1 - l_discount)), 4)   AS avg_sale_price
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN part     ON l_partkey = p_partkey
-        """,
-        "a3_o1_grouped_revenue_nation": """
-            SELECT n_name AS nation,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN part     ON l_partkey = p_partkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            GROUP BY n_name
-            ORDER BY revenue DESC, nation ASC
-        """,
-        "a3_grouped_revenue_segment": """
-            SELECT c_mktsegment AS segment,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN part     ON l_partkey = p_partkey
-            GROUP BY c_mktsegment
-            ORDER BY revenue DESC, segment ASC
-        """,
-        "a4_metric_deltas": """
-            WITH daily AS (
-                SELECT date_trunc('day', CAST(ts AS TIMESTAMP))::DATE AS day,
-                       event_type,
-                       round(sum(value), 2) AS value
-                FROM events GROUP BY 1, 2
-            )
-            SELECT strftime(day, '%Y-%m-%d') AS day, event_type, value,
-                   round(value - lag(value) OVER (PARTITION BY event_type ORDER BY day), 2) AS delta
-            FROM daily
-        """,
-        "a5_a8_tumbling_stats": """
-            SELECT strftime(time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)),
-                            '%Y-%m-%d %H:%M:%S')                                    AS window_start,
-                   strftime(time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-                            + INTERVAL '5 minutes', '%Y-%m-%d %H:%M:%S')            AS window_end,
-                   event_type,
-                   round(sum(value), 2) AS total_value,
-                   count(*) AS cnt
-            FROM events
-            GROUP BY 1, 2, 3
-        """,
-        "o2_top5_parts": """
-            SELECT l_partkey AS part_id,
-                   any_value(p_name) AS part_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            GROUP BY l_partkey
-            ORDER BY revenue DESC, part_id ASC
-            LIMIT 5
-        """,
-        "o2_top3_parts_per_brand": """
-            WITH rev AS (
-                SELECT p_brand, l_partkey AS part_id,
-                       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-                GROUP BY p_brand, l_partkey
-            ), ranked AS (
-                SELECT *, row_number() OVER (PARTITION BY p_brand
-                                             ORDER BY revenue DESC, part_id ASC) AS rnk
-                FROM rev
-            )
-            SELECT p_brand, part_id, revenue FROM ranked WHERE rnk <= 3
-        """,
-        "o4_time_split": """
-            WITH ranked AS (
-                SELECT value,
-                       row_number() OVER (ORDER BY event_id) AS rn,
-                       count(*) OVER () AS total
-                FROM events
-            )
-            SELECT CASE WHEN rn <= CAST(floor(0.8 * total) AS BIGINT)
-                        THEN 'train' ELSE 'test' END AS split,
-                   count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM ranked
-            GROUP BY 1
-            ORDER BY 1
-        """,
-        "p2_time_filter": """
-            SELECT event_id, user_id, event_type, value
-            FROM events
-            WHERE CAST(ts AS TIMESTAMP) >=
-                  (SELECT max(CAST(ts AS TIMESTAMP)) FROM events) - INTERVAL '7 days'
-        """,
-        "f_json_extract": """
-            SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-                   coalesce(CAST(json_extract_string(props, '$.missing') AS BIGINT), -1)
-                       AS missing_val,
-                   count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM events
-            GROUP BY 1, 2
-        """,
-        "f_scalar_strings": """
-            -- DuckDB 1.0 has no initcap(); emulate it per word
-            -- (capitalize first letter, lowercase the rest).
-            SELECT p_partkey AS part_id,
-                   array_to_string(
-                       list_transform(
-                           string_split(replace(p_type, '_', ' '), ' '),
-                           w -> CASE WHEN len(w) = 0 THEN w
-                                     ELSE upper(w[1]) || lower(w[2:]) END
-                       ), ' ') AS type_title,
-                   '/product/' || regexp_replace(lower(p_name), '\\s+', '', 'g') AS uri,
-                   length(p_name) AS name_len
-            FROM part
-        """,
-        "f_datetime_buckets": """
-            SELECT event_id,
-                   hour(CAST(ts AS TIMESTAMP)) AS hr,
-                   CAST(hour(CAST(ts AS TIMESTAMP)) BETWEEN 6 AND 11 AS INT)  AS is_morning,
-                   CAST(hour(CAST(ts AS TIMESTAMP)) BETWEEN 12 AND 17 AS INT) AS is_afternoon,
-                   CAST(hour(CAST(ts AS TIMESTAMP)) >= 18
-                        OR hour(CAST(ts AS TIMESTAMP)) < 6 AS INT)            AS is_evening,
-                   CAST(dayofweek(CAST(ts AS TIMESTAMP)) IN (0, 6) AS INT)    AS is_weekend,
-                   CAST(dayofweek(CAST(ts AS TIMESTAMP)) BETWEEN 1 AND 5 AS INT) AS is_weekday
-            FROM events
-        """,
-        "f_conditional_status": """
-            SELECT CASE o_orderstatus
-                       WHEN 'O' THEN 'open'
-                       WHEN 'F' THEN 'fulfilled'
-                       WHEN 'P' THEN 'pending'
-                       ELSE 'unknown' END AS status_bucket,
-                   count(*) AS n,
-                   round(avg(o_totalprice), 4) AS avg_price
-            FROM orders
-            GROUP BY 1
-        """,
-        "a13_weighted_distribution": """
-            WITH counts AS (
-                SELECT n_name AS nation, CAST(count(*) AS DOUBLE) AS pop
-                FROM customer JOIN nation ON c_nationkey = n_nationkey
-                GROUP BY n_name
-            )
-            SELECT nation,
-                   round(pop, 2) AS weight,
-                   round(pop / (SELECT sum(pop) FROM counts), 6) AS proportion
-            FROM counts
-            ORDER BY weight DESC, nation ASC
-        """,
-        "j6_semi_join": """
-            SELECT c_mktsegment, count(*) AS n_customers
-            FROM customer
-            WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-            GROUP BY c_mktsegment
-        """,
-        "j6_anti_join": """
-            SELECT c_custkey, c_name, c_mktsegment
-            FROM customer
-            WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        """,
-        "s10_debezium_unwrap": """
-            SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-                   strftime(o_orderdate::DATE, '%Y-%m-%d') AS o_orderdate,
-                   o_orderpriority,
-                   'c' AS op, 'orders' AS "table", o_orderkey * 10 AS lsn
-            FROM orders
-        """,
-        "s10_cdc_apply_changes": """
-            SELECT o_orderkey, o_orderstatus,
-                   CASE WHEN o_orderkey % 2 = 0
-                        THEN o_totalprice * 2
-                        ELSE o_totalprice END AS o_totalprice
-            FROM orders
-            WHERE o_orderkey % 10 <> 0
-        """,
-        "t6_late_tagging": """
-            WITH e AS (
-                SELECT event_id, event_type,
-                       CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS ep,
-                       event_id * 2 + (event_id * 1103515245 + 12345) % 13 - 6 AS seq
-                FROM events
-            )
-            SELECT event_id, event_type,
-                   (ep // 300 + 1) * 300 AS window_end_epoch,
-                   coalesce(
-                     max(ep) OVER (PARTITION BY event_type ORDER BY seq
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                     > (ep // 300 + 1) * 300 + 600,
-                     false) AS is_late
-            FROM e
-        """,
-        "s1_s8_csv_declared_schema": """
-            -- the two malformed lines are dropped; clean rows survive
-            -- the CSV round trip with their declared types intact
-            SELECT p_partkey, p_name, p_size, p_retailprice FROM part
-        """,
-        "p3_o3_limit_probe": """
-            SELECT o_orderkey, o_orderstatus, o_totalprice
-            FROM orders ORDER BY o_orderkey LIMIT 1
-        """,
-        "p5_p6_drop_columns": """
-            SELECT doc_id, lang, source, n_chars FROM documents
-        """,
-        "p7_numeric_projection": """
-            SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-                   l_quantity, l_extendedprice, l_discount, l_tax
-            FROM lineitem
-        """,
-        "j4_zip_join": """
-            WITH a AS (
-                SELECT n_nationkey, n_name,
-                       row_number() OVER (ORDER BY n_nationkey) AS rn
-                FROM nation
-            ),
-            b AS (
-                SELECT r_name, row_number() OVER (ORDER BY r_regionkey) AS rn
-                FROM region
-            )
-            SELECT n_nationkey, n_name, r_name FROM a JOIN b USING (rn)
-        """,
-        "f_array_vector": """
-            SELECT l_orderkey, l_linenumber,
-                   len([l_quantity, l_extendedprice, l_discount, l_tax]) AS vec_len,
-                   [l_quantity, l_extendedprice, l_discount, l_tax][2] AS elem2,
-                   round(l_quantity + l_extendedprice, 4) AS head2_sum
-            FROM lineitem
-        """,
-        "f_struct_json": """
-            SELECT o_orderkey AS key,
-                   json_object('order_id', o_orderkey,
-                               'status', o_orderstatus,
-                               'late', true)::VARCHAR AS value
-            FROM orders
-        """,
-        "f_ground_truth_score": """
-            WITH f AS (
-                SELECT event_id,
-                       CAST(hour(CAST(ts AS TIMESTAMP)) BETWEEN 6 AND 11 AS INT)  AS morning,
-                       CAST(dayofweek(CAST(ts AS TIMESTAMP)) IN (0, 6) AS INT)    AS weekend,
-                       CAST(hour(CAST(ts AS TIMESTAMP)) >= 18
-                            OR hour(CAST(ts AS TIMESTAMP)) < 6 AS INT)            AS evening,
-                       CAST(event_type = 'click' AS INT)    AS clk,
-                       CAST(event_type = 'purchase' AS INT) AS pur,
-                       CAST(event_type = 'error' AS INT)    AS err,
-                       CAST(event_type = 'view' AS INT)     AS vw
-                FROM events
-            )
-            SELECT event_id,
-                   round(1.0 / (1.0 + exp(-(
-                       -1.0 + 2.5*(morning*clk) + 1.8*(weekend*pur)
-                       - 3.0*(evening*err) + 0.5*vw))), 6) AS p_click
-            FROM f
-        """,
-        "f_status_timestamps": """
-            -- status mapping: F->Complete (shipped+delivered),
-            -- O->Shipped (shipped only), else Processing (all NULL);
-            -- offsets +1d shipped, +3d delivered, +7d returned
-            SELECT o_orderkey,
-                   CASE WHEN o_orderstatus IN ('F','O')
-                        THEN o_orderdate + INTERVAL 1 DAY END AS shipped_at,
-                   CASE WHEN o_orderstatus = 'F'
-                        THEN o_orderdate + INTERVAL 3 DAY END AS delivered_at,
-                   CAST(NULL AS TIMESTAMP) AS returned_at
-            FROM orders
-        """,
-        "a10_j3_linucb_fit": """
-            -- literals cast to DOUBLE: DuckDB's 1.0 is DECIMAL and the
-            -- decimal sums would come back as Decimal, not float.
-            WITH fb AS (
-                SELECT user_id % 20 AS product_id,
-                       CAST(1.0 AS DOUBLE) AS x1,
-                       least(value, 100.0) / 100.0 AS x2,
-                       CAST(CASE WHEN event_type IN ('click','purchase')
-                            THEN 1.0 ELSE 0.0 END AS DOUBLE) AS r
-                FROM events
-            ),
-            agg AS (
-                SELECT product_id,
-                       1 + sum(x1*x1) AS a11, sum(x1*x2) AS a12,
-                       1 + sum(x2*x2) AS a22,
-                       sum(r*x1) AS b1, sum(r*x2) AS b2
-                FROM fb GROUP BY 1
-            ),
-            inv AS (
-                SELECT *, a11*a22 - a12*a12 AS det FROM agg
-            )
-            SELECT product_id,
-                   round(a22/det, 6)  AS inv11,
-                   round(-a12/det, 6) AS inv12,
-                   round(a11/det, 6)  AS inv22,
-                   round(b1, 6) AS b1, round(b2, 6) AS b2,
-                   round((a22*b1 - a12*b2)/det, 6)  AS theta1,
-                   round((-a12*b1 + a11*b2)/det, 6) AS theta2
-            FROM inv
-        """,
-        "a12_linucb_score_top5": """
-            WITH fb AS (
-                SELECT user_id % 20 AS product_id,
-                       CAST(1.0 AS DOUBLE) AS x1,
-                       least(value, 100.0) / 100.0 AS x2,
-                       CAST(CASE WHEN event_type IN ('click','purchase')
-                            THEN 1.0 ELSE 0.0 END AS DOUBLE) AS r
-                FROM events
-            ),
-            agg AS (
-                SELECT product_id,
-                       1 + sum(x1*x1) AS a11, sum(x1*x2) AS a12,
-                       1 + sum(x2*x2) AS a22,
-                       sum(r*x1) AS b1, sum(r*x2) AS b2
-                FROM fb GROUP BY 1
-            ),
-            inv AS (
-                SELECT *, a11*a22 - a12*a12 AS det FROM agg
-            ),
-            m AS (
-                SELECT product_id,
-                       a22/det AS inv11, -a12/det AS inv12, a11/det AS inv22,
-                       (a22*b1 - a12*b2)/det  AS theta1,
-                       (-a12*b1 + a11*b2)/det AS theta2
-                FROM inv
-            )
-            -- x = [1.0, 0.5], alpha = 1:
-            -- s = theta1 + 0.5*theta2 + sqrt(inv11 + inv12 + 0.25*inv22)
-            SELECT product_id,
-                   round(theta1 + 0.5*theta2
-                         + sqrt(inv11 + inv12 + 0.25*inv22), 6) AS score
-            FROM m
-            ORDER BY score DESC, product_id ASC
-            LIMIT 5
-        """,
-        "f_feature_engineering": """
-            WITH mm AS (
-                SELECT min(c_acctbal) AS lo, max(c_acctbal) AS hi FROM customer
-            )
-            SELECT c_custkey,
-                   CAST(c_mktsegment = 'AUTOMOBILE' AS INT) AS seg_automobile,
-                   CAST(c_mktsegment = 'BUILDING'   AS INT) AS seg_building,
-                   CAST(c_mktsegment = 'FURNITURE'  AS INT) AS seg_furniture,
-                   CAST(c_mktsegment = 'HOUSEHOLD'  AS INT) AS seg_household,
-                   CAST(c_mktsegment = 'MACHINERY'  AS INT) AS seg_machinery,
-                   round(CASE WHEN hi - lo <> 0
-                              THEN (c_acctbal - lo) / (hi - lo) ELSE 0.0 END, 6)
-                       AS acctbal_scaled,
-                   CAST(c_mktsegment IN ('AUTOMOBILE','MACHINERY') AS INT)
-                       AS is_industrial
-            FROM customer, mm
-        """,
-        "eval_ranking_metrics": """
-            WITH log AS (
-                SELECT o_custkey AS user_id, o_orderkey AS product_id,
-                       round((o_totalprice % 1000.0) / 1000.0, 6) AS score,
-                       CAST(o_orderstatus = 'F' AS INT) AS reward
-                FROM orders
-            ),
-            ranked AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY user_id ORDER BY score DESC, product_id
-                ) AS rnk
-                FROM log
-            ),
-            per_user AS (
-                SELECT user_id,
-                       sum(CASE WHEN rnk <= 5 THEN reward ELSE 0 END) AS hits,
-                       sum(CASE WHEN rnk <= 5 THEN 1 ELSE 0 END) AS recs,
-                       sum(reward) AS positives
-                FROM ranked GROUP BY user_id
-            )
-            SELECT round(sum(hits)::DOUBLE / sum(recs), 6) AS ctr_at_k,
-                   round(avg(hits::DOUBLE / recs), 6) AS precision_at_k,
-                   round(avg(CASE WHEN positives > 0
-                             THEN hits::DOUBLE / positives END), 6) AS recall_at_k
-            FROM per_user
-        """,
-        "eval_auc": """
-            WITH log AS (
-                SELECT round((o_totalprice % 1000.0) / 1000.0, 6) AS score,
-                       CAST(o_orderstatus = 'F' AS INT) AS reward
-                FROM orders
-            ),
-            per_score AS (
-                SELECT score, count(*) AS cnt, sum(reward)::DOUBLE AS pos
-                FROM log GROUP BY score
-            ),
-            ranked AS (
-                SELECT *,
-                       coalesce(sum(cnt) OVER (
-                           ORDER BY score
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                       ), 0) + (cnt + 1.0) / 2.0 AS avg_rank
-                FROM per_score
-            )
-            SELECT round(
-                (sum(pos * avg_rank) - sum(pos) * (sum(pos) + 1.0) / 2.0)
-                / (sum(pos) * (sum(cnt) - sum(pos))), 6) AS auc
-            FROM ranked
-        """,
-        "f_tfidf_top_terms": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(list_filter(
-                           string_split_regex(lower(text), '[^a-z0-9]+'),
-                           t -> t != '')) AS term
-                FROM documents
-            ),
-            tf AS (
-                SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2
-            ),
-            dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-            n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-            scored AS (
-                SELECT doc_id, term, tf, df,
-                       round(tf * (ln((1.0 + n_docs) / (1.0 + df)) + 1.0), 9)
-                           AS tfidf
-                FROM tf JOIN dfreq USING (term) CROSS JOIN n
-            ),
-            ranked AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY doc_id ORDER BY tfidf DESC, term
-                ) AS rn
-                FROM scored
-            )
-            SELECT doc_id, term, tf, df, tfidf FROM ranked WHERE rn <= 3
-        """,
-        "p4_split_by_predicate": """
-            SELECT CASE WHEN event_type = 'error' THEN 'error' ELSE 'ok' END
-                       AS branch,
-                   count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1
-        """,
-        "p9_align_schema": """
-            -- coalesce(col, 0.0) promotes present columns to DOUBLE;
-            -- feature_x and o_shippriority are absent from the table
-            -- and fill with the 0.0 default
-            SELECT CAST(o_orderkey AS DOUBLE) AS o_orderkey, o_totalprice,
-                   0.0::DOUBLE AS feature_x, 0.0::DOUBLE AS o_shippriority
-            FROM orders
-        """,
-        "p10_null_defaults": """
-            SELECT coalesce(nullif(event_type, 'error'), 'UNKNOWN') AS etype,
-                   0.0::DOUBLE AS absent_val,
-                   count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1, 2
-        """,
-        "j_asof_enrichment": """
-            WITH clicks AS (
-                SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS t, value
-                FROM events WHERE event_type = 'click'
-            ),
-            s AS (
-                SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
-                       value AS profile_v
-                FROM events WHERE event_type = 'signup'
-            )
-            SELECT c.event_id, c.user_id,
-                   round(s.profile_v, 2) AS profile_v_asof
-            FROM clicks c
-            ASOF LEFT JOIN s ON c.user_id = s.user_id AND s.t <= c.t
-        """,
-        "j_interval_join": """
-            WITH clicks AS (
-                SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS t, value
-                FROM events WHERE event_type = 'click'
-            ),
-            sessions AS (
-                SELECT user_id, CAST(ts AS TIMESTAMP) AS start_ts,
-                       CAST(ts AS TIMESTAMP) + INTERVAL 1 HOUR AS end_ts
-                FROM events WHERE event_type = 'signup'
-            )
-            SELECT c.event_id, c.user_id, s.start_ts,
-                   round(c.value, 2) AS value
-            FROM clicks c JOIN sessions s
-              ON c.user_id = s.user_id
-             AND c.t >= s.start_ts AND c.t <= s.end_ts
-        """,
-        "ext_hierarchical_rollup": """
-            -- oracle computes the daily level straight from raw rows;
-            -- the engine's hourly->daily reaggregation must agree
-            SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP))::DATE,
-                            '%Y-%m-%d') AS day,
-                   event_type,
-                   round(sum(value), 2) AS total_value,
-                   count(*) AS n
-            FROM events GROUP BY 1, 2
-        """,
-        "ext_rollup_revenue": """
-            SELECT n_name, c_mktsegment,
-                   GROUPING(n_name, c_mktsegment) AS gid,
-                   round(sum(c_acctbal), 2) AS total_bal,
-                   count(*) AS n
-            FROM customer JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY ROLLUP (n_name, c_mktsegment)
-        """,
-        "ext_zscore_anomalies": """
-            WITH s AS (
-                SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sd
-                FROM events GROUP BY 1
-            )
-            -- nullif(sd, 0.0) mirrors Spark-side try_divide: constant
-            -- keys (sd=0) and single-row keys (sd NULL) flag nothing.
-            SELECT event_id, e.event_type, value,
-                   round((value - mu) / nullif(sd, 0.0), 4) AS zscore
-            FROM events e JOIN s ON e.event_type = s.event_type
-            WHERE abs(round((value - mu) / nullif(sd, 0.0), 4)) > 2.5
-        """,
-        "ext_retention": """
-            WITH a AS (
-                SELECT DISTINCT user_id,
-                       CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 604800) AS BIGINT) AS w
-                FROM events
-            ),
-            c AS (SELECT user_id, min(w) AS cw FROM a GROUP BY 1)
-            SELECT c.cw AS cohort_week, a.w - c.cw AS k,
-                   count(DISTINCT a.user_id) AS n_users
-            FROM a JOIN c ON a.user_id = c.user_id
-            GROUP BY 1, 2
-        """,
-        "ext_funnel": """
-            -- sequential-min formulation of the same strict funnel:
-            -- stage k's first event must be strictly after stage k-1's.
-            -- (ts are collision-free per user in the corpus, verified,
-            -- so strict > equals the engine's (ts,event_id) ordering.)
-            WITH e AS (
-                SELECT user_id, CAST(ts AS TIMESTAMP) AS t, event_type FROM events
-            ),
-            v AS (
-                SELECT user_id, min(t) AS tv FROM e
-                WHERE event_type = 'view' GROUP BY 1
-            ),
-            c AS (
-                SELECT e.user_id, min(t) AS tc FROM e JOIN v USING (user_id)
-                WHERE event_type = 'click' AND t > tv GROUP BY 1
-            ),
-            p AS (
-                SELECT e.user_id, min(t) AS tp FROM e JOIN c USING (user_id)
-                WHERE event_type = 'purchase' AND t > tc GROUP BY 1
-            ),
-            u AS (SELECT DISTINCT user_id FROM e),
-            s AS (
-                SELECT u.user_id,
-                       CASE WHEN p.user_id IS NOT NULL THEN 3
-                            WHEN c.user_id IS NOT NULL THEN 2
-                            WHEN v.user_id IS NOT NULL THEN 1
-                            ELSE 0 END AS funnel_stage
-                FROM u
-                LEFT JOIN v ON u.user_id = v.user_id
-                LEFT JOIN c ON u.user_id = c.user_id
-                LEFT JOIN p ON u.user_id = p.user_id
-            )
-            SELECT funnel_stage, count(*) AS n_keys FROM s GROUP BY 1
-        """,
-        "ext_user_journeys": """
-            SELECT user_id,
-                   count(*) AS n_steps,
-                   array_to_string(
-                       (list(event_type ORDER BY CAST(ts AS TIMESTAMP), event_id))[1:50],
-                       '>') AS journey
-            FROM events
-            GROUP BY user_id
-        """,
-        "ext_argmax_per_group": """
-            WITH rev AS (
-                SELECT l_partkey,
-                       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-                FROM lineitem GROUP BY 1
-            ),
-            j AS (
-                SELECT p_brand, p_name, revenue
-                FROM rev JOIN part ON l_partkey = p_partkey
-            )
-            SELECT p_brand, p_name AS top_part, revenue FROM (
-                SELECT p_brand, p_name, revenue,
-                       row_number() OVER (PARTITION BY p_brand
-                           ORDER BY revenue DESC, p_name DESC) AS rn
-                FROM j
-            ) WHERE rn = 1
-        """,
-        "llm_weighted_sample": """
-            WITH d AS (
-                -- n_chars > 0 mirrors the operator's positive-weight
-                -- contract (weight 0 = never keep).
-                SELECT doc_id, text, lang, source, n_chars,
-                       substr(md5(doc_id::VARCHAR), 1, 8) AS h
-                FROM documents
-                WHERE n_chars > 0
-            ),
-            u AS (
-                SELECT doc_id, text, lang, source, n_chars,
-                       list_sum(list_transform(range(1, 9),
-                           i -> (strpos('0123456789abcdef', h[i]) - 1)::DOUBLE
-                                * power(16.0, 8 - i))) / 4294967296.0 AS uu
-                FROM d
-            )
-            SELECT doc_id, text, lang, source, n_chars FROM (
-                SELECT doc_id, text, lang, source, n_chars,
-                       row_number() OVER (PARTITION BY source
-                           ORDER BY uu / n_chars ASC, doc_id ASC) AS rn
-                FROM u
-            ) WHERE rn <= 10
-        """,
-        "ext_cube_revenue": """
-            SELECT n_name, c_mktsegment,
-                   GROUPING(n_name, c_mktsegment) AS gid,
-                   round(sum(c_acctbal), 2) AS total_bal,
-                   count(*) AS n
-            FROM customer JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY CUBE (n_name, c_mktsegment)
-        """,
-        "t14_sliding_window": """
-            -- expand each event into its 2 overlapping 10-min windows
-            -- (slide 5 min): starts at floor(e/300)*300 - {0, 300}
-            WITH e AS (
-                SELECT CAST(ts AS TIMESTAMP) AS t, event_type, value,
-                       CAST(floor(extract(epoch FROM CAST(ts AS TIMESTAMP)) / 300)
-                            AS BIGINT) * 300 AS base
-                FROM events
-            ),
-            expanded AS (
-                SELECT strftime(to_timestamp(base - k * 300),
-                                '%Y-%m-%d %H:%M:%S') AS window_start,
-                       event_type, value
-                FROM e, unnest([0, 1]) AS u(k)
-            )
-            SELECT window_start, event_type, count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM expanded GROUP BY 1, 2
-        """,
-        "ext_quantile_summary": """
-            SELECT l_returnflag,
-                   round(quantile_cont(l_extendedprice, 0.25), 6) AS p25,
-                   round(quantile_cont(l_extendedprice, 0.5), 6)  AS p50,
-                   round(quantile_cont(l_extendedprice, 0.75), 6) AS p75,
-                   round(quantile_cont(l_extendedprice, 0.95), 6) AS p95,
-                   count(*) AS n_rows
-            FROM lineitem
-            GROUP BY l_returnflag
-        """,
-        "ext_quantile_approx": """
-            -- The approx path is rank-bounded, not value-exact: the
-            -- oracle states the PROPERTY (every group within bound);
-            -- the Spark side computes the actual sketch + rank check.
-            SELECT l_returnflag, count(*) AS n_rows, true AS within_bound
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "ext_session_window": """
-            -- gaps-and-islands replay of Spark's session_window merge
-            -- rule: ordered per key, a row starts a NEW session iff its
-            -- gap to the previous row EXCEEDS 30 min — an arrival at
-            -- exactly prev+gap still merges (verified against Spark in
-            -- tests/test_streaming.py); session end = last event + gap.
-            WITH e AS (
-                SELECT event_type, CAST(ts AS TIMESTAMP) AS t, value FROM events
-            ),
-            flagged AS (
-                SELECT event_type, t, value,
-                       CASE WHEN lag(t) OVER w IS NULL
-                              OR t - lag(t) OVER w > INTERVAL 30 MINUTE
-                            THEN 1 ELSE 0 END AS new_sess
-                FROM e
-                WINDOW w AS (PARTITION BY event_type ORDER BY t)
-            ),
-            islands AS (
-                SELECT event_type, t, value,
-                       sum(new_sess) OVER (PARTITION BY event_type ORDER BY t
-                                           ROWS UNBOUNDED PRECEDING) AS sid
-                FROM flagged
-            )
-            SELECT event_type,
-                   epoch_us(min(t)) AS session_start_us,
-                   epoch_us(max(t) + INTERVAL 30 MINUTE) AS session_end_us,
-                   round(sum(value), 2) AS total_value,
-                   count(*) AS n_events
-            FROM islands
-            GROUP BY event_type, sid
-        """,
-        "ext_moving_average": """
-            WITH e AS (
-                SELECT event_id, user_id,
-                       CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS ep,
-                       value
-                FROM events
-            )
-            SELECT event_id, user_id, ep,
-                   round(avg(value) OVER w, 4) AS trailing_avg,
-                   count(*) OVER w AS n_window
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY ep
-                         RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        """,
-        "llm_dedup_exact": """
-            SELECT md5(text) AS text_hash,
-                   min(doc_id) AS keep_doc_id,
-                   count(*) AS n_copies
-            FROM documents
-            GROUP BY 1
-        """,
-        "llm_dedup_minhash_pairs": _sql_minhash_pairs(threshold=0.1),
-        "llm_dedup_clusters": _sql_neardup_clusters(threshold=0.1),
-        # cluster-size histogram derives from the SAME labeled frame
-        "llm_lang_confusion": (
-            "WITH _pred AS ("
-            + _SQL_LANG_ID
-            + """)
-            SELECT d.lang AS label_lang, p.pred_lang,
-                   count(*) AS n_docs
-            FROM documents d JOIN _pred p USING (doc_id)
-            GROUP BY 1, 2 ORDER BY 1, 2
-            """
-        ),
-        "llm_dup_cluster_sizes": (
-            "WITH _labeled AS ("
-            + _sql_neardup_clusters(threshold=0.1)
-            + """)
-            , _sizes AS (
-                SELECT component, max(n_members) AS cluster_size
-                FROM _labeled GROUP BY 1
-            )
-            SELECT cluster_size, count(*) AS n_clusters,
-                   (cluster_size * count(*))::BIGINT AS n_docs,
-                   ((cluster_size - 1) * count(*))::BIGINT
-                       AS n_removed_by_keep_one
-            FROM _sizes GROUP BY 1 ORDER BY 1
-            """
-        ),
-        "llm_quality_classifier": TR.sql_logreg_quality(iters=3, lr=1.0),
-        "llm_distinctive_terms": """
-            WITH tok AS (
-                SELECT source,
-                       unnest(string_split_regex(lower(trim(text)), '\\s+'))
-                           AS term
-                FROM documents
-            ),
-            gt AS (
-                SELECT source, term, count(*) AS c
-                FROM tok GROUP BY 1, 2
-            ),
-            tt AS (SELECT term, sum(c) AS ct FROM gt GROUP BY 1),
-            gg AS (SELECT source, sum(c) AS cg FROM gt GROUP BY 1),
-            nn AS (SELECT sum(ct)::DOUBLE AS n FROM tt),
-            j AS (
-                SELECT gt.source, gt.term, c, ct, cg, n,
-                       0.01 * ct AS aw, 0.01 * n AS a0
-                FROM gt JOIN tt USING (term) JOIN gg USING (source)
-                CROSS JOIN nn
-                WHERE c >= 5
-            ),
-            z AS (
-                SELECT source, term, c AS n_in_group,
-                       round((ln((c + aw) / ((cg + a0) - (c + aw)))
-                              - ln(((ct - c) + aw)
-                                   / (((n - cg) + a0) - ((ct - c) + aw))))
-                             / sqrt(1.0 / (c + aw) + 1.0 / ((ct - c) + aw)),
-                             4) AS z
-                FROM j
-            )
-            SELECT source, term, n_in_group, z FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY source ORDER BY z DESC, term
-                ) AS rk
-                FROM z
-            ) WHERE rk <= 10
-        """,
-        "ext_duplicate_events": """
-            SELECT DISTINCT a.user_id, a.event_type,
-                   least(a.event_id, b.event_id) AS id_a,
-                   greatest(a.event_id, b.event_id) AS id_b,
-                   ((abs(epoch_us(b.ts) - epoch_us(a.ts)) * 2 + 1000)
-                    // 2000)::BIGINT AS gap_ms
-            FROM events a JOIN events b
-              ON a.user_id = b.user_id
-             AND a.event_type = b.event_type
-             AND a.event_id < b.event_id
-             AND abs(epoch_us(b.ts) - epoch_us(a.ts)) < 600000000
-        """,
-        "llm_uncertainty_sample": f"""
-            WITH s AS ({TR.sql_logreg_quality(iters=3, lr=1.0)})
-            SELECT doc_id, quality_prob,
-                   round(abs(quality_prob - 0.5), 6) AS margin
-            FROM s
-            ORDER BY margin ASC, doc_id ASC
-            LIMIT 50
-        """,
-        "ext_funnel_step_times": """
-            WITH ev AS (
-                SELECT user_id, event_type,
-                       struct_pack(t := epoch_us(ts), i := event_id) AS st
-                FROM events
-            ),
-            s1 AS (
-                SELECT user_id, min(st) AS r1
-                FROM ev WHERE event_type = 'view' GROUP BY 1
-            ),
-            s2 AS (
-                SELECT e.user_id, min(st) AS r2
-                FROM ev e JOIN s1 USING (user_id)
-                WHERE event_type = 'click' AND st > r1
-                GROUP BY 1
-            ),
-            s3 AS (
-                SELECT e.user_id, min(st) AS r3
-                FROM ev e JOIN s2 USING (user_id)
-                WHERE event_type = 'purchase' AND st > r2
-                GROUP BY 1
-            ),
-            d AS (
-                SELECT 'view->click' AS step_pair, (r2.t - r1.t) AS d
-                FROM s1 JOIN s2 USING (user_id)
-                UNION ALL
-                SELECT 'click->purchase', (r3.t - r2.t)
-                FROM s2 JOIN s3 USING (user_id)
-            )
-            SELECT step_pair, count(*) AS n_converted,
-                   ((sum(d) * 2 + 1000 * count(*))
-                    // (2000 * count(*)))::BIGINT AS avg_ms,
-                   cast(round(quantile_cont(d, 0.5) * 2) as bigint)
-                       AS p50_us_x2
-            FROM d GROUP BY 1
-        """,
-        "ext_seasonal_profile": """
-            WITH cells AS (
-                SELECT event_type, hour(ts) AS hour_of_day,
-                       count(*) AS n_rows,
-                       sum(cast(round(value * 100) as bigint)) AS sh,
-                       sum(cast(round(value * 100) as bigint)
-                           * cast(round(value * 100) as bigint)) AS sh2
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ),
-            o AS (
-                SELECT event_type,
-                       sum(n_rows) AS ng, sum(sh) AS sg, sum(sh2) AS sg2
-                FROM cells GROUP BY 1
-            )
-            SELECT c.event_type, hour_of_day, n_rows,
-                   ((CASE WHEN sh * ng - sg * n_rows < 0 THEN -1 ELSE 1 END)
-                    * ((abs(sh * ng - sg * n_rows) * 100 * 2
-                        + n_rows * ng) // (2 * n_rows * ng)))::BIGINT
-                       AS seasonal_offset_e4,
-                   CASE WHEN (sg2 * ng - sg * sg) * n_rows * n_rows > 0
-                        THEN (1000000
-                              - ((sh2 * n_rows - sh * sh) * ng * ng
-                                 * 1000000 * 2
-                                 + (sg2 * ng - sg * sg) * n_rows * n_rows)
-                                // (2 * (sg2 * ng - sg * sg)
-                                    * n_rows * n_rows))::BIGINT
-                   END AS hour_explains_e6
-            FROM cells c JOIN o ON c.event_type = o.event_type
-        """,
-        "ext_ab_test": """
-            WITH agg AS (
-                SELECT event_type, count(*) AS n,
-                       sum((value > 60)::INT) AS c
-                FROM events WHERE event_type IN ('click', 'view')
-                GROUP BY 1
-            ),
-            j AS (
-                SELECT a.n AS n_a, a.c AS c_a, b.n AS n_b, b.c AS c_b
-                FROM (SELECT * FROM agg WHERE event_type = 'click') a
-                CROSS JOIN (SELECT * FROM agg WHERE event_type = 'view') b
-            ),
-            st AS (
-                SELECT n_a, n_b, c_a, c_b,
-                       c_a / n_a::DOUBLE AS pa,
-                       c_b / n_b::DOUBLE AS pb,
-                       (c_a + c_b) / (n_a + n_b)::DOUBLE AS pool
-                FROM j
-            ),
-            zt AS (
-                SELECT *,
-                       (pa - pb)
-                       / sqrt(pool * (1 - pool)
-                              * (1.0 / n_a + 1.0 / n_b)) AS z
-                FROM st
-            ),
-            pv AS (
-                SELECT *,
-                       1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))) AS t_
-                FROM zt
-            )
-            SELECT 'click' AS group_a, 'view' AS group_b, n_a, n_b,
-                   ((c_a * 1000000 * 2 + n_a) // (2 * n_a))::BIGINT
-                       AS rate_a_e6,
-                   ((c_b * 1000000 * 2 + n_b) // (2 * n_b))::BIGINT
-                       AS rate_b_e6,
-                   ((CASE WHEN c_a * n_b - c_b * n_a < 0 THEN -1 ELSE 1 END)
-                    * ((abs(c_a * n_b - c_b * n_a) * 1000000 * 2
-                        + n_a * n_b) // (2 * n_a * n_b)))::BIGINT AS lift_e6,
-                   round(z, 6) AS z,
-                   round((t_ * (0.254829592 + t_ * (-0.284496736
-                         + t_ * (1.421413741 + t_ * (-1.453152027
-                         + t_ * 1.061405429)))))
-                         * exp(-(abs(z) / sqrt(2.0))
-                               * (abs(z) / sqrt(2.0))), 6) AS p_value
-            FROM pv
-        """,
-        "ext_kaplan_meier": """
-            WITH pu AS (
-                SELECT user_id,
-                       min(epoch_us(ts)) AS f,
-                       max(epoch_us(ts)) AS l,
-                       min(CASE WHEN event_type = 'error'
-                                THEN epoch_us(ts) END) AS e
-                FROM events GROUP BY 1
-            ),
-            spans AS (
-                SELECT ((coalesce(e, l) - f) // 86400000000)::INT AS t,
-                       (e IS NOT NULL) AS errored
-                FROM pu
-            ),
-            per_t AS (
-                SELECT t, count(*) AS total,
-                       sum(errored::INT) AS n_events
-                FROM spans GROUP BY 1
-            ),
-            grid AS (
-                SELECT t, n_events,
-                       sum(total) OVER ()
-                       - coalesce(sum(total) OVER (
-                             ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0) AS n_at_risk
-                FROM per_t
-            ),
-            stepped AS (
-                SELECT t, n_at_risk, n_events,
-                       CASE WHEN min(1.0 - n_events / n_at_risk::DOUBLE)
-                                 OVER (ORDER BY t
-                                       ROWS UNBOUNDED PRECEDING) <= 0
-                            THEN NULL
-                            ELSE sum(CASE WHEN 1.0 - n_events
-                                               / n_at_risk::DOUBLE > 0
-                                     THEN cast(round(ln(1.0 - n_events
-                                              / n_at_risk::DOUBLE)
-                                              * 1000000000000) as bigint)
-                                     ELSE 0 END)
-                                 OVER (ORDER BY t
-                                       ROWS UNBOUNDED PRECEDING)
-                       END AS ls
-                FROM grid
-            )
-            SELECT t AS duration_days, n_at_risk::BIGINT AS n_at_risk,
-                   n_events::BIGINT AS n_events,
-                   ls::BIGINT AS log_survival_e12
-            FROM stepped WHERE n_events > 0
-        """,
-        "ext_jackknife_ci": """
-            WITH b AS (
-                SELECT (('0x' || substr(md5(event_id::VARCHAR), 1, 8))
-                        ::BIGINT % 32) AS bk,
-                       value
-                FROM events WHERE value IS NOT NULL
-            ),
-            per_b AS (
-                SELECT bk, count(*) AS nb, sum(value) AS sb,
-                       sum(cast(round(value * 100) as bigint)) AS sbc
-                FROM b GROUP BY 1
-            ),
-            tot AS (
-                SELECT sum(nb) AS n, sum(sb) AS s, sum(sbc) AS sc,
-                       count(*) AS k
-                FROM per_b
-            ),
-            loo AS (
-                SELECT n, s, sc, k, (s - sb) / (n - nb) AS m
-                FROM per_b CROSS JOIN tot
-            ),
-            st AS (
-                SELECT n, s, sc, k, var_pop(m) AS vm
-                FROM loo GROUP BY 1, 2, 3, 4
-            )
-            SELECT n::BIGINT AS n,
-                   ((CASE WHEN sc < 0 THEN -1 ELSE 1 END)
-                    * ((abs(sc) * 10000 * 2 + n) // (2 * n)))::BIGINT
-                       AS mean_e6,
-                   round(sqrt((k - 1) * vm), 6) AS se,
-                   round(s / n - 1.96 * sqrt((k - 1) * vm), 6) AS ci_lo,
-                   round(s / n + 1.96 * sqrt((k - 1) * vm), 6) AS ci_hi
-            FROM st
-        """,
-        "llm_fair_allocation": """
-            WITH caps AS (
-                SELECT source, sum(n_chars)::DOUBLE AS cap
-                FROM documents GROUP BY 1
-            ),
-            r AS (
-                SELECT source, cap,
-                       row_number() OVER (ORDER BY cap, source) AS i,
-                       coalesce(sum(cap) OVER (
-                           ORDER BY cap, source
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0) AS cumb,
-                       count(*) OVER () AS n
-                FROM caps
-            ),
-            lv AS (
-                SELECT *, (200000.0 - cumb) / (n - i + 1) AS li FROM r
-            ),
-            t AS (
-                SELECT coalesce(
-                    (SELECT li FROM lv WHERE li <= cap
-                     ORDER BY i LIMIT 1), 1e308) AS t
-            )
-            SELECT source, round(cap, 6) AS cap,
-                   round(least(cap, greatest(t.t, 0.0::DOUBLE)), 6)
-                       AS allocation
-            FROM lv CROSS JOIN t
-        """,
-        "ext_cohens_kappa": """
-            WITH f AS (
-                SELECT (n_chars >= 250)::INT AS a,
-                       (len(string_split_regex(lower(trim(text)), '\\s+'))
-                        >= 50)::INT AS b
-                FROM documents
-            ),
-            cells AS (SELECT a, b, count(*) AS n FROM f GROUP BY 1, 2),
-            tot AS (SELECT sum(n) AS t FROM cells),
-            po AS (
-                SELECT coalesce(sum(n), 0) AS agree
-                FROM cells WHERE a = b
-            ),
-            ma AS (SELECT a, sum(n) AS na FROM cells GROUP BY 1),
-            mb AS (SELECT b, sum(n) AS nb FROM cells GROUP BY 1),
-            pe AS (
-                SELECT sum(na * nb) AS sab
-                FROM ma JOIN mb ON ma.a = mb.b
-            ),
-            base AS (
-                SELECT tot.t::BIGINT AS n,
-                       ((agree * 1000000 * 2 + t) // (2 * t))::BIGINT
-                           AS po_e6,
-                       ((sab * 1000000 * 2 + t * t)
-                        // (2 * t * t))::BIGINT AS pe_e6
-                FROM tot CROSS JOIN po CROSS JOIN pe
-            )
-            SELECT n, po_e6, pe_e6,
-                   CASE WHEN pe_e6 < 1000000 THEN
-                       ((CASE WHEN po_e6 < pe_e6 THEN -1 ELSE 1 END)
-                        * ((abs(po_e6 - pe_e6) * 1000000 * 2
-                            + (1000000 - pe_e6))
-                           // (2 * (1000000 - pe_e6))))::BIGINT
-                   END AS kappa_e6
-            FROM base
-        """,
-        "ext_autocorrelation": """
-            WITH b AS (
-                SELECT event_type, ts, event_id, value
-                FROM events WHERE value IS NOT NULL
-            ),
-            lagged AS (
-                SELECT event_type, value AS x,
-                       lag(value, 1) OVER w AS l1,
-                       lag(value, 2) OVER w AS l2,
-                       lag(value, 3) OVER w AS l3,
-                       lag(value, 4) OVER w AS l4,
-                       lag(value, 5) OVER w AS l5
-                FROM b
-                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-            ),
-            mu AS (SELECT event_type, avg(x) AS m FROM lagged GROUP BY 1),
-            agg AS (
-                SELECT lagged.event_type,
-                       count(*) AS n_rows,
-                       sum((x - m) * (x - m)) AS den,
-                       sum((x - m) * (l1 - m)) AS n1,
-                       sum((x - m) * (l2 - m)) AS n2,
-                       sum((x - m) * (l3 - m)) AS n3,
-                       sum((x - m) * (l4 - m)) AS n4,
-                       sum((x - m) * (l5 - m)) AS n5
-                FROM lagged JOIN mu USING (event_type)
-                GROUP BY 1
-            )
-            SELECT event_type, lag, n_rows, round(num / den, 6) AS acf
-            FROM (
-                SELECT event_type, n_rows, den,
-                       unnest([1, 2, 3, 4, 5]) AS lag,
-                       unnest([n1, n2, n3, n4, n5]) AS num
-                FROM agg
-            )
-        """,
-        "ext_concentration": """
-            WITH rev AS (
-                SELECT s_nationkey AS nationkey, l_suppkey AS suppkey,
-                       sum(cast(round(l_extendedprice * 100) as bigint)) AS v
-                FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-                GROUP BY 1, 2
-            ),
-            ranked AS (
-                SELECT nationkey, v,
-                       row_number() OVER (
-                           PARTITION BY nationkey
-                           ORDER BY v DESC, suppkey ASC
-                       ) AS rk,
-                       sum(v) OVER (
-                           PARTITION BY nationkey
-                           ORDER BY v DESC, suppkey ASC
-                           ROWS UNBOUNDED PRECEDING
-                       ) AS cum,
-                       sum(v) OVER (PARTITION BY nationkey) AS tot,
-                       count(*) OVER (PARTITION BY nationkey) AS nk
-                FROM rev
-            ),
-            covering AS (
-                SELECT nationkey, min(rk) AS n_covering
-                FROM ranked WHERE cum * 10 >= tot * 9 GROUP BY 1
-            )
-            SELECT r.nationkey, nk AS n_keys, n_covering,
-                   ((n_covering * 1000000 * 2 + nk)
-                    // (2 * nk))::BIGINT AS covering_frac_e6,
-                   CASE WHEN tot > 0 THEN
-                       ((v * 1000000 * 2 + tot) // (2 * tot))::BIGINT
-                   END AS top1_share_e6
-            FROM ranked r JOIN covering c ON r.nationkey = c.nationkey
-            WHERE rk = 1
-        """,
-        "ext_gini": """
-            WITH b AS (
-                SELECT event_type, value FROM events
-                WHERE value IS NOT NULL AND value >= 0
-            ),
-            r AS (
-                SELECT event_type, value,
-                       row_number() OVER (
-                           PARTITION BY event_type ORDER BY value
-                       ) AS i
-                FROM b
-            )
-            ,
-            a AS (
-                SELECT event_type, count(*) AS n_rows,
-                       sum(cast(round(value * 100) as bigint)) AS sx,
-                       sum(i * cast(round(value * 100) as bigint)) AS six
-                FROM r GROUP BY 1
-            )
-            SELECT event_type, n_rows,
-                   CASE WHEN sx > 0 THEN
-                       ((CASE WHEN 2 * six - (n_rows + 1) * sx < 0
-                              THEN -1 ELSE 1 END)
-                        * ((abs(2 * six - (n_rows + 1) * sx) * 1000000 * 2
-                            + n_rows * sx) // (2 * n_rows * sx)))::BIGINT
-                   END AS gini_e6
-            FROM a
-        """,
-        "llm_ngram_novelty": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id, CASE WHEN len(words) >= 3
-                    THEN list_transform(range(1, len(words)-1),
-                         i -> array_to_string(words[i:i+2], ' '))
-                    ELSE [array_to_string(words, ' ')] END AS shingles
-                FROM w
-            ),
-            po AS (
-                SELECT doc_id, unnest(list_distinct(shingles)) AS shingle
-                FROM sh
-            ),
-            f AS (
-                SELECT shingle, min(doc_id) AS first_id FROM po GROUP BY 1
-            )
-            SELECT doc_id,
-                   count(*) AS n_shingles,
-                   sum((first_id = po.doc_id)::INT)::BIGINT AS n_novel,
-                   round(sum((first_id = po.doc_id)::INT)
-                         / count(*)::DOUBLE, 6) AS novelty
-            FROM po JOIN f USING (shingle)
-            GROUP BY 1
-        """,
-        "llm_lsh_tuning": f"""
-            WITH pj AS (
-                SELECT jaccard_e4, jaccard_e4 / 10000.0 AS j
-                FROM ({_sql_ngram_jaccard(threshold=0.05)})
-            ),
-            cfg AS (
-                SELECT * FROM (VALUES (4, 3), (3, 4), (2, 6), (6, 2))
-                    t(bands, rows)
-            )
-            SELECT bands, rows, bands * rows AS num_hashes,
-                   round(avg(CASE WHEN jaccard_e4 >= 5000 THEN
-                       1.0 - pow(1.0 - pow(j, rows), bands) END), 6)
-                       AS expected_recall,
-                   round(avg(1.0 - pow(1.0 - pow(j, rows), bands)), 6)
-                       AS expected_candidate_rate
-            FROM pj CROSS JOIN cfg
-            GROUP BY bands, rows
-        """,
-        "ext_changepoint": """
-            WITH b AS (
-                SELECT event_type, ts, event_id, value
-                FROM events WHERE value IS NOT NULL
-            ),
-            st AS (
-                SELECT event_type, avg(value) AS mu,
-                       stddev_pop(value) AS sd, count(*) AS n
-                FROM b GROUP BY 1
-            ),
-            c AS (
-                SELECT b.event_type, ts, event_id, sd, n,
-                       round(abs(sum(value - mu) OVER (
-                           PARTITION BY b.event_type
-                           ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING)), 4) AS a_s
-                FROM b JOIN st USING (event_type)
-            ),
-            p AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY event_type
-                    ORDER BY a_s DESC, ts, event_id
-                ) AS rn
-                FROM c
-            )
-            SELECT event_type, ts AS changepoint_ts,
-                   event_id AS changepoint_id,
-                   a_s AS peak_cusum,
-                   round(a_s / (sd * sqrt(n)), 4) AS shift_score
-            FROM p WHERE rn = 1
-        """,
-        "ext_benford": """
-            WITH d AS (
-                SELECT substr(CAST(CAST(round(abs(l_extendedprice) * 100)
-                                   AS BIGINT) AS VARCHAR), 1, 1) AS digit
-                FROM lineitem
-                WHERE l_extendedprice IS NOT NULL
-                  AND abs(l_extendedprice) > 0
-            ),
-            counts AS (
-                SELECT digit, count(*) AS n_values
-                FROM d WHERE digit <> '0' GROUP BY 1
-            ),
-            tot AS (SELECT sum(n_values) AS t FROM counts)
-            SELECT digit, n_values,
-                   ((n_values * 1000000 * 2 + tot.t)
-                    // (2 * tot.t))::BIGINT AS observed_share_e6,
-                   round(log10(1 + 1.0 / digit::INT), 6) AS benford_share,
-                   round(pow(n_values - log10(1 + 1.0 / digit::INT)
-                             * tot.t::DOUBLE, 2)
-                         / (log10(1 + 1.0 / digit::INT) * tot.t::DOUBLE), 6)
-                       AS chi2_term
-            FROM counts CROSS JOIN tot
-        """,
-        "ext_grouped_trend": """
-            WITH b AS (
-                SELECT event_type,
-                       epoch_us(ts) / 1000000.0 AS x,
-                       value AS y
-                FROM events
-                WHERE ts IS NOT NULL AND value IS NOT NULL
-            ),
-            a AS (
-                SELECT event_type,
-                       count(*) AS n_rows,
-                       covar_pop(x, y) AS cxy,
-                       var_pop(x) AS vx,
-                       var_pop(y) AS vy,
-                       avg(x) AS mx,
-                       avg(y) AS my
-                FROM b GROUP BY 1
-            )
-            SELECT event_type, n_rows,
-                   round(cxy / vx, 6) AS slope,
-                   round(my - (cxy / vx) * mx, 6) AS intercept,
-                   round((cxy * cxy) / (vx * vy), 6) AS r2
-            FROM a
-        """,
-        "ext_mutual_info": """
-            WITH cells AS (
-                SELECT lang AS x, source AS y, count(*) AS n
-                FROM documents GROUP BY 1, 2
-            ),
-            mx AS (SELECT x, sum(n) AS nx FROM cells GROUP BY 1),
-            my AS (SELECT y, sum(n) AS ny FROM cells GROUP BY 1),
-            tot AS (SELECT sum(n)::DOUBLE AS t FROM cells),
-            j AS (
-                SELECT n, nx, ny, t FROM cells
-                JOIN mx USING (x) JOIN my USING (y) CROSS JOIN tot
-            ),
-            s AS (
-                SELECT round(sum((n / t) * log2(n * t / (nx * ny))), 6)
-                           AS mutual_info_bits,
-                       (sum((n * n * t::BIGINT * 1000000) // (nx * ny))
-                        - t::BIGINT * 1000000)::BIGINT AS chi2_e6
-                FROM j
-                GROUP BY t
-            )
-            SELECT mutual_info_bits, chi2_e6,
-                   ((SELECT count(*) FROM mx) - 1)
-                   * ((SELECT count(*) FROM my) - 1) AS dof
-            FROM s
-        """,
-        "ext_impute_mode": """
-            WITH ev AS (
-                SELECT event_id, user_id,
-                       CASE WHEN event_id % 97 = 0 THEN NULL
-                            ELSE event_type END AS event_type
-                FROM events
-            ),
-            freq AS (
-                SELECT user_id, event_type, count(*) AS n
-                FROM ev WHERE event_type IS NOT NULL GROUP BY 1, 2
-            ),
-            modes AS (
-                SELECT user_id, event_type AS mode_val FROM (
-                    SELECT *, row_number() OVER (
-                        PARTITION BY user_id
-                        ORDER BY n DESC, event_type ASC
-                    ) AS rn
-                    FROM freq
-                ) WHERE rn = 1
-            )
-            SELECT event_id, ev.user_id,
-                   event_type IS NULL AS event_type_was_null,
-                   coalesce(event_type, mode_val) AS event_type_imputed
-            FROM ev LEFT JOIN modes ON ev.user_id = modes.user_id
-        """,
-        "mm_phash_neardup": f"""
-            -- closed-form mirror of the real pixel aHash: 64 integer
-            -- luma cells per crafted image (BMP/PNG/GIF share one
-            -- grid; JPEG docs take the blockwise branch; decode is the
-            -- Spark side's problem), then band join + Hamming verify
-            WITH base AS (
-                SELECT doc_id AS media_id,
-                       doc_id % 12 + 4 AS w, doc_id % 9 + 4 AS h
-                FROM documents WHERE doc_id >= 0
-            ),
-            cells AS (
-                SELECT media_id,
-                       list_transform(range(0, 64),
-                                      i -> {_MM_SQL_CELL_LUM}) AS cs
-                FROM base
-            ),
-            hs AS (
-                SELECT media_id,
-                       array_to_string(list_transform(cs,
-                           c -> CASE WHEN 64 * c > list_sum(cs)
-                                     THEN '1' ELSE '0' END), '') AS ahash
-                FROM cells
-            ),
-            bands AS (
-                SELECT media_id, ahash, b,
-                       substr(ahash, b * 16 + 1, 16) AS bv
-                FROM hs, range(0, 4) t(b)
-            ),
-            capped AS (
-                SELECT * FROM (
-                    SELECT *, count(*) OVER (PARTITION BY b, bv) AS bn
-                    FROM bands
-                ) WHERE bn <= 200
-            ),
-            cand AS (
-                SELECT DISTINCT a.media_id AS id_a, c2.media_id AS id_b,
-                       a.ahash AS ha, c2.ahash AS hb
-                FROM capped a JOIN capped c2
-                  ON a.b = c2.b AND a.bv = c2.bv
-                 AND a.media_id < c2.media_id
-            ),
-            scored AS (
-                SELECT id_a, id_b,
-                       len(list_filter(range(1, 65),
-                           i -> substr(ha, i, 1) <> substr(hb, i, 1)))
-                           AS hamming
-                FROM cand
-            )
-            SELECT id_a, id_b, hamming FROM scored WHERE hamming <= 8
-        """,
-        "ext_auto_histogram": """
-            -- exact fixed-point mirror of auto_histogram(int_scale=100):
-            -- cent units, quarter-fraction quantiles scaled 4x onto
-            -- exact integers, whole-cent ceil widths, integer division
-            WITH q AS (
-                SELECT event_type,
-                       round(quantile_cont(value, 0.25) * 400) AS q1_u4,
-                       round(quantile_cont(value, 0.75) * 400) AS q3_u4,
-                       count(*) AS n,
-                       min(round(value * 100)::BIGINT) AS lo_u,
-                       max(round(value * 100)::BIGINT) AS hi_u
-                FROM events GROUP BY 1
-            ),
-            meta AS (
-                SELECT event_type, lo_u, hi_u,
-                       CASE WHEN (2.0 * (q3_u4 - q1_u4)
-                                  / pow(n, 1.0/3.0)) > 0
-                                 AND (hi_u - lo_u) > 0
-                            THEN least(64, greatest(1,
-                                 ceil(((hi_u - lo_u) * 4)::DOUBLE
-                                      / (2.0 * (q3_u4 - q1_u4)
-                                         / pow(n, 1.0/3.0)))))::BIGINT
-                            ELSE 1 END AS nb
-                FROM q
-            ),
-            meta2 AS (
-                SELECT event_type, lo_u, nb,
-                       greatest(1, (hi_u - lo_u + nb - 1) // nb) AS w_u
-                FROM meta
-            ),
-            b AS (
-                SELECT e.event_type,
-                       CASE WHEN nb > 1
-                            THEN least(nb - 1,
-                                 (round(e.value * 100)::BIGINT - lo_u)
-                                     // w_u)
-                            ELSE 0 END AS bin_idx,
-                       lo_u, w_u
-                FROM events e JOIN meta2 USING (event_type)
-            )
-            SELECT event_type, bin_idx::INT AS bin_idx,
-                   (lo_u + bin_idx * w_u) / 100.0 AS bin_lo,
-                   (lo_u + (bin_idx + 1) * w_u) / 100.0 AS bin_hi,
-                   count(*) AS n_rows
-            FROM b
-            GROUP BY event_type, bin_idx, lo_u, w_u
-        """,
-        "llm_minhash_lsh_eval": f"""
-            WITH truth AS ({_sql_ngram_jaccard(threshold=0.1)}),
-            found AS ({_sql_minhash_pairs(threshold=0.1)}),
-            h AS (
-                SELECT count(*) AS n_hits
-                FROM found f JOIN truth t
-                  ON f.doc_a = t.doc_a AND f.doc_b = t.doc_b
-            )
-            SELECT (SELECT count(*) FROM truth) AS n_truth,
-                   (SELECT count(*) FROM found) AS n_found,
-                   n_hits,
-                   CASE WHEN (SELECT count(*) FROM truth) > 0 THEN
-                       ((n_hits * 1000000 * 2
-                         + (SELECT count(*) FROM truth))
-                        // (2 * (SELECT count(*) FROM truth)))::BIGINT
-                   END AS recall_e6
-            FROM h
-        """,
-        "llm_hybrid_rerank": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(list_filter(
-                           string_split_regex(lower(text), '[^a-z0-9]+'),
-                           t -> t != '')) AS term
-                FROM documents
-            ),
-            tf AS (
-                SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2
-            ),
-            dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-            n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-            sparse AS (
-                SELECT doc_id, term,
-                       round(tf * (ln((1.0 + n_docs) / (1.0 + df)) + 1.0), 9)
-                           AS w_
-                FROM tf JOIN dfreq USING (term) CROSS JOIN n
-            ),
-            norms AS (
-                SELECT doc_id, sqrt(sum(w_ * w_)) AS nrm
-                FROM sparse GROUP BY doc_id
-            ),
-            qv AS (SELECT term, w_ AS qw FROM sparse WHERE doc_id = 0),
-            dots AS (
-                SELECT s.doc_id, sum(s.w_ * q.qw) AS dot
-                FROM sparse s JOIN qv q USING (term)
-                WHERE s.doc_id <> 0
-                GROUP BY 1
-            ),
-            cos AS (
-                SELECT d.doc_id,
-                       round(d.dot / (n1.nrm * n2.nrm), 6) AS cosine
-                FROM dots d
-                JOIN norms n1 ON d.doc_id = n1.doc_id
-                JOIN norms n2 ON n2.doc_id = 0
-            ),
-            r1 AS (
-                SELECT doc_id, cosine,
-                       row_number() OVER (ORDER BY cosine DESC, doc_id)
-                           AS rk1
-                FROM cos
-                QUALIFY rk1 <= 20
-            ),
-            w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id,
-                       list_distinct(CASE WHEN len(words) >= 3
-                           THEN list_transform(range(1, len(words)-1),
-                                i -> array_to_string(words[i:i+2], ' '))
-                           ELSE [array_to_string(words, ' ')] END) AS s
-                FROM w
-            ),
-            qs AS (SELECT s AS qsh FROM sh WHERE doc_id = 0),
-            jac AS (
-                SELECT sh.doc_id,
-                       (len(list_intersect(s, qsh)) * 10000 * 2
-                        + (len(s) + len(qsh)
-                           - len(list_intersect(s, qsh))))
-                       // (2 * (len(s) + len(qsh)
-                                - len(list_intersect(s, qsh))))
-                           AS jaccard_e4
-                FROM sh CROSS JOIN qs
-                WHERE sh.doc_id <> 0
-                  AND len(list_intersect(s, qsh)) > 0
-            ),
-            r2 AS (
-                SELECT doc_id, jaccard_e4,
-                       row_number() OVER (ORDER BY jaccard_e4 DESC, doc_id)
-                           AS rk2
-                FROM jac
-                QUALIFY rk2 <= 20
-            )
-            SELECT coalesce(r1.doc_id, r2.doc_id) AS doc_id,
-                   coalesce(cosine, 0.0::DOUBLE) AS cosine,
-                   coalesce(jaccard_e4, 0)::BIGINT AS jaccard_e4,
-                   (coalesce((1000000 * 2 + (60 + rk1))
-                             // (2 * (60 + rk1)), 0)
-                    + coalesce((1000000 * 2 + (60 + rk2))
-                               // (2 * (60 + rk2)), 0))::BIGINT AS rrf_e6
-            FROM r1 FULL JOIN r2 ON r1.doc_id = r2.doc_id
-            ORDER BY rrf_e6 DESC, doc_id
-            LIMIT 10
-        """,
-        "llm_dataset_card": """
-            WITH w AS (
-                SELECT doc_id, text, lang, n_chars,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            per AS (
-                SELECT md5(text) AS h, len(words) AS nw,
-                       round(
-                         least(len(words) / 64.0, 1.0) * 0.4
-                         + least((len(list_filter(words, x -> x IN
-                                  ('the','a','an','and','of','to','in','is','it','for')))
-                                  / len(words)) * 5.0, 1.0) * 0.2
-                         + (length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                            / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END)) * 0.4,
-                       4) AS q
-                FROM w
-            ),
-            agg AS (
-                SELECT count(*) AS n_docs,
-                       count(DISTINCT h) AS n_unique_texts,
-                       sum(nw) AS total_tokens,
-                       sum(cast(round(q * 10000) as bigint)) AS sq4,
-                       count(*) AS nq
-                FROM per
-            ),
-            l AS (SELECT lang, count(*) AS c FROM documents GROUP BY 1),
-            lt AS (SELECT sum(c)::DOUBLE AS t FROM l),
-            e AS (
-                SELECT round(-sum((c / lt.t) * log2(c / lt.t)), 6)
-                           AS lang_entropy
-                FROM l CROSS JOIN lt
-            ),
-            m AS (
-                SELECT round(quantile_cont(n_chars, 0.5), 6) AS p50_len
-                FROM documents
-            )
-            SELECT n_docs, n_unique_texts,
-                   (1000000 - (n_unique_texts * 1000000 * 2 + n_docs)
-                    // (2 * n_docs))::BIGINT AS dup_rate_e6,
-                   total_tokens::BIGINT AS total_tokens,
-                   ((total_tokens * 1000000 * 2 + n_docs)
-                    // (2 * n_docs))::BIGINT AS avg_tokens_e6,
-                   ((sq4 * 100 * 2 + nq) // (2 * nq))::BIGINT
-                       AS mean_quality_e6,
-                   lang_entropy, p50_len
-            FROM agg CROSS JOIN e CROSS JOIN m
-        """,
-        "llm_exact_stratified_split": """
-            WITH q AS (
-                SELECT source,
-                       (floor(count(*) * 0.25))::BIGINT AS quota
-                FROM documents GROUP BY 1
-            ),
-            ranked AS (
-                SELECT doc_id, d.source, lang, n_chars,
-                       row_number() OVER (
-                           PARTITION BY d.source
-                           ORDER BY md5(doc_id::VARCHAR), doc_id
-                       ) AS rn
-                FROM documents d
-            )
-            SELECT doc_id, r.source, lang, n_chars
-            FROM ranked r JOIN q ON r.source = q.source
-            WHERE rn <= quota
-        """,
-        "ext_decayed_engagement": """
-            SELECT user_id,
-                   count(*) AS n_events,
-                   round(sum(power(0.5,
-                       ((epoch_us(TIMESTAMP '2024-01-25 00:00:00')
-                         - epoch_us(ts)) / 1000000.0)
-                       / 86400.0)), 6) AS decayed_count,
-                   round(sum(power(0.5,
-                       ((epoch_us(TIMESTAMP '2024-01-25 00:00:00')
-                         - epoch_us(ts)) / 1000000.0)
-                       / 86400.0) * coalesce(value, 0.0::DOUBLE)), 6)
-                       AS decayed_value
-            FROM events
-            WHERE ts <= TIMESTAMP '2024-01-25 00:00:00'
-            GROUP BY 1
-        """,
-        "ext_join_size_profile": """
-            WITH ca AS (
-                SELECT user_id AS k, count(*) AS c
-                FROM events WHERE user_id IS NOT NULL GROUP BY 1
-            )
-            SELECT
-                (SELECT count(user_id) FROM events) AS n_left,
-                (SELECT count(user_id) FROM events) AS n_right,
-                count(*) AS n_common_keys,
-                coalesce(sum(c * c), 0)::BIGINT AS predicted_rows,
-                coalesce(max(c * c), 0)::BIGINT AS max_key_rows
-            FROM ca
-        """,
-        "llm_zipf_fit": """
-            WITH toks AS (
-                SELECT unnest(string_split_regex(lower(trim(text)), '\\s+'))
-                    AS term
-                FROM documents
-            ),
-            freq AS (SELECT term, count(*) AS f FROM toks GROUP BY 1),
-            xy AS (
-                SELECT log2((row_number() OVER (ORDER BY f DESC, term))::DOUBLE)
-                           AS x,
-                       log2(f::DOUBLE) AS y
-                FROM freq
-            )
-            SELECT count(*) AS n_terms,
-                   round(covar_pop(x, y) / var_pop(x), 4) AS zipf_slope,
-                   round((covar_pop(x, y) * covar_pop(x, y))
-                         / (var_pop(x) * var_pop(y)), 4) AS r2
-            FROM xy
-        """,
-        "llm_knn_label_noise": f"""
-            WITH {_sql_lsh_bucket_cte(3)},
-            lbl AS (
-                SELECT bk.vec_id, bk.v, bk.bucket, e.label
-                FROM bk JOIN embeddings e USING (vec_id)
-            ),
-            pairs AS (
-                SELECT a.vec_id AS aid, a.label AS albl,
-                       n.vec_id AS nid, n.label AS nlbl,
-                       {_SQL_COS.format(a="a.v", b="n.v")} AS cos_sim
-                FROM lbl a JOIN lbl n
-                  ON a.bucket = n.bucket AND a.vec_id <> n.vec_id
-            ),
-            ranked AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY aid ORDER BY cos_sim DESC, nid
-                ) AS rn
-                FROM pairs
-            ),
-            agg AS (
-                SELECT aid, albl, count(*) AS n_neighbors,
-                       round(avg(CASE WHEN nlbl <> albl
-                                      THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END),
-                             6) AS disagree_frac
-                FROM ranked WHERE rn <= 5 GROUP BY 1, 2
-            )
-            SELECT l.vec_id, l.label,
-                   coalesce(a.n_neighbors, 0) AS n_neighbors,
-                   a.disagree_frac
-            FROM lbl l LEFT JOIN agg a
-              ON l.vec_id = a.aid AND l.label = a.albl
-        """,
-        "llm_ppmi_cooccurrence": """
-            WITH t AS (
-                SELECT string_split_regex(lower(trim(text)), '\\s+') AS tk
-                FROM documents
-            ),
-            p AS (
-                SELECT unnest(flatten(list_transform(tk, (x, i) ->
-                    list_transform(tk[i+1:least(i+3, len(tk))], y ->
-                        struct_pack(w1 := least(x, y),
-                                    w2 := greatest(x, y)))))) AS p
-                FROM t
-            ),
-            bc AS (
-                SELECT p.w1 AS w1, p.w2 AS w2, count(*) AS n_pair
-                FROM p GROUP BY 1, 2
-            ),
-            marg AS (
-                SELECT w, sum(c) AS m FROM (
-                    SELECT w1 AS w, n_pair AS c FROM bc
-                    UNION ALL SELECT w2, n_pair FROM bc
-                ) GROUP BY 1
-            ),
-            tot AS (SELECT sum(n_pair)::DOUBLE AS t FROM bc)
-            SELECT w1, w2, n_pair,
-                   round(greatest(0.0::DOUBLE,
-                       log2((n_pair / tot.t)
-                            / ((m1.m / (2 * tot.t)) * (m2.m / (2 * tot.t))))),
-                       4) AS ppmi
-            FROM bc
-            JOIN marg m1 ON bc.w1 = m1.w
-            JOIN marg m2 ON bc.w2 = m2.w
-            CROSS JOIN tot
-            WHERE n_pair >= 5
-            ORDER BY ppmi DESC, w1, w2
-            LIMIT 100
-        """,
-        "ext_triangle_count": """
-            WITH pairs AS (
-                SELECT a.l_orderkey, a.l_partkey AS p1, b.l_partkey AS p2
-                FROM lineitem a JOIN lineitem b
-                  ON a.l_orderkey = b.l_orderkey
-                 AND a.l_partkey < b.l_partkey
-            ),
-            e AS (
-                SELECT p1 AS a, p2 AS b FROM pairs
-                GROUP BY 1, 2 HAVING count(*) >= 2
-            ),
-            deg AS (
-                SELECT node, count(*) AS d FROM (
-                    SELECT a AS node FROM e
-                    UNION ALL SELECT b FROM e
-                ) GROUP BY 1
-            )
-            SELECT
-                (SELECT count(*) FROM deg) AS n_nodes,
-                (SELECT count(*) FROM e) AS n_edges,
-                (SELECT sum(d * (d - 1) // 2) FROM deg)::BIGINT AS n_wedges,
-                (SELECT count(*)
-                 FROM e ab JOIN e bc ON ab.b = bc.a
-                 JOIN e ac ON ac.a = ab.a AND ac.b = bc.b) AS n_triangles,
-                round(3.0 * (SELECT count(*)
-                             FROM e ab JOIN e bc ON ab.b = bc.a
-                             JOIN e ac ON ac.a = ab.a AND ac.b = bc.b)
-                      / (SELECT sum(d * (d - 1) / 2) FROM deg),
-                      6) AS clustering_coeff
-        """,
-        "llm_winsorize": """
-            WITH q AS (
-                SELECT source,
-                       round(quantile_cont(n_chars, 0.05), 6) AS qlo,
-                       round(quantile_cont(n_chars, 0.95), 6) AS qhi
-                FROM documents GROUP BY 1
-            )
-            SELECT doc_id, d.source, n_chars,
-                   round(least(greatest(n_chars::DOUBLE, qlo), qhi), 6)
-                       AS winsorized
-            FROM documents d JOIN q USING (source)
-        """,
-        "llm_pmi_collocations": """
-            WITH t AS (
-                SELECT string_split_regex(lower(trim(text)), '\\s+') AS tk
-                FROM documents
-            ),
-            uni AS (SELECT unnest(tk) AS w FROM t),
-            uc AS (SELECT w, count(*) AS cw FROM uni GROUP BY 1),
-            nu AS (SELECT count(*)::DOUBLE AS n FROM uni),
-            big AS (
-                SELECT unnest(list_transform(
-                    tk[1:len(tk)-1],
-                    (x, i) -> struct_pack(w1 := x, w2 := tk[i+1]))) AS p
-                FROM t WHERE len(tk) >= 2
-            ),
-            bp AS (SELECT p.w1 AS w1, p.w2 AS w2 FROM big),
-            bc AS (SELECT w1, w2, count(*) AS n_pair FROM bp GROUP BY 1, 2),
-            nb AS (SELECT count(*)::DOUBLE AS n FROM bp)
-            SELECT w1, w2, n_pair,
-                   round(log2((n_pair / nb.n)
-                              / ((a.cw / nu.n) * (b.cw / nu.n))), 4) AS pmi
-            FROM bc
-            JOIN uc a ON bc.w1 = a.w
-            JOIN uc b ON bc.w2 = b.w
-            CROSS JOIN nu CROSS JOIN nb
-            WHERE n_pair >= 5
-            ORDER BY pmi DESC, w1, w2
-            LIMIT 100
-        """,
-        "ext_ewma_smooth": """
-            WITH e AS (
-                SELECT user_id, ts, event_id, value,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id
-                       ) AS rn
-                FROM events WHERE value IS NOT NULL
-            )
-            SELECT a.user_id, a.event_id, a.ts, a.value,
-                   round(sum(b.value * power(0.7, a.rn - b.rn))
-                         / ((1 - power(0.7, least(a.rn, 16))) / 0.3),
-                         6) AS ewma
-            FROM e a JOIN e b
-              ON a.user_id = b.user_id
-             AND b.rn BETWEEN a.rn - 15 AND a.rn
-            GROUP BY a.user_id, a.event_id, a.ts, a.value, a.rn
-        """,
-        "ext_pagerank_trade": """
-            WITH e0 AS (
-                SELECT s_nationkey AS src, c_nationkey AS dst,
-                       sum(l_extendedprice) AS w
-                FROM lineitem
-                JOIN orders ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey = c_custkey
-                JOIN supplier ON l_suppkey = s_suppkey
-                GROUP BY 1, 2
-            ),
-            nodes AS (
-                SELECT DISTINCT src AS node FROM e0
-                UNION SELECT DISTINCT dst FROM e0
-            ),
-            nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-            outw AS (SELECT src, sum(w) AS ow FROM e0 GROUP BY 1),
-            sh AS (
-                SELECT src, dst, w / ow AS share
-                FROM e0 JOIN outw USING (src)
-            ),
-            r0 AS (SELECT node, 1.0 / n AS rank FROM nodes CROSS JOIN nn),
-            c1 AS (
-                SELECT sh.dst AS node, sum(r0.rank * sh.share) AS inr
-                FROM sh JOIN r0 ON sh.src = r0.node GROUP BY 1
-            ),
-            r1 AS (
-                SELECT nodes.node,
-                       0.15 / nn.n + 0.85 * coalesce(c1.inr, 0) AS rank
-                FROM nodes CROSS JOIN nn LEFT JOIN c1 ON c1.node = nodes.node
-            ),
-            c2 AS (
-                SELECT sh.dst AS node, sum(r1.rank * sh.share) AS inr
-                FROM sh JOIN r1 ON sh.src = r1.node GROUP BY 1
-            ),
-            r2 AS (
-                SELECT nodes.node,
-                       0.15 / nn.n + 0.85 * coalesce(c2.inr, 0) AS rank
-                FROM nodes CROSS JOIN nn LEFT JOIN c2 ON c2.node = nodes.node
-            ),
-            c3 AS (
-                SELECT sh.dst AS node, sum(r2.rank * sh.share) AS inr
-                FROM sh JOIN r2 ON sh.src = r2.node GROUP BY 1
-            ),
-            r3 AS (
-                SELECT nodes.node,
-                       0.15 / nn.n + 0.85 * coalesce(c3.inr, 0) AS rank
-                FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.node = nodes.node
-            )
-            SELECT n_name AS nation, round(rank, 8) AS rank
-            FROM r3 JOIN nation ON node = n_nationkey
-        """,
-        "ext_trade_degree": """
-            WITH e0 AS (
-                SELECT s_nationkey AS src, c_nationkey AS dst,
-                       l_extendedprice AS w
-                FROM lineitem
-                JOIN orders ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey = c_custkey
-                JOIN supplier ON l_suppkey = s_suppkey
-            ),
-            o AS (
-                SELECT src AS node, count(*) AS out_deg, sum(w) AS out_w
-                FROM e0 GROUP BY 1
-            ),
-            i AS (
-                SELECT dst AS node, count(*) AS in_deg, sum(w) AS in_w
-                FROM e0 GROUP BY 1
-            )
-            SELECT n_name AS nation,
-                   coalesce(out_deg, 0) AS out_deg,
-                   coalesce(in_deg, 0) AS in_deg,
-                   round(coalesce(out_w, 0), 2) AS out_w,
-                   round(coalesce(in_w, 0), 2) AS in_w
-            FROM o FULL JOIN i USING (node)
-            JOIN nation ON node = n_nationkey
-        """,
-        "llm_embedding_pool": """
-            WITH e AS (
-                SELECT label,
-                       generate_subscripts(embedding, 1) - 1 AS dim_idx,
-                       unnest(embedding) AS v
-                FROM embeddings
-            )
-            SELECT label, dim_idx,
-                   round(avg(CAST(v AS DOUBLE)), 6) AS value,
-                   count(*) AS n_members
-            FROM e
-            GROUP BY label, dim_idx
-            ORDER BY label, dim_idx
-        """,
-        "ext_cms_term_counts": """
-            WITH toks AS (
-                SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-                FROM documents
-            ),
-            cells AS (
-                SELECT r.range AS row,
-                       ('0x' || substr(md5(term), 1 + 6 * r.range, 6))::BIGINT % 256 AS bucket,
-                       count(*) AS cnt
-                FROM toks, range(4) r
-                GROUP BY 1, 2
-            ),
-            probes AS (
-                SELECT p.term, r.range AS row,
-                       ('0x' || substr(md5(p.term), 1 + 6 * r.range, 6))::BIGINT % 256 AS bucket
-                FROM (SELECT unnest(['a','key','spark','table','value','zzz_absent']) AS term) p,
-                     range(4) r
-            ),
-            est AS (
-                SELECT probes.term, min(coalesce(cells.cnt, 0)) AS est
-                FROM probes LEFT JOIN cells USING (row, bucket)
-                GROUP BY probes.term
-            ),
-            ex AS (
-                SELECT term, count(*) AS exact FROM toks
-                WHERE term IN ('a','key','spark','table','value','zzz_absent')
-                GROUP BY term
-            )
-            SELECT est.term, est.est,
-                   coalesce(ex.exact, 0) AS exact,
-                   est.est - coalesce(ex.exact, 0) AS overcount
-            FROM est LEFT JOIN ex USING (term)
-            ORDER BY est.term
-        """,
-        "llm_dup_spans": """
-            WITH toked AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS w
-                FROM documents
-            ),
-            wins AS (
-                SELECT doc_id, i - 1 AS pos,
-                       md5(array_to_string(w[i:i+14], ' ')) AS h
-                FROM toked, unnest(range(1, len(w) - 15 + 2)) AS t(i)
-                WHERE len(w) >= 15
-            ),
-            canon AS (
-                SELECT h, min(doc_id * 1000000 + pos) AS first_key
-                FROM wins GROUP BY h
-            ),
-            dups AS (
-                SELECT w.doc_id, w.pos
-                FROM wins w JOIN canon USING (h)
-                WHERE w.doc_id * 1000000 + w.pos != canon.first_key
-            ),
-            isl AS (
-                SELECT doc_id, pos,
-                       CASE WHEN pos > coalesce(max(pos + 14) OVER (
-                                PARTITION BY doc_id ORDER BY pos
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                            ), -1) THEN 1 ELSE 0 END AS brk
-                FROM dups
-            ),
-            grps AS (
-                SELECT doc_id, pos,
-                       sum(brk) OVER (
-                           PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS grp
-                FROM isl
-            )
-            SELECT doc_id, min(pos) AS span_start,
-                   max(pos) + 14 AS span_end, count(*) AS n_windows
-            FROM grps GROUP BY doc_id, grp
-            ORDER BY doc_id, span_start
-        """,
-        "ext_robust_anomalies": """
-            -- exact fixed-point mirror of robust_anomalies(int_scale=
-            -- 100): median on 2x units (interpolates onto halves), MAD
-            -- on 4x, z*1e4 as a half-up integer, integer flag predicate
-            WITH med AS (
-                SELECT event_type,
-                       round(quantile_cont(value, 0.5) * 200)::BIGINT
-                           AS med2
-                FROM events GROUP BY event_type
-            ),
-            dev AS (
-                SELECT e.event_id, e.event_type, e.value,
-                       round(e.value * 200)::BIGINT - med.med2 AS dev2
-                FROM events e JOIN med USING (event_type)
-            ),
-            mad AS (
-                SELECT event_type,
-                       round(quantile_cont(abs(dev2), 0.5) * 2)::BIGINT
-                           AS mad4
-                FROM dev GROUP BY event_type
-            )
-            SELECT d.event_id, d.event_type, d.value,
-                   (CASE WHEN dev2 < 0 THEN -1 ELSE 1 END)
-                   * ((26980 * abs(dev2) + mad4) // (2 * mad4))
-                       AS robust_z_e4
-            FROM dev d JOIN mad USING (event_type)
-            WHERE mad4 > 0 AND 134900 * abs(dev2) > 350000 * mad4
-            ORDER BY d.event_id
-        """,
-        "llm_lr_sweep": TR.sql_logreg_lr_sweep(
-            [0.1, 0.5, 1.0, 2.0], iters=3
-        ),
-        "llm_quality_eval": TR.sql_logreg_quality_eval(
-            _sql_neardup_clusters(threshold=0.1),
-            iters=3,
-            lr=1.0,
-            holdout_pct=30,
-        ),
-        "llm_bpe_encode": TX.sql_bpe_encode_stats(),
-        "llm_quality_drift": """
-            WITH a AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 0),
-            b AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 1),
-            th AS (
-                SELECT """
-        + ", ".join(
-            f"round(quantile_cont(n_chars, {i / 10}), 6) AS p{i * 10}"
-            for i in range(1, 10)
-        )
-        + """
-                FROM a
-            ),
-            ba AS (
-                SELECT ("""
-        + " + ".join(
-            f"CASE WHEN n_chars > p{i * 10} THEN 1 ELSE 0 END"
-            for i in range(1, 10)
-        )
-        + """) AS bin FROM a, th
-            ),
-            bb AS (
-                SELECT ("""
-        + " + ".join(
-            f"CASE WHEN n_chars > p{i * 10} THEN 1 ELSE 0 END"
-            for i in range(1, 10)
-        )
-        + """) AS bin FROM b, th
-            ),
-            ca AS (SELECT bin, count(*) AS n_a FROM ba GROUP BY bin),
-            cb AS (SELECT bin, count(*) AS n_b FROM bb GROUP BY bin),
-            bins AS (SELECT range::INT AS bin FROM range(10)),
-            j AS (
-                SELECT bins.bin,
-                       coalesce(n_a, 0) AS n_a,
-                       coalesce(n_b, 0) AS n_b
-                FROM bins LEFT JOIN ca USING (bin) LEFT JOIN cb USING (bin)
-            ),
-            tot AS (
-                SELECT sum(n_a) + 10.0 AS ta, sum(n_b) + 10.0 AS tb FROM j
-            )
-            SELECT bin, n_a, n_b,
-                   (((n_a + 1) * 1000000 * 2 + ta::BIGINT)
-                    // (2 * ta::BIGINT))::BIGINT AS share_a_e6,
-                   (((n_b + 1) * 1000000 * 2 + tb::BIGINT)
-                    // (2 * tb::BIGINT))::BIGINT AS share_b_e6,
-                   round(((n_b + 1.0) / tb - (n_a + 1.0) / ta)
-                         * ln(((n_b + 1.0) / tb) / ((n_a + 1.0) / ta)), 6) AS psi_term
-            FROM j, tot ORDER BY bin
-        """,
-        "ext_sequence_gaps": """
-            WITH actual AS (
-                SELECT event_id FROM events WHERE event_id % 97 != 13
-            ),
-            bounds AS (SELECT min(event_id) AS lo, max(event_id) AS hi FROM actual),
-            all_ids AS (
-                SELECT unnest(generate_series(lo, hi)) AS id FROM bounds
-            ),
-            missing AS (
-                SELECT id FROM all_ids
-                WHERE id NOT IN (SELECT event_id FROM actual)
-            ),
-            isl AS (
-                SELECT id, id - row_number() OVER (ORDER BY id) AS grp
-                FROM missing
-            )
-            SELECT min(id) AS gap_start, max(id) AS gap_end,
-                   count(*) AS n_missing
-            FROM isl GROUP BY grp ORDER BY gap_start
-        """,
-        "ext_data_quality": """
-            WITH checks AS (
-                SELECT 'pk_unique_o_orderkey' AS "check",
-                       count(*) - count(DISTINCT o_orderkey) AS violations
-                FROM orders
-                UNION ALL
-                SELECT 'not_null_o_custkey',
-                       sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)::BIGINT
-                FROM orders
-                UNION ALL
-                SELECT 'not_null_o_orderstatus',
-                       sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)::BIGINT
-                FROM orders
-                UNION ALL
-                SELECT 'range_o_totalprice',
-                       sum(CASE WHEN o_totalprice IS NULL
-                                OR o_totalprice < 0.0
-                                OR o_totalprice > 1000000000.0
-                                THEN 1 ELSE 0 END)::BIGINT
-                FROM orders
-                UNION ALL
-                SELECT 'fk_orders_customer', count(*)
-                FROM orders o LEFT JOIN customer c
-                  ON o.o_custkey = c.c_custkey
-                WHERE o.o_custkey IS NOT NULL AND c.c_custkey IS NULL
-            )
-            SELECT "check", violations,
-                   COALESCE(violations = 0, FALSE) AS passed
-            FROM checks ORDER BY "check"
-        """,
-        "ext_incremental_agg": """
-            WITH new_state AS (
-                SELECT o_orderpriority,
-                       CASE WHEN o_orderkey % 7 = 3 AND o_orderkey % 10 != 0
-                            THEN cast(round(o_totalprice * 2 * 100)
-                                 as bigint)
-                            ELSE cast(round(o_totalprice * 100) as bigint)
-                       END AS p
-                FROM orders WHERE o_orderkey % 10 != 0
-                UNION ALL
-                SELECT o_orderpriority,
-                       cast(round(o_totalprice * 100) as bigint)
-                FROM orders WHERE o_orderkey % 5 = 1
-            )
-            SELECT o_orderpriority,
-                   sum(p)::BIGINT AS revenue_cents,
-                   count(*) AS n_rows
-            FROM new_state
-            GROUP BY o_orderpriority
-            ORDER BY o_orderpriority
-        """,
-        "llm_embedding_quantize": """
-            WITH q AS (
-                SELECT vec_id, len(embedding) AS n, embedding,
-                       greatest(list_max(list_transform(embedding,
-                           x -> abs(CAST(x AS DOUBLE)))), 1e-12) / 127.0 AS s
-                FROM embeddings
-            ),
-            e AS (
-                SELECT vec_id, n, s,
-                       list_transform(embedding,
-                           x -> abs(CAST(x AS DOUBLE)
-                                    - round(CAST(x AS DOUBLE) / s) * s)) AS errs
-                FROM q
-            )
-            SELECT vec_id,
-                   round(s, 9) AS scale,
-                   round(sqrt(list_sum(list_transform(errs, x -> x * x)) / n), 9) AS rmse,
-                   round(list_max(errs), 9) AS max_abs_err
-            FROM e
-            ORDER BY vec_id
-        """,
-        "llm_curriculum_bins": """
-            WITH th AS (
-                SELECT """
-        + ", ".join(
-            f"round(quantile_cont(n_chars, {i / 10}), 6) AS p{i * 10}"
-            for i in range(1, 10)
-        )
-        + """
-                FROM documents
-            )
-            SELECT doc_id, n_chars,
-                   ("""
-        + " + ".join(
-            f"CASE WHEN n_chars > p{i * 10} THEN 1 ELSE 0 END"
-            for i in range(1, 10)
-        )
-        + """) AS bin
-            FROM documents, th
-            ORDER BY doc_id
-        """,
-        "llm_random_projection": """
-            WITH r AS (
-                SELECT i.range AS i, j.range AS j,
-                       CASE WHEN substr(md5('rp:' || i.range || ':' || j.range), 1, 1) >= '8'
-                            THEN 1.0 ELSE -1.0 END AS s
-                FROM range(64) i, range(8) j
-            ),
-            e AS (
-                SELECT vec_id,
-                       generate_subscripts(embedding, 1) - 1 AS i,
-                       unnest(embedding) AS v
-                FROM embeddings
-            )
-            SELECT e.vec_id, r.j AS dim_idx,
-                   round(sum(CAST(e.v AS DOUBLE) * r.s) / sqrt(8.0), 6) AS value
-            FROM e JOIN r USING (i)
-            GROUP BY e.vec_id, r.j
-            ORDER BY e.vec_id, r.j
-        """,
-        "llm_cluster_split": f"""
-            SELECT doc_id, component,
-                   CASE WHEN ('0x' || substr(md5(component::VARCHAR), 1, 6))::BIGINT % 100 < 10
-                        THEN 'holdout' ELSE 'train' END AS split
-            FROM ({_sql_neardup_clusters(threshold=0.1)}) base
-            ORDER BY doc_id
-        """,
-        "llm_dedup_jaccard": _sql_ngram_jaccard(threshold=0.5),
-        "llm_dedup_simhash": _sql_simhash(prefix_bits=8),
-        "llm_text_stats": """
-            WITH w AS (
-                SELECT doc_id, text,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            )
-            SELECT doc_id,
-                   len(words) AS n_tokens,
-                   len(regexp_extract_all(lower(text),
-                       '([a-z]+|[0-9]+|[^a-z0-9\\s])', 1)) AS n_tokens_bpe,
-                   length(text) AS n_chars_computed,
-                   round((length(text) - (len(words) - 1)) / len(words), 4) AS mean_word_len,
-                   round(len(list_filter(words, x -> x IN
-                         ('the','a','an','and','of','to','in','is','it','for')))
-                         / len(words), 4) AS stopword_ratio,
-                   round(length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                         / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END), 4)
-                       AS alpha_ratio,
-                   round(
-                     least(len(words) / 64.0, 1.0) * 0.4
-                     + least((len(list_filter(words, x -> x IN
-                              ('the','a','an','and','of','to','in','is','it','for')))
-                              / len(words)) * 5.0, 1.0) * 0.2
-                     + (length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                        / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END)) * 0.4,
-                   4) AS quality_score
-            FROM w
-        """,
-        "llm_lang_id": _SQL_LANG_ID,
-        "llm_fingerprint": """
-            SELECT doc_id,
-                   md5(trim(regexp_replace(
-                       regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                       '\\s+', ' ', 'g'))) AS fp
-            FROM documents
-        """,
-        "llm_vocab_stats": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            toks AS (SELECT doc_id, unnest(words) AS term FROM w),
-            per_doc AS (
-                SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2
-            ),
-            terms AS (
-                SELECT term, count(*) AS df, sum(tf)::BIGINT AS cf
-                FROM per_doc GROUP BY 1 HAVING count(*) >= 2
-            ),
-            n AS (SELECT count(DISTINCT doc_id) AS nd FROM documents)
-            SELECT term, df, cf, round(df / nd::DOUBLE, 6) AS df_frac
-            FROM terms, n
-        """,
-        "llm_ngram_entropy": """
-            WITH t AS (
-                SELECT doc_id,
-                       trim(regexp_replace(
-                           regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                           '\\s+', ' ', 'g')) AS txt
-                FROM documents
-            ),
-            g AS (
-                SELECT doc_id,
-                       unnest(list_transform(
-                           generate_series(1, greatest(length(txt) - 1, 1)),
-                           i -> substr(txt, i, 2))) AS gram
-                FROM t
-            ),
-            c AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-            e AS (
-                SELECT doc_id, sum(cnt) AS tot,
-                       sum(cnt * log2(cnt::DOUBLE)) AS s
-                FROM c GROUP BY 1
-            )
-            SELECT doc_id, tot::BIGINT AS n_grams,
-                   round(log2(tot::DOUBLE) - s / tot, 4) AS entropy
-            FROM e
-        """,
-        "llm_ann_cosine_topk": f"""
-            WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-            SELECT vec_id,
-                   {_SQL_COS.format(a="embedding::DOUBLE[]", b="qv")} AS cos_sim
-            FROM embeddings, q
-            WHERE vec_id <> 0
-            ORDER BY cos_sim DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "llm_ann_lsh_topk": f"""
-            WITH {_sql_lsh_bucket_cte(4)},
-            q AS (SELECT v AS qv, bucket AS qb FROM bk WHERE vec_id = 0)
-            SELECT vec_id,
-                   {_SQL_COS.format(a="v", b="qv")} AS cos_sim
-            FROM bk, q
-            WHERE vec_id <> 0 AND bucket = qb
-            ORDER BY cos_sim DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "llm_ann_recall": f"""
-            WITH {_sql_lsh_bucket_cte(4)},
-            q AS (SELECT vec_id AS qid, v AS qv, bucket AS qb
-                  FROM bk WHERE vec_id IN (0, 1, 2, 3, 4)),
-            scored AS (
-                SELECT q.qid, bk.vec_id,
-                       round({_SQL_COS.format(a="bk.v", b="q.qv")}, 6) AS cos_sim,
-                       (bk.bucket = q.qb) AS same_bucket
-                FROM bk, q WHERE bk.vec_id <> q.qid
-            ),
-            exact AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rnk
-                    FROM scored) WHERE rnk <= 10
-            ),
-            approx AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rnk
-                    FROM scored WHERE same_bucket) WHERE rnk <= 10
-            ),
-            na AS (SELECT qid, count(*) AS n_approx FROM approx GROUP BY 1),
-            hit AS (
-                SELECT e.qid, count(*) AS n_hit
-                FROM exact e JOIN approx a ON e.qid = a.qid AND e.vec_id = a.vec_id
-                GROUP BY 1
-            )
-            SELECT q.qid,
-                   COALESCE(na.n_approx, 0) AS n_approx,
-                   COALESCE(hit.n_hit, 0) AS n_hit,
-                   round(COALESCE(hit.n_hit, 0) / 10.0::DOUBLE, 4) AS recall_at_k
-            FROM q LEFT JOIN na ON q.qid = na.qid LEFT JOIN hit ON q.qid = hit.qid
-        """,
-        "llm_ann_lsh_multi_topk": f"""
-            WITH {_sql_lsh_bucket_cte(4, num_tables=2)},
-            q AS (SELECT v AS qv, bucket_0 AS qb0, bucket_1 AS qb1
-                  FROM bk WHERE vec_id = 0)
-            SELECT vec_id,
-                   {_SQL_COS.format(a="v", b="qv")} AS cos_sim
-            FROM bk, q
-            WHERE vec_id <> 0 AND (bucket_0 = qb0 OR bucket_1 = qb1)
-            ORDER BY cos_sim DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "llm_ann_recall_multi": f"""
-            WITH {_sql_lsh_bucket_cte(4, num_tables=2)},
-            q AS (SELECT vec_id AS qid, v AS qv, bucket_0 AS qb0, bucket_1 AS qb1
-                  FROM bk WHERE vec_id IN (0, 1, 2, 3, 4)),
-            scored AS (
-                SELECT q.qid, bk.vec_id,
-                       round({_SQL_COS.format(a="bk.v", b="q.qv")}, 6) AS cos_sim,
-                       (bk.bucket_0 = q.qb0) AS m_single,
-                       (bk.bucket_0 = q.qb0 OR bk.bucket_1 = q.qb1) AS m_multi
-                FROM bk, q WHERE bk.vec_id <> q.qid
-            ),
-            exact AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rnk
-                    FROM scored) WHERE rnk <= 10
-            ),
-            aps AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rnk
-                    FROM scored WHERE m_single) WHERE rnk <= 10
-            ),
-            apm AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rnk
-                    FROM scored WHERE m_multi) WHERE rnk <= 10
-            ),
-            rs AS (SELECT e.qid, round(count(*) / 10.0::DOUBLE, 4) AS recall_single
-                   FROM exact e JOIN aps a ON e.qid = a.qid AND e.vec_id = a.vec_id
-                   GROUP BY 1),
-            rm AS (SELECT e.qid, round(count(*) / 10.0::DOUBLE, 4) AS recall_multi
-                   FROM exact e JOIN apm a ON e.qid = a.qid AND e.vec_id = a.vec_id
-                   GROUP BY 1)
-            SELECT q.qid,
-                   COALESCE(rs.recall_single, 0.0::DOUBLE) AS recall_single,
-                   COALESCE(rm.recall_multi, 0.0::DOUBLE) AS recall_multi,
-                   round(COALESCE(rm.recall_multi, 0.0::DOUBLE)
-                         - COALESCE(rs.recall_single, 0.0::DOUBLE), 4) AS lift
-            FROM q LEFT JOIN rs ON q.qid = rs.qid LEFT JOIN rm ON q.qid = rm.qid
-        """,
-        "llm_ann_ivf_topk": f"""
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            cent AS (SELECT vec_id AS cid, v AS cv FROM ev WHERE vec_id < 8),
-            assigned AS (
-                SELECT vec_id, v, cid FROM (
-                    SELECT e.vec_id, e.v, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY {_SQL_COS.format(a="e.v", b="c.cv")} DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM ev e CROSS JOIN cent c
-                ) WHERE rn = 1
-            ),
-            q AS (SELECT v AS qv FROM ev WHERE vec_id = 0),
-            probe AS (
-                SELECT cid FROM cent, q
-                ORDER BY {_SQL_COS.format(a="cv", b="qv")} DESC, cid ASC
-                LIMIT 2
-            )
-            SELECT vec_id,
-                   {_SQL_COS.format(a="v", b="qv")} AS cos_sim
-            FROM assigned JOIN probe USING (cid), q
-            WHERE vec_id <> 0
-            ORDER BY cos_sim DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "llm_neardup_embedding": f"""
-            WITH {_sql_lsh_bucket_cte(4)},
-            scored AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       {_SQL_COS.format(a="a.v", b="b.v")} AS cos_sim
-                FROM bk a JOIN bk b
-                  ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-            )
-            SELECT * FROM scored WHERE cos_sim >= 0.3
-            ORDER BY id_a, id_b
-        """,
-        "llm_curation_pipeline": """
-            WITH keep AS (
-                SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-            ),
-            canon AS (
-                SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)
-            ),
-            w AS (
-                SELECT doc_id, text,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM canon
-            ),
-            scored AS (
-                SELECT doc_id,
-                       len(words) AS n_tokens,
-                       round(
-                         least(len(words) / 64.0, 1.0) * 0.4
-                         + least((len(list_filter(words, x -> x IN
-                                  ('the','a','an','and','of','to','in','is','it','for')))
-                                  / len(words)) * 5.0, 1.0) * 0.2
-                         + (length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                            / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END)) * 0.4,
-                       4) AS quality_score,
-                       len(list_filter(words, x -> x IN ('the','a','and','of','is')))  AS s_en,
-                       len(list_filter(words, x -> x IN ('el','la','de','que','y')))   AS s_es,
-                       len(list_filter(words, x -> x IN ('le','la','et','les','des'))) AS s_fr,
-                       len(list_filter(words, x -> x IN ('der','die','und','das','ist'))) AS s_de,
-                       len(list_filter(words, x -> x IN ('de5','shi4','le5','zai4','he2'))) AS s_zh
-                FROM w
-            ),
-            tagged AS (
-                SELECT doc_id, n_tokens, quality_score,
-                       CASE WHEN greatest(s_en, s_es, s_fr, s_de, s_zh) = 0 THEN 'und'
-                            WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'en'
-                            WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'es'
-                            WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'fr'
-                            WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'de'
-                            ELSE 'zh' END AS pred_lang
-                FROM scored
-            )
-            SELECT doc_id, n_tokens, quality_score, pred_lang
-            FROM tagged
-            WHERE quality_score >= 0.5 AND pred_lang = 'en'
-        """,
-        "llm_winnow_fingerprints": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(words) >= 3
-                            THEN list_transform(range(1, len(words)-1),
-                                                i -> array_to_string(words[i:i+2], ' '))
-                            ELSE [array_to_string(words, ' ')] END AS shingles
-                FROM w
-            ),
-            hs AS (
-                SELECT doc_id, list_transform(shingles, s -> md5(s)) AS h
-                FROM sh
-            ),
-            f AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                           range(1, greatest(len(h) - 3, 1) + 1),
-                           i -> list_min(h[i:i+3]))) AS fps
-                FROM hs
-            )
-            SELECT doc_id, unnest(fps) AS fp FROM f
-        """,
-        "ext_nelson_aalen": """
-            WITH pu AS (
-                SELECT user_id,
-                       min(epoch_us(ts)) AS f,
-                       max(epoch_us(ts)) AS l,
-                       min(CASE WHEN event_type = 'error'
-                                THEN epoch_us(ts) END) AS e
-                FROM events GROUP BY 1
-            ),
-            spans AS (
-                SELECT ((coalesce(e, l) - f) // 86400000000)::INT AS t,
-                       (e IS NOT NULL) AS errored
-                FROM pu
-            ),
-            per_t AS (
-                SELECT t, count(*) AS total,
-                       sum(errored::INT) AS n_events
-                FROM spans GROUP BY 1
-            ),
-            grid AS (
-                SELECT t, n_events,
-                       sum(total) OVER ()
-                       - coalesce(sum(total) OVER (
-                             ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0) AS n_at_risk
-                FROM per_t
-            ),
-            h AS (
-                -- half-up ppm increment, pure BIGINT (build-portable);
-                -- integer running sum = exact cumulative hazard in ppm
-                SELECT t, n_at_risk, n_events,
-                       sum((2 * n_events::BIGINT * 1000000 + n_at_risk)
-                           // (2 * n_at_risk))
-                           OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-                           AS ch_ppm
-                FROM grid
-            )
-            SELECT t AS duration_days, n_at_risk::BIGINT AS n_at_risk,
-                   n_events::BIGINT AS n_events,
-                   ch_ppm::BIGINT AS cum_hazard_ppm
-            FROM h WHERE n_events > 0
-            ORDER BY duration_days
-        """,
-        "ext_histogram_2d": """
-            WITH rng AS (
-                SELECT min(l_quantity::DOUBLE) AS xlo,
-                       max(l_quantity::DOUBLE) AS xhi,
-                       min(l_discount::DOUBLE) AS ylo,
-                       max(l_discount::DOUBLE) AS yhi
-                FROM lineitem
-            ),
-            binned AS (
-                SELECT
-                    coalesce(CASE WHEN r.xhi > r.xlo
-                        THEN least(9, floor((l.l_quantity - r.xlo)
-                               / nullif((r.xhi - r.xlo) / 10, 0))::INT)
-                        ELSE 0 END, 0) AS bin_x,
-                    coalesce(CASE WHEN r.yhi > r.ylo
-                        THEN least(7, floor((l.l_discount - r.ylo)
-                               / nullif((r.yhi - r.ylo) / 8, 0))::INT)
-                        ELSE 0 END, 0) AS bin_y,
-                    r.xlo, r.xhi, r.ylo, r.yhi
-                FROM lineitem l CROSS JOIN rng r
-            )
-            SELECT bin_x, bin_y, count(*) AS n_rows,
-                   round(xlo + bin_x * (xhi - xlo) / 10, 6) AS x_lo,
-                   round(xlo + (bin_x + 1) * (xhi - xlo) / 10, 6) AS x_hi,
-                   round(ylo + bin_y * (yhi - ylo) / 8, 6) AS y_lo,
-                   round(ylo + (bin_y + 1) * (yhi - ylo) / 8, 6) AS y_hi
-            FROM binned
-            GROUP BY bin_x, bin_y, xlo, xhi, ylo, yhi
-            ORDER BY bin_x, bin_y
-        """,
-        "ext_grouped_ols": """
-            WITH m AS (
-                SELECT l_returnflag, avg(l_extendedprice) AS my,
-                       avg(l_quantity) AS m1, avg(l_discount) AS m2,
-                       count(*) AS n_rows
-                FROM lineitem GROUP BY l_returnflag
-            ),
-            s AS (
-                SELECT l.l_returnflag, m.my, m.m1, m.m2, m.n_rows,
-                       sum((l.l_quantity - m.m1) * (l.l_quantity - m.m1))
-                           AS s11,
-                       sum((l.l_discount - m.m2) * (l.l_discount - m.m2))
-                           AS s22,
-                       sum((l.l_quantity - m.m1) * (l.l_discount - m.m2))
-                           AS s12,
-                       sum((l.l_quantity - m.m1)
-                           * (l.l_extendedprice - m.my)) AS s1y,
-                       sum((l.l_discount - m.m2)
-                           * (l.l_extendedprice - m.my)) AS s2y,
-                       sum((l.l_extendedprice - m.my)
-                           * (l.l_extendedprice - m.my)) AS syy
-                FROM lineitem l JOIN m USING (l_returnflag)
-                GROUP BY l.l_returnflag, m.my, m.m1, m.m2, m.n_rows
-            ),
-            b AS (
-                SELECT *,
-                       (s1y * s22 - s2y * s12)
-                           / nullif(s11 * s22 - s12 * s12, 0) AS b1,
-                       (s2y * s11 - s1y * s12)
-                           / nullif(s11 * s22 - s12 * s12, 0) AS b2
-                FROM s
-            )
-            SELECT l_returnflag,
-                   round(my - b1 * m1 - b2 * m2, 6) AS b0,
-                   round(b1, 6) AS b1, round(b2, 6) AS b2,
-                   round(1.0::DOUBLE - (syy - b1 * s1y - b2 * s2y)
-                         / nullif(syy, 0), 6) AS r2,
-                   n_rows
-            FROM b
-            ORDER BY l_returnflag
-        """,
-        "ext_bootstrap_ci": """
-            WITH reps AS (
-                -- one md5 per (row, block of 4); each replicate reads
-                -- its own 8-hex segment (mirrors bootstrap_mean_ci)
-                SELECT e.event_type, e.event_id, e.value,
-                       b.range * 4 + s.range AS r,
-                       substr(md5(e.event_id::VARCHAR || ':' || b.range),
-                              1 + 8 * s.range, 8) AS h
-                FROM events e, range(25) b, range(4) s
-            ),
-            weighted AS (
-                SELECT event_type, r, value,
-                       CASE
-                           WHEN h < '5e2d58d9' THEN 0
-                           WHEN h < 'bc5ab1b1' THEN 1
-                           WHEN h < 'eb715e1e' THEN 2
-                           WHEN h < 'fb239797' THEN 3
-                           WHEN h < 'ff1025f6' THEN 4
-                           WHEN h < 'ffd90f3c' THEN 5
-                           WHEN h < 'fffa8b72' THEN 6
-                           WHEN h < 'ffff540c' THEN 7
-                           ELSE 8
-                       END AS w
-                FROM reps
-            ),
-            rep_means AS (
-                SELECT event_type, r,
-                       round(sum(w * value) / nullif(sum(w), 0), 6) AS m
-                FROM weighted GROUP BY event_type, r
-            ),
-            ci AS (
-                SELECT event_type,
-                       list_sort(list(m) FILTER (m IS NOT NULL)) AS ms,
-                       count(m) AS n_used
-                FROM rep_means GROUP BY event_type
-            ),
-            base AS (
-                SELECT event_type, round(avg(value), 6) AS mean
-                FROM events GROUP BY event_type
-            )
-            SELECT ci.event_type, base.mean,
-                   ms[greatest(1, ceil(0.025 * len(ms))::INT)] AS ci_lo,
-                   ms[ceil(0.975 * len(ms))::INT] AS ci_hi,
-                   n_used
-            FROM ci JOIN base USING (event_type)
-            ORDER BY ci.event_type
-        """,
-        "llm_preference_pairs": """
-            WITH b AS (
-                SELECT source || '|' || lang AS bucket, doc_id,
-                       round(n_chars::DOUBLE, 6) AS s
-                FROM documents
-            ),
-            agg AS (
-                SELECT bucket,
-                       max(struct_pack(s := s, i := doc_id)) AS mx,
-                       min(struct_pack(s := s, i := doc_id)) AS mn,
-                       count(*) AS n_docs
-                FROM b GROUP BY bucket
-            )
-            SELECT bucket, mx.i AS chosen_id, mn.i AS rejected_id,
-                   mx.s AS chosen_score, mn.s AS rejected_score,
-                   round(mx.s - mn.s, 6) AS margin, n_docs
-            FROM agg
-            WHERE n_docs >= 2 AND round(mx.s - mn.s, 6) >= 1.0
-              AND mx.i <> mn.i
-            ORDER BY bucket
-        """,
-        "ext_pivot_revenue": """
-            SELECT o_orderpriority,
-                   coalesce(round(sum(CASE WHEN o_orderstatus = 'F'
-                                           THEN o_totalprice END), 2),
-                            0.0::DOUBLE) AS "F",
-                   coalesce(round(sum(CASE WHEN o_orderstatus = 'O'
-                                           THEN o_totalprice END), 2),
-                            0.0::DOUBLE) AS "O",
-                   coalesce(round(sum(CASE WHEN o_orderstatus = 'P'
-                                           THEN o_totalprice END), 2),
-                            0.0::DOUBLE) AS "P"
-            FROM orders
-            GROUP BY o_orderpriority
-            ORDER BY o_orderpriority
-        """,
-        "ext_unpivot_profile": """
-            WITH per_order AS (
-                SELECT l_orderkey,
-                       round(sum(l_quantity), 1) AS qty,
-                       round(sum(l_extendedprice), 2) AS price,
-                       round(sum(l_discount), 3) AS discount
-                FROM lineitem WHERE l_orderkey <= 100
-                GROUP BY l_orderkey
-            )
-            SELECT l_orderkey, 'qty' AS metric, qty AS value FROM per_order
-            UNION ALL
-            SELECT l_orderkey, 'price', price FROM per_order
-            UNION ALL
-            SELECT l_orderkey, 'discount', discount FROM per_order
-            ORDER BY l_orderkey, metric
-        """,
-        "ext_correlation_matrix": """
-            WITH a AS (
-                SELECT
-                    round(corr(l_quantity, l_extendedprice), 6) AS c1,
-                    round(corr(l_quantity, l_discount), 6) AS c2,
-                    round(corr(l_quantity, l_tax), 6) AS c3,
-                    round(corr(l_extendedprice, l_discount), 6) AS c4,
-                    round(corr(l_extendedprice, l_tax), 6) AS c5,
-                    round(corr(l_discount, l_tax), 6) AS c6
-                FROM lineitem
-            )
-            SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
-                   c1 AS corr FROM a
-            UNION ALL SELECT 'l_quantity', 'l_discount', c2 FROM a
-            UNION ALL SELECT 'l_quantity', 'l_tax', c3 FROM a
-            UNION ALL SELECT 'l_extendedprice', 'l_discount', c4 FROM a
-            UNION ALL SELECT 'l_extendedprice', 'l_tax', c5 FROM a
-            UNION ALL SELECT 'l_discount', 'l_tax', c6 FROM a
-            ORDER BY col_a, col_b
-        """,
-        "ext_gapfill": """
-            WITH actual AS (
-                SELECT event_type,
-                       CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 86400)
-                            AS BIGINT) AS bucket,
-                       round(avg(value), 6) AS observed
-                FROM events WHERE value > 95
-                GROUP BY 1, 2
-            ),
-            bounds AS (SELECT min(bucket) AS lo, max(bucket) AS hi
-                       FROM actual),
-            grid AS (
-                SELECT k.event_type, unnest(range(lo, hi + 1)) AS bucket
-                FROM (SELECT DISTINCT event_type FROM actual) k
-                CROSS JOIN bounds
-            ),
-            g AS (
-                SELECT grid.event_type, grid.bucket, a.observed
-                FROM grid LEFT JOIN actual a
-                  USING (event_type, bucket)
-            ),
-            w AS (
-                SELECT event_type, bucket, observed,
-                       last_value(observed IGNORE NULLS) OVER (
-                           PARTITION BY event_type ORDER BY bucket
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS vp,
-                       last_value(CASE WHEN observed IS NOT NULL
-                                       THEN bucket END IGNORE NULLS) OVER (
-                           PARTITION BY event_type ORDER BY bucket
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS tp,
-                       first_value(observed IGNORE NULLS) OVER (
-                           PARTITION BY event_type ORDER BY bucket
-                           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-                       ) AS vn,
-                       first_value(CASE WHEN observed IS NOT NULL
-                                        THEN bucket END IGNORE NULLS) OVER (
-                           PARTITION BY event_type ORDER BY bucket
-                           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-                       ) AS tn
-                FROM g
-            )
-            SELECT event_type, bucket, observed,
-                   coalesce(observed,
-                            round(vp + (vn - vp)
-                                  * ((bucket - tp)::DOUBLE
-                                     / nullif((tn - tp)::DOUBLE, 0)), 6),
-                            vp, vn) AS filled,
-                   CASE WHEN observed IS NOT NULL THEN 'observed'
-                        WHEN tp IS NOT NULL AND tn IS NOT NULL
-                             THEN 'interpolated'
-                        WHEN tp IS NOT NULL THEN 'locf'
-                        ELSE 'backfill' END AS method
-            FROM w
-            ORDER BY event_type, bucket
-        """,
-        "llm_textrank_keywords": """
-            WITH kept AS (
-                SELECT list_filter(
-                           string_split_regex(lower(trim(text)), '\\s+'),
-                           t -> NOT t IN ('the','a','an','and','of','to',
-                                          'in','is','it','for')
-                                AND length(t) >= 3) AS w
-                FROM documents
-            ),
-            pairs AS (
-                SELECT unnest(list_transform(
-                           range(1, len(w)),
-                           i -> {'src': w[i], 'dst': w[i + 1]})) AS p
-                FROM kept
-            ),
-            dir_edges AS (SELECT p.src AS src, p.dst AS dst FROM pairs),
-            e0 AS (
-                SELECT src, dst, count(*)::DOUBLE AS w FROM (
-                    SELECT src, dst FROM dir_edges
-                    UNION ALL
-                    SELECT dst, src FROM dir_edges
-                ) GROUP BY 1, 2
-            ),
-            nodes AS (
-                SELECT DISTINCT src AS node FROM e0
-                UNION SELECT DISTINCT dst FROM e0
-            ),
-            nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-            outw AS (SELECT src, sum(w) AS ow FROM e0 GROUP BY 1),
-            sh AS (
-                SELECT src, dst, w / ow AS share
-                FROM e0 JOIN outw USING (src)
-            ),
-            r0 AS (SELECT node, 1.0 / n AS rank FROM nodes CROSS JOIN nn),
-            c1 AS (
-                SELECT sh.dst AS node, sum(r0.rank * sh.share) AS inr
-                FROM sh JOIN r0 ON sh.src = r0.node GROUP BY 1
-            ),
-            r1 AS (
-                SELECT nodes.node,
-                       0.15 / nn.n + 0.85 * coalesce(c1.inr, 0) AS rank
-                FROM nodes CROSS JOIN nn LEFT JOIN c1 ON c1.node = nodes.node
-            ),
-            c2 AS (
-                SELECT sh.dst AS node, sum(r1.rank * sh.share) AS inr
-                FROM sh JOIN r1 ON sh.src = r1.node GROUP BY 1
-            ),
-            r2 AS (
-                SELECT nodes.node,
-                       0.15 / nn.n + 0.85 * coalesce(c2.inr, 0) AS rank
-                FROM nodes CROSS JOIN nn LEFT JOIN c2 ON c2.node = nodes.node
-            ),
-            c3 AS (
-                SELECT sh.dst AS node, sum(r2.rank * sh.share) AS inr
-                FROM sh JOIN r2 ON sh.src = r2.node GROUP BY 1
-            ),
-            r3 AS (
-                SELECT nodes.node,
-                       0.15 / nn.n + 0.85 * coalesce(c3.inr, 0) AS rank
-                FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.node = nodes.node
-            )
-            SELECT node AS term, round(rank, 8) AS rank
-            FROM r3
-            ORDER BY rank DESC, term
-            LIMIT 20
-        """,
-        "llm_interleave_shards": """
-            WITH h AS (
-                SELECT doc_id,
-                       md5('ep0' || doc_id::VARCHAR) AS hx
-                FROM documents
-            ),
-            s AS (
-                -- mod-16 of the first 8 md5 hex digits == digit #8
-                SELECT doc_id, hx,
-                       strpos('0123456789abcdef', substr(hx, 8, 1)) - 1
-                           AS shard
-                FROM h
-            )
-            SELECT doc_id, shard,
-                   row_number() OVER (
-                       PARTITION BY shard ORDER BY hx, doc_id) AS pos
-            FROM s
-        """,
-        "llm_contamination_matrix": """
-            WITH w AS (
-                SELECT doc_id, source, lang,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id, source, lang,
-                       CASE WHEN len(words) >= 3
-                            THEN list_transform(range(1, len(words)-1),
-                                                i -> array_to_string(words[i:i+2], ' '))
-                            ELSE [array_to_string(words, ' ')] END AS shingles
-                FROM w
-            ),
-            ex AS (
-                SELECT doc_id, source, lang,
-                       unnest(list_distinct(shingles)) AS shingle
-                FROM sh
-            ),
-            bench AS (
-                SELECT DISTINCT lang AS benchmark, shingle
-                FROM ex WHERE source = 'src0'
-            ),
-            contaminated AS (
-                SELECT e.doc_id, b.benchmark
-                FROM ex e JOIN bench b USING (shingle)
-                WHERE e.source <> 'src0'
-                GROUP BY e.doc_id, b.benchmark
-                HAVING count(*) >= 1
-            ),
-            cells AS (
-                SELECT d.source, c.benchmark, count(*) AS n_contaminated
-                FROM contaminated c
-                JOIN documents d USING (doc_id)
-                GROUP BY d.source, c.benchmark
-            ),
-            totals AS (
-                SELECT source, count(*) AS n_docs FROM documents
-                WHERE source <> 'src0' GROUP BY source
-            )
-            SELECT c.source, c.benchmark, c.n_contaminated, t.n_docs,
-                   ((c.n_contaminated * 1000000 * 2 + t.n_docs)
-                    // (2 * t.n_docs))::BIGINT AS rate_e6
-            FROM cells c JOIN totals t USING (source)
-            ORDER BY c.source, c.benchmark
-        """,
-        "llm_normalize_text": """
-            WITH n AS (
-                SELECT doc_id, text,
-                       trim(regexp_replace(regexp_replace(text,
-                           '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f\\x{200b}\\x{200c}\\x{200d}\\x{feff}]',
-                           '', 'g'), '\\s+', ' ', 'g')) AS norm
-                FROM documents
-            )
-            SELECT doc_id,
-                   length(text) AS n_chars_raw,
-                   length(norm) AS n_chars_norm,
-                   COALESCE(text <> norm, FALSE) AS changed,
-                   md5(norm) AS norm_fingerprint
-            FROM n
-        """,
-        "llm_decontaminate": """
-            WITH w AS (
-                SELECT doc_id, source,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id, source,
-                       CASE WHEN len(words) >= 3
-                            THEN list_transform(range(1, len(words)-1),
-                                                i -> array_to_string(words[i:i+2], ' '))
-                            ELSE [array_to_string(words, ' ')] END AS shingles
-                FROM w
-            ),
-            ex AS (
-                SELECT doc_id, source, unnest(list_distinct(shingles)) AS shingle
-                FROM sh
-            ),
-            bench AS (SELECT DISTINCT shingle FROM ex WHERE source = 'src0'),
-            hits AS (
-                SELECT e.doc_id, count(*) AS n_hits
-                FROM ex e JOIN bench b USING (shingle)
-                WHERE e.source <> 'src0'
-                GROUP BY e.doc_id
-            )
-            SELECT d.doc_id,
-                   coalesce(h.n_hits, 0) AS n_hits,
-                   coalesce(h.n_hits, 0) >= 1 AS contaminated
-            FROM documents d LEFT JOIN hits h USING (doc_id)
-            WHERE d.source <> 'src0'
-        """,
-        "llm_stratified_sample": """
-            SELECT doc_id, lang, source, n_chars
-            FROM documents
-            WHERE substr(md5(doc_id::VARCHAR), 1, 4) <
-                  CASE lang WHEN 'en' THEN '4000'
-                            WHEN 'zh' THEN '8000'
-                            ELSE 'zzzz' END
-        """,
-        "llm_mix_weights": """
-            WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
-            t AS (SELECT sum(n_docs) AS total FROM c)
-            SELECT lang, n_docs,
-                   ((n_docs * 1000000 * 2 + total)
-                    // (2 * total))::BIGINT AS actual_share_e6,
-                   ((1 * 1000000 * 2 + 5) // (2 * 5))::BIGINT
-                       AS target_share_e6,
-                   ((1 * total * 1000000 * 2 + 5 * n_docs)
-                    // (2 * 5 * n_docs))::BIGINT AS weight_e6
-            FROM c, t
-        """,
-        "llm_token_histogram": """
-            WITH w AS (
-                SELECT string_split_regex(lower(trim(text)), '\\s+') AS words,
-                       n_chars
-                FROM documents
-            )
-            SELECT (len(words) // 8) * 8 AS bucket_lo,
-                   count(*) AS n_docs,
-                   round(avg(n_chars), 4) AS avg_chars
-            FROM w
-            GROUP BY 1
-        """,
-        "llm_repetition_stats": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            t AS (SELECT doc_id, unnest(words) AS token FROM w),
-            per AS (SELECT doc_id, token, count(*) AS c FROM t GROUP BY 1, 2)
-            SELECT doc_id,
-                   sum(c)::BIGINT AS n_tokens,
-                   count(*) AS n_distinct,
-                   round(count(*) / sum(c), 4) AS distinct_ratio,
-                   round(max(c) / sum(c), 4) AS top_token_ratio
-            FROM per
-            GROUP BY doc_id
-        """,
-        "llm_pack_sequences": """
-            WITH w AS (
-                SELECT doc_id, source,
-                       len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tokens
-                FROM documents
-            ),
-            c AS (
-                SELECT doc_id, source, n_tokens,
-                       sum(n_tokens) OVER (
-                           PARTITION BY source ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) - n_tokens AS s
-                FROM w
-            )
-            SELECT doc_id, source, n_tokens,
-                   (s // 256)::BIGINT AS seq_id,
-                   (s % 256)::BIGINT AS offset_in_seq
-            FROM c
-        """,
-        "llm_chunking": """
-            WITH w AS (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            s AS (
-                SELECT doc_id, words,
-                       unnest(range(1, greatest(len(words) - 8, 1) + 1, 24)) AS st
-                FROM w
-            )
-            SELECT doc_id,
-                   (st - 1) // 24 AS chunk_idx,
-                   array_to_string(words[st:st+31], ' ') AS chunk_text,
-                   len(words[st:st+31]) AS n_chunk_tokens
-            FROM s
-        """,
-        "llm_pii_redact": """
-            WITH d AS (
-                SELECT c_custkey AS doc_id,
-                       'contact ' || regexp_replace(lower(c_name), '[^a-z0-9]', '', 'g')
-                       || '@example.com or call 555-'
-                       || lpad((c_custkey % 1000)::VARCHAR, 3, '0')
-                       || '-' || lpad((c_custkey % 10000)::VARCHAR, 4, '0')
-                       || ' from 10.0.' || (c_custkey % 256)::VARCHAR
-                       || '.' || (c_custkey % 100)::VARCHAR
-                       || ' about ' || c_mktsegment AS t
-                FROM customer
-            ),
-            s1 AS (
-                SELECT doc_id,
-                       len(regexp_extract_all(t, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}')) AS n_email,
-                       regexp_replace(t, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}', '<EMAIL>', 'g') AS t
-                FROM d
-            ),
-            s2 AS (
-                SELECT doc_id, n_email,
-                       len(regexp_extract_all(t, '\\+?[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}')) AS n_phone,
-                       regexp_replace(t, '\\+?[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}', '<PHONE>', 'g') AS t
-                FROM s1
-            ),
-            s3 AS (
-                SELECT doc_id, n_email, n_phone,
-                       len(regexp_extract_all(t, '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) AS n_ipv4,
-                       regexp_replace(t, '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '<IPV4>', 'g') AS t
-                FROM s2
-            )
-            SELECT doc_id, n_email, n_phone, n_ipv4, t AS redacted FROM s3
-        """,
-        "mm_resize": f"""
-            -- closed-form mirror of the crafted-pixel decode + 8x8
-            -- nearest-neighbor RGB resize: output pixel (xo,yo) reads
-            -- source ((xo*w)//8, (yo*h)//8); channels R=v+170, G=v+85,
-            -- B=v (mod 256). Storage order / padding / BGR are the
-            -- DECODER's problem — the oracle only knows the logical grid.
-            WITH m AS (
-                SELECT doc_id AS media_id,
-                       doc_id % 12 + 4 AS w, doc_id % 9 + 4 AS h
-                FROM documents WHERE doc_id >= 0
-            )
-            SELECT media_id,
-                   'image/x-raw-rgb24;w=8;h=8' AS mime,
-                   192::BIGINT AS n_bytes,
-                   array_to_string(list_transform(range(0, 64), i ->
-                       CASE WHEN media_id % 8 >= 6
-                            THEN printf('%02X%02X%02X',
-                                        {_JPEG_SQL_CELL_P},
-                                        {_JPEG_SQL_CELL_P},
-                                        {_JPEG_SQL_CELL_P})
-                            ELSE printf('%02X%02X%02X',
-                                        ({_BMP_SQL_V} + 170) % 256,
-                                        ({_BMP_SQL_V} + 85) % 256,
-                                        {_BMP_SQL_V}) END), '')
-                       AS payload_hex
-            FROM m
-        """,
-        "mm_frame_sample": f"""
-            -- closed-form mirror of the concatenated-BMP container walk:
-            -- every 3rd frame of doc_id%7+1 frames, emitted as its
-            -- integer-luma plane (row-major top-down, w*h cells)
-            WITH m AS (
-                SELECT doc_id AS media_id,
-                       doc_id % 12 + 4 AS w, doc_id % 9 + 4 AS h,
-                       doc_id % 7 + 1 AS nf
-                FROM documents WHERE doc_id >= 0
-            ),
-            fr AS (
-                SELECT media_id, w, h,
-                       unnest(range(0, nf, 3)) AS frame_idx
-                FROM m
-            )
-            SELECT media_id, frame_idx,
-                   array_to_string(list_transform(range(0, w * h), i ->
-                       printf('%02X', {_MM_SQL_FRAME_LUM})), '')
-                       AS frame_hex
-            FROM fr
-        """,
-        "mm_media_features": """
-            WITH m AS (
-                -- f = 4 is also the route for doc_id < 0 (never
-                -- crafted: a negative multiple of 5 has doc_id % 5 = 0
-                -- on both engines, so the sign check must be explicit)
-                SELECT doc_id,
-                       CASE WHEN doc_id >= 0 THEN doc_id % 5
-                            ELSE 4 END AS f,
-                       doc_id % 640 + 1 AS w, doc_id % 480 + 1 AS h,
-                       (doc_id % 8) * 4000 + 8000 AS sr,
-                       doc_id % 2 + 1 AS ch,
-                       COALESCE(octet_length(encode(text)), 0)
-                           AS text_bytes
-                FROM documents
-            )
-            SELECT doc_id AS media_id,
-                   CASE f WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                          WHEN 2 THEN 'gif' WHEN 3 THEN 'wav'
-                          ELSE 'unknown' END AS format,
-                   (CASE WHEN f IN (0, 1, 2) THEN w ELSE 0 END)::BIGINT
-                       AS width,
-                   (CASE WHEN f IN (0, 1, 2) THEN h ELSE 0 END)::BIGINT
-                       AS height,
-                   (CASE WHEN f = 3 THEN sr ELSE 0 END)::BIGINT
-                       AS sample_rate_hz,
-                   (CASE f WHEN 1 THEN 3 WHEN 3 THEN ch
-                           ELSE 0 END)::BIGINT AS channels,
-                   (CASE WHEN f IN (0, 1) THEN 8 WHEN f = 3 THEN 16
-                         ELSE 0 END)::BIGINT AS bit_depth,
-                   (CASE f WHEN 0 THEN 33 WHEN 1 THEN 39
-                           WHEN 2 THEN 13 WHEN 3 THEN 36
-                           ELSE text_bytes END)::BIGINT AS n_bytes
-            FROM m
-        """,
-        "llm_kmeans_assign": f"""
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            cent AS (SELECT vec_id AS cid, v AS cv FROM ev WHERE vec_id < 8)
-            SELECT vec_id, cid AS cluster_id, _cos AS cos_sim FROM (
-                SELECT e.vec_id, c.cid,
-                       {_SQL_COS.format(a="e.v", b="c.cv")} AS _cos,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {_SQL_COS.format(a="e.v", b="c.cv")} DESC,
-                                    c.cid ASC
-                       ) AS rn
-                FROM ev e CROSS JOIN cent c
-            ) WHERE rn = 1
-            ORDER BY vec_id
-        """,
-        "llm_kmeans_centroids": f"""
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            cent AS (SELECT vec_id AS cid, v AS cv FROM ev WHERE vec_id < 8),
-            assigned AS (
-                SELECT vec_id, v, cid FROM (
-                    SELECT e.vec_id, e.v, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY {_SQL_COS.format(a="e.v", b="c.cv")} DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM ev e CROSS JOIN cent c
-                ) WHERE rn = 1
-            )
-            SELECT cid AS cluster_id,
-                   gs - 1 AS component_idx,
-                   round(avg(comp), 6) AS centroid_value
-            FROM (SELECT cid, unnest(v) AS comp,
-                         generate_subscripts(v, 1) AS gs
-                  FROM assigned)
-            GROUP BY cid, gs
-            ORDER BY cluster_id, component_idx
-        """,
-        "llm_kmeans_round": f"""
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            cent AS (SELECT vec_id AS cid, v AS cv FROM ev WHERE vec_id < 8),
-            assigned AS (
-                SELECT vec_id, v, cid FROM (
-                    SELECT e.vec_id, e.v, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY {_SQL_COS.format(a="e.v", b="c.cv")} DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM ev e CROSS JOIN cent c
-                ) WHERE rn = 1
-            ),
-            cent1 AS (
-                SELECT cid, list(cval ORDER BY gs) AS cv FROM (
-                    SELECT cid, gs, round(avg(comp), 6) AS cval
-                    FROM (SELECT cid, unnest(v) AS comp,
-                                 generate_subscripts(v, 1) AS gs
-                          FROM assigned)
-                    GROUP BY cid, gs
-                ) GROUP BY cid
-            ),
-            re AS (
-                SELECT vec_id, cid, _cos FROM (
-                    SELECT e.vec_id, c.cid,
-                           {_SQL_COS.format(a="e.v", b="c.cv")} AS _cos,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY {_SQL_COS.format(a="e.v", b="c.cv")} DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM ev e CROSS JOIN cent1 c
-                ) WHERE rn = 1
-            )
-            SELECT cid AS cluster_id,
-                   count(*) AS n_members,
-                   round(avg(_cos), 6) AS mean_cos
-            FROM re GROUP BY cid ORDER BY cluster_id
-        """,
-        "llm_semantic_dedup": f"""
-            WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            cent AS (SELECT vec_id AS cid, v AS cv FROM ev WHERE vec_id < 8),
-            assigned AS (
-                SELECT vec_id, v, cid FROM (
-                    SELECT e.vec_id, e.v, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY {_SQL_COS.format(a="e.v", b="c.cv")} DESC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM ev e CROSS JOIN cent c
-                ) WHERE rn = 1
-            ),
-            unitized AS (
-                SELECT vec_id, cid,
-                       list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-                           AS u
-                FROM assigned
-            ),
-            dominated AS (
-                SELECT DISTINCT b.vec_id
-                FROM unitized b JOIN unitized a
-                  ON a.cid = b.cid AND a.vec_id < b.vec_id
-                WHERE round(list_dot_product(a.u, b.u), 6) >= 0.3
-            )
-            SELECT vec_id, cid AS cluster_id
-            FROM unitized
-            WHERE vec_id NOT IN (SELECT vec_id FROM dominated)
-            ORDER BY vec_id
-        """,
-        "llm_ann_filtered_topk": f"""
-            WITH ev AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-                        FROM embeddings),
-            q AS (SELECT v AS qv FROM ev WHERE vec_id = 0)
-            SELECT vec_id, label,
-                   {_SQL_COS.format(a="v", b="qv")} AS cos_sim
-            FROM ev, q
-            WHERE label = 3 AND vec_id <> 0
-            ORDER BY cos_sim DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "ext_window_suite": """
-            WITH b AS (
-                SELECT user_id, event_id,
-                       cast(round(value * 100) as bigint)
-                       - lag(cast(round(value * 100) as bigint), 1) OVER w
-                           AS value_delta_cents,
-                       lead(event_type, 1) OVER w AS next_type,
-                       ntile(4) OVER w AS quartile,
-                       row_number() OVER w AS rn,
-                       count(*) OVER (PARTITION BY user_id) AS n
-                FROM events
-                WINDOW w AS (PARTITION BY user_id
-                             ORDER BY ts ASC, event_id ASC)
-            )
-            SELECT user_id, event_id, value_delta_cents, next_type,
-                   quartile,
-                   (CASE WHEN n > 1 THEN
-                        ((rn - 1) * 1000000000 * 2 + (n - 1))
-                        // (2 * (n - 1))
-                    ELSE 0 END)::BIGINT AS pct_rank_e9,
-                   ((rn * 1000000000 * 2 + n) // (2 * n))::BIGINT AS cume_e9
-            FROM b
-        """,
-        "ext_set_compare": """
-            SELECT
-                (SELECT count(*) FROM (
-                    SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-                    INTERSECT
-                    SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-                )) AS n_both,
-                (SELECT count(*) FROM (
-                    SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-                    EXCEPT
-                    SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-                )) AS n_only_a,
-                (SELECT count(*) FROM (
-                    SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-                    EXCEPT
-                    SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-                )) AS n_only_b,
-                (SELECT count(DISTINCT o_custkey) FROM orders
-                 WHERE year(o_orderdate) IN (1995, 1996)) AS n_union
-        """,
-        "llm_dedup_incremental": """
-            WITH new_hashed AS (
-                SELECT min(doc_id) AS doc_id, md5(text) AS text_hash
-                FROM documents WHERE doc_id % 5 = 0
-                GROUP BY md5(text)
-            )
-            SELECT doc_id, text_hash FROM new_hashed
-            WHERE text_hash NOT IN (
-                SELECT md5(text) FROM documents WHERE doc_id % 5 <> 0
-            )
-            ORDER BY doc_id
-        """,
-        "llm_dsir_weights": _SQL_DSIR_CTE + """
-            SELECT doc_id, log_weight FROM lw
-        """,
-        "llm_dsir_resample": _SQL_DSIR_CTE + """
-            SELECT doc_id, log_weight,
-                   round(log_weight - ln(-ln(
-                       (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-                        + 0.5) / 4294967296.0)), 4) AS sample_key
-            FROM lw
-            ORDER BY sample_key DESC, doc_id ASC
-            LIMIT 50
-        """,
-        "llm_temperature_mix": """
-            WITH per AS (
-                SELECT source, sum(n_chars) AS n_tokens
-                FROM documents GROUP BY 1
-                HAVING sum(n_chars) > 0
-            ),
-            tot AS (
-                SELECT sum(n_tokens) AS _tot,
-                       sum(pow(n_tokens::DOUBLE, 0.3)) AS _z
-                FROM per
-            )
-            SELECT source, n_tokens::BIGINT AS n_tokens,
-                   ((n_tokens * 1000000 * 2 + _tot)
-                    // (2 * _tot))::BIGINT AS nat_frac_e6,
-                   round(pow(n_tokens::DOUBLE, 0.3) / _z, 6) AS mix_weight,
-                   round(pow(n_tokens::DOUBLE, 0.3) / _z * 1000000.0
-                         / n_tokens, 6) AS epochs
-            FROM per, tot ORDER BY source
-        """,
-        "llm_cross_source_overlap": """
-            WITH toks AS (
-                SELECT source,
-                       string_split_regex(lower(trim(text)), '\\s+') AS w
-                FROM documents
-            ),
-            hashed AS (
-                SELECT DISTINCT source,
-                       unnest(list_transform(
-                           range(0, greatest(
-                               cast(ceil(len(w) / 20.0) AS BIGINT), 1)),
-                           i -> md5(array_to_string(
-                               w[i*20+1 : i*20+20], ' '))
-                       )) AS h
-                FROM toks
-            ),
-            per AS (SELECT source, count(*) AS n_texts FROM hashed GROUP BY 1),
-            shared AS (
-                SELECT a.source AS source_a, b.source AS source_b,
-                       count(*) AS n_shared
-                FROM hashed a JOIN hashed b
-                  ON a.h = b.h AND a.source < b.source
-                GROUP BY 1, 2
-            )
-            SELECT source_a, source_b, n_shared,
-                   ((n_shared * 1000000 * 2
-                     + least(pa.n_texts, pb.n_texts))
-                    // (2 * least(pa.n_texts, pb.n_texts)))::BIGINT
-                       AS overlap_rate_e6
-            FROM shared
-            JOIN per pa ON pa.source = shared.source_a
-            JOIN per pb ON pb.source = shared.source_b
-            ORDER BY source_a, source_b
-        """,
-        "llm_contrastive_triplets": f"""
-            WITH {_sql_lsh_bucket_cte(4)},
-            bsz AS (SELECT bucket, count(*) AS bn FROM bk GROUP BY 1),
-            capped AS (
-                SELECT vec_id, v, bk.bucket
-                FROM bk JOIN bsz USING (bucket)
-                WHERE ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT
-                      % greatest(cast(ceil(bn / 200.0) AS BIGINT), 1) = 0
-            ),
-            pairs AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       {_SQL_COS.format(a="a.v", b="b.v")} AS cos_r
-                FROM bk a JOIN capped b
-                  ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-            ),
-            agg AS (
-                SELECT id_a AS anchor_id,
-                       max(CASE WHEN cos_r >= 0.3
-                                THEN [cos_r, id_b::DOUBLE] END) AS p,
-                       max(CASE WHEN cos_r < 0.3
-                                THEN [cos_r, id_b::DOUBLE] END) AS n
-                FROM pairs GROUP BY 1
-            )
-            SELECT anchor_id,
-                   p[2]::BIGINT AS pos_id, p[1] AS pos_cos,
-                   n[2]::BIGINT AS neg_id, n[1] AS neg_cos
-            FROM agg
-            WHERE p IS NOT NULL AND n IS NOT NULL
-            ORDER BY anchor_id
-        """,
-        "llm_per_group_sample": """
-            SELECT doc_id, source, lang FROM (
-                SELECT doc_id, source, lang,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY md5(doc_id::VARCHAR), doc_id
-                       ) AS rn
-                FROM documents
-            ) WHERE rn <= 5
-        """,
-        "ext_heavy_hitters": """
-            WITH w AS (
-                SELECT string_split_regex(lower(trim(text)), '\\s+') AS words
-                FROM documents
-            ),
-            toks AS (SELECT unnest(words) AS term FROM w),
-            c AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1),
-            t AS (SELECT count(*) AS _n FROM toks)
-            SELECT term, cnt,
-                   ((cnt * 1000000 * 2 + _n) // (2 * _n))::BIGINT AS freq_e6
-            FROM c, t
-            WHERE cnt * 100 > _n
-            ORDER BY cnt DESC, term ASC
-        """,
-        # --- round-7 driver-environment probes (operators/probes.py).
-        # Every oracle is a literal restatement of the Spark expression;
-        # a driver red on any probe is diagnostic signal (see module
-        # docstring), not an engine defect.
-        "probe_env_tz": "SELECT 'UTC' AS tz_name",
-        "probe_env_versions": """
-            SELECT '4.1.2' AS spark_semver,
-                   substr(version(), 2) AS duck_semver
-        """,
-        "probe_round_canary": """
-            SELECT
-              cast(round(2.5E0)  as bigint) AS r_half_pos,
-              cast(round(-2.5E0) as bigint) AS r_half_neg,
-              cast(round(0.49999999999999994E0) as bigint) AS r_below_half,
-              cast(round(2.675E0, 2) * 1000 as bigint) AS r_2675_2,
-              cast(round(1.045E0, 2) * 1000 as bigint) AS r_1045_2,
-              cast(round(1234.5E0) as bigint) AS r_12345,
-              cast(round(8771.19E0 * 0.07E0 * 10000) as bigint) AS r_e4_device,
-              cast(round(4503599627370496.5E0) as bigint) AS r_big_mid,
-              cast(round((0.1E0 + 0.2E0) * 1E17) as bigint) AS r_dbl_sum
-        """,
-        "probe_libm_canary": """
-            SELECT
-              cast(round(ln(3E0)    * 1E12) as bigint) AS ln3_e12,
-              cast(round(ln(7E0)    * 1E12) as bigint) AS ln7_e12,
-              cast(round(ln(1E0 + 0.123456789E0) * 1E12) as bigint) AS log1p_e12,
-              cast(round(exp(1.5E0) * 1E12) as bigint) AS exp15_e12,
-              cast(round(sqrt(7E0)  * 1E12) as bigint) AS sqrt7_e12,
-              cast(round(power(1.1E0, 7.3E0) * 1E12) as bigint) AS pow_e12,
-              cast(round(sin(1E0)   * 1E12) as bigint) AS sin1_e12,
-              cast(round(atan2(1E0, 2E0) * 1E12) as bigint) AS atan2_e12
-        """,
-        "probe_hash_canary": """
-            SELECT
-              ('0x' || substr(md5('12345'), 1,  6))::BIGINT % 4096 AS bit_a0,
-              ('0x' || substr(md5('12345'), 7,  6))::BIGINT % 4096 AS bit_a1,
-              ('0x' || substr(md5('12345'), 13, 6))::BIGINT % 4096 AS bit_a2,
-              ('0x' || substr(md5('98765'), 1,  6))::BIGINT % 4096 AS bit_b0,
-              ('0x' || substr(md5('alpha'), 1,  6))::BIGINT % 256  AS bucket_alpha,
-              ('0x' || substr(md5(''),      1,  6))::BIGINT % 256  AS bucket_empty
-        """,
-        "probe_render_canary": """
-            SELECT
-              1 AS row_id,
-              TIMESTAMP '1997-10-01 12:34:56.789' AS ts_ntz,
-              'MIXED case; punct!' AS s_val,
-              cast(0.25E0 as double) AS dbl_exact,
-              cast(0.1E0 as double) + cast(0.2E0 as double) AS dbl_inexact,
-              cast(9007199254740993 as bigint) AS big_53
-            UNION ALL
-            SELECT
-              2,
-              cast(NULL as TIMESTAMP),
-              cast(NULL as VARCHAR),
-              cast(NULL as DOUBLE),
-              cast(NULL as DOUBLE),
-              cast(NULL as BIGINT)
-        """,
-        "probe_pred_domains": """
-            WITH li AS (
-                SELECT
-                  sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
-                            AND l_shipdate <  TIMESTAMP '1998-01-01'
-                           THEN 1 ELSE 0 END)::BIGINT AS li_lit,
-                  sum(CASE WHEN epoch_us(l_shipdate) >= 852076800000000
-                            AND epoch_us(l_shipdate) <  883612800000000
-                           THEN 1 ELSE 0 END)::BIGINT AS li_epoch,
-                  sum(CASE WHEN CAST(l_shipdate AS DATE) >= DATE '1997-01-01'
-                            AND CAST(l_shipdate AS DATE) <  DATE '1998-01-01'
-                           THEN 1 ELSE 0 END)::BIGINT AS li_date,
-                  sum(CASE WHEN strftime(l_shipdate, '%Y-%m-%d')
-                                BETWEEN '1997-01-01' AND '1997-12-31'
-                           THEN 1 ELSE 0 END)::BIGINT AS li_str
-                FROM lineitem
-            ),
-            od AS (
-                SELECT
-                  sum(CASE WHEN o_orderdate >= TIMESTAMP '1997-10-01'
-                            AND o_orderdate <  TIMESTAMP '1998-01-01'
-                           THEN 1 ELSE 0 END)::BIGINT AS ord_lit,
-                  sum(CASE WHEN epoch_us(o_orderdate) >= 875664000000000
-                            AND epoch_us(o_orderdate) <  883612800000000
-                           THEN 1 ELSE 0 END)::BIGINT AS ord_epoch
-                FROM orders
-            )
-            SELECT li.*, od.* FROM li, od
-        """,
-        **{
-            key: f"""
-            SELECT count(*)::BIGINT AS n,
-                   coalesce(sum((l_orderkey * 97 + l_partkey * 89
-                                 + l_suppkey * 83 + l_linenumber * 79)
-                                % 1000000007), 0)::BIGINT AS ck_key,
-                   coalesce(sum(cast(round(l_extendedprice * 100) as bigint)),
-                            0)::BIGINT AS ck_price_e2,
-                   coalesce(sum(cast(round(l_discount * 100) as bigint)),
-                            0)::BIGINT AS ck_disc_e2,
-                   coalesce(sum(cast(round(l_quantity) as bigint)),
-                            0)::BIGINT AS ck_qty,
-                   coalesce(sum(datediff('day', DATE '1970-01-01',
-                                         CAST(l_shipdate AS DATE))),
-                            0)::BIGINT AS ck_day,
-                   coalesce(sum(ascii(l_returnflag) * 256
-                                + ascii(l_linestatus)), 0)::BIGINT AS ck_flag
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '{lo}'
-              AND l_shipdate <  TIMESTAMP '{hi}'
-            """
-            for key, lo, hi in [
-                ("probe_li_9596", "1995-01-01", "1997-01-01"),
-                ("probe_li_97h1", "1997-01-01", "1997-07-01"),
-                ("probe_li_97q3", "1997-07-01", "1997-10-01"),
-                ("probe_li_97q4", "1997-10-01", "1998-01-01"),
-                ("probe_li_98", "1998-01-01", "1999-01-01"),
-                ("probe_li_99p", "1999-01-01", "2002-01-01"),
-            ]
-        },
-        **{
-            key: f"""
-            SELECT count(*)::BIGINT AS n,
-                   coalesce(sum((o_orderkey * 97 + o_custkey * 89)
-                                % 1000000007), 0)::BIGINT AS ck_key,
-                   coalesce(sum(cast(round(o_totalprice * 100) as bigint)),
-                            0)::BIGINT AS ck_price_e2,
-                   coalesce(sum(datediff('day', DATE '1970-01-01',
-                                         CAST(o_orderdate AS DATE))),
-                            0)::BIGINT AS ck_day,
-                   coalesce(sum(ascii(o_orderstatus)), 0)::BIGINT AS ck_status,
-                   coalesce(sum(length(o_orderpriority)), 0)::BIGINT AS ck_prio
-            FROM orders
-            WHERE o_orderdate >= TIMESTAMP '{lo}'
-              AND o_orderdate <  TIMESTAMP '{hi}'
-            """
-            for key, lo, hi in [
-                ("probe_ord_9596", "1995-01-01", "1997-01-01"),
-                ("probe_ord_97q123", "1997-01-01", "1997-10-01"),
-                ("probe_ord_97q4", "1997-10-01", "1998-01-01"),
-                ("probe_ord_98p", "1998-01-01", "2002-01-01"),
-            ]
-        },
-        "probe_ev_values": """
-            SELECT count(*)::BIGINT AS n,
-                   sum(event_id % 1000000007)::BIGINT AS ck_id,
-                   sum(user_id % 1000000007)::BIGINT AS ck_user,
-                   sum(cast(round(value * 10000) as bigint))::BIGINT
-                       AS ck_value_e4,
-                   sum(length(event_type))::BIGINT AS ck_type,
-                   sum(length(coalesce(props, '')))::BIGINT AS ck_props
-            FROM events
-        """,
-        "probe_ev_epoch": """
-            SELECT count(*)::BIGINT AS n,
-                   sum(epoch_us(ts) - 1704067200000000)::BIGINT AS sum_off_us,
-                   sum(epoch_us(ts) % 1000000)::BIGINT AS sum_tail_us,
-                   sum((epoch_us(ts) - 1704067200000000)
-                       // 86400000000)::BIGINT AS sum_day,
-                   min(epoch_us(ts) - 1704067200000000)::BIGINT AS min_off_us,
-                   max(epoch_us(ts) - 1704067200000000)::BIGINT AS max_off_us
-            FROM events
-        """,
-    }
-
-
-# ---------------------------------------------------------------------------
-# Round-11 additions (REGISTERED r11, per VERDICT r10 item 1): the four
-# keys below were staged in r10 (written, oracle-proven in
-# tests/test_staged_r11.py, 10x-probed in SCALE.md) while the surface
-# was frozen at 337, and entered queries()/oracle_sql() in r11 at the
-# head of the driver window so their first registered round is also
-# their first driver-proven round. Surface: 341.
-# ---------------------------------------------------------------------------
-
-
-def _wav_frame_sql(did: str, n: str, sr: str, ch: int) -> str:
-    """SQL text of ``_wav_frame_hex``'s crafted PCM16 WAV (same byte
-    stream; see the single-parse rationale at the pixel _sql_ crafts)."""
-    frame = "concat(%s)" % ", ".join(
-        _sql_hex_le2(f"pmod({did} * 7 + 9973 * i + 5 * {c}, 65536)", 4)
-        for c in range(ch)
-    )
-    data_len = f"({n} * {ch * 2})"
-    return "concat(%s)" % ", ".join([
-        "'52494646'",
-        _sql_hex_le2(f"({data_len} + 36)", 8),
-        "'57415645'", "'666D7420'",
-        "'10000000'", "'0100'",
-        f"'{ch:02X}00'",
-        _sql_hex_le2(sr, 8),
-        _sql_hex_le2(f"({sr} * {ch * 2})", 8),
-        f"'{ch * 2:02X}00'", "'1000'",
-        "'64617461'", _sql_hex_le2(data_len, 8),
-        f"array_join(transform(sequence(0, {n} - 1), i -> {frame}), '')",
-    ])
-
-
-def _crafted_wav_media(spark, sf_dir):
-    """Crafted PCM16 WAV corpus over documents: n = doc_id%50+10
-    frames, sr = (doc_id%4+1)*8000, channels = doc_id%2+1. Sample
-    words follow the closed-form _wav_frame_hex formula, so the audio
-    oracles recompute every exact-integer feature. doc_id >= 0 guards
-    the hex-craft invariant."""
-    from streaming_demos_spark.catalog import fan_out
-
-    # fan_out BEFORE the craft (see _crafted_pixel_media) and ONE
-    # F.expr for the whole payload (construction-cost note in
-    # operators/text.py).
-    docs = fan_out(
-        _t(spark, sf_dir, "documents").filter(F.col("doc_id") >= 0).select("doc_id"),
-        "doc_id",
-    )
-    n = "(doc_id % 50 + 10)"
-    sr = "((doc_id % 4 + 1) * 8000)"
-    payload_hex = F.expr(
-        f"CASE WHEN doc_id % 2 = 1 THEN {_wav_frame_sql('doc_id', n, sr, 2)}"
-        f" ELSE {_wav_frame_sql('doc_id', n, sr, 1)} END"
-    )
-    crafted = docs.select(F.col("doc_id"), F.unhex(payload_hex).alias("wav"))
-    return MM.as_media(crafted, "doc_id", "wav", kind="audio")
-
-
-def q_mm_audio_features(spark, sf_dir):
-    # REAL integer-PCM decode + exact-integer audio features over the
-    # crafted WAV corpus (multimodal.decode_wav_pcm/audio_features);
-    # silence_abs=20000 so the silence gate fires on a meaningful
-    # fraction of frames. Oracle: closed-form sample replay.
-    return MM.audio_features(
-        _crafted_wav_media(spark, sf_dir), silence_abs=20000)
-
-
-def q_mm_audio_windows(spark, sf_dir):
-    # Fixed-2ms analysis windows over channel 0 (decode-and-explode
-    # kernel, partial tail emitted). Oracle: closed-form window sums.
-    return MM.audio_windows(
-        _crafted_wav_media(spark, sf_dir), window_ms=2)
-
-
-def q_mm_audio_vad(spark, sf_dir):
-    # VAD segments: the window kernel + the pure-DataFrame
-    # gaps-and-islands (multimodal.audio_activity_segments). Oracle:
-    # same closed-form windows + SQL gaps-and-islands replay.
-    wins = MM.audio_windows(
-        _crafted_wav_media(spark, sf_dir), window_ms=2)
-    return MM.audio_activity_segments(
-        wins, min_sumsq_per_sample=358_000_000)
-
-
-def q_llm_decompress_corpus(spark, sf_dir):
-    # REAL gzip member walk + raw inflate over the corpus texts
-    # wrapped JVM-side in stored-DEFLATE members (encode side is pure
-    # JVM hex, decode side is curation.decompress_text's bounded
-    # inflate). Every 4th doc is a CONCATENATED TWO-MEMBER file (the
-    # WARC shape): the text char-split in half, each half a complete
-    # member with a real CRC32/ISIZE trailer (F.crc32 JVM-side), so
-    # the driver witnesses the multi-member walk + strict trailer
-    # verification, not just the single-member path
-    # (_gzip_stored_hex's tolerated-truncation tail). Oracle: the raw
-    # text plus the per-shape member-size arithmetic.
-    from streaming_demos_spark.operators import curation as CU
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") >= 0)
-        .filter(F.col("text").isNotNull())
-        .filter(F.octet_length(F.col("text")) <= 60000)
-    )
-    left = F.expr("substring(text, 1, length(text) div 2)")
-    right = F.expr("substring(text, 1 + (length(text) div 2))")
-    two = F.concat(
-        _gzip_member_full_hex(F.encode(left, "utf-8")),
-        _gzip_member_full_hex(F.encode(right, "utf-8")),
-    )
-    payload_hex = F.when(F.col("doc_id") % 4 == 0, two).otherwise(
-        _gzip_stored_hex(F.col("text")))
-    crafted = docs.select(
-        "doc_id", F.unhex(payload_hex).alias("gz"))
-    return CU.decompress_text(crafted, payload_col="gz")
-
-
-# Closed-form signed sample s(i, c) for doc d — mirrors _wav_frame_hex.
-_SQL_WAV_S = ("(((7 * {d} + 9973 * ({i}) + 5 * ({c}) + 32768) % 65536)"
-              " - 32768)")
-
-
-def _staged_wav_base_cte():
-    return """
-        WITH base AS (
-            SELECT doc_id, doc_id % 50 + 10 AS n,
-                   (doc_id % 4 + 1) * 8000 AS sr,
-                   doc_id % 2 + 1 AS ch
-            FROM documents WHERE doc_id >= 0
-        )"""
-
-
-def _r11_oracle_sqls():
-    s0 = _SQL_WAV_S.format(d="doc_id", i="{i}", c="0")
-    return {
-        "mm_audio_features": _staged_wav_base_cte() + f"""
-            SELECT doc_id AS media_id,
-                   sr AS sample_rate_hz,
-                   ch AS channels,
-                   n AS n_frames,
-                   (n * 1000) // sr AS duration_ms,
-                   list_max(list_transform(range(0, n * ch), k ->
-                       abs({_SQL_WAV_S.format(d="doc_id", i="k // ch", c="k % ch")})
-                   ))::BIGINT AS peak_abs,
-                   list_sum(list_transform(range(1, n), i ->
-                       CASE WHEN {s0.format(i="i - 1")}
-                                 * {s0.format(i="i")} < 0
-                            THEN 1 ELSE 0 END))::BIGINT AS zero_crossings,
-                   list_sum(list_transform(range(0, n * ch), k ->
-                       {_SQL_WAV_S.format(d="doc_id", i="k // ch", c="k % ch")}
-                       * {_SQL_WAV_S.format(d="doc_id", i="k // ch", c="k % ch")}
-                   ))::BIGINT AS sum_squares,
-                   list_sum(list_transform(range(0, n), i ->
-                       CASE WHEN abs({s0.format(i="i")}) <= 20000
-                                 AND (ch = 1 OR abs({_SQL_WAV_S.format(d="doc_id", i="i", c="1")}) <= 20000)
-                            THEN 1 ELSE 0 END))::BIGINT AS silence_frames
-            FROM base
-        """,
-        "mm_audio_windows": _staged_wav_base_cte() + f""",
-            win AS (
-                SELECT doc_id, n, sr, (sr * 2) // 1000 AS w FROM base
-            ),
-            idx AS (
-                SELECT doc_id, n, sr, w,
-                       unnest(range(0, (n + w - 1) // w)) AS wi
-                FROM win
-            )
-            SELECT doc_id AS media_id, wi AS win_idx,
-                   (wi * w * 1000) // sr AS start_ms,
-                   least(w, n - wi * w) AS n_samples,
-                   list_sum(list_transform(
-                       range(wi * w, least(n, (wi + 1) * w)), i ->
-                       {s0.format(i="i")} * {s0.format(i="i")}
-                   ))::BIGINT AS sum_squares,
-                   list_max(list_transform(
-                       range(wi * w, least(n, (wi + 1) * w)), i ->
-                       abs({s0.format(i="i")})))::BIGINT AS peak_abs
-            FROM idx
-        """,
-        "mm_audio_vad": _staged_wav_base_cte() + f""",
-            win AS (
-                SELECT doc_id, n, sr, (sr * 2) // 1000 AS w FROM base
-            ),
-            idx AS (
-                SELECT doc_id, n, w,
-                       unnest(range(0, (n + w - 1) // w)) AS wi
-                FROM win
-            ),
-            feats AS (
-                SELECT doc_id AS media_id, wi,
-                       least(w, n - wi * w) AS n_samples,
-                       list_sum(list_transform(
-                           range(wi * w, least(n, (wi + 1) * w)), i ->
-                           {s0.format(i="i")} * {s0.format(i="i")}
-                       ))::BIGINT AS sum_squares,
-                       list_max(list_transform(
-                           range(wi * w, least(n, (wi + 1) * w)), i ->
-                           abs({s0.format(i="i")})))::BIGINT AS peak_abs
-                FROM idx
-            ),
-            active AS (
-                SELECT * FROM feats
-                WHERE sum_squares >= 358000000 * n_samples
-            ),
-            runs AS (
-                SELECT *,
-                       CASE WHEN lag(wi) OVER
-                                (PARTITION BY media_id ORDER BY wi)
-                                IS DISTINCT FROM wi - 1
-                            THEN 1 ELSE 0 END AS new_run
-                FROM active
-            ),
-            segs AS (
-                SELECT *,
-                       sum(new_run) OVER
-                           (PARTITION BY media_id ORDER BY wi
-                            ROWS UNBOUNDED PRECEDING) AS seg
-                FROM runs
-            )
-            SELECT media_id, (seg - 1)::BIGINT AS seg_idx,
-                   min(wi) AS start_win, max(wi) AS end_win,
-                   count(*)::BIGINT AS n_windows,
-                   sum(sum_squares)::BIGINT AS sum_squares,
-                   max(peak_abs) AS peak_abs
-            FROM segs
-            GROUP BY media_id, seg
-        """,
-        "llm_decompress_corpus": """
-            -- member-size arithmetic: single tail member = 10 header
-            -- + 5 stored-block header + n (no trailer); the every-4th
-            -- two-member shape = 2 x (10 + 5 + 8 trailer) + n = n+46
-            SELECT doc_id, text,
-                   (strlen(text) + CASE WHEN doc_id % 4 = 0
-                                        THEN 46 ELSE 15 END)::BIGINT
-                       AS n_raw_bytes,
-                   strlen(text)::BIGINT AS n_text_bytes
-            FROM documents
-            WHERE doc_id >= 0 AND text IS NOT NULL
-              AND strlen(text) <= 60000
-        """,
-    }
+    return Q.oracles()

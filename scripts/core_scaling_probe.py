@@ -20,11 +20,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from streaming_demos_spark.session import get_spark  # noqa: E402
 
-DST = "/root/repo/.scratch/scale10x"
+DST = os.path.join(REPO, ".scratch", "scale10x")
 DEFAULT_KEYS = [
     # the top compute keys at sf0.1 (driver c8 detail + r12 profiling)
     "llm_minhash_lsh_eval",

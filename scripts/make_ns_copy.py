@@ -8,10 +8,11 @@ must rebuild). This script pyarrow-casts every timestamp column of
 every table to ``timestamp[ns]`` so the full oracle sweep can run over
 the driver's actual physical layout, e.g.:
 
-    python scripts/make_ns_copy.py /root/testdata/sf0.01 /root/repo/.nsdata/sf0.01
-    ORACLE_TZ=America/New_York python scripts/oracle_check.py /root/repo/.nsdata/sf0.01
+    python scripts/make_ns_copy.py /root/testdata/sf0.01
+    ORACLE_TZ=America/New_York python scripts/oracle_check.py .nsdata/sf0.01
 
 Usage: python scripts/make_ns_copy.py [src_sf_dir] [dst_dir]
+(dst_dir defaults to ``.nsdata/sf0.01`` in this checkout)
 """
 import os
 import sys
@@ -19,7 +20,8 @@ import sys
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from streaming_demos_spark.schemas import TESTDATA_TABLES  # noqa: E402
 
@@ -36,7 +38,8 @@ def ns_schema(schema: pa.Schema) -> pa.Schema:
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.nsdata/sf0.01"
+    dst = (sys.argv[2] if len(sys.argv) > 2
+           else os.path.join(REPO, ".nsdata", "sf0.01"))
     os.makedirs(dst, exist_ok=True)
     for t in TESTDATA_TABLES:
         tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))

@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -217,7 +218,7 @@ def build(spark, dst: str, n: int) -> None:
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    dst = f"/root/repo/.scratch/scale{n}x"
+    dst = os.path.join(REPO, ".scratch", f"scale{n}x")
     spark = get_spark(app_name="scale_probe")
     import __spark_entry__ as E
 

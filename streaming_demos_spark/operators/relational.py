@@ -107,27 +107,6 @@ def metrics_summary(feed: DataFrame) -> DataFrame:
     )
 
 
-def metrics_summary_approx(feed: DataFrame, rsd: float = 0.01) -> DataFrame:
-    """HLL variant of metrics_summary for the 100 TB path — no exact
-    distinct shuffle; one pass, mergeable sketches."""
-    return feed.agg(
-        F.approx_count_distinct("order_id", rsd).alias("n_orders"),
-        F.approx_count_distinct("item_id", rsd).alias("n_items"),
-        F.round(F.sum("sale_price"), 2).alias("total_revenue"),
-    )
-
-
-# --- A3 + O1: grouped revenue sorted desc -----------------------------------
-
-def grouped_revenue(feed: DataFrame, key: str) -> DataFrame:
-    """Revenue by group, sorted descending (streamlit/utils.py:92-104)."""
-    return (
-        feed.groupBy(key)
-        .agg(F.round(F.sum("sale_price"), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc(key))
-    )
-
-
 # --- A4: metric delta vs previous tick --------------------------------------
 
 def metric_deltas(df: DataFrame, tick_col: str, key_col: str, value_col: str) -> DataFrame:

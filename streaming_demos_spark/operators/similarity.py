@@ -762,13 +762,6 @@ def _packed_codebook_sql(cb: list[list[float]]) -> str:
     )
 
 
-def _packed_codebook_expr(cb: list[list[float]]) -> Column:
-    """One subspace's codebook as a single parsed literal — one F.expr
-    parse instead of ~16x(1+dsub) F.lit py4j round-trips;
-    literal-building dominated plan-construction time otherwise."""
-    return F.expr(_packed_codebook_sql(cb))
-
-
 def pq_encode(
     emb: DataFrame,
     codebooks: list[list[list[float]]],

@@ -142,14 +142,6 @@ def shingles_from_tokens(w: Column | str, k: int = 3) -> Column:
     ).otherwise(F.array(F.array_join(w, " ")))
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Sliding word k-grams (shingles) as array<string> straight from a
-    text column. Convenience form for tests/small frames — hot paths
-    should use ``shingles_from_tokens`` on a pre-materialized token
-    column (see its docstring for the codegen reason)."""
-    return shingles_from_tokens(tokens(text), k)
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     text_col: str = "text",

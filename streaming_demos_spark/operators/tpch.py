@@ -50,12 +50,6 @@ def _ts(s: str):
     return F.lit(s).cast("timestamp")
 
 
-def _revenue():
-    """Lazily-built revenue expression — must not evaluate F.col at
-    import time (pyspark asserts an active SparkContext)."""
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
 def _revenue_e4():
     """Per-row revenue as an EXACT e4-scaled BIGINT:
     ``round(l_extendedprice * (1 - l_discount) * 10000)``. Price and

@@ -95,17 +95,6 @@ def logreg_fit(
     return weights
 
 
-def _margin_cols(feature_cols: list[str], prefix: str = "_w") -> Column:
-    """w . x + b where the weights are COLUMNS of a crossJoined 1-row
-    weight frame (``{prefix}{j}`` per feature, ``{prefix}b`` bias) —
-    the same accumulation order as ``_margin`` so the double arithmetic
-    is bit-identical to the literal-weight form."""
-    z = F.col(f"{prefix}b")
-    for j, c in enumerate(feature_cols):
-        z = z + F.col(f"{prefix}{j}") * F.col(c)
-    return z
-
-
 # --- single-parse SQL fragments for the fused GD builders -------------------
 # (construction-cost note in text.py: each Column operator call is a
 # py4j round trip at ~1ms; one selectExpr ships every projection in a
@@ -124,8 +113,9 @@ def _margin_sql(
     weights: list[float] | None = None,
     prefix: str = "_w",
 ) -> str:
-    """SQL text of ``_margin`` (literal weights, ``weights`` given) or
-    ``_margin_cols`` (1-row weight columns): same accumulation order."""
+    """SQL text of ``_margin``: literal weights when ``weights`` is
+    given, else the columns ``{prefix}{j}`` / ``{prefix}b`` of a
+    crossJoined 1-row weight frame; same accumulation order."""
     if weights is not None:
         z = f"{float(weights[-1])!r}D"
         for c, w in zip(feature_cols, weights[:-1]):

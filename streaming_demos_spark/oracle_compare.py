@@ -28,8 +28,8 @@ NORM_DP = int(os.environ.get("ORACLE_NORM_DP", "9"))
 
 def use_sf_dir(sf_dir: str) -> None:
     """Point the numpy/python-computed oracles
-    (``__spark_entry__._eigen_oracle_sqls`` / ``_numeric_oracle_sqls``)
-    at the data dir the comparison reads. Call before ``oracle_sql()``."""
+    (``streaming_demos_spark.queries.generated``) at the data dir the
+    comparison reads. Call before ``oracle_sql()``."""
     os.environ["ORACLE_SF_DIR"] = sf_dir
 
 

@@ -10,7 +10,7 @@ Schema-on-read everywhere: the engine never relies on inference
    - FEEDBACK_EVENT: product-recommender/recsys-engine/src/models.py:172-195
    - DEBEZIUM metadata fields: cdc-local/config/debezium/application.properties:21-29
 
-2. Driver TESTDATA star-schema (TPC-H-ish; /root/repo/TESTDATA.md).
+2. Driver TESTDATA star-schema (TPC-H-ish; TESTDATA.md at the repo root).
 """
 
 from __future__ import annotations

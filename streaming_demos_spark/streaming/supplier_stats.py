@@ -26,10 +26,11 @@ Semantics mapping (SURVEY.md §2.9):
 - T4 tumbling window via ``window()``; A5-A8 sum+count partial+final
   aggregation; A7 bounds formatted ``yyyy-MM-dd HH:mm:ss`` at emission.
 - T6 the engine-custom operator: Spark drops late rows silently, the
-  reference *routes* them. A keyed stateful processor
-  (transformWithStateInPandas) tracks per-shard stream time
-  (max event time seen) and tags ``is_late`` BEFORE the window agg with
-  the reference's exact rule: late ⇔ stream_time > window_end + grace,
+  reference *routes* them. A keyed stateful tagger
+  (``tag_late_stream``: ``applyInPandasWithState`` over the
+  ``_tag_batch_pdf`` kernel) tracks per-shard stream time (max event
+  time seen) and tags ``is_late`` BEFORE the window agg with the
+  reference's exact rule: late ⇔ stream_time > window_end + grace,
   window_end = (floor(ts/size)+1)·size.
 - T7/T8 dual sink from one tagged stream inside a single foreachBatch
   (no side outputs in Spark): on-time rows -> windowed stats sink, late
@@ -51,10 +52,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from streaming_demos_spark.functions.scalars import epoch_sec
 
@@ -176,39 +173,6 @@ def tag_late_batch(
         "is_late",
         F.coalesce(stream_time > wend + grace_sec, F.lit(False)),
     )
-
-
-class LateTagProcessor(StatefulProcessor):
-    """Keyed stateful stream-time tracker (transformWithStateInPandas).
-
-    State: one long per key — max event-time epoch seen so far (the
-    reference's ``context.currentStreamTimeMs()``,
-    LateRecordProcessor.kt:24-44). Rows are processed in ``seq`` order
-    within each batch; each row is tagged with the pre-update stream
-    time, then advances it. Emits the input rows + ``is_late``.
-
-    NOTE: Spark 4's transformWithStateInPandas driver worker imports
-    ``google.protobuf``, which is not baked into this container — use
-    ``tag_late_stream`` (applyInPandasWithState, Arrow-only, identical
-    semantics) here; this class is the forward path on a real cluster.
-    """
-
-    def __init__(self, window_sec: int = 5, grace_sec: int = 5):
-        self.window_sec = window_sec
-        self.grace_sec = grace_sec
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._stream_time = handle.getValueState("stream_time", "max_ts long")
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timer_values) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(rows), ignore_index=True)
-        st = self._stream_time.get()[0] if self._stream_time.exists() else None
-        pdf, st = _tag_batch_pdf(pdf, st, self.window_sec, self.grace_sec)
-        self._stream_time.update((st,))
-        yield pdf
-
-    def close(self) -> None:
-        pass
 
 
 def _tag_batch_pdf(

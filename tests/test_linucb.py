@@ -80,11 +80,11 @@ def test_recommend_top_k_deterministic(feedback):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_stream_update_equals_batch_fit(spark, feedback):
+def test_stream_update_equals_batch_fit(spark, feedback, scratch_dir):
     """Replay the same log through the stateful streaming trainer in
     TWO micro-batches; the final per-key model must equal the batch fit
     to 1e-9 (SURVEY §5.2's batch/stream equivalence gate)."""
-    d = tempfile.mkdtemp(prefix="sparkgraft_linucb_", dir="/root/repo/.scratch")
+    d = tempfile.mkdtemp(prefix="sparkgraft_linucb_", dir=scratch_dir)
     try:
         # two files -> two micro-batches (state carries across)
         half1, half2 = feedback.randomSplit([0.5, 0.5], seed=7)
@@ -135,7 +135,7 @@ def test_stream_update_equals_batch_fit(spark, feedback):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_full_loop_seed_stream_publish_score(spark, feedback):
+def test_full_loop_seed_stream_publish_score(spark, feedback, scratch_dir):
     """§3.3's whole feedback loop: batch-seed models into the KV store
     (S9b + S13), stream the remaining log through the stateful trainer
     publishing via the model sink, then serve: fetch models (S14) and
@@ -149,7 +149,7 @@ def test_full_loop_seed_stream_publish_score(spark, feedback):
 
     from streaming_demos_spark import sinks as SK
 
-    d = tempfile.mkdtemp(prefix="sparkgraft_loop_", dir="/root/repo/.scratch")
+    d = tempfile.mkdtemp(prefix="sparkgraft_loop_", dir=scratch_dir)
     try:
         kv = SK.InMemoryKV()
         # seed: batch fit over the full log -> publish (S9b ordering)

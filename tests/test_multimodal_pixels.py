@@ -816,7 +816,7 @@ def test_staged_wav_hex_crafter_round_trip(spark):
     # decode to the closed-form signed samples
     import pyspark.sql.functions as F
 
-    import __spark_entry__ as E
+    from streaming_demos_spark.queries import mm as E
 
     # the 9973 stride crosses the two's-complement sign boundary
     # within every few samples, so both signs are exercised
@@ -842,8 +842,8 @@ def test_staged_wav_hex_crafter_round_trip(spark):
 def test_staged_gzip_hex_crafter_round_trip(spark):
     import pyspark.sql.functions as F
 
-    import __spark_entry__ as E
     from streaming_demos_spark.operators import curation as CU
+    from streaming_demos_spark.queries import llm_curation as E
 
     texts = [(0, "plain ascii"), (1, "unicode é中文 😀"), (2, "")]
     df = spark.createDataFrame(texts, "doc_id long, text string")

@@ -67,10 +67,10 @@ def test_bucketed_join_has_no_shuffle(spark):
     """Co-located join: both sides bucketed on the join key -> the
     sort-merge join runs without an Exchange (the write-once,
     join-many pattern SCALE.md prescribes for fact-to-fact joins)."""
-    from streaming_demos_spark.catalog import write_bucketed
+    from streaming_demos_spark.catalog import load_table, write_bucketed
 
-    orders = E.queries.__globals__["_t"](spark, SF, "orders")
-    lineitem = E.queries.__globals__["_t"](spark, SF, "lineitem")
+    orders = load_table(spark, SF, "orders")
+    lineitem = load_table(spark, SF, "lineitem")
     write_bucketed(orders.select("o_orderkey", "o_totalprice"), "b_orders",
                    ["o_orderkey"], num_buckets=4)
     write_bucketed(lineitem.select("l_orderkey", "l_quantity"), "b_lineitem",
@@ -99,10 +99,10 @@ def test_bucketed_scan_prunes_buckets_and_join_skips_sort(spark):
     (one file per bucket) join with neither an Exchange nor a Sort.
     At 100 TB this is the write-once/join-and-point-lookup-many layout:
     the sort is paid once at write time, never per query."""
-    from streaming_demos_spark.catalog import write_bucketed
+    from streaming_demos_spark.catalog import load_table, write_bucketed
 
-    orders = E.queries.__globals__["_t"](spark, SF, "orders")
-    lineitem = E.queries.__globals__["_t"](spark, SF, "lineitem")
+    orders = load_table(spark, SF, "orders")
+    lineitem = load_table(spark, SF, "lineitem")
     # single input partition -> exactly one file per bucket, the
     # layout Spark requires to skip the per-query sort
     write_bucketed(

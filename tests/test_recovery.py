@@ -17,8 +17,8 @@ from streaming_demos_spark.streaming import generator as G
 
 
 @pytest.fixture()
-def dirs():
-    d = tempfile.mkdtemp(prefix="sparkgraft_recov_", dir="/root/repo/.scratch")
+def dirs(scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_recov_", dir=scratch_dir)
     os.makedirs(f"{d}/src")
     yield d
     shutil.rmtree(d, ignore_errors=True)

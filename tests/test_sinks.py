@@ -19,8 +19,8 @@ from streaming_demos_spark import sinks as SK
 
 
 @pytest.fixture(scope="module")
-def derby_db():
-    d = tempfile.mkdtemp(prefix="sparkgraft_derby_", dir="/root/repo/.scratch")
+def derby_db(scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_derby_", dir=scratch_dir)
     yield f"{d}/db"
     shutil.rmtree(d, ignore_errors=True)
 
@@ -96,8 +96,8 @@ def test_jdbc_subquery_scan(spark, seeded_table):
 
 
 @pytest.fixture()
-def stream_src(spark):
-    d = tempfile.mkdtemp(prefix="sparkgraft_sink_", dir="/root/repo/.scratch")
+def stream_src(spark, scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_sink_", dir=scratch_dir)
     df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, amount double")
     df.coalesce(1).write.mode("overwrite").parquet(f"{d}/src")
     stream = spark.readStream.schema(df.schema).parquet(f"{d}/src")

@@ -275,8 +275,8 @@ def test_avro_bad_frame_policies(spark):
 
 
 @pytest.fixture(scope="module")
-def csv_dir():
-    d = tempfile.mkdtemp(prefix="sparkgraft_csv_", dir="/root/repo/.scratch")
+def csv_dir(scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_csv_", dir=scratch_dir)
     with open(f"{d}/data.csv", "w") as f:
         f.write("id,name,score\n")
         f.write("1,alpha,0.5\n")
@@ -335,8 +335,8 @@ def test_parse_csv_lines_permissive(spark):
 # --- hybrid bootstrap + periodic refresh ------------------------------------
 
 
-def test_hybrid_stream_union_tags_origin(spark):
-    d = tempfile.mkdtemp(prefix="sparkgraft_hybrid_", dir="/root/repo/.scratch")
+def test_hybrid_stream_union_tags_origin(spark, scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_hybrid_", dir=scratch_dir)
     try:
         hist = spark.createDataFrame([(1, "h"), (2, "h")], "id long, v string")
         hist.coalesce(1).write.mode("overwrite").parquet(f"{d}/hist")
@@ -364,8 +364,8 @@ def test_hybrid_stream_union_tags_origin(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_periodic_refresh_pushes_json_records(spark):
-    d = tempfile.mkdtemp(prefix="sparkgraft_refresh_", dir="/root/repo/.scratch")
+def test_periodic_refresh_pushes_json_records(spark, scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_refresh_", dir=scratch_dir)
     try:
         src = f"{d}/src"
         os.makedirs(src)

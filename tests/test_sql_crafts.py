@@ -1,7 +1,7 @@
 """Pin the single-parse SQL craft builders against the Column-operator
 reference implementations.
 
-The `_sql_*` / `*_frame_sql` builders in __spark_entry__ exist purely
+The `_sql_*` / `*_frame_sql` builders of the mm query module exist purely
 for plan-construction cost (one F.expr parse instead of hundreds of
 py4j round trips) and for execution cost (substring table lookups
 instead of per-pixel interpreted hex arithmetic); the Column-form
@@ -12,13 +12,10 @@ doc_id residue period — lcm(256, 12, 9, 8, 2, 7) = 16128 — so every
 combination the craft can ever produce is covered.
 """
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as E  # noqa: E402
+from streaming_demos_spark.queries import mm as E
 
 PERIOD = 16128  # lcm of every modulus in the craft formulas
 

@@ -96,15 +96,16 @@ def test_supplier_stats_batch_aggregation(spark):
 
 
 @pytest.fixture(scope="module")
-def stream_dirs():
-    d = tempfile.mkdtemp(prefix="sparkgraft_stream_", dir="/root/repo/.scratch")
+def stream_dirs(scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_stream_", dir=scratch_dir)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
 
 def test_tag_late_stream_matches_batch(spark, events_df, stream_dirs):
     """Batch ≡ stream equivalence for the stateful tagger: the same
-    sequence through transformWithStateInPandas must tag identically."""
+    sequence through tag_late_stream (applyInPandasWithState over
+    _tag_batch_pdf) must tag identically."""
     src = f"{stream_dirs}/late_src"
     chk = f"{stream_dirs}/late_chk"
     events_df.coalesce(1).write.mode("overwrite").parquet(src)

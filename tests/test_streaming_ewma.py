@@ -10,8 +10,8 @@ from streaming_demos_spark.streaming.timeseries import streaming_ewma
 
 
 @pytest.fixture(scope="module")
-def dirs():
-    d = tempfile.mkdtemp(prefix="sparkgraft_ewma_", dir="/root/repo/.scratch")
+def dirs(scratch_dir):
+    d = tempfile.mkdtemp(prefix="sparkgraft_ewma_", dir=scratch_dir)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
