@@ -26,12 +26,12 @@ Semantics mapping (SURVEY.md §2.9):
 - T4 tumbling window via ``window()``; A5-A8 sum+count partial+final
   aggregation; A7 bounds formatted ``yyyy-MM-dd HH:mm:ss`` at emission.
 - T6 the engine-custom operator: Spark drops late rows silently, the
-  reference *routes* them. A keyed stateful tagger
-  (``tag_late_stream``: ``applyInPandasWithState`` over the
-  ``_tag_batch_pdf`` kernel) tracks per-shard stream time (max event
-  time seen) and tags ``is_late`` BEFORE the window agg with the
-  reference's exact rule: late ⇔ stream_time > window_end + grace,
-  window_end = (floor(ts/size)+1)·size.
+  reference *routes* them. ``is_late_expr`` tags ``is_late`` BEFORE the
+  window agg with the reference's exact rule: late ⇔ stream_time >
+  window_end + grace, window_end = (floor(ts/size)+1)·size, stream time
+  = max event time seen on the row's shard. On a stream it runs per
+  micro-batch inside ``run_supplier_stats``'s foreachBatch (JVM window
+  functions, no Python task), each shard's stream time carried along.
 - T7/T8 dual sink from one tagged stream inside a single foreachBatch
   (no side outputs in Spark): on-time rows -> windowed stats sink, late
   rows -> ``late=true``-enriched JSON sink keyed by order id.
@@ -39,19 +39,20 @@ Semantics mapping (SURVEY.md §2.9):
 
 Batch/stream duality: every transform below is a plain DataFrame
 function, so the SAME code runs in batch tests and in the streaming
-path; ``tag_late_batch`` is the window-function analog of the stateful
-tagger (per-shard running max = per-task stream time, exactly the
-Kafka Streams model where stream time is task-local).
+path; ``is_late_expr`` is the tagger of both (per-shard running max =
+per-task stream time, exactly the Kafka Streams model where stream time
+is task-local).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+import os
+import tempfile
+from collections import namedtuple
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from streaming_demos_spark.functions.scalars import epoch_sec
 
@@ -147,6 +148,34 @@ def window_end_expr(ts: Column, window_sec: int) -> Column:
     return (F.floor(epoch / window_sec) + 1) * window_sec
 
 
+def is_late_expr(
+    key_col: str,
+    seq_col: str,
+    ts_col: str = "event_time",
+    window_sec: int = 5,
+    grace_sec: int = 5,
+    carried: Column | None = None,
+) -> Column:
+    """The late rule: per-key stream time is the running max of event
+    time over arrival order (exclusive of the current row — a record
+    never makes itself late; including the current row is equivalent
+    because ts <= window_end(ts) + grace always). Kafka Streams stream
+    time is task-local, so partitioning the running max by the shard key
+    is the faithful AND scalable restatement (no global window).
+    ``carried``: the key's stream time (epoch s) from earlier micro-batches,
+    null for a new key; stream time is then greatest(carried, running max)."""
+    w = (
+        Window.partitionBy(key_col)
+        .orderBy(seq_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    stream_time = F.max(epoch_sec(F.col(ts_col))).over(w)
+    if carried is not None:
+        stream_time = F.greatest(carried, stream_time)
+    wend = window_end_expr(F.col(ts_col), window_sec)
+    return F.coalesce(stream_time > wend + grace_sec, F.lit(False))
+
+
 def tag_late_batch(
     events: DataFrame,
     key_col: str,
@@ -155,40 +184,14 @@ def tag_late_batch(
     window_sec: int = 5,
     grace_sec: int = 5,
 ) -> DataFrame:
-    """Batch analog of the stateful tagger: per-key stream time is the
-    running max of event time over arrival order (exclusive of the
-    current row — a record never makes itself late; including the
-    current row is equivalent because ts <= window_end(ts) + grace
-    always). Kafka Streams stream time is task-local, so partitioning
-    the running max by the shard key is the faithful AND scalable
-    restatement (no global window)."""
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(seq_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    stream_time = F.max(epoch_sec(F.col(ts_col))).over(w)
-    wend = window_end_expr(F.col(ts_col), window_sec)
+    """The batch form of the tagger: ``is_late`` by ``is_late_expr``."""
     return events.withColumn(
-        "is_late",
-        F.coalesce(stream_time > wend + grace_sec, F.lit(False)),
+        "is_late", is_late_expr(key_col, seq_col, ts_col, window_sec, grace_sec)
     )
 
 
-def _tag_batch_pdf(
-    pdf: pd.DataFrame, st: int | None, window_sec: int, grace_sec: int
-) -> tuple[pd.DataFrame, int]:
-    """Shared kernel for both stateful APIs: tag rows (sorted by seq)
-    against the running stream time, return (tagged, new stream time)."""
-    pdf = pdf.sort_values("seq", kind="stable").reset_index(drop=True)
-    epochs = pdf["event_time"].to_numpy().astype("datetime64[s]").astype("int64")
-    is_late = []
-    for ts in epochs:
-        wend = (ts // window_sec + 1) * window_sec
-        is_late.append(bool(st is not None and st > wend + grace_sec))
-        st = int(ts) if st is None else max(st, int(ts))
-    pdf["is_late"] = is_late
-    return pdf, int(st)
+# The late rule ``run_supplier_stats`` applies to each micro-batch of ``events``.
+LateTagging = namedtuple("LateTagging", "events key_col seq_col window_sec grace_sec")
 
 
 def tag_late_stream(
@@ -196,36 +199,26 @@ def tag_late_stream(
     key_col: str,
     window_sec: int = 5,
     grace_sec: int = 5,
-) -> DataFrame:
-    """Streaming form of the tagger: group by the shard key, track
-    stream time in per-key state, emit every row tagged. The input must
-    carry ``seq`` (Kafka offset in the live path) and ``event_time``.
+) -> LateTagging:
+    """Streaming form of the tagger: the tagging ``run_supplier_stats``
+    applies inside its foreachBatch (``is_late_expr`` per micro-batch,
+    each key's stream time carried from the batch before; no state
+    operator, no Python worker), not a tagged stream. The input must
+    carry ``seq`` (Kafka offset in the live path) and ``event_time``."""
+    return LateTagging(events, key_col, "seq", window_sec, grace_sec)
 
-    Implemented on ``applyInPandasWithState`` (Arrow-only): Spark 4's
-    ``transformWithStateInPandas`` (see LateTagProcessor) is the
-    forward path but its driver worker needs the python ``protobuf``
-    package, not present in this container — same semantics either way.
-    """
-    out_schema = T.StructType(
-        [f for f in events.schema.fields]
-        + [T.StructField("is_late", T.BooleanType(), False)]
-    )
-    w, g = window_sec, grace_sec
 
-    def tag(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        st = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            pdf, st = _tag_batch_pdf(pdf, st, w, g)
-            yield pdf
-        state.update((st,))
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        tag,
-        outputStructType=out_schema,
-        stateStructType="max_ts long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+def _write_stream_times(root: str, batch_id: int, state: dict) -> None:
+    """Write ``<root>/<batch_id>`` atomically as JSON [key, epoch s] pairs
+    (a null key is no JSON object key); keep the last two."""
+    tmp = os.path.join(root, f".{batch_id}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(list(state.items()), fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(root, str(batch_id)))
+    for old in sorted(int(n) for n in os.listdir(root) if n.isdigit())[:-2]:
+        os.remove(os.path.join(root, str(old)))
 
 
 # --- T4/A5-A8: tumbling-window aggregation ----------------------------------
@@ -278,7 +271,7 @@ def enrich_late(late: DataFrame, key_col: str = "order_id") -> DataFrame:
 
 
 def run_supplier_stats(
-    tagged: DataFrame,
+    tagged: LateTagging,
     stats_writer,
     late_writer,
     window: str = "5 seconds",
@@ -290,21 +283,64 @@ def run_supplier_stats(
     transaction boundary — T7, T11/T12 note: sinks get each micro-batch
     exactly once under checkpointing, writers must be idempotent).
 
-    ``stats_writer(df, batch_id)`` receives the windowed aggregate of
-    on-time rows; ``late_writer(df, batch_id)`` the enriched late rows.
+    Each micro-batch is tagged here and cached. Its keys' stream times
+    are observed while the stats sink's aggregate reads every row (or, if
+    it ran no action, aggregated from the cache) and saved under
+    ``<checkpoint_dir>/late_state`` (a temporary directory without one)
+    before the batch returns. Batch N starts from the newest state below
+    N, so a replayed batch re-tags the same.
     """
+    root = os.path.join(checkpoint_dir or tempfile.mkdtemp(), "late_state")
+    os.makedirs(root, exist_ok=True)
+    # Built once: per batch only the carried map changes, as a column.
+    # observe() rejects window expressions, hence the _st/_last columns:
+    # each key's max event time after the row, and its last row.
+    t, key = tagged, F.col(tagged.key_col)
+    w = Window.partitionBy(t.key_col).orderBy(t.seq_col)
+    cols = [
+        is_late_expr(t.key_col, t.seq_col, window_sec=t.window_sec, grace_sec=t.grace_sec,
+                     carried=F.col("_carried")).alias("is_late"),
+        F.max(epoch_sec(F.col("event_time"))).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)).alias("_st"),
+        F.lead(F.lit(1)).over(w).isNull().alias("_last"),
+    ]
+    last = F.collect_list(F.when(F.col("_last"), F.struct(key.cast("string"), "_st"))).alias("st")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
+        prev = [i for i in sorted(int(n) for n in os.listdir(root) if n.isdigit()) if i < batch_id]
+        carried = {}
+        if prev:  # the newest state below this batch, as when it first ran
+            with open(os.path.join(root, str(prev[-1]))) as fh:
+                carried = dict(json.load(fh))
+        # a literal map keyed by the key cast to string, one entry per
+        # shard (no join); a map key cannot be null
+        known = json.dumps({k: st for k, st in carried.items() if k is not None})
+        prior = F.from_json(F.lit(known), "map<string,bigint>")[key.cast("string")]
+        if None in carried:
+            prior = F.when(key.isNull(), F.lit(carried[None])).otherwise(prior)
+        obs = Observation()
+        observed = batch_df.withColumn("_carried", prior).select("*", *cols).observe(obs, last)
+        observed.persist()
         try:
-            on_time = batch_df.filter(~F.col("is_late"))
-            late = batch_df.filter(F.col("is_late")).drop("is_late")
-            stats_writer(supplier_stats(on_time, window=window), batch_id)
+            stats_writer(supplier_stats(observed.filter(~F.col("is_late")), window=window), batch_id)
+            # The listener bus fills the observation just after the stats
+            # sink's action over every row: wait up to 100 ms for it, before
+            # the late sink's narrow frame could run a partial one. No row
+            # (no action, or a plan optimized away as for an empty batch):
+            # one aggregate over the cache instead.
+            row = obs._jo.getRowOrEmpty()
+            if row.isDefined() and row.get().length():
+                seen = obs.get["st"]
+            else:
+                seen = observed.agg(last).first()[0]
+            late = observed.filter(F.col("is_late")).drop("is_late", "_carried", "_st", "_last")
             late_writer(enrich_late(late), batch_id)
+            seen = {k: max(st, carried.get(k, st)) for k, st in seen}
+            _write_stream_times(root, batch_id, {**carried, **seen})
         finally:
-            batch_df.unpersist()
+            observed.unpersist()
 
-    writer = tagged.writeStream.foreachBatch(process).outputMode("append")
+    writer = tagged.events.writeStream.foreachBatch(process).outputMode("append")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if trigger:

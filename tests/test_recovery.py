@@ -82,3 +82,67 @@ def test_generator_is_deterministic_and_late_capable(spark):
     # bid_time lags the arrival clock -> out-of-order records exist
     bid_times = [r.bid_time for r in a]
     assert bid_times != sorted(bid_times)
+
+
+def test_supplier_stats_restart_and_replay_are_exactly_once(spark, dirs):
+    """The late tagger's carried stream time survives a restart, and a
+    batch replayed from its offsets (commit lost) re-tags from the state
+    the batch before it left: late rows and summed stats equal the batch
+    path over all files, and the replay repeats the late rows."""
+    from streaming_demos_spark.streaming import supplier_stats as SS
+
+    orders = SS.with_event_time(G.order_events_batch(spark, 90, events_per_sec=2, max_delay_sec=20))
+    exp = SS.tag_late_batch(orders, "supplier", "seq").cache()
+
+    def drop(i):
+        tmp = f"{dirs}/tmp_{i}"
+        orders.filter(F.col("seq").between(30 * i, 30 * i + 29)).coalesce(1).write.parquet(tmp)
+        dst = f"{dirs}/src/f{i}.parquet"
+        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+    stats, late = {}, {}
+
+    def run():
+        stream = spark.readStream.schema(orders.schema).option("maxFilesPerTrigger", 1).parquet(f"{dirs}/src")
+        q = SS.run_supplier_stats(
+            SS.tag_late_stream(stream, "supplier"),
+            stats_writer=lambda df, bid: stats.__setitem__(bid, df.collect()),
+            late_writer=lambda df, bid: late.__setitem__(bid, sorted(r.key for r in df.collect())),
+            checkpoint_dir=f"{dirs}/chk",
+            trigger={"availableNow": True},
+        )
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+
+    drop(0)
+    drop(1)
+    run()
+    drop(2)
+    run()
+    assert sorted(stats) == [0, 1, 2]
+    want_late = sorted(str(r.order_id) for r in exp.filter("is_late").collect())
+    # 12 late rows, 4 of them late only by stream time from an earlier file
+    assert len(want_late) == 12 and sorted(k for keys in late.values() for k in keys) == want_late
+    cell = ("window_start", "window_end", "supplier")
+    got = {}
+    for rows in stats.values():
+        for r in rows:
+            t, n = got.get(tuple(r[c] for c in cell), (0.0, 0))
+            got[tuple(r[c] for c in cell)] = (t + r.total_price, n + r["count"])
+    want = SS.supplier_stats(exp.filter(~F.col("is_late"))).collect()
+    assert set(got) == {tuple(r[c] for c in cell) for r in want}
+    for r in want:
+        t, n = got[tuple(r[c] for c in cell)]
+        assert n == r["count"] and abs(t - r.total_price) < 1e-6
+
+    # lose the last commit: batch 2 re-runs from the state batch 1 left
+    before = late.pop(2)
+    os.remove(f"{dirs}/chk/commits/2")
+    crc = f"{dirs}/chk/commits/.2.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+    run()
+    assert late[2] == before
+    assert len(os.listdir(f"{dirs}/chk/late_state")) <= 2
+    exp.unpersist()

@@ -10,6 +10,10 @@ The late-tagging sequences replicate the reference rule
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import io
+import json
 import os
 import shutil
 import tempfile
@@ -102,29 +106,134 @@ def stream_dirs(scratch_dir):
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _run_dual_sink(stream, key, chk, stats_writer=None, late_writer=None):
+    """``run_supplier_stats`` over ``stream`` until its input is consumed;
+    returns the query and, per micro-batch, the collected stats rows and
+    the seqs of the late rows."""
+    stats, late = {}, {}
+    q = SS.run_supplier_stats(
+        SS.tag_late_stream(stream, key, window_sec=5, grace_sec=5),
+        stats_writer=stats_writer or (lambda df, bid: stats.__setitem__(bid, df.collect())),
+        late_writer=late_writer or (lambda df, bid: late.__setitem__(
+            bid, [json.loads(r.value)["seq"] for r in df.collect()])),
+        checkpoint_dir=chk,
+        trigger={"availableNow": True},
+    )
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+    return q, stats, late
+
+
 def test_tag_late_stream_matches_batch(spark, events_df, stream_dirs):
-    """Batch ≡ stream equivalence for the stateful tagger: the same
-    sequence through tag_late_stream (applyInPandasWithState over
-    _tag_batch_pdf) must tag identically."""
+    """Batch ≡ stream equivalence for the tagger: the same sequence
+    through tag_late_stream (the late rule applied per micro-batch
+    inside run_supplier_stats' foreachBatch) must tag identically."""
     src = f"{stream_dirs}/late_src"
     chk = f"{stream_dirs}/late_chk"
-    events_df.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events_df.schema).parquet(src)
-    tagged = SS.tag_late_stream(stream, "shard", window_sec=5, grace_sec=5)
-    q = (
-        tagged.writeStream.format("memory")
-        .queryName("late_tagged")
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = {
-        r.seq: r.is_late for r in spark.sql("SELECT * FROM late_tagged").collect()
-    }
+    base = events_df.withColumn("order_id", F.col("seq")).withColumn(
+        "price", F.lit(1.0)
+    ).withColumn("supplier", F.col("shard"))
+    base.coalesce(1).write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(base.schema).parquet(src)
+    _, stats, late = _run_dual_sink(stream, "shard", chk)
+    late_seqs = {seq for seqs in late.values() for seq in seqs}
+    out = {seq: seq in late_seqs for seq, _, _ in SEQUENCE}
     expected = {seq: late for seq, _, late in _expected()}
     assert out == expected
+    n_on_time = sum(r["count"] for rows in stats.values() for r in rows)
+    assert n_on_time == len(SEQUENCE) - len(late_seqs)
+
+
+# SEQUENCE (shard 1) split over micro-batches, with shard 2 first seen in
+# batch 2. Seq 4 is late only by the stream time batch 0 left (120),
+# carried through the empty batch 1; seq 8 only by shard 2's from batch 2;
+# seq 10 only by the null shard's from batch 0.
+CARRY_BATCHES = [
+    [(1, 0, 100), (1, 1, 103), (1, 2, 101), (1, 3, 120), (None, 9, 200)],
+    [],
+    [(1, 4, 104), (2, 7, 50), (None, 10, 150)],  # seq 7: shard 1's 120 is not its
+    [(1, 5, 112), (1, 6, 111), (2, 8, 30)],
+]
+CARRY_STATE = {"1": 1704067200 + 120, "2": 1704067200 + 50, None: 1704067200 + 200}
+CARRY_SCHEMA = "shard bigint, seq bigint, bid_time string, order_id bigint, price double, supplier string"
+
+
+def _write_batches(spark, src, batches):
+    """One parquet file per batch (empty ones too), in arrival order."""
+    os.makedirs(src, exist_ok=True)
+    for i, batch in enumerate(batches):
+        rows = [
+            (shard, seq, f"2024-01-01 00:{ts // 60:02d}:{ts % 60:02d}", seq, 1.0, "s")
+            for shard, seq, ts in batch
+        ]
+        tmp = f"{src}_tmp{i}"
+        spark.createDataFrame(rows, CARRY_SCHEMA).coalesce(1).write.mode("overwrite").parquet(tmp)
+        dst = f"{src}/part-{i:03d}.parquet"
+        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+
+def _carry_stream(spark, src):
+    return SS.with_event_time(
+        spark.readStream.schema(CARRY_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+
+
+def test_tag_late_stream_carries_stream_time_across_batches(spark, stream_dirs):
+    src, chk = f"{stream_dirs}/carry_src", f"{stream_dirs}/carry_chk"
+    _write_batches(spark, src, CARRY_BATCHES)
+    _, stats, late = _run_dual_sink(_carry_stream(spark, src), "shard", chk)
+    assert sorted(stats) == [0, 1, 2, 3] and stats[1] == []  # batch 1 ran, empty
+    assert {b: sorted(seqs) for b, seqs in late.items()} == {0: [], 1: [], 2: [4, 10], 3: [8]}
+    # the batch tagger over all rows agrees
+    rows = [r for batch in CARRY_BATCHES for r in batch]
+    whole = SS.with_event_time(spark.createDataFrame(
+        [(k, s, f"2024-01-01 00:{t // 60:02d}:{t % 60:02d}") for k, s, t in rows],
+        "shard bigint, seq bigint, bid_time string"))
+    assert {r.seq for r in SS.tag_late_batch(whole, "shard", "seq").filter("is_late").collect()} == {4, 8, 10}
+    # state keyed by the key cast to string (the integer key round-trips
+    # through that cast), at most two files
+    state_dir = f"{chk}/late_state"
+    assert sorted(os.listdir(state_dir)) == ["2", "3"]
+    with open(f"{state_dir}/3") as fh:
+        assert dict(json.load(fh)) == CARRY_STATE
+
+
+def test_tagged_micro_batch_runs_no_python(spark, stream_dirs):
+    """Guard: the tagger is JVM-only. Each sink's executed plan (which
+    prints the cached, tagged batch under it) has the tag's Window and
+    the state Observation, and no Python evaluation node; the stream
+    itself has no state operator."""
+    src, chk = f"{stream_dirs}/jvm_src", f"{stream_dirs}/jvm_chk"
+    _write_batches(spark, src, CARRY_BATCHES[:1] + CARRY_BATCHES[2:3])
+    plans = []
+
+    def capture(df, bid):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        plans.append(buf.getvalue())
+        df.collect()
+
+    q, _, _ = _run_dual_sink(_carry_stream(spark, src), "shard", chk, capture, capture)
+    assert len(plans) == 4
+    for plan in plans:
+        assert "Window [" in plan and "CollectMetrics" in plan
+        for node in ("FlatMapGroupsInPandasWithState", "ArrowEvalPython", "PythonUDF"):
+            assert node not in plan
+    assert q.lastProgress["stateOperators"] == []
+
+
+def test_supplier_stats_writers_without_action_do_not_hang(spark, stream_dirs):
+    """Writers that run no action never fill the Observation; the tagger
+    then collects the stream times with one aggregate over the cache."""
+    src, chk = f"{stream_dirs}/noop_src", f"{stream_dirs}/noop_chk"
+    _write_batches(spark, src, CARRY_BATCHES)
+    noop = lambda df, bid: None  # noqa: E731
+    _run_dual_sink(_carry_stream(spark, src), "shard", chk, noop, noop)
+    with open(f"{chk}/late_state/3") as fh:
+        assert dict(json.load(fh)) == CARRY_STATE
 
 
 def test_streaming_window_agg_drops_beyond_watermark(spark, stream_dirs):
