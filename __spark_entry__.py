@@ -58,6 +58,7 @@ _CHANGED_THIS_ROUND = (
     "llm_quality_classifier",
     "llm_uncertainty_sample",
     "ext_grouped_mad",
+    "ext_grouped_trend",
 )
 
 

@@ -59,6 +59,16 @@ def sigmoid(col: Column | str) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-c))
 
 
+def round_dp(x: Column, dp: int) -> Column:
+    """Spark's HALF_UP ``round`` of a DOUBLE that keeps the sign of a
+    zero result. Spark rounds through BigDecimal, which has no negative
+    zero: ``round(-1e-9, 6)`` is 0.0 where DuckDB gives -0.0, and the
+    two engines' rows then hash apart. ``x * 0.0`` is the zero with
+    x's sign."""
+    r = F.round(x, dp)
+    return F.when(r == 0, x * F.lit(0.0)).otherwise(r)
+
+
 def null_safe(col: Column | str, default) -> Column:
     """``value ?: default`` Kotlin elvis — null-safe extraction."""
     return F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(default))

@@ -28,13 +28,12 @@ could flip an ordering, so Spark and DuckDB agree bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import fan_out
-from streaming_demos_spark.operators.similarity import _sql_dot, cosine
-from streaming_demos_spark.operators.similarity import dot as dot_product
-from streaming_demos_spark.operators.text import _q
+from streaming_demos_spark.functions.sqlfrag import dbl, dot, q
+from streaming_demos_spark.operators.similarity import cosine
 
 
 def _nearest(
@@ -58,32 +57,26 @@ def _nearest(
     Centroid norms are precomputed into the packed struct and the row
     norm into its own projection, so the per-(row, centroid) cost is a
     single dot-product fold."""
-    cv = F.col(cvec_col).cast("array<double>")
-    packed = centroids.select(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(cid_col).cast("long").alias("cid"),
-                    cv.alias("cv"),
-                    F.sqrt(dot_product(cv, cv)).alias("cn"),
-                )
-            )
-        ).alias("_cents")
-    )
-    # single-parse forms (construction-cost note in operators/text.py);
-    # identical unresolved trees to the old Column-op chains.
+    # single-parse forms (construction-cost note in functions/sqlfrag.py).
     # try_divide: zero-norm vectors (or an empty cell's zero centroid)
     # get NULL cosine, not an ANSI job abort.
-    v = f"cast({_q(vec_col)} as array<double>)"
+    cv = f"cast({q(cvec_col)} as array<double>)"
+    packed = centroids.select(
+        F.expr(
+            f"array_sort(collect_list(struct(cast({q(cid_col)} as bigint) AS cid,"
+            f" {cv} AS cv, sqrt({dot(cv, cv)}) AS cn))) AS _cents"
+        )
+    )
+    v = f"cast({q(vec_col)} as array<double>)"
 
     best = F.expr(
         "array_max(transform(_cents, c -> struct("
-        f"round(try_divide({_sql_dot(v, 'c.cv')}, _vnorm * c.cn), 6) AS cos,"
+        f"round(try_divide({dot(v, 'c.cv')}, _vnorm * c.cn), 6) AS cos,"
         " -c.cid AS ncid)))"
     )
     return (
         emb.crossJoin(F.broadcast(packed))
-        .withColumn("_vnorm", F.expr(f"sqrt({_sql_dot(v, v)})"))
+        .withColumn("_vnorm", F.expr(f"sqrt({dot(v, v)})"))
         .withColumn("_best", best)
         .select(
             id_col,
@@ -203,7 +196,7 @@ def semantic_dedup(
     """
     from pyspark import StorageLevel
 
-    v = F.col(vec_col).cast("array<double>")
+    v = f"cast({q(vec_col)} as array<double>)"
     # fan_out BEFORE the persisted assignment: the embeddings scan is
     # single-row-group at bench scale and the persist pins its
     # 1-partition layout, so the within-cell pair comparisons below ran
@@ -221,12 +214,10 @@ def semantic_dedup(
         .select(id_col, vec_col, "cluster_id")
         # norm in its own projection: a fold inside the transform lambda
         # would re-run per element (64x the work) and blow codegen
-        .withColumn("_norm", F.sqrt(dot_product(v, v)))
+        .withColumn("_norm", F.expr(f"sqrt({dot(v, v)})"))
         # try_divide: a zero-norm vector (failed encode) becomes a NULL
         # unit component instead of an ANSI DIVIDE_BY_ZERO job abort
-        .withColumn(
-            "_unit", F.transform(v, lambda x: F.try_divide(x, F.col("_norm")))
-        )
+        .withColumn("_unit", F.expr(f"transform({v}, x -> try_divide(x, _norm))"))
         .select(id_col, "cluster_id", "_unit")
         # the frame feeds BOTH self-join sides and the final anti-join;
         # without materialization the assign+normalize map re-runs 3x
@@ -268,10 +259,7 @@ def semantic_dedup(
     dominated = (
         b.join(left, join_keys)
         .filter(F.col("_lid") < F.col(f"b.{id_col}"))
-        .filter(
-            F.round(dot_product(F.col("_lvec"), F.col("b._unit")), 6)
-            >= F.lit(threshold)
-        )
+        .filter(f"round({dot('_lvec', 'b._unit')}, 6) >= {dbl(threshold)}")
         .select(F.col(f"b.{id_col}").alias(id_col))
         .distinct()
     )

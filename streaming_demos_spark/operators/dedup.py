@@ -231,8 +231,7 @@ def _minhash_sig_from(
         F.col(id_col), F.explode_outer(F.col(array_col)).alias("_mh_s")
     )
     # one F.expr parse per lane instead of ~6 Column-op py4j round
-    # trips each (see the construction-cost note in text.py) — the
-    # parsed tree is the identical unresolved expression
+    # trips each (see the construction-cost note in functions/sqlfrag.py)
     return ex.groupBy(id_col).agg(
         *[
             F.expr(f"min(md5(concat('{h}|', _mh_s))) AS mh_{h}")
@@ -266,8 +265,7 @@ def _bands_from_sig(
     ``minhash_bands`` and the cached-shingle near-dup paths."""
     n_bands = num_hashes // band_rows
     # single-parse form of the banded struct array (construction-cost
-    # note in text.py); identical unresolved tree to the old
-    # struct/lit/md5 Column-op chain
+    # note in functions/sqlfrag.py)
     structs = ", ".join(
         "struct({b} AS band_id, md5(concat_ws('|', {cols})) AS band_hash)".format(
             b=b,
@@ -561,8 +559,9 @@ def simhash_fingerprints(
     from streaming_demos_spark.operators.text import _sql_tokens
 
     # Single-parse expressions throughout (construction-cost note in
-    # text.py): the 32 vote aggregates and the 32-bit concat otherwise
-    # cost ~600 Column-op py4j round trips per query construction.
+    # functions/sqlfrag.py): the 32 vote aggregates and the 32-bit
+    # concat otherwise cost ~600 Column-op py4j round trips per query
+    # construction.
     hashed = fan_out(docs.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col),
         F.expr(
@@ -938,8 +937,8 @@ def simhash_near_dup_pairs(
             F.col("_b.simhash").alias("_fb"),
         )
     )
-    # single-parse 32-term sum (construction-cost note in text.py);
-    # identical unresolved tree to the old 32-step when/otherwise chain
+    # single-parse 32-term sum (construction-cost note in
+    # functions/sqlfrag.py)
     hamming = F.expr(
         " + ".join(
             f"(CASE WHEN substring(_fa, {j}, 1) != substring(_fb, {j}, 1)"

@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from streaming_demos_spark.functions import scalars as SC
 from streaming_demos_spark.functions.scalars import epoch_sec, epoch_us
+from streaming_demos_spark.functions.sqlfrag import dbl
 
 
 # --- P1 + P2 + J1 + J2: the dashboard feed ---------------------------------
@@ -465,7 +467,7 @@ def grouped_quantiles_selection(
     # (double literals use the D suffix so they stay DOUBLE, not
     # DECIMAL; identifiers are backquoted). Joins/windows stay in the
     # Column API (a handful of calls). See the construction-cost note
-    # in text.py.
+    # in functions/sqlfrag.py.
     g = f"`{group_col}`"
     vsql = f"CAST(`{value_col}` AS DOUBLE)"
 
@@ -507,10 +509,9 @@ def grouped_quantiles_selection(
     # Spark's Percentile), then the bucket holding each rank + the
     # residual rank inside it — located by joining the need row to the
     # one cumulative-histogram row whose (cum-cnt, cum] covers k.
-    # repr(float(p)) is the shortest round-trip decimal: parsing it
-    # back (IEEE round-to-nearest, both here and in Spark's parser)
-    # yields the bit-identical double F.lit(float(p)) produced.
-    probs_sql = ", ".join(f"{float(p)!r}D" for p in probs)
+    # dbl(p) parses back to the bit-identical double F.lit(float(p))
+    # produced.
+    probs_sql = ", ".join(dbl(p) for p in probs)
     t_sql = "CAST((_n - 1) AS DOUBLE) * _p"
     needs = (
         stats.selectExpr(g, "_n", f"explode(array({probs_sql})) AS _p")
@@ -562,7 +563,7 @@ def grouped_quantiles_selection(
     return per_p.groupBy(group_col).agg(
         *[
             F.expr(
-                f"round(max(CASE WHEN _p = {float(p)!r}D THEN _q END),"
+                f"round(max(CASE WHEN _p = {dbl(p)} THEN _q END),"
                 f" {round_dp}) AS p{int(round(p * 100))}"
             )
             for p in probs
@@ -2160,11 +2161,11 @@ def grouped_trend(
     return agg.select(
         group_col,
         "n_rows",
-        F.round(slope, round_dp).alias("slope"),
-        F.round(F.col("_my") - slope * F.col("_mx"), round_dp).alias(
+        SC.round_dp(slope, round_dp).alias("slope"),
+        SC.round_dp(F.col("_my") - slope * F.col("_mx"), round_dp).alias(
             "intercept"
         ),
-        F.round(
+        SC.round_dp(
             F.try_divide(
                 F.col("_cxy") * F.col("_cxy"), F.col("_vx") * F.col("_vy")
             ),

@@ -29,46 +29,19 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import fan_out
-from streaming_demos_spark.operators.text import _q
+from streaming_demos_spark.functions import sqlfrag
+from streaming_demos_spark.functions.sqlfrag import q
 
 
 def _as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
 
 
-def _sql_dot(a: str, b: str) -> str:
-    """``dot`` as one parseable SQL fragment over two column NAMES —
-    plan-construction here is py4j-bound (~30 ms to build one
-    aggregate(zip_with(..)) operator-by-operator vs ~0.5 ms to parse
-    the whole subtree); the parsed tree is the identical unresolved
-    expression (see text.py construction-cost note)."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Σ a_i·b_i via zip_with + left-to-right fold (JVM, no UDF)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sql_dot(_q(a), _q(b)))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine(a: str, b: str) -> Column:
     """NULL (not a DIVIDE_BY_ZERO crash — Spark 4 runs ANSI mode) when
     either vector has zero norm; zero vectors are a plausible input
     (failed encodes, padding rows) and must not kill a corpus job."""
-    if isinstance(a, str) and isinstance(b, str):
-        da = f"cast({_q(a)} as array<double>)"
-        db = f"cast({_q(b)} as array<double>)"
-        return F.expr(
-            f"try_divide({_sql_dot(da, db)},"
-            f" sqrt({_sql_dot(da, da)}) * sqrt({_sql_dot(db, db)}))"
-        )
-    da, db = _as_double(a), _as_double(b)
-    return F.try_divide(
-        dot(da, db), F.sqrt(dot(da, da)) * F.sqrt(dot(db, db))
-    )
+    return F.expr(sqlfrag.cosine(q(a), q(b)))
 
 
 def brute_force_topk(
@@ -113,24 +86,8 @@ def _plane_signs(num_planes: int, dim: int, offset: int = 0) -> list[list[float]
     ]
 
 
-def _sign_array_lit(signs: list[float]) -> Column:
-    """A ±1.0 plane as ONE SQL array literal — a single py4j round trip.
-
-    Building the plane element-wise (``F.array(*[F.lit(s) ...])`` or
-    ``F.lit(list)``) converts every element through py4j individually;
-    with 512-component planes x planes x tables x (query + corpus)
-    sides, Python-side expression CONSTRUCTION — not planning, not
-    execution — was the dominant wall time of the multi-probe
-    harnesses (llm_ann_recall_multi: 3.7s build vs 0.15s plan vs 1.2s
-    exec per invocation). The parsed CreateArray of foldable literals
-    constant-folds to the identical ArrayType literal."""
-    return F.expr(
-        "array(" + ",".join("1.0D" if s > 0 else "-1.0D" for s in signs) + ")"
-    )
-
-
 def lsh_bucket(
-    vec: Column | str, num_planes: int = 4, max_dim: int = 512, table: int = 0
+    vec: str, num_planes: int = 4, max_dim: int = 512, table: int = 0
 ) -> Column:
     """Sign-LSH bucket key: bit p = sign of the projection of the
     vector onto hyperplane p; a '0'/'1' string of length ``num_planes``.
@@ -143,32 +100,19 @@ def lsh_bucket(
     components (the plane literal is sliced down to the row's length).
     ``table`` selects an independent plane-set (multi-table OR).
 
-    A column NAME input takes the single-F.expr fast path (the whole
-    P-plane bucket parses in one py4j round trip — see the
-    construction-cost note in text.py); the parsed tree is the
-    identical unresolved expression as the Column form below."""
+    The whole P-plane bucket is one parsed SQL string: built
+    element-wise, the 512-component planes x planes x tables x (query +
+    corpus) literals made Python-side construction the dominant wall
+    time of the multi-probe harnesses (llm_ann_recall_multi: 3.7s build
+    vs 0.15s plan vs 1.2s exec per invocation)."""
     planes = _plane_signs(num_planes, max_dim, offset=table * num_planes)
-    if isinstance(vec, str):
-        v = f"cast({_q(vec)} as array<double>)"
-        bits = []
-        for signs in planes:
-            arr = "array(" + ",".join(
-                "1.0D" if s > 0 else "-1.0D" for s in signs) + ")"
-            proj = (f"aggregate(zip_with({v}, slice({arr}, 1, size({v})),"
-                    " (x, s) -> x * s), 0.0D, (acc, x) -> acc + x)")
-            bits.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-        return F.expr("concat(" + ", ".join(bits) + ")")
-    v = _as_double(vec)
-    bits = []
-    for signs in planes:
-        plane = _sign_array_lit(signs)
-        proj = F.aggregate(
-            F.zip_with(v, F.slice(plane, F.lit(1), F.size(v)), lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+    v = f"cast({q(vec)} as array<double>)"
+    bits = [
+        f"CASE WHEN {sqlfrag.dot(v, f'slice({sqlfrag.dbl_array(signs)}, 1, size({v}))')}"
+        " >= 0 THEN '1' ELSE '0' END"
+        for signs in planes
+    ]
+    return F.expr("concat(" + ", ".join(bits) + ")")
 
 
 def with_lsh_bucket(
@@ -373,12 +317,12 @@ def embedding_near_dup_pairs(
     # rounded cosine is bit-identical to the naive form.
     # fan_out: the per-row plane projections + norms serialize on one
     # task when the scan is row-group-bound; no-op at real input sizes.
-    _dd = f"cast({_q(vec_col)} as array<double>)"
+    _dd = f"cast({q(vec_col)} as array<double>)"
     bucketed = with_lsh_bucket(fan_out(emb, id_col), num_planes, vec_col).withColumn(
-        # single-parse SQL form of sqrt(dot(d, d)): the Column-arg dot
-        # builds zip_with/aggregate lambdas operator-by-operator over
-        # py4j (~0.1-0.2s per call site at construction time)
-        "_norm", F.expr(f"sqrt({_sql_dot(_dd, _dd)})")
+        # single-parse SQL form of sqrt(dot(d, d)): built Column by
+        # Column the zip_with/aggregate lambdas cost ~0.1-0.2s of py4j
+        # round trips per call site at construction time
+        "_norm", F.expr(f"sqrt({sqlfrag.dot(_dd, _dd)})")
     )
     if max_bucket is not None:
         from pyspark import StorageLevel
@@ -415,7 +359,7 @@ def embedding_near_dup_pairs(
             "id_a",
             "id_b",
             F.expr(
-                "round(" + _sql_dot(
+                "round(" + sqlfrag.dot(
                     "cast(va as array<double>)", "cast(vb as array<double>)"
                 ) + " / (na * nb), 6)"
             ).alias("cos_sim"),
@@ -688,7 +632,7 @@ def embedding_outliers(
     norms = emb.select(
         F.col(id_col),
         F.expr(
-            f"round(sqrt({_sql_dot(_q(vec_col), _q(vec_col))}), 6)"
+            f"round(sqrt({sqlfrag.dot(q(vec_col), q(vec_col))}), 6)"
         ).alias("norm"),
     )
     moments = norms.agg(
@@ -756,8 +700,8 @@ def _packed_codebook_sql(cb: list[list[float]]) -> str:
     """One subspace's codebook as SQL literal text:
     array<struct<n: double, w: array<double>>> with n = ||codeword||^2."""
     return "array(%s)" % ", ".join(
-        "struct(%rD as n, array(%s) as w)"
-        % (sum(c * c for c in cw), ", ".join(f"{c!r}D" for c in cw))
+        f"struct({sqlfrag.dbl(sum(c * c for c in cw))} as n,"
+        f" {sqlfrag.dbl_array(cw)} as w)"
         for cw in cb
     )
 
@@ -791,15 +735,14 @@ def pq_encode(
     dsub = len(codebooks[0][0])
     m = len(codebooks)
     # every projection below is a single-parse F.expr (construction-
-    # cost note in text.py); the parsed trees are the identical
-    # unresolved expressions the old Column-op chains built
+    # cost note in functions/sqlfrag.py)
     keep = [F.col(c) for c in (keep_cols or [])]
     subs = emb.select(
         F.col(id_col),
         *keep,
         *[
             F.expr(
-                f"slice(cast({_q(vec_col)} as array<double>),"
+                f"slice(cast({q(vec_col)} as array<double>),"
                 f" {j * dsub + 1}, {dsub}) AS _s{j}"
             )
             for j in range(m)
@@ -809,8 +752,7 @@ def pq_encode(
     def _dists(j: int) -> Column:
         return F.expr(
             f"transform({_packed_codebook_sql(codebooks[j])},"
-            f" s -> s.n - 2.0D * aggregate(zip_with(_s{j}, s.w,"
-            " (x, c) -> x * c), 0.0D, (a, x) -> a + x))"
+            f" s -> s.n - 2.0D * {sqlfrag.dot(f'_s{j}', 's.w')})"
         )
 
     keep_names = [F.col(c) for c in (keep_cols or [])]
@@ -863,11 +805,11 @@ def pq_adc_topk(
     the scan cost drops to the 4-byte codes."""
     coded = pq_encode(emb, codebooks, id_col=id_col, vec_col=vec_col)
     luts = pq_adc_lut(query_vec, codebooks)
-    # whole ADC sum as one parse (construction-cost note in text.py)
+    # whole ADC sum as one parse (construction-cost note in
+    # functions/sqlfrag.py)
     acc = F.expr(
         " + ".join(
-            "element_at(array(%s), code_%d + 1)"
-            % (", ".join(f"{x!r}D" for x in lut), j)
+            f"element_at({sqlfrag.dbl_array(lut)}, code_{j} + 1)"
             for j, lut in enumerate(luts)
         )
     )
@@ -903,11 +845,11 @@ def pq_recall(
     panel = emb.filter(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")
     )
-    # single-parse forms (construction-cost note in text.py): the old
+    # single-parse forms (construction-cost note in functions/sqlfrag.py):
     # per-subspace Column-op chains cost ~50 ms of py4j round trips
-    # each to build; the parsed trees are identical
+    # each to build
     qd = "cast(_qv as array<double>)"
-    vd = f"cast({_q(vec_col)} as array<double>)"
+    vd = f"cast({q(vec_col)} as array<double>)"
     true_d = F.expr(
         f"round(aggregate(zip_with({vd}, {qd}, (x, y) -> (x - y) * (x - y)),"
         " 0.0D, (a, x) -> a + x), 6)"
@@ -990,12 +932,12 @@ def mmr_topk(
     ties break on the id. Step 1's mmr score is its relevance.
     """
     beta = 1.0 - lam
-    qlit = F.expr("array(%s)" % ", ".join(f"{x!r}D" for x in query_vec))
+    rel = sqlfrag.cosine(q(vec_col), sqlfrag.dbl_array(query_vec))
     pooled = (
         emb.select(
             F.col(id_col),
             F.col(vec_col).cast("array<double>").alias("_v"),
-            F.round(cosine(F.col(vec_col), qlit), 6).alias("relevance"),
+            F.expr(f"round({rel}, 6) AS relevance"),
         )
         .orderBy(F.desc("relevance"), F.asc(id_col))
         .limit(pool)
@@ -1076,10 +1018,10 @@ def contrastive_triplets(
     """
     from pyspark import StorageLevel
 
-    _dd = f"cast({_q(vec_col)} as array<double>)"
+    _dd = f"cast({q(vec_col)} as array<double>)"
     bucketed = (
         with_lsh_bucket(fan_out(emb, id_col), num_planes, vec_col)
-        .withColumn("_norm", F.expr(f"sqrt({_sql_dot(_dd, _dd)})"))
+        .withColumn("_norm", F.expr(f"sqrt({sqlfrag.dot(_dd, _dd)})"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = bucketed.select(
@@ -1112,7 +1054,7 @@ def contrastive_triplets(
             "id_a",
             "id_b",
             F.expr(
-                "round(" + _sql_dot(
+                "round(" + sqlfrag.dot(
                     "cast(va as array<double>)", "cast(vb as array<double>)"
                 ) + " / (na * nb), 6)"
             ).alias("cos_r"),
@@ -1183,27 +1125,13 @@ def random_projection(
     """
     signs = rp_signs(in_dim, out_dim)
     scale = 1.0 / (out_dim ** 0.5)
-    v = _as_double(F.col(vec_col))
-    projections = F.array(
-        *[
-            (
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        # one py4j round trip per row (see _sign_array_lit)
-                        _sign_array_lit(signs[j]),
-                        lambda e, s: e * s,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                * F.lit(scale)
-            )
-            for j in range(out_dim)
-        ]
+    v = f"cast({q(vec_col)} as array<double>)"
+    projections = "array(%s)" % ", ".join(
+        f"{sqlfrag.dot(v, sqlfrag.dbl_array(sj))} * {sqlfrag.dbl(scale)}"
+        for sj in signs
     )
     return (
-        emb.select(F.col(id_col), F.posexplode(projections).alias("dim_idx", "_v"))
+        emb.select(F.col(id_col), F.expr(f"posexplode({projections}) AS (dim_idx, _v)"))
         .select(id_col, "dim_idx", F.round(F.col("_v"), dp).alias("value"))
         .orderBy(id_col, "dim_idx")
     )
@@ -1317,12 +1245,12 @@ def knn_label_noise(
     before the join. Vectors alone in their bucket emit n_neighbors=0
     with NULL disagreement (try_divide), never a crash.
     """
-    _dd = f"cast({_q(vec_col)} as array<double>)"
+    _dd = f"cast({q(vec_col)} as array<double>)"
     b = with_lsh_bucket(
         fan_out(emb.select(id_col, vec_col, label_col), id_col),
         num_planes,
         vec_col,
-    ).withColumn("_norm", F.expr(f"sqrt({_sql_dot(_dd, _dd)})"))
+    ).withColumn("_norm", F.expr(f"sqrt({sqlfrag.dot(_dd, _dd)})"))
     a = b.select(
         F.col("bucket"),
         F.col(id_col).alias("_aid"),
@@ -1338,7 +1266,7 @@ def knn_label_noise(
         F.col("_norm").alias("_nn"),
     )
     cos = F.expr(
-        "round(try_divide(" + _sql_dot(
+        "round(try_divide(" + sqlfrag.dot(
             "cast(_av as array<double>)", "cast(_nv as array<double>)"
         ) + ", _an * _nn), 6)"
     )
@@ -1481,12 +1409,9 @@ def matryoshka_recall(
         .select("qid", id_col, F.col(vec_col).alias("_v"), "_qv")
     )
 
-    def sliced_cos(d):
-        return F.round(
-            cosine(F.slice(F.col("_v"), F.lit(1), d),
-                   F.slice(F.col("_qv"), F.lit(1), d)),
-            6,
-        )
+    def sliced_cos(d) -> Column:
+        cos = sqlfrag.cosine(f"slice(_v, 1, {d})", f"slice(_qv, 1, {d})")
+        return F.expr(f"round({cos}, 6)")
 
     full_dim = emb.select(F.size(F.col(vec_col)).alias("_d")).limit(
         1
@@ -1498,7 +1423,7 @@ def matryoshka_recall(
         F.desc("_cos"), F.asc(id_col)
     )
     truth = (
-        base.select("qid", id_col, sliced_cos(F.lit(full_dim)).alias("_cos"))
+        base.select("qid", id_col, sliced_cos(int(full_dim)).alias("_cos"))
         .withColumn("_rnk", F.row_number().over(w_truth))
         .filter(F.col("_rnk") <= k)
         .select("qid", id_col)
@@ -1513,7 +1438,7 @@ def matryoshka_recall(
         ).alias("dim"),
         "_v",
         "_qv",
-    ).select("qid", id_col, "dim", sliced_cos(F.col("dim")).alias("_cos"))
+    ).select("qid", id_col, "dim", sliced_cos("dim").alias("_cos"))
     w_cand = Window.partitionBy("qid", "dim").orderBy(
         F.desc("_cos"), F.asc(id_col)
     )

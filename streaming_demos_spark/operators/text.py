@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import fan_out
+from streaming_demos_spark.functions.sqlfrag import q
 
 # Small deterministic stopword/marker lists (public, trivial).
 STOPWORDS_EN = ["the", "a", "an", "and", "of", "to", "in", "is", "it", "for"]
@@ -34,92 +35,53 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-# Construction-cost note (guide §4 applied to the DRIVER): on this
-# harness py4j round trips cost ~2-3 ms EACH, so building expressions
-# operator-by-operator (every F.fn call is >= 1 round trip) dominates
-# plan-construction wall time for the hot helpers below — measured
-# ~5 ms per simple Column op vs ~0.5 ms to parse a whole subtree with
-# one F.expr. Helpers therefore take the column NAME fast path (one
-# parse) and keep the Column-object form as the general fallback; the
-# parsed tree is the identical unresolved expression, so analyzed
-# plans — and results — are unchanged.
-
-
-def _q(name: str) -> str:
-    """Quote a column name for embedding in an F.expr string."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _sql_tokens(name: str) -> str:
-    return f"split(lower(trim({_q(name)})), '\\\\s+')"
+    return f"split(lower(trim({q(name)})), '\\\\s+')"
 
 
-def tokens(text: Column | str) -> Column:
+def tokens(text: str) -> Column:
     """Whitespace tokenization of lowercased text -> array<string>."""
-    if isinstance(text, str):
-        return F.expr(_sql_tokens(text))
-    return F.split(F.lower(F.trim(text)), r"\s+")
+    return F.expr(_sql_tokens(text))
 
 
-def token_count(text: Column | str) -> Column:
+def token_count(text: str) -> Column:
     """Whitespace token count (the cheap `wc -w` estimator)."""
-    if isinstance(text, str):
-        return F.expr(f"size({_sql_tokens(text)})")
-    return F.size(tokens(text))
+    return F.expr(f"size({_sql_tokens(text)})")
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
+def bpe_ish_token_count(text: str) -> Column:
     """BPE-ish token estimate: count of word-piece matches of a
     tokenizer-like regex (runs of letters, runs of digits, or single
     non-space symbols) — the standard cheap proxy when the real
     tokenizer is unavailable."""
-    if isinstance(text, str):
-        return F.expr(
-            f"size(regexp_extract_all(lower({_q(text)}),"
-            " '([a-z]+|[0-9]+|[^a-z0-9\\\\s])', 1))"
-        )
-    return F.size(
-        F.regexp_extract_all(F.lower(text), F.lit(r"([a-z]+|[0-9]+|[^a-z0-9\s])"), F.lit(1))
+    return F.expr(
+        f"size(regexp_extract_all(lower({q(text)}),"
+        " '([a-z]+|[0-9]+|[^a-z0-9\\\\s])', 1))"
     )
 
 
 def _sql_normalize(name: str) -> str:
     return (
-        f"trim(regexp_replace(regexp_replace(lower({_q(name)}),"
+        f"trim(regexp_replace(regexp_replace(lower({q(name)}),"
         " '[^a-z0-9\\\\s]', ''), '\\\\s+', ' '))"
     )
 
 
-def normalize_text(text: Column | str) -> Column:
+def normalize_text(text: str) -> Column:
     """Canonical form for fingerprinting: lowercase, strip everything
     but alphanumerics+space, collapse whitespace runs to single
     spaces, trim."""
-    if isinstance(text, str):
-        return F.expr(_sql_normalize(text))
-    cleaned = F.regexp_replace(F.lower(text), r"[^a-z0-9\s]", "")
-    return F.trim(F.regexp_replace(cleaned, r"\s+", " "))
+    return F.expr(_sql_normalize(text))
 
 
-def fingerprint(text: Column | str) -> Column:
+def fingerprint(text: str) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
     The batch analog of a rolling-hash content id — two documents with
     the same canonical content collide exactly."""
-    if isinstance(text, str):
-        return F.expr(f"md5({_sql_normalize(text)})")
-    return F.md5(normalize_text(text))
+    return F.expr(f"md5({_sql_normalize(text)})")
 
 
-def _sql_shingles(name: str, k: int) -> str:
-    w = _q(name)
-    return (
-        f"CASE WHEN size({w}) >= {k} THEN "
-        f"transform(sequence(1, size({w}) - {k - 1}),"
-        f" i -> array_join(slice({w}, i, {k}), ' '))"
-        f" ELSE array(array_join({w}, ' ')) END"
-    )
-
-
-def shingles_from_tokens(w: Column | str, k: int = 3) -> Column:
+def shingles_from_tokens(w: str, k: int = 3) -> Column:
     """Sliding word k-grams over an ALREADY MATERIALIZED token-array
     column; documents with fewer than k words collapse to one
     whole-document shingle.
@@ -129,17 +91,14 @@ def shingles_from_tokens(w: Column | str, k: int = 3) -> Column:
     is an inline ``split(text)`` expression codegen re-evaluates the
     regex split for every slice — O(words) splits per row, a measured
     10x slowdown on the documents table at sf0.1. Callers must project
-    ``tokens(text)`` to a column first."""
-    if isinstance(w, str):
-        return F.expr(_sql_shingles(w, k))
-    n = F.size(w)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(w, i, k), " "),
-        ),
-    ).otherwise(F.array(F.array_join(w, " ")))
+    ``tokens(text)`` to a column first; ``w`` is that column's name."""
+    c = q(w)
+    return F.expr(
+        f"CASE WHEN size({c}) >= {k} THEN "
+        f"transform(sequence(1, size({c}) - {k - 1}),"
+        f" i -> array_join(slice({c}, i, {k}), ' '))"
+        f" ELSE array(array_join({c}, ' ')) END"
+    )
 
 
 def winnow_fingerprints(
@@ -1273,21 +1232,16 @@ def tokenizer_fertility(
     (pieces per word ·1e3, pieces per 100 chars ·1e3) via sign-free
     integer division. One map-only projection + one hash aggregation.
     """
-    toks = tokens(F.col(text_col))
-    pieces = F.aggregate(
-        F.transform(
-            toks,
-            lambda w: (F.length(w) + F.lit(bpe_chunk - 1)).cast("long")
-            / F.lit(bpe_chunk),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.floor(x).cast("long"),
-    )
+    toks = _sql_tokens(text_col)
     base = docs.select(
         F.col(by_col).alias("slice"),
-        F.size(toks).cast("long").alias("_w"),
-        F.length(F.col(text_col)).cast("long").alias("_c"),
-        pieces.alias("_p"),
+        F.expr(f"cast(size({toks}) as bigint) AS _w"),
+        F.expr(f"cast(length({q(text_col)}) as bigint) AS _c"),
+        F.expr(
+            f"aggregate(transform({toks}, w -> cast(length(w) + {bpe_chunk - 1}"
+            f" as bigint) / {bpe_chunk}), cast(0 as bigint),"
+            " (acc, x) -> acc + cast(floor(x) as bigint)) AS _p"
+        ),
     )
     agg = base.groupBy("slice").agg(
         F.count("*").alias("n_docs"),

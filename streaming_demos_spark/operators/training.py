@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from streaming_demos_spark.functions.sqlfrag import dbl
+
 __all__ = [
     "logreg_fit",
     "logreg_score",
@@ -96,12 +98,13 @@ def logreg_fit(
 
 
 # --- single-parse SQL fragments for the fused GD builders -------------------
-# (construction-cost note in text.py: each Column operator call is a
-# py4j round trip at ~1ms; one selectExpr ships every projection in a
-# single round trip and parses to the IDENTICAL unresolved tree —
-# left-associative +, D-suffixed double literals, backquoted
-# identifiers. Equality is pinned by the bit-identical-to-eager tests
-# and the oracle hashes of every consumer key.)
+# (construction-cost note in functions/sqlfrag.py: each Column operator
+# call is a py4j round trip at ~1ms; one selectExpr ships every
+# projection in a single round trip and parses to the IDENTICAL
+# unresolved tree — left-associative +, D-suffixed double literals,
+# backquoted identifiers. Equality is pinned by the
+# bit-identical-to-eager tests and the oracle hashes of every consumer
+# key.)
 
 
 def _sigmoid_sql(z: str) -> str:
@@ -117,9 +120,9 @@ def _margin_sql(
     given, else the columns ``{prefix}{j}`` / ``{prefix}b`` of a
     crossJoined 1-row weight frame; same accumulation order."""
     if weights is not None:
-        z = f"{float(weights[-1])!r}D"
+        z = dbl(weights[-1])
         for c, w in zip(feature_cols, weights[:-1]):
-            z = f"({z} + ({float(w)!r}D * `{c}`))"
+            z = f"({z} + ({dbl(w)} * `{c}`))"
         return z
     z = f"`{prefix}b`"
     for j, c in enumerate(feature_cols):
@@ -162,7 +165,7 @@ def logreg_fit_frame(
     empty corpus, and the NULL cascade is loud in any oracle check.
     """
     d = len(feature_cols)
-    lr_s, l2_s = f"{float(lr)!r}D", f"{float(l2)!r}D"
+    lr_s, l2_s = dbl(lr), dbl(l2)
     cur: DataFrame | None = None
     for _ in range(iters):
         if cur is None:
@@ -578,7 +581,7 @@ def logreg_lr_sweep(
         if cur is None:
             cur = feats.selectExpr(*aggs).selectExpr(
                 *[
-                    f"(0.0D - ({float(lr)!r}D * `_g{i}_{j}`)) AS `{wcol(i, j)}`"
+                    f"(0.0D - ({dbl(lr)} * `_g{i}_{j}`)) AS `{wcol(i, j)}`"
                     for i, lr in enumerate(lrs)
                     for j in jays
                 ]
@@ -591,7 +594,7 @@ def logreg_lr_sweep(
         )
         cur = feats.crossJoin(F.broadcast(cur)).selectExpr(*aggs).selectExpr(
             *[
-                f"(`_ow{i}_{j}` - ({float(lr)!r}D * `_g{i}_{j}`)) AS `{wcol(i, j)}`"
+                f"(`_ow{i}_{j}` - ({dbl(lr)} * `_g{i}_{j}`)) AS `{wcol(i, j)}`"
                 for i, lr in enumerate(lrs)
                 for j in jays
             ]
@@ -613,7 +616,7 @@ def logreg_lr_sweep(
     # one generator pass over the 1-row loss+weight frame -> |lrs| rows
     # (a per-lr union would re-evaluate the final aggregate per branch)
     rows = ", ".join(
-        f"named_struct('lr', {float(lr)!r}D,"
+        f"named_struct('lr', {dbl(lr)},"
         f" 'logloss', round(`_loss{i}`, {dp}),"
         f" 'w1', round(`_ow{i}_0`, {dp}),"
         f" 'w2', round(`_ow{i}_1`, {dp}),"

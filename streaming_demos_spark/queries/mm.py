@@ -405,9 +405,9 @@ def _wav_frame_hex(doc_id, n_frames, sr, ch):
 #
 # The Column-operator craft builders above cost ~1-2 s of py4j round
 # trips PER QUERY CONSTRUCTION (every F.fn call is a ~2-3 ms round trip
-# on this harness — see the construction-cost note in operators/
-# text.py), and their per-pixel transform lambdas evaluate interpreted
-# (higher-order functions never reach codegen). The _sql_* builders
+# — see the construction-cost note in functions/sqlfrag.py), and their
+# per-pixel transform lambdas evaluate interpreted (higher-order
+# functions never reach codegen). The _sql_* builders
 # below emit the identical byte streams as SQL TEXT parsed by ONE
 # F.expr, and replace the per-pixel hex arithmetic with substring
 # lookups into driver-computed constant tables:
@@ -1013,7 +1013,7 @@ def _crafted_wav_media(spark, sf_dir):
 
     # fan_out BEFORE the craft (see _crafted_pixel_media) and ONE
     # F.expr for the whole payload (construction-cost note in
-    # operators/text.py).
+    # functions/sqlfrag.py).
     docs = fan_out(
         _t(spark, sf_dir, "documents").filter(F.col("doc_id") >= 0).select("doc_id"),
         "doc_id",

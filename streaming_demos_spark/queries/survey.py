@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import load_table as _t
+from streaming_demos_spark.functions import sqlfrag
 from streaming_demos_spark.functions.scalars import bucket_time_of_day, title_case
 from streaming_demos_spark.operators import relational as R
 from streaming_demos_spark.queries import generated, key, values_sql
@@ -1318,17 +1319,10 @@ def q_eval_calibration(spark, sf_dir):
     from streaming_demos_spark.operators import linucb as LU
 
     emb = _t(spark, sf_dir, "embeddings")
-    w = _calib_weights()
-    wlit = F.expr("array(%s)" % ", ".join(f"{x!r}D" for x in w))
-    raw = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"), wlit, lambda x, y: x * y
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    raw = sqlfrag.dot("cast(embedding as array<double>)",
+                      sqlfrag.dbl_array(_calib_weights()))
     scored = emb.select(
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-raw)), 6).alias("score"),
+        F.expr(f"round(1.0D / (1.0D + exp(-({raw}))), 6) AS score"),
         (F.col("label") % 2 == 0).cast("int").alias("is_pos"),
     )
     return LU.calibration_bins(scored, "score", "is_pos", n_bins=10)

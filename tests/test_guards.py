@@ -194,10 +194,8 @@ def test_cosine_zero_vector_is_null_not_crash(spark):
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 0.0])], ["vid", "v"]
-    )
-    out = df.select(
-        "vid", SIM.cosine(F.col("v"), F.array(F.lit(1.0), F.lit(0.0))).alias("c")
-    ).collect()
+    ).withColumn("u", F.array(F.lit(1.0), F.lit(0.0)))
+    out = df.select("vid", SIM.cosine("v", "u").alias("c")).collect()
     got = {r.vid: r.c for r in out}
     assert got[1] == pytest.approx(1.0)
     assert got[2] is None

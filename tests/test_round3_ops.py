@@ -513,7 +513,7 @@ def test_streaming_ann_serving(spark, tmp_path):
 
     stream = spark.readStream.schema(schema).parquet(src)
     q_bucketed = stream.withColumn(
-        "bucket", S.lsh_bucket(F.col("embedding"), 4)
+        "bucket", S.lsh_bucket("embedding", 4)
     ).select("query_id", F.col("embedding").alias("_q"), "bucket")
     joined = q_bucketed.join(static_bucketed, "bucket")  # stream-static
 
@@ -524,7 +524,7 @@ def test_streaming_ann_serving(spark, tmp_path):
 
         scored = batch_df.select(
             "query_id", "vec_id",
-            F.round(S.cosine(F.col("embedding"), F.col("_q")), 6).alias("cos"),
+            F.round(S.cosine("embedding", "_q"), 6).alias("cos"),
         )
         w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
         top = scored.withColumn("_rn", F.row_number().over(w)).filter("_rn <= 3")
