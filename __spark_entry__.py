@@ -59,6 +59,8 @@ _CHANGED_THIS_ROUND = (
     "llm_uncertainty_sample",
     "ext_grouped_mad",
     "ext_grouped_trend",
+    "a10_j3_linucb_fit",
+    "a12_linucb_score_top5",
 )
 
 

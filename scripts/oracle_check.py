@@ -11,7 +11,14 @@ import sys
 
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# The repo root goes on the driver's sys.path and, through PYTHONPATH,
+# on the Python workers' (inherited by the JVM the session launches):
+# the Python-UDF keys' workers import the engine too.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 

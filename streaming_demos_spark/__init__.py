@@ -8,7 +8,8 @@ LinUCB recommender) as an idiomatic Spark engine:
 - batch relational analytics  -> DataFrame / Spark SQL (Catalyst-planned)
 - event-time streaming        -> Structured Streaming (watermarks, windows)
 - CDC ingestion               -> Debezium-envelope unwrap operators
-- stateful ML (LinUCB)        -> applyInPandas / applyInPandasWithState
+- stateful ML (LinUCB)        -> one grouped aggregate (stateful in update
+                                 mode) + a pandas UDF inverse
 - 100 TB pipeline extensions  -> dedup, similarity search, text analysis
 
 Everything is declared through the DataFrame/SQL API so Catalyst owns

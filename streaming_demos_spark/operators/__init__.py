@@ -5,7 +5,7 @@ Modules map to SURVEY.md §2 inventory sections:
 - relational   — scans/projections/filters/joins/aggregates/sorts (§2.1-2.6),
                  plus HLL sketch rollups, key-skew profiling, equi-width
                  histograms, set partitions, table profiling, per-key splits
-- linucb       — LinUCB fit/update/score + ranking eval (CTR/P@k/R@k/NDCG)
+- linucb       — LinUCB fit (batch and streaming)/score + ranking eval (CTR/P@k/R@k/NDCG)
                  and exact AUC (§2.10, A10-A12)
 - dedup        — exact + MinHash-LSH + SimHash near-dup detection, connected
                  components, quality-aware representative selection

@@ -1,4 +1,4 @@
-"""Disjoint LinUCB contextual bandit: batch fit, streaming update,
+"""Disjoint LinUCB contextual bandit: fit (batch and streaming),
 scoring, and offline evaluation (SURVEY.md A10-A12, J3, §2.10).
 
 Reference parity (files under /root/reference/product-recommender):
@@ -15,39 +15,31 @@ Reference parity (files under /root/reference/product-recommender):
 
 Spark mapping: the reference's per-product python loop
 (bandit_manager.py:83-95 filters the log once per product — O(P·N)) is
-restated as ONE ``groupBy(product).applyInPandas`` shuffle (J3): every
-product's history lands in one Arrow batch, numpy does the dense
-linear algebra, one pass over the log at any scale. Scoring treats the
-model table as the small side — valid at the reference's operating
-point (P=200, d=6: kilobytes) and up to P in the low millions at small
-d; note P × (d²+d) doubles is ~80 GB at d=100, P=1e6, where scoring
-must instead shuffle-join contexts to models on the product key and
-publishing must go through ``sinks.publish_models``'s sharded
-``kv_factory`` path (per-partition mset, nothing driver-side). The
-streaming update holds (A, b) as per-key state in
-``applyInPandasWithState``; each micro-batch plays the role of the
-reference's 5s timer (T10): changed keys re-invert and emit.
+restated as ONE ``groupBy(product).agg`` (J3). A and b are plain sums,
+so the JVM aggregate holds them: d² sums of x_i·x_j (λ added on the
+diagonal), d sums of r·x_i and the row count — d²+d+1 aggregates, 43
+at the reference's d = 6 (the planner merges x_i·x_j with x_j·x_i, so
+the hash aggregate keeps 28), partially combined map-side. Python sees
+only the P aggregated rows, which one numpy ``pandas_udf`` inverts.
+The same plan is the streaming update (T9/T10): on a streaming frame
+written in ``update`` mode the sums live in Spark's state store and
+each micro-batch — the reference's 5s timer — emits every changed key
+once, re-inverted. Scoring is one SQL expression over the model
+table, the small side: P × (d²+d) doubles, kilobytes at the
+reference's P = 200. At large P, publishing goes through
+``sinks.publish_models``'s sharded ``kv_factory`` path (per-partition
+mset, nothing driver-side).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-
-def _model_schema(key_field: T.StructField) -> T.StructType:
-    return T.StructType(
-        [
-            key_field,
-            T.StructField("a_inv", T.ArrayType(T.ArrayType(T.DoubleType())), False),
-            T.StructField("b", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
+from streaming_demos_spark.functions.scalars import round_dp
+from streaming_demos_spark.functions.sqlfrag import dbl, dbl_array, dot, q
 
 
 def fit_batch(
@@ -58,28 +50,34 @@ def fit_batch(
     x_col: str = "context_vector",
     r_col: str = "reward",
 ) -> DataFrame:
-    """Batch LinUCB fit: per product, A = λI + XᵀX, b = Xᵀr, emit
-    (product, A⁻¹, b). One shuffle on the product key; numpy inside the
-    Arrow batch (bandit_manager.py:57-107 restated as J3's grouped
-    scan)."""
-    key_field = feedback.schema[key_col]
-    schema = _model_schema(key_field)
+    """LinUCB fit: per product, A = λI + XᵀX, b = Xᵀr, emit
+    (product, A⁻¹, b, n_obs) (bandit_manager.py:57-107 restated as J3's
+    grouped aggregate). ``n_obs`` counts the rows folded in; it
+    versions the model, so sinks can keep the latest per key.
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        X = np.stack(pdf[x_col].to_numpy()).astype(np.float64)
-        r = pdf[r_col].to_numpy().astype(np.float64)
-        A = lam * np.eye(d) + X.T @ X
-        b = X.T @ r
-        a_inv = np.linalg.inv(A)
-        return pd.DataFrame(
-            {
-                key_col: [pdf[key_col].iloc[0]],
-                "a_inv": [a_inv.tolist()],
-                "b": [b.tolist()],
-            }
-        )
+    On a streaming ``feedback`` this is the stateful trainer
+    (LinUCBUpdater.kt:48-131): write it in ``update`` output mode and
+    each trigger emits every key changed in it, with its running sums
+    inverted. Run with ``trigger(processingTime='5 seconds')`` for the
+    reference's cadence."""
+    x = [f"{q(x_col)}[{i}]" for i in range(d)]
+    a = ", ".join(
+        (f"{dbl(lam)} + " if i == j else "") + f"sum({x[i]} * {x[j]})"
+        for i in range(d) for j in range(d)
+    )
+    b = ", ".join(f"sum({q(r_col)} * {xi})" for xi in x)
 
-    return feedback.groupBy(key_col).applyInPandas(fit, schema)
+    @F.pandas_udf("array<array<double>>")
+    def _inverse(a_flat: pd.Series) -> pd.Series:
+        a_inv = np.linalg.inv(np.stack(a_flat.to_numpy()).reshape(-1, d, d))
+        return pd.Series([m.tolist() for m in a_inv])
+
+    stats = feedback.groupBy(key_col).agg(
+        F.expr(f"array({a})").alias("a"),
+        F.expr(f"array({b})").alias("b"),
+        F.count("*").alias("n_obs"),
+    )
+    return stats.select(key_col, _inverse("a").alias("a_inv"), "b", "n_obs")
 
 
 def score_models(
@@ -89,24 +87,13 @@ def score_models(
     key_col: str = "product_id",
 ) -> DataFrame:
     """Serve-time scoring of ONE context against every product model:
-    θ = A⁻¹b ; s = x·θ + α·√(xᵀA⁻¹x)  (eda_recommender.py:78-92).
-    Arrow-vectorized pandas_udf over the model columns — the model table
-    is the small side; at serving scale this runs map-only."""
-    xv = np.asarray(x, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _score(a_inv: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a_inv))
-        for i in range(len(a_inv)):
-            # Arrow hands nested lists as an object array of row arrays;
-            # stack to get a dense (d, d) float matrix.
-            ai = np.stack([np.asarray(r, dtype=np.float64) for r in a_inv.iloc[i]])
-            bv = np.asarray(b.iloc[i], dtype=np.float64)
-            theta = ai @ bv
-            out[i] = xv @ theta + alpha * np.sqrt(xv @ ai @ xv)
-        return pd.Series(out)
-
-    return models.select(key_col, _score("a_inv", "b").alias("score"))
+    θ = A⁻¹b ; s = x·θ + α·√(xᵀA⁻¹x)  (eda_recommender.py:78-92), one
+    SQL expression over the model columns, map-only."""
+    xs = dbl_array(x)
+    theta = f"transform(a_inv, row -> {dot('row', 'b')})"
+    a_inv_x = f"transform(a_inv, row -> {dot('row', xs)})"
+    score = f"{dot(xs, theta)} + {dbl(alpha)} * sqrt({dot(xs, a_inv_x)})"
+    return models.select(key_col, F.expr(score).alias("score"))
 
 
 def recommend_top_k(
@@ -117,67 +104,9 @@ def recommend_top_k(
     rounded score + unique key tie-break for determinism."""
     return (
         score_models(models, x, alpha, key_col)
-        .select(key_col, F.round("score", 6).alias("score"))
+        .select(key_col, round_dp(F.col("score"), 6).alias("score"))
         .orderBy(F.desc("score"), F.asc(key_col))
         .limit(k)
-    )
-
-
-def update_stream(
-    feedback: DataFrame,
-    d: int,
-    lam: float = 1.0,
-    key_col: str = "product_id",
-    x_col: str = "context_vector",
-    r_col: str = "reward",
-) -> DataFrame:
-    """Streaming per-key LinUCB update (LinUCBUpdater.kt:48-131):
-    ValueState holds (A, b); cold-start A = λI, b = 0 (:59-74); each
-    event folds in A += x·xᵀ, b += r·x (:76-92). Spark's micro-batch IS
-    the reference's 5s timer (T10): at the end of each batch the
-    changed keys invert A and emit the model (:94-131). Run with
-    ``trigger(processingTime='5 seconds')`` for the same cadence.
-
-    Each emission carries ``n_obs`` (events folded so far) as a model
-    version, so sinks can pick the latest model per key without
-    relying on arrival order."""
-    key_field = feedback.schema[key_col]
-    schema = T.StructType(
-        list(_model_schema(key_field).fields)
-        + [T.StructField("n_obs", T.LongType(), False)]
-    )
-
-    def upd(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            a_flat, b_list, n_obs = state.get
-            A = np.asarray(a_flat, dtype=np.float64).reshape(d, d)
-            b = np.asarray(b_list, dtype=np.float64)
-        else:
-            A = lam * np.eye(d)
-            b = np.zeros(d)
-            n_obs = 0
-        for pdf in pdfs:
-            X = np.stack(pdf[x_col].to_numpy()).astype(np.float64)
-            r = pdf[r_col].to_numpy().astype(np.float64)
-            A += X.T @ X
-            b += X.T @ r
-            n_obs += len(pdf)
-        state.update((A.ravel().tolist(), b.tolist(), int(n_obs)))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "a_inv": [np.linalg.inv(A).tolist()],
-                "b": [b.tolist()],
-                "n_obs": [int(n_obs)],
-            }
-        )
-
-    return feedback.groupBy(key_col).applyInPandasWithState(
-        upd,
-        outputStructType=schema,
-        stateStructType="a_flat array<double>, b array<double>, n_obs long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
     )
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from streaming_demos_spark.catalog import load_table as _t
 from streaming_demos_spark.functions import sqlfrag
-from streaming_demos_spark.functions.scalars import bucket_time_of_day, title_case
+from streaming_demos_spark.functions.scalars import bucket_time_of_day, round_dp, title_case
 from streaming_demos_spark.operators import relational as R
 from streaming_demos_spark.queries import generated, key, values_sql
 
@@ -762,9 +762,10 @@ def _models(spark, sf_dir):
             FROM inv
         """)
 def q_linucb_fit(spark, sf_dir):
-    # A10/J3 batch fit as ONE grouped applyInPandas pass (numpy inside
-    # Arrow batches); at d=2 the inverse has a closed form, so the
-    # oracle recomputes A⁻¹ and θ = A⁻¹b exactly in SQL.
+    # A10/J3 batch fit as ONE grouped JVM aggregate of the sums, numpy
+    # inverting only the aggregated rows; at d=2 the inverse has a
+    # closed form, so the oracle recomputes A⁻¹ and θ = A⁻¹b exactly in
+    # SQL. inv12 = -a12/det is negative: round_dp keeps DuckDB's -0.0.
     m = _models(spark, sf_dir)
     inv11, inv12, inv22 = (
         F.col("a_inv")[0][0], F.col("a_inv")[0][1], F.col("a_inv")[1][1]
@@ -772,13 +773,13 @@ def q_linucb_fit(spark, sf_dir):
     b1, b2 = F.col("b")[0], F.col("b")[1]
     return m.select(
         "product_id",
-        F.round(inv11, 6).alias("inv11"),
-        F.round(inv12, 6).alias("inv12"),
-        F.round(inv22, 6).alias("inv22"),
-        F.round(b1, 6).alias("b1"),
-        F.round(b2, 6).alias("b2"),
-        F.round(inv11 * b1 + inv12 * b2, 6).alias("theta1"),
-        F.round(inv12 * b1 + inv22 * b2, 6).alias("theta2"),
+        round_dp(inv11, 6).alias("inv11"),
+        round_dp(inv12, 6).alias("inv12"),
+        round_dp(inv22, 6).alias("inv22"),
+        round_dp(b1, 6).alias("b1"),
+        round_dp(b2, 6).alias("b2"),
+        round_dp(inv11 * b1 + inv12 * b2, 6).alias("theta1"),
+        round_dp(inv12 * b1 + inv22 * b2, 6).alias("theta2"),
     )
 
 
@@ -819,7 +820,7 @@ def q_linucb_fit(spark, sf_dir):
         """)
 def q_linucb_score_top5(spark, sf_dir):
     # A12/O2 serve-time scoring: θ = A⁻¹b, s = x·θ + α√(xᵀA⁻¹x), top-5
-    # (pandas_udf over the model table).
+    # (one SQL expression over the model table).
     from streaming_demos_spark.operators import linucb as LU
 
     return LU.recommend_top_k(_models(spark, sf_dir), x=LINUCB_X0, alpha=1.0, k=5)

@@ -53,15 +53,6 @@ FEEDBACK_EVENT = T.StructType(
     ]
 )
 
-# LinUCB model state row (LinUCBModel.kt:14-19; bandit_manager.py:102-103).
-LINUCB_MODEL = T.StructType(
-    [
-        T.StructField("product_id", T.StringType(), False),
-        T.StructField("a_inv", T.ArrayType(T.ArrayType(T.DoubleType())), False),
-        T.StructField("b", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
 # Debezium ExtractNewRecordState-unwrapped envelope: the payload carries
 # the row image plus these metadata fields (application.properties:21-29).
 DEBEZIUM_META_FIELDS = ["op", "db", "table", "schema", "lsn", "source_ts_ms"]

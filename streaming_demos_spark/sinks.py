@@ -16,14 +16,16 @@ Reference parity:
 The KV store is pluggable: any dict-like client with ``mset``/``mget``
 works. ``redis.Redis`` satisfies it when the library is installed
 (import-gated — not baked into this container); tests use InMemoryKV.
-Publishing happens driver-side after collecting ONLY the model rows —
-P·(d²+d) doubles, a broadcast-scale payload by construction, never the
-feedback log itself.
+Publishing writes ONLY the model rows — P·(d²+d) doubles, never the
+feedback log itself — and never collects them: ``publish_models``
+streams them through the driver a partition at a time, or msets them
+from the executors.
 """
 
 from __future__ import annotations
 
 import json
+from itertools import islice
 
 from pyspark.sql import DataFrame
 
@@ -60,6 +62,18 @@ def _model_entry(row, key_prefix: str, key_col: str) -> tuple[str, str]:
     )
 
 
+def _mset_chunked(client, rows, key_prefix: str, key_col: str, batch_size: int) -> int:
+    """mset model rows into ``client`` ``batch_size`` at a time; returns
+    the number of entries written."""
+    rows, n = iter(rows), 0
+    while chunk := dict(
+        _model_entry(r, key_prefix, key_col) for r in islice(rows, batch_size)
+    ):
+        client.mset(chunk)
+        n += len(chunk)
+    return n
+
+
 def publish_models(
     models: DataFrame,
     kv=None,
@@ -88,36 +102,12 @@ def publish_models(
     """
     sel = models.select(key_col, "a_inv", "b")
     if kv_factory is not None:
-        def _publish(rows) -> "list[int]":
-            client = kv_factory()
-            n, mapping = 0, {}
-            for r in rows:
-                k, v = _model_entry(r, key_prefix, key_col)
-                mapping[k] = v
-                if len(mapping) >= batch_size:
-                    client.mset(mapping)
-                    n += len(mapping)
-                    mapping = {}
-            if mapping:
-                client.mset(mapping)
-                n += len(mapping)
-            return [n]
-
-        return sel.rdd.mapPartitions(_publish).sum()
+        return sel.rdd.mapPartitions(
+            lambda rows: [_mset_chunked(kv_factory(), rows, key_prefix, key_col, batch_size)]
+        ).sum()
     if kv is None:
         raise ValueError("publish_models needs either kv or kv_factory")
-    n, mapping = 0, {}
-    for r in sel.toLocalIterator():
-        k, v = _model_entry(r, key_prefix, key_col)
-        mapping[k] = v
-        if len(mapping) >= batch_size:
-            kv.mset(mapping)
-            n += len(mapping)
-            mapping = {}
-    if mapping:
-        kv.mset(mapping)
-        n += len(mapping)
-    return n
+    return _mset_chunked(kv, sel.toLocalIterator(), key_prefix, key_col, batch_size)
 
 
 def model_sink(kv, key_prefix: str = "linucb:", key_col: str = "product_id"):

@@ -5,6 +5,8 @@ matrices), and the offline eval metrics on a hand-computed log."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import shutil
 import tempfile
 
@@ -18,12 +20,12 @@ from streaming_demos_spark.operators import linucb as LU
 D = 3
 
 
-def _make_log(n=200, products=4):
+def _make_log(d=D, n=200, products=4):
     rng = np.random.default_rng(1237)
     rows = []
     for i in range(n):
         pid = str(i % products)
-        x = rng.normal(size=D).round(4).tolist()
+        x = rng.normal(size=d).round(4).tolist()
         r = int(rng.random() < 0.3)
         rows.append((pid, x, float(r)))
     return rows
@@ -32,10 +34,14 @@ def _make_log(n=200, products=4):
 LOG = _make_log()
 
 
+def _feedback(spark, rows):
+    df = spark.createDataFrame(rows, ["product_id", "context_vector", "reward"])
+    return df.withColumn("context_vector", F.col("context_vector").cast("array<double>"))
+
+
 @pytest.fixture(scope="module")
 def feedback(spark):
-    df = spark.createDataFrame(LOG, ["product_id", "context_vector", "reward"])
-    return df.withColumn("context_vector", F.col("context_vector").cast("array<double>"))
+    return _feedback(spark, LOG)
 
 
 def _numpy_oracle(rows, lam=1.0):
@@ -46,14 +52,17 @@ def _numpy_oracle(rows, lam=1.0):
     for pid, hist in by_pid.items():
         X = np.array([x for x, _ in hist])
         r = np.array([r for _, r in hist])
-        A = lam * np.eye(D) + X.T @ X
+        A = lam * np.eye(X.shape[1]) + X.T @ X
         out[pid] = (np.linalg.inv(A), X.T @ r)
     return out
 
 
-def test_fit_batch_matches_numpy_oracle(feedback):
-    oracle = _numpy_oracle(LOG)
-    models = {r.product_id: r for r in LU.fit_batch(feedback, d=D).collect()}
+# d = 6 is the reference's operating point (the linucb.py docstring).
+@pytest.mark.parametrize("dim", [D, 6])
+def test_fit_batch_matches_numpy_oracle(spark, dim):
+    log = _make_log(dim)
+    oracle = _numpy_oracle(log)
+    models = {r.product_id: r for r in LU.fit_batch(_feedback(spark, log), d=dim).collect()}
     assert set(models) == set(oracle)
     for pid, (a_inv, b) in oracle.items():
         np.testing.assert_allclose(np.array(models[pid].a_inv), a_inv, atol=1e-9)
@@ -80,10 +89,12 @@ def test_recommend_top_k_deterministic(feedback):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_stream_update_equals_batch_fit(spark, feedback, scratch_dir):
+@pytest.mark.parametrize("dim", [D, 6])
+def test_stream_update_equals_batch_fit(spark, scratch_dir, dim):
     """Replay the same log through the stateful streaming trainer in
     TWO micro-batches; the final per-key model must equal the batch fit
     to 1e-9 (SURVEY §5.2's batch/stream equivalence gate)."""
+    feedback = _feedback(spark, _make_log(dim))
     d = tempfile.mkdtemp(prefix="sparkgraft_linucb_", dir=scratch_dir)
     try:
         # two files -> two micro-batches (state carries across)
@@ -104,16 +115,22 @@ def test_stream_update_equals_batch_fit(spark, feedback, scratch_dir):
         stream = spark.readStream.schema(feedback.schema).option(
             "maxFilesPerTrigger", "1"
         ).parquet(src)
-        updates = LU.update_stream(stream, d=D)
+        updates = LU.fit_batch(stream, d=dim)
         q = (
             updates.writeStream.format("memory")
             .queryName("linucb_updates")
             .option("checkpointLocation", f"{d}/chk")
-            .outputMode("append")
+            .outputMode("update")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination(180)
+        # the sums live in the JVM state store, not in Python state
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            q.explain(True)
+        assert "StateStoreSave" in buf.getvalue()
+        assert "FlatMapGroupsInPandasWithState" not in buf.getvalue()
         # the emission with the highest n_obs per key is the final model
         emitted = spark.sql(
             """SELECT product_id, a_inv, b FROM (
@@ -122,7 +139,7 @@ def test_stream_update_equals_batch_fit(spark, feedback, scratch_dir):
                    FROM linucb_updates)
                WHERE rn = 1"""
         ).collect()
-        batch_models = {r.product_id: r for r in LU.fit_batch(feedback, d=D).collect()}
+        batch_models = {r.product_id: r for r in LU.fit_batch(feedback, d=dim).collect()}
         assert len(emitted) == len(batch_models)
         for r in emitted:
             np.testing.assert_allclose(
@@ -164,9 +181,9 @@ def test_full_loop_seed_stream_publish_score(spark, feedback, scratch_dir):
             shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/f.parquet")
             stream = spark.readStream.schema(feedback.schema).parquet(src)
             return (
-                LU.update_stream(stream, d=D)
+                LU.fit_batch(stream, d=D)
                 .writeStream.foreachBatch(SK.model_sink(kv))
-                .outputMode("append")
+                .outputMode("update")
                 .option("checkpointLocation", f"{d}/chk")
                 .trigger(availableNow=True)
                 .start()
